@@ -151,6 +151,16 @@ def zonal_aggregate(
     return out.select(*zone_cols, *post, *extra)
 
 
+def _q(name: str) -> str:
+    """Backquote a column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _pos(frac: float) -> str:
+    """SQL for the 0-based fractional rank (n - 1) * frac of a group."""
+    return f"(CAST(_n - 1 AS DOUBLE) * {frac!r}D)"
+
+
 def ranked_quantiles(
     df: DataFrame,
     group_cols: list[str],
@@ -160,28 +170,31 @@ def ranked_quantiles(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """EXACT quantiles with fully distributed selection — the 100 TB
-    exact path. Nothing O(N) is ever shuffled OR persisted (r14 form).
+    exact path, built as ONE lazy plan: no action runs until the caller
+    collects, and nothing is persisted.
 
     ``percentile()`` buffers every value of a group inside ONE task, so a
     group bigger than executor memory breaks it and per-group parallelism
     is 1. This formulation never builds a group-sized buffer:
 
     1. one sketch pass computes per-group APPROXIMATE bucket boundaries
-       (``percentile_approx``) — placement only: exactness never depends
-       on where a cut lands, only on every pass bucketing identically,
-       so the boundaries are materialized once and broadcast;
+       bs_1 <= ... <= bs_{B-1} (``percentile_approx``) — placement only:
+       exactness never depends on where a cut lands, only on every pass
+       bucketing identically. The boundaries are broadcast once; both of
+       their consumers read that one exchange, so the sketch runs once
+       without a cache;
     2. ONE full-width counts pass: per group, the global simple
-       aggregates (min/max/avg/sum/count) plus CUMULATIVE bucket counts
-       C_i = #rows with value >= boundary_i — all map-side-combined
-       conditional sums over scalar boundary columns (a pure,
-       DETERMINISTIC function of the value, unlike the r13 form's
-       ``spark_partition_id`` over a range shuffle). Bucket sizes and
-       rank offsets fall out of the C_i by subtraction on the one-row-
-       per-group result — no driver collect anywhere;
-    3. the bracketing ranks of the requested quantiles identify the ONLY
-       buckets whose rows can matter — at most 2 x quantiles x groups of
-       them, each carried as a VALUE RANGE [bs_b, bs_b+1) with its rank
-       offset. The final pass keeps hit-range rows via a broadcast range
+       aggregates (min/max/avg/sum/count) and the CUMULATIVE bucket
+       counts C_i = #values >= bs_i — map-side-combined conditional sums
+       over scalar boundary columns, a pure function of the value. Bucket
+       b holds the values in [bs_b, bs_{b+1}) (open ends), and n - C_b
+       values precede it;
+    3. rank r of a group lies in bucket b = #{i : C_i >= n - r + 1}, so
+       the rank ledger is one projection of that one-row-per-group frame:
+       each group explodes into the DISTINCT buckets holding a bracketing
+       rank of some requested quantile (at most 2 x quantiles of them),
+       each carried as a VALUE RANGE with its rank offset and the group's
+       totals. The final pass keeps hit-range rows via a broadcast range
        probe (the big side never computes a bucket id — a 31-term
        element_at expression knocked that stage out of whole-stage
        codegen, measured 6x slower), ranks the surviving sliver with a
@@ -190,19 +203,16 @@ def ranked_quantiles(
        quantile_cont and Spark's percentile evaluate, so results
        hash-match the oracle exactly.
 
-    vs the r13 form (repartitionByRange + spark_partition_id + persist
-    of the full ranged fact table): the O(N) range shuffle is gone — the
-    only full-width operations are scans feeding map-side-combined
-    aggregates — and the O(N) MEMORY_AND_DISK persist is gone (VERDICT
-    r13 #2: a fact-table persist is a §5 spill hazard at 100 TB, and
-    the driver measured both consumers slower under it). Three scans
-    total; shuffled bytes are O(groups x buckets + survivors),
-    independent of N.
+    Three scans of ``df``, no range shuffle, no persist. Shuffled bytes
+    are O(groups x buckets + survivors). Survivors are the rows of the
+    hit buckets, about 2 x quantiles x n / B per group when values are
+    spread — but a bucket cannot split a run of equal values, so in a
+    group dominated by ONE value the hit bucket holds that whole run and
+    the window shuffles most of the group into one task.
 
-    The boundary and counts frames persist eagerly (tiny: one row per
-    group, resp. groups x buckets rows); CALLERS MUST RECLAIM via
-    StorageScope / engine.sweep_persistent_rdds — that contract is part
-    of this operator's API (ADVICE r13 #4).
+    SQL semantics at the edges: group keys match null-safe, so a NULL
+    group is a group on every path; NULL values are ignored; a group
+    with no non-NULL value yields count 0 and NULL for everything else.
     """
     names = parse_agg_list(aggregations)
     # "<pct>_disc" = discrete percentile: the value at rank ceil(q*n) (no
@@ -223,176 +233,118 @@ def ranked_quantiles(
     spark = df.sparkSession
     p = num_partitions or spark.sparkContext.defaultParallelism
     n_buckets = max(16, min(64, int(p) // 2))
-    v = F.col(value_col)
-    base = df.select(*group_cols, value_col).filter(v.isNotNull())
+    vq = _q(value_col)
+    # NULL values stay in: count/min/max/sum and percentile_approx skip
+    # them, and a group holding only NULLs must still come out
+    base = df.select(*group_cols, value_col)
+    totals = [f"count({vq}) AS _n", f"min({vq}) AS _gmin", f"max({vq}) AS _gmax",
+              f"sum({vq}) AS _gsum"]
 
     if not any(f is not None for f in fracs.values()) and not disc:
         # no quantiles requested: one map-side-combined pass holds
-        # everything — no buckets, no windows, no persist
-        totals = base.groupBy(*group_cols).agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(v).alias("_gmin"),
-            F.max(v).alias("_gmax"),
-            F.sum(v).alias("_gsum"),
+        # everything — no buckets, no windows
+        out = base.groupBy(*group_cols).agg(*[F.expr(t) for t in totals])
+        return _ranked_post(out, names, fracs, {}, group_cols, value_prefix)
+
+    # the small side of every broadcast join carries the group keys
+    # under these names, matched null-safe (a NULL group is a group)
+    keys = [f"_k{i}" for i in range(len(group_cols))]
+
+    def bjoin(big: DataFrame, small: DataFrame) -> DataFrame:
+        on = [F.col(g).eqNullSafe(F.col(k)) for g, k in zip(group_cols, keys)]
+        return big.join(F.broadcast(small), on)
+
+    # 1. sketch pass. Accuracy 200 (vs the 10000 default) cuts the pass
+    # ~2x at sf0.1; placement only affects bucket BALANCE. Boundaries
+    # become SCALAR columns for the full-width pass below (array access
+    # stays on groups-sized frames, see step 3 of the docstring).
+    bfr = ",".join(f"{i / n_buckets!r}D" for i in range(1, n_buckets))
+    bw = (
+        base.groupBy(*group_cols)
+        .agg(F.expr(f"percentile_approx({vq}, array({bfr}), 200) AS _bs"))
+        .selectExpr(
+            *[f"{_q(g)} AS {k}" for g, k in zip(group_cols, keys)],
+            *[f"_bs[{i}] AS _bs{i + 1}" for i in range(n_buckets - 1)],
         )
-        return _ranked_post(totals, names, fracs, {}, group_cols, value_prefix)
-
-    # 1. sketch pass: approximate per-group boundaries, materialized once
-    # (the sketch must never recompute per consumer — merge order could
-    # differ) and broadcast into both full-width passes. Accuracy 200
-    # (vs the 10000 default) cuts the sketch pass ~2x at sf0.1;
-    # placement only affects bucket BALANCE, never the exact result
-    # (rank bookkeeping below is exact for ANY boundary placement).
-    # Boundaries become SCALAR columns here: array element_at stays on
-    # groups-sized frames only (see step 3 of the docstring).
-    bfr = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = base.groupBy(*group_cols).agg(
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(x) for x in bfr]), F.lit(200)
-        ).alias("_bs")
-    )
-    bw = bounds.select(
-        *group_cols,
-        *[
-            F.element_at("_bs", i + 1).alias(f"_bs{i + 1}")
-            for i in range(n_buckets - 1)
-        ],
-    )
-    # persist WITHOUT an eager count: the stats pass below is the first
-    # (and only serial) consumer, so its single job materializes this
-    # cache while its own scan runs — one barrier fewer; the final
-    # pass's broadcast builds then read the cache
-    bw = bw.persist()
-
-    # 2. ONE full-width counts pass: global simple aggregates + the
-    # CUMULATIVE bucket counts C_i = #rows with v >= boundary_i, all
-    # map-side-combined conditional sums over scalar columns — no
-    # per-row bucket id, no O(N) shuffle, output is one row per group
-    aggs = [
-        F.count(F.lit(1)).alias("_n"),
-        F.min(v).alias("_gmin"),
-        F.max(v).alias("_gmax"),
-        F.sum(v).alias("_gsum"),
-    ] + [
-        F.sum((v >= F.col(f"_bs{i + 1}")).cast("long")).alias(f"_C{i + 1}")
-        for i in range(n_buckets - 1)
-    ]
-    stats = base.join(F.broadcast(bw), group_cols).groupBy(*group_cols).agg(*aggs)
-    stats = stats.persist()
-    stats.count()
-    totals = stats.select(*group_cols, "_n", "_gmin", "_gmax", "_gsum")
-
-    # tiny per-bucket ledger: bucket b holds values in [bs_b, bs_{b+1})
-    # (open ends), sized C_b - C_{b+1}, preceded by _n - C_b rows
-    cum = (
-        [F.col("_n")]
-        + [F.col(f"_C{i + 1}") for i in range(n_buckets - 1)]
-        + [F.lit(0).cast("long")]
-    )
-    per_b = stats.select(
-        *group_cols,
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        (cum[b] - cum[b + 1]).cast("long").alias("_c"),
-                        (F.col("_n") - cum[b]).cast("long").alias("_offset"),
-                    )
-                    for b in range(n_buckets)
-                ]
-            )
-        ).alias("_b", "_s"),
-    ).select(
-        *group_cols,
-        "_b",
-        F.col("_s._c").alias("_c"),
-        F.col("_s._offset").alias("_offset"),
     )
 
-    # 3. the buckets containing any quantile's bracketing rank, with
-    # their VALUE RANGES — the final pass never computes a bucket id
-    n1 = (F.col("_n") - 1).cast("double")
-    rank_exprs: list[Column] = []
+    # 2. ONE full-width counts pass: totals + _cs = [C_1 .. C_{B-1}],
+    # one row per group. The boundary array is NOT carried through this
+    # aggregate: an array-typed buffer (first(_bs)) turns it into a
+    # SortAggregate that sorts every row (2x slower at 2.4M rows)
+    cs = ",".join(
+        f"sum(CAST({vq} >= _bs{i} AS BIGINT))" for i in range(1, n_buckets)
+    )
+    stats = (
+        bjoin(base, bw)
+        .groupBy(*group_cols)
+        .agg(*[F.expr(t) for t in totals], F.expr(f"array({cs}) AS _cs"))
+    )
+
+    # 3. the rank ledger: one row per (group, hit bucket). For each rank
+    # r that brackets a requested quantile, its bucket is the number of
+    # cumulative counts >= n - r + 1; C_0 = n and C_B = 0 close the ends.
+    rank_sql: dict[str, str] = {}  # label -> SQL of a rank, a function of _n
     for frac in sorted({f for f in fracs.values() if f is not None}):
-        h = n1 * F.lit(frac)
-        rank_exprs.append((F.floor(h) + 1).cast("long"))
-        rank_exprs.append((F.ceil(h) + 1).cast("long"))
+        h = _pos(frac)
+        rank_sql[f"lo{frac!r}"] = f"CAST(floor({h}) + 1 AS BIGINT)"
+        rank_sql[f"hi{frac!r}"] = f"CAST(ceil({h}) + 1 AS BIGINT)"
     for frac in sorted(set(disc.values())):
-        rank_exprs.append(
-            F.greatest(
-                F.lit(1).cast("long"),
-                F.ceil(F.col("_n").cast("double") * F.lit(frac)).cast("long"),
-            )
+        rank_sql[f"d{frac!r}"] = (
+            f"greatest(1L, CAST(ceil(CAST(_n AS DOUBLE) * {frac!r}D) AS BIGINT))"
         )
-    ranks = (
-        stats.select(
-            *group_cols, "_n", F.explode(F.array(*rank_exprs)).alias("_rank")
-        ).distinct()
+    hit_b = ",".join(
+        f"size(filter(_cs, c -> c >= _n - {r} + 1))" for r in rank_sql.values()
     )
-    hitb = (
-        ranks.join(per_b, group_cols)
-        .filter(
-            (F.col("_rank") > F.col("_offset"))
-            & (F.col("_rank") <= F.col("_offset") + F.col("_c"))
-        )
-        .select(*group_cols, "_b", "_offset", "_n")
-        .distinct()
+    totals_cols = ["_n", "_gmin", "_gmax", "_gsum"]
+    groups_q = [_q(g) for g in group_cols]
+    led = stats.selectExpr(
+        *groups_q, *totals_cols, "_cs",
+        f"explode(array_distinct(array({hit_b}))) AS _b",
+    ).selectExpr(
+        *groups_q, *totals_cols, "_b",
+        "_n - CASE WHEN _b = 0 THEN _n ELSE _cs[_b - 1] END AS _offset",
     )
-    bs_arr = F.array(*[F.col(f"_bs{i + 1}") for i in range(n_buckets - 1)])
-    hit_desc = hitb.join(F.broadcast(bw), group_cols).select(
-        *group_cols,
-        "_b",
-        "_offset",
-        "_n",
-        F.when(F.col("_b") > 0, F.element_at(bs_arr, F.col("_b"))).alias("_lo"),
-        F.when(
-            F.col("_b") < n_buckets - 1, F.element_at(bs_arr, F.col("_b") + 1)
-        ).alias("_hi"),
+    # Each hit bucket's value range comes back through the SAME broadcast
+    # as step 2's (same columns, so the exchange is reused: the sketch and
+    # its build still run once).
+    last = n_buckets - 1
+    bs = "array(" + ",".join(f"_bs{i}" for i in range(1, n_buckets)) + ")"
+    ledger = bjoin(led.filter("_n > 0"), bw).selectExpr(
+        *keys, *totals_cols, "_b", "_offset",
+        f"CASE WHEN _b > 0 THEN {bs}[_b - 1] END AS _lo",
+        f"CASE WHEN _b < {last} THEN {bs}[_b] END AS _hi",
     )
 
-    # final pass: broadcast range probe keeps hit-bucket rows only (at
-    # most 2 x quantiles x groups buckets, carrying _offset and _n so no
-    # further join is needed), then ranks that sliver
+    # final pass: the broadcast range probe keeps hit-bucket rows only,
+    # ranks that sliver within its bucket, keeps the bracketing rows and
+    # folds them (with the ledger's totals) to one row per group
     w_rank = Window.partitionBy(*group_cols, "_b").orderBy(value_col)
-    ranked = (
-        base.join(F.broadcast(hit_desc), group_cols)
+    hits = (
+        bjoin(base, ledger)
         .filter(
-            (F.col("_lo").isNull() | (v >= F.col("_lo")))
-            & (F.col("_hi").isNull() | (v < F.col("_hi")))
+            f"{vq} IS NOT NULL AND (_lo IS NULL OR {vq} >= _lo)"
+            f" AND (_hi IS NULL OR {vq} < _hi)"
         )
-        .withColumn("_rn", F.row_number().over(w_rank))
-        .withColumn("_rank", F.col("_offset") + F.col("_rn"))
+        .withColumn("_rank", F.col("_offset") + F.row_number().over(w_rank))
+        .filter(" OR ".join(f"_rank = {r}" for r in rank_sql.values()))
     )
-
-    # keep only rows bracketing some requested quantile
-    keep = F.lit(False)
-    n1 = (F.col("_n") - 1).cast("double")
-    for frac in {f for f in fracs.values() if f is not None}:
-        h = n1 * F.lit(frac)
-        keep = keep | (F.col("_rank") == F.floor(h) + 1) | (
-            F.col("_rank") == F.ceil(h) + 1
-        )
-    for frac in set(disc.values()):
-        dr = F.greatest(F.lit(1), F.ceil(F.col("_n").cast("double") * F.lit(frac)))
-        keep = keep | (F.col("_rank") == dr)
-    hits = ranked.filter(keep)
-
-    q_aggs: list[Column] = []  # _n arrives via the totals join
+    q_aggs = [f"max({c}) AS {c}" for c in totals_cols]
     for name, frac in fracs.items():
-        if frac is None:
-            continue
-        h = n1 * F.lit(frac)
-        q_aggs.append(
-            F.max(F.when(F.col("_rank") == F.floor(h) + 1, v)).alias(f"_lo_{name}")
-        )
-        q_aggs.append(
-            F.max(F.when(F.col("_rank") == F.ceil(h) + 1, v)).alias(f"_hi_{name}")
-        )
+        if frac is not None:
+            for end in ("lo", "hi"):
+                r = rank_sql[f"{end}{frac!r}"]
+                alias = _q(f"_{end}_{name}")
+                q_aggs.append(f"max(CASE WHEN _rank = {r} THEN {vq} END) AS {alias}")
     for name, frac in disc.items():
-        dr = F.greatest(F.lit(1), F.ceil(F.col("_n").cast("double") * F.lit(frac)))
-        q_aggs.append(F.max(F.when(F.col("_rank") == dr, v)).alias(f"_d_{name}"))
-    per_group = hits.groupBy(*group_cols).agg(*q_aggs)
-    out = per_group.join(F.broadcast(totals), group_cols)
+        r = rank_sql[f"d{frac!r}"]
+        alias = _q(f"_d_{name}")
+        q_aggs.append(f"max(CASE WHEN _rank = {r} THEN {vq} END) AS {alias}")
+    out = hits.groupBy(*group_cols).agg(*[F.expr(a) for a in q_aggs])
+    # a group with no value has no hit rows: it comes straight from the
+    # ledger (one row each; the counts exchange is reused, no extra pass)
+    empty = led.filter("_n = 0").selectExpr(*groups_q, *totals_cols)
+    out = out.unionByName(empty, allowMissingColumns=True)
     return _ranked_post(out, names, fracs, disc, group_cols, value_prefix)
 
 
@@ -404,30 +356,22 @@ def _ranked_post(
     group_cols: list[str],
     value_prefix: str,
 ) -> DataFrame:
-    post: list[Column] = []
+    simple = {"min": "_gmin", "max": "_gmax", "avg": "_gsum / _n",
+              "mean": "_gsum / _n", "sum": "_gsum", "count": "_n"}
+    post: list[str] = []
     for name in names:
-        alias = f"{value_prefix}_{name}" if value_prefix else name
-        if name in disc:
-            post.append(F.col(f"_d_{name}").alias(alias))
-            continue
+        alias = _q(f"{value_prefix}_{name}" if value_prefix else name)
         frac = fracs[name]
-        if frac is not None:
-            h = (F.col("_n") - 1).cast("double") * F.lit(frac)
-            fr = h - F.floor(h)
-            lo, hi = F.col(f"_lo_{name}"), F.col(f"_hi_{name}")
+        if name in disc:
+            post.append(f"{_q(f'_d_{name}')} AS {alias}")
+        elif frac is not None:
             # DuckDB quantile_cont / Spark percentile interpolation form
-            post.append((lo + fr * (hi - lo)).alias(alias))
-        elif name in ("min",):
-            post.append(F.col("_gmin").alias(alias))
-        elif name in ("max",):
-            post.append(F.col("_gmax").alias(alias))
-        elif name in ("avg", "mean"):
-            post.append((F.col("_gsum") / F.col("_n")).alias(alias))
-        elif name == "sum":
-            post.append(F.col("_gsum").alias(alias))
-        elif name == "count":
-            post.append(F.col("_n").alias(alias))
-    return out.select(*group_cols, *post)
+            h = _pos(frac)
+            lo, hi = _q(f"_lo_{name}"), _q(f"_hi_{name}")
+            post.append(f"{lo} + ({h} - floor({h})) * ({hi} - {lo}) AS {alias}")
+        else:
+            post.append(f"{simple[name]} AS {alias}")
+    return out.selectExpr(*[_q(g) for g in group_cols], *post)
 
 
 def weighted_zonal_aggregate(

@@ -966,7 +966,9 @@ _R8_GREEN = frozenset(
         # near_dup_prefix_filter: r8-green, but its operator was edited
         # in r12 (freq groupBy+join -> window count, the 5.1 -> 4.5 s
         # floor cut) — removed pending a fresh driver verdict
-        "similarity_topk_lsh_indexed",
+        # "similarity_topk_lsh_indexed" was r8-green, but its operator
+        # lsh_topk_from_index gained a probe-side persist in r14 after
+        # the verdict (ADVICE r14 #3) — re-fronted.
         # "incremental_dedup" was r8-green but the fixture-batch probe
         # path changes in the r14 optimization round — re-fronted.
         "dup_spans", "near_dup_simhash",
@@ -974,7 +976,11 @@ _R8_GREEN = frozenset(
         # "ann_index_upsert_topk" / "ann_index_asof_topk" were r8-green
         # but lsh_topk_from_index's probe side changes in the r14
         # optimization round — re-fronted.
-        "stream_new_doc_dedup", "stream_ann_index_upsert",
+        # "stream_ann_index_upsert" was r8-green, but it reads through
+        # lsh_topk_from_index (changed in r14) and calls
+        # ann_index_upsert, whose writes now count through observed
+        # metrics instead of persist + count barriers — re-fronted.
+        "stream_new_doc_dedup",
         "mor_orders_state", "mor_orders_time_travel",
         "mor_orders_changelog", "mor_history_audit",
         "mor_schema_evolution", "stream_mor_cdc_apply",
@@ -1139,7 +1145,9 @@ _R13_GREEN = frozenset(
         "pricing_summary", "props_variant_stats", "ql_dirichlet_topk",
         "qty_price_regression", "recursive_ancestor_depths",
         "regrid_fraction", "rolling_sums", "semantic_dedup",
-        "similarity_topk_lsh", "similarity_topk_lsh_multiprobe",
+        # similarity_topk_lsh / similarity_topk_lsh_multiprobe:
+        # r13-green, but lsh_bucket_topk dropped its eager corpus count
+        # after the verdict — re-fronted
         "spi_zscore", "stream_iceberg_delete_cdc", "topk_per_group",
         # unigram_lm_train / unigram_segment_stats: r13-green, but the
         # r14 round capped the per-task Viterbi memos (VERDICT r13
@@ -1214,6 +1222,14 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     # per-task Viterbi memo caps (identical output, compute path touched)
     "unigram_lm_train",
     "unigram_segment_stats",
+    # green verdicts older than a change to their operators:
+    # lsh_topk_from_index's r14 probe-side persist (ADVICE r14 #3), and
+    # the eager count barriers dropped from lsh_bucket_topk and
+    # ann_index_upsert since
+    "similarity_topk_lsh_indexed",
+    "stream_ann_index_upsert",
+    "similarity_topk_lsh",
+    "similarity_topk_lsh_multiprobe",
 )
 
 

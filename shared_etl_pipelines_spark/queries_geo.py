@@ -363,8 +363,9 @@ def q_shapefile_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # G4, distributed-exact formulation: same oracle as zonal_stats, but the
-# quantiles come from ranked_quantiles (range-repartition + rank offsets)
-# instead of percentile()'s one-buffer-per-group. Exactness AND
+# quantiles come from ranked_quantiles (sketched bucket bounds, cumulative
+# counts, a broadcast range probe of the hit buckets) instead of
+# percentile()'s one-buffer-per-group. Exactness AND
 # parallelism: a group larger than executor memory still computes, and
 # per-group work spreads over partitions x groups tasks.
 # ---------------------------------------------------------------------------

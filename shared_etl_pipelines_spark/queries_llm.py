@@ -2432,13 +2432,13 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the window form, no single-key task anywhere. The guarded frame
     # persists once for its two consumers (probe side + benchmark
     # slice); the session sweep reclaims it.
-    # one full pass total: the pre-guard distinct frame persists, the
-    # hot census reads the cache, and the hot set is collected once with
-    # an empty short-circuit (the _cap_band_buckets pattern) — on a
-    # normal corpus the set is empty and the executed plan returns to
-    # the unguarded shape, with no anti-join machinery at all
+    # one full pass total: the pre-guard distinct frame persists and the
+    # hot-set collect (the first consumer) fills the cache inside its own
+    # job; the hot set is collected once with an empty short-circuit (the
+    # _cap_band_buckets pattern) — on a normal corpus the set is empty
+    # and the executed plan returns to the unguarded shape, with no
+    # anti-join machinery at all
     sh = sh.persist()
-    sh.count()
     hot = (
         sh.groupBy("s")
         .agg(F.count(F.lit(1)).alias("_df"))

@@ -207,6 +207,77 @@ def test_ranked_quantiles_one_giant_group_is_partition_parallel(spark):
     assert row["min"] == 0.0 and row["max"] == 100000.0
 
 
+def _edge_groups(spark):
+    """All-duplicate, single-row, NULL-valued, all-NULL and NULL-keyed
+    groups in one frame."""
+    rows = (
+        [("dup", 7.0)] * 5
+        + [("one", 3.5)]
+        + [("nulls", v) for v in (None, 3.0, None, 1.0, 2.0, 9.0)]
+        + [("allnull", None), ("allnull", None)]
+        + [(None, v) for v in (4.0, 1.0, 8.0, 2.0)]
+    )
+    return spark.createDataFrame(rows, "zone string, v double")
+
+
+def _by_zone(df):
+    return {r["zone"]: [r[c] for c in r.asDict() if c != "zone"] for r in df.collect()}
+
+
+def test_ranked_quantiles_keeps_null_group_on_both_paths(spark):
+    from shared_etl_pipelines_spark.operators.aggregates import ranked_quantiles
+
+    df = _edge_groups(spark)
+    with_q = _by_zone(ranked_quantiles(df, ["zone"], "v", "med,count"))
+    without_q = _by_zone(ranked_quantiles(df, ["zone"], "v", "min,max,count"))
+    assert with_q[None] == [3.0, 4]
+    assert without_q[None] == [1.0, 8.0, 4]
+    assert set(with_q) == set(without_q) == {"dup", "one", "nulls", "allnull", None}
+
+
+def test_ranked_quantiles_edge_groups_match_percentile_path(spark):
+    """Same answer as the percentile() buffer path on all-duplicate,
+    single-row, NULL-valued and all-NULL groups (SQL semantics: NULL
+    values are skipped, an all-NULL group has count 0 and NULL stats)."""
+    from shared_etl_pipelines_spark.operators.aggregates import (
+        ranked_quantiles,
+        zonal_aggregate,
+    )
+
+    df = _edge_groups(spark)
+    specs = "min,p5,q1,med,avg,q3,p95,max,count"
+    a = _by_zone(zonal_aggregate(df, ["zone"], "v", specs))
+    b = _by_zone(ranked_quantiles(df, ["zone"], "v", specs))
+    assert a.keys() == b.keys()
+    for z in a:
+        assert [None if x is None else round(x, 9) for x in a[z]] == [
+            None if x is None else round(x, 9) for x in b[z]
+        ], z
+    assert b["allnull"] == [None] * 8 + [0]
+
+
+def test_ranked_quantiles_builds_lazily_without_cache(spark):
+    """Building the operator starts no Spark job (no eager count or
+    collect), and its executed plan reads no cache and never falls back
+    to a sort-based aggregate on the full-width counts pass."""
+    from pyspark.sql import functions as F
+
+    from shared_etl_pipelines_spark.operators.aggregates import ranked_quantiles
+
+    df = spark.range(5000).select(
+        (F.col("id") % 3).cast("string").alias("zone"),
+        (F.col("id") * 7 % 1000).cast("double").alias("v"),
+    )
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = ranked_quantiles(df, ["zone"], "v", "p5,med,p95_disc,avg,count")
+    assert sched.nextJobId() == before
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert "SortAggregate" not in plan
+
+
 def test_bloom_semi_join_exact_and_filtering(spark):
     """Bloom pre-filter must (a) never drop a true match (no false
     negatives) and (b) actually thin the fact side before the join."""
