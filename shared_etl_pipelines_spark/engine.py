@@ -187,6 +187,133 @@ def hadoop_fs(spark: SparkSession, path: str):
     return fs, jpath
 
 
+def _is_hidden(name: str) -> bool:
+    # Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName), less
+    # its summary-file exception: summary files are handled by the caller.
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+class _NoFooter(Exception):
+    """Spark's own inference would not read exactly one data footer."""
+
+
+def _first_data_file(fs, status):
+    """FileStatus of the data file Spark's non-merging inference reads at
+    or under ``status`` — the lexicographically first by full path — or
+    None when Spark would find none.
+
+    Spark reads the files directly in a directory, and the files of
+    Hive partition directories (``key=value``) below it; it reads no
+    other subdirectory. So this lists one directory per level,
+    backtracking only past empty partitions: a partitioned dataset costs
+    O(depth) listings, not a recursive listing of every file. A
+    directory that holds a summary file (``_metadata``/
+    ``_common_metadata``, which Spark would read instead) raises
+    ``_NoFooter``.
+    """
+    if not status.isDirectory():
+        return status
+    files, partitions = [], []
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        if name.startswith(("_metadata", "_common_metadata")):
+            raise _NoFooter
+        if _is_hidden(name):
+            continue
+        if not child.isDirectory():
+            files.append((name, child))
+        elif "=" in name:
+            # '/' orders a directory's files where the full path string does.
+            partitions.append((name + "/", child))
+    if files:
+        return min(files, key=lambda e: e[0])[1]
+    for _, child in sorted(partitions, key=lambda e: e[0]):
+        found = _first_data_file(fs, child)
+        if found is not None:
+            return found
+    return None
+
+
+def _footer_schema(spark: SparkSession, paths: tuple[str, ...]):
+    """Data schema of the parquet input at ``paths`` read from one footer
+    on the driver, or None where Spark's inference would do something
+    else: merging schemas, reading a summary file, or raising (missing
+    path, empty directory, unreadable footer)."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    if not paths or spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    jvm = spark.sparkContext._jvm
+    first = None
+    try:
+        for path in paths:
+            fs, jpath = hadoop_fs(spark, path)
+            roots = fs.globStatus(jpath)  # Spark globs its paths the same way
+            if not roots:
+                return None
+            for root in roots:
+                found = _first_data_file(fs, root)
+                if found is None:
+                    continue
+                key = found.getPath().toString()
+                if first is None or key < first[0]:
+                    first = (key, found)
+        if first is None:
+            return None
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            spark.sparkContext._jsc.hadoopConfiguration(),
+            first[1],
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        converter = pq.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+        jschema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(first[1].getPath(), meta), converter
+        )
+    except _NoFooter:
+        return None
+    except Py4JJavaError:
+        # Unreadable or unconvertible footer: the plain reader raises
+        # Spark's own error for it.
+        return None
+    return _parse_datatype_json_string(jschema.asNullable().json())
+
+
+def parquet_schema(spark: SparkSession, *paths: str):
+    """Schema of the parquet data at ``paths``, as ``spark.read.parquet``
+    infers it, without starting a Spark job.
+
+    Spark's inference runs as a job even for one file; this reads the one
+    footer that inference would read (the lexicographically first data
+    file, found in O(depth) listings) on the driver and converts it with
+    Spark's own converter under the session's SQL conf, so
+    ``nanosAsLong``, ``inferTimestampNTZ``, binary-as-string and the rest
+    apply exactly as in the job. Only data columns are returned: Hive
+    partition columns (``key=value`` directories) are Spark's to discover.
+    Where the inference would not read one data footer (session
+    ``mergeSchema``, summary files, a missing path, an empty directory,
+    an unreadable footer) this is Spark's inferred schema, or Spark's
+    error."""
+    schema = _footer_schema(spark, paths)
+    return schema if schema is not None else spark.read.parquet(*paths).schema
+
+
+def read_parquet(spark: SparkSession, *paths: str):
+    """``spark.read.parquet(*paths)`` without the schema-inference job:
+    the data schema comes from :func:`parquet_schema`'s one footer, and
+    Spark still lists the files and adds partition columns itself. Falls
+    back to the plain reader, with its own merging and errors, wherever
+    :func:`parquet_schema` does."""
+    schema = _footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Scheme-aware existence check (Hadoop FileSystem API)."""
     fs, jpath = hadoop_fs(spark, path)
@@ -285,4 +412,4 @@ def checkpoint_to_scratch(df, name: str = "ckpt") -> "DataFrame":  # noqa: F821
     if not _SCRATCH_DIRS:
         atexit.register(sweep_scratch)
     _SCRATCH_DIRS.append((spark, path))
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import read_parquet
+
 
 def zorder_key(cols: Sequence[Column | str], bits: int = 16) -> Column:
     """Morton-interleave the low ``bits`` of each column into one long.
@@ -110,7 +112,7 @@ def compact_small_files(
             files_in += 1
             bytes_in += st.getLen()
     n_out = max(1, -(-bytes_in // target_file_bytes))
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     if sort_cols:
         out = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(*sort_cols)
     else:

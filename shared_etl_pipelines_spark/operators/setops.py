@@ -2,35 +2,16 @@
 
 Reference: combine_files.py — concatenate many same-schema CSVs into one
 (pipelines/prism/county_daily_aggregate.yml:38-44): the reference's
-UNION ALL. Natively a glob read IS the union; for heterogenous frames we
-use unionByName with missing-column fill.
+UNION ALL. Natively a glob read IS the union (the ``combine_files``
+plugin); for heterogenous frames we use unionByName with missing-column
+fill.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def combine_files(
-    spark: SparkSession,
-    paths_or_glob: str | list[str],
-    fmt: str = "csv",
-    **options,
-) -> DataFrame:
-    """Read many same-schema files as one DataFrame (S6). A glob read is a
-    single distributed scan — no driver-side concatenation."""
-    reader = spark.read.options(**options)
-    if fmt == "csv":
-        return reader.csv(paths_or_glob, header=options.get("header", True))
-    if fmt == "parquet":
-        return reader.parquet(
-            *(paths_or_glob if isinstance(paths_or_glob, list) else [paths_or_glob])
-        )
-    if fmt == "json":
-        return reader.json(paths_or_glob)
-    raise ValueError(f"unsupported format: {fmt}")
+from pyspark.sql import DataFrame
 
 
 def union_all(frames: list[DataFrame], by_name: bool = True) -> DataFrame:

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import read_parquet
 from shared_etl_pipelines_spark.functions.vectors import as_double, cosine, dot, l2_norm
 
 
@@ -358,7 +359,7 @@ def _apply_tombstones(
     tpath = _tombstone_path(index_path)
     if not fs_exists(spark, tpath):
         return idx
-    tomb = spark.read.parquet(tpath)
+    tomb = read_parquet(spark, tpath)
     if as_of_seq is not None:
         tomb = tomb.filter(F.col("seq") <= int(as_of_seq))
     tomb = tomb.groupBy(F.col(id_col)).agg(F.max("seq").alias("_dead_seq"))
@@ -444,7 +445,7 @@ def ann_index_upsert(
         seq = 1
         tpath = _tombstone_path(index_path)
         if fs_exists(spark, tpath):
-            prev = spark.read.parquet(tpath).agg(F.max("seq")).collect()[0][0]
+            prev = read_parquet(spark, tpath).agg(F.max("seq")).collect()[0][0]
             seq = int(prev or 0) + 1
         # each write counts its own rows through an Observation, so a
         # write is one job — no cache, no separate count job
@@ -500,13 +501,13 @@ def compact_ann_index(
     lock = index_path.rstrip("/") + ".ann.lock"
     acquire_fs_lock(spark, lock, owner="compact_ann_index")
     try:
-        idx = spark.read.parquet(index_path)
+        idx = read_parquet(spark, index_path)
         live = _apply_tombstones(spark, index_path, idx, id_col).withColumn(
             "seq", F.lit(0).cast("long")
         )
         tmp = index_path.rstrip("/") + ".compacting"
         live.write.mode("overwrite").partitionBy("tbl", "bucket").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
+        n = read_parquet(spark, tmp).count()
         old = index_path.rstrip("/") + ".old"
         shutil.rmtree(old, ignore_errors=True)
         os.rename(index_path, old)
@@ -566,7 +567,7 @@ def lsh_topk_from_index(
     if pred is None:  # empty query batch: no probes, no matches
         pred = F.lit(False)
 
-    idx = spark.read.parquet(index_path).filter(pred)
+    idx = read_parquet(spark, index_path).filter(pred)
     idx = _apply_tombstones(spark, index_path, idx, id_col, as_of_seq=as_of_seq)
     # the pruned, tombstone-applied probe set feeds BOTH the candidate
     # join and the exact-rescore side — without a persist each consumer

@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark import engine
 from shared_etl_pipelines_spark.operators.aggregates import (
     weighted_zonal_aggregate,
     zonal_aggregate,
@@ -90,7 +91,7 @@ def exec_script(ctx: StepContext, script: str, **kw: Any) -> dict[str, Any]:
 # -- sources / sinks --------------------------------------------------------
 @plugin("read_parquet")
 def read_parquet(ctx: StepContext, path: str, **kw: Any) -> dict[str, Any]:
-    return {"df": ctx.spark.read.parquet(path), "path": path}
+    return {"df": engine.read_parquet(ctx.spark, path), "path": path}
 
 
 @plugin("read_csv")
@@ -134,8 +135,10 @@ def combine_files(ctx: StepContext, dfs: Any = None, input_glob: str | None = No
                   fmt: str = "csv", **kw: Any) -> dict[str, Any]:
     if dfs is not None:
         return {"df": union_all(list(dfs))}
-    reader = ctx.spark.read.option("header", True)
-    df = reader.csv(input_glob, inferSchema=True) if fmt == "csv" else reader.parquet(input_glob)
+    if fmt == "csv":
+        df = ctx.spark.read.option("header", True).csv(input_glob, inferSchema=True)
+    else:
+        df = engine.read_parquet(ctx.spark, input_glob)
     return {"df": df}
 
 

@@ -11,6 +11,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from shared_etl_pipelines_spark.engine import read_parquet
 from shared_etl_pipelines_spark.plans.registry import plugin
 from shared_etl_pipelines_spark.plans.runner import StepContext
 from shared_etl_pipelines_spark.sources import catalog as C
@@ -48,7 +49,7 @@ def vector_facts(
     output_dir: str = ".", name: str | None = None, **_: Any,
 ) -> dict[str, Any]:
     if df is None:
-        df = ctx.spark.read.parquet(input_path)
+        df = read_parquet(ctx.spark, input_path)
     return C.vector_facts(df, output_dir, name=name or "dataset")
 
 
@@ -58,7 +59,7 @@ def ai_dataset_evidence_bundle(
     **args: Any,
 ) -> dict[str, Any]:
     if df is None:
-        df = ctx.spark.read.parquet(input_path)
+        df = read_parquet(ctx.spark, input_path)
     return C.evidence_bundle(df, **args)
 
 

@@ -936,7 +936,10 @@ _R7_GREEN = frozenset(
         "kn_bigram_lm_quality", "mann_whitney_u",
         "partition_evolution_read", "multimodal_mulaw_decode",
         "multimodal_png_decode", "multimodal_resize_real",
-        "stream_custom_state_alarms", "spearman_spend_orders",
+        # "stream_custom_state_alarms" was green, but its builder now
+        # reads its parquet schema through engine.parquet_schema —
+        # re-fronted.
+        "spearman_spend_orders",
         "anova_priority_f", "stream_interval_join_outer",
         "clustering_coefficient", "multimodal_adpcm_decode",
         "near_dup_containment", "twap_event_value", "oov_rate_split",
@@ -980,10 +983,12 @@ _R8_GREEN = frozenset(
         # lsh_topk_from_index (changed in r14) and calls
         # ann_index_upsert, whose writes now count through observed
         # metrics instead of persist + count barriers — re-fronted.
-        "stream_new_doc_dedup",
+        # "stream_new_doc_dedup" / "stream_mor_cdc_apply" were green,
+        # but their builders now read parquet through
+        # engine.read_parquet / parquet_schema — re-fronted.
         "mor_orders_state", "mor_orders_time_travel",
         "mor_orders_changelog", "mor_history_audit",
-        "mor_schema_evolution", "stream_mor_cdc_apply",
+        "mor_schema_evolution",
         "holt_linear_daily", "gif_animated_frames", "record_linkage_fs",
         "pagerank_copurchase", "multimodal_avi_frames", "mp3_stream_scan",
         "mann_kendall_trend", "dp_noisy_group_counts", "kruskal_wallis_h",
@@ -1110,7 +1115,9 @@ _R12_GREEN = frozenset(
         "qty_price_regression", "recursive_ancestor_depths",
         "regrid_fraction", "revenue_share_of_region", "rolling_sums",
         "spi_zscore", "sqlite_without_rowid_scan",
-        "stream_delta_dv_cdc", "time_range_rolling", "topk_per_group",
+        # stream_delta_dv_cdc: builder now reads its parquet schema
+        # through engine.parquet_schema — re-fronted
+        "time_range_rolling", "topk_per_group",
         "union_combine", "value_mask", "weighted_median",
         "weighted_zonal", "zonal_stats", "zorder_clustering_key",
         "zstd_encode_audit",
@@ -1135,11 +1142,8 @@ _R13_GREEN = frozenset(
         "embedding_quantize_int8", "event_funnel",
         "heavy_demand_parts_sketch", "langid_confusion",
         "mode_event_type", "multimodal_vp8_residuals", "multiply_join",
-        # outlier_mad: r13-green; r14 re-measured the persist form
-        # (interleaved A/B: parity warm, faster cold — the driver's
-        # 0.87x was noise) and left the code untouched, so the r13
-        # verdict stands
-        "outlier_mad",
+        # outlier_mad: r13-green, but its eager med.count() barrier
+        # was dropped after the verdict — re-fronted
         "near_dup_minhash_lsh", "near_dup_prefix_filter",
         "parquet_write_delta_audit", "parquet_write_list_audit",
         "pricing_summary", "props_variant_stats", "ql_dirichlet_topk",
@@ -1148,7 +1152,9 @@ _R13_GREEN = frozenset(
         # similarity_topk_lsh / similarity_topk_lsh_multiprobe:
         # r13-green, but lsh_bucket_topk dropped its eager corpus count
         # after the verdict — re-fronted
-        "spi_zscore", "stream_iceberg_delete_cdc", "topk_per_group",
+        # stream_iceberg_delete_cdc: r13-green, but its builder now
+        # reads parquet through engine.read_parquet — re-fronted
+        "spi_zscore", "topk_per_group",
         # unigram_lm_train / unigram_segment_stats: r13-green, but the
         # r14 round capped the per-task Viterbi memos (VERDICT r13
         # minor #6) — identical output, re-fronted per the compute-path
@@ -1230,6 +1236,15 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     "stream_ann_index_upsert",
     "similarity_topk_lsh",
     "similarity_topk_lsh_multiprobe",
+    # green verdicts older than their builder's edits: outlier_mad's
+    # eager count barrier went; the streaming builders read parquet
+    # (or its schema) through engine.read_parquet / parquet_schema
+    "outlier_mad",
+    "stream_custom_state_alarms",
+    "stream_new_doc_dedup",
+    "stream_mor_cdc_apply",
+    "stream_delta_dv_cdc",
+    "stream_iceberg_delete_cdc",
 )
 
 

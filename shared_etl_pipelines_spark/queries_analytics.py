@@ -175,13 +175,9 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     med = base.groupBy("grp").agg(F.percentile("v", F.lit(0.5)).alias("med"))
     # The med subtree feeds two consumers (the mad pass and the final
-    # aggregate) and Catalyst does not reuse the exchange across them —
-    # executed plan showed the group-median percentile pass running
-    # TWICE (4 source scans, 3 percentile aggregations). Persist the
-    # O(groups) result so the heavy pass runs once; same discipline as
-    # ranked_quantiles.
-    med = med.persist()
-    med.count()
+    # aggregate). Both broadcast it, and the executed plan reuses that
+    # broadcast exchange (ReusedExchange), so the percentile pass runs
+    # once with no persist and no job before the caller's action.
     with_med = base.join(F.broadcast(med), "grp")
     mad = (
         with_med.withColumn("adev", F.abs(F.col("v") - F.col("med")))

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import parquet_schema, read_parquet
 from shared_etl_pipelines_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -9553,7 +9554,7 @@ def q_stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(stage)
             os.utime(dst, (now + 10 * i, now + 10 * i))
 
-        schema = spark.read.parquet(os.path.join(drop, "b000.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(drop, "b000.parquet"))
 
         def apply_batch(bdf: DataFrame, _bid: int) -> None:
             bdf = bdf.withColumn("_src", F.input_file_name())
@@ -9596,7 +9597,7 @@ def q_stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(key, prev)
 
         max_seq = (
-            spark.read.parquet(os.path.join(index, "_tombstones"))
+            read_parquet(spark, os.path.join(index, "_tombstones"))
             .agg(F.max("seq"))
             .collect()[0][0]
         )
@@ -15459,7 +15460,7 @@ def _own_writer_fixture(
 
         _os.makedirs(fix_dir, exist_ok=True)
         key_col = col_spec[0][0]
-        df = spark.read.parquet(src).select(*col_names)
+        df = read_parquet(spark, src).select(*col_names)
         mx = df.agg(F.max(key_col)).collect()[0][0]
         shard = F.floor(
             F.col(key_col).cast("long") * n_shards / (int(mx) + 1)
@@ -15536,8 +15537,8 @@ def _own_writer_fixture(
                 sig_cols.append(
                     F.sum(F.length(name).cast("decimal(38,0)")).alias(name)
                 )
-        fx = spark.read.parquet(*paths).select(*col_names)
-        sd = spark.read.parquet(src).select(*col_names)
+        fx = read_parquet(spark, *paths).select(*col_names)
+        sd = read_parquet(spark, src).select(*col_names)
         both = fx.withColumn("__side", F.lit("fix")).unionByName(
             sd.withColumn("__side", F.lit("src"))
         )

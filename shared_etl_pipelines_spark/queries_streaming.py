@@ -36,6 +36,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shared_etl_pipelines_spark.engine import parquet_schema, read_parquet
 from shared_etl_pipelines_spark.queries import defquery
 from shared_etl_pipelines_spark.streaming import running_totals, tumbling_agg
 
@@ -50,7 +51,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     # windows are stable whatever zone the caller session started in
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     # the file source wants a directory: stream the sf_dir filtered down
     # to the events file
     df = (
@@ -535,7 +536,7 @@ def q_stream_raster_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _documents_stream(spark: SparkSession, sf_dir: str):
     path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     return (
         spark.readStream.format("parquet")
         .schema(schema)
@@ -569,7 +570,7 @@ def q_stream_new_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _documents_stream(spark, sf_dir)
     corpus = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
         .filter(F.col("doc_id") % 10 == 0)
         .select(F.md5("text").alias("content_hash"))
         .distinct()
@@ -680,7 +681,7 @@ def q_stream_mor_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(stage)
             os.utime(dst, (now + 10 * i, now + 10 * i))  # oldest-first order
 
-        schema = spark.read.parquet(os.path.join(drop, "b000.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(drop, "b000.parquet"))
 
         def apply_batch(bdf: DataFrame, _bid: int) -> None:
             # robust to micro-batch coalescing: apply per source batch
@@ -727,7 +728,7 @@ def q_stream_mor_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(key, prev)
 
         max_seq = (
-            spark.read.parquet(os.path.join(table, "_deletes"))
+            read_parquet(spark, os.path.join(table, "_deletes"))
             .agg(F.max("_seq"))
             .collect()[0][0]
         )
@@ -815,7 +816,7 @@ def q_stream_custom_state_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(stage)
             os.utime(dst, (now + 10 * i, now + 10 * i))  # oldest-first order
 
-        schema = spark.read.parquet(os.path.join(drop, "b000.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(drop, "b000.parquet"))
         feed = (
             spark.readStream.format("parquet")
             .schema(schema)
@@ -1328,8 +1329,8 @@ def q_stream_delta_dv_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # static side: in-file position -> doc_id (files are written sorted
     # by doc_id per 25-doc bucket, the fixture's closed form)
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id")
     from pyspark.sql import Window
 
@@ -1528,8 +1529,8 @@ def q_stream_iceberg_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # static side: in-file position -> doc_id (data files are written
     # sorted by doc_id per 25-doc bucket, the fixture's closed form)
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
+    docs = read_parquet(
+        spark, os.path.join(sf_dir, "documents.parquet")
     ).select("doc_id")
     from pyspark.sql import Window
 

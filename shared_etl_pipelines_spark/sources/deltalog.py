@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import read_parquet
+
 __all__ = [
     "write_commit", "write_checkpoint", "snapshot_files",
     "snapshot_rows", "vacuum_plan", "log_history",
@@ -180,7 +182,7 @@ def _replay(
             cp = os.path.join(
                 _log_dir(table_path), f"{cpv:020d}.checkpoint.parquet"
             )
-            cdf = spark.read.parquet(cp)
+            cdf = read_parquet(spark, cp)
             # pre-DV checkpoints lack the field; read them as null DVs
             add_fields = {
                 f.name for f in cdf.schema["add"].dataType.fields
@@ -451,7 +453,7 @@ def snapshot_rows(
         raise ValueError("delta: snapshot has no live files — quarantine")
     prefix = os.path.abspath(table_path)
     data = (
-        spark.read.parquet(*sorted(os.path.join(prefix, r["path"]) for r in files))
+        read_parquet(spark, *sorted(os.path.join(prefix, r["path"]) for r in files))
         .withColumn(
             "_relpath",
             F.regexp_replace(

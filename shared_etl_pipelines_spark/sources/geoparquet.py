@@ -45,9 +45,11 @@ def scan_geoparquet(spark, path: str):
 
     import pandas as pd
 
+    from shared_etl_pipelines_spark.engine import read_parquet
+
     geo = read_geo_metadata(path)
     gcol = geo["primary_column"]
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from shared_etl_pipelines_spark.sources.vector import parse_wkb

@@ -31,6 +31,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import read_parquet
+
 __all__ = [
     "timeline_instants",
     "snapshot_file_slices",
@@ -292,7 +294,7 @@ def snapshot_mor_rows(spark: SparkSession, table_path: str) -> DataFrame:
     if not base_paths:
         raise ValueError("hudi: MOR table has no base files — quarantine")
 
-    base = spark.read.parquet(*sorted(set(base_paths))).select(
+    base = read_parquet(spark, *sorted(set(base_paths))).select(
         "doc_id", "size", "day",
         F.lit("00000000000000000").alias("instant"),  # base sorts first
         F.lit("U").alias("op"),

@@ -33,6 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from shared_etl_pipelines_spark.engine import read_parquet
 from shared_etl_pipelines_spark.sources.avro import (
     read_avro_ocf,
     write_avro_ocf,
@@ -489,7 +490,7 @@ def snapshot_rows(
         "file_path string, data_seq long",
     )
     data = (
-        spark.read.parquet(*sorted({r["file_path"] for r in live}))
+        read_parquet(spark, *sorted({r["file_path"] for r in live}))
         .withColumn("_fp", _norm_file_path(F.col("_metadata.file_path")))
         .withColumn("_pos", F.col("_metadata.row_index"))
         # file->seq is scan-plan metadata (tiny next to the rows): broadcast
@@ -518,7 +519,7 @@ def snapshot_rows(
             pos_files, "dfile string, del_seq long"
         )
         pdel = (
-            spark.read.parquet(*sorted({p for p, _ in pos_files}))
+            read_parquet(spark, *sorted({p for p, _ in pos_files}))
             .withColumn("_dfp", _norm_file_path(F.col("_metadata.file_path")))
             .join(F.broadcast(pseq), F.col("_dfp") == F.col("dfile"), "inner")
         )
@@ -537,7 +538,7 @@ def snapshot_rows(
             raise ValueError("iceberg: equality delete without equality_ids")
         eseq = spark.createDataFrame(files, "dfile string, del_seq long")
         edel = (
-            spark.read.parquet(*sorted({p for p, _ in files}))
+            read_parquet(spark, *sorted({p for p, _ in files}))
             .withColumn("_dfp", _norm_file_path(F.col("_metadata.file_path")))
             .join(F.broadcast(eseq), F.col("_dfp") == F.col("dfile"), "inner")
         )
@@ -991,7 +992,7 @@ def rewrite_data_plan(
 
     if pos_paths:
         pos_counts = (
-            spark.read.parquet(*pos_paths)
+            read_parquet(spark, *pos_paths)
             .groupBy("file_path")
             .agg(F.count(F.lit(1)).alias("n_pos_deletes"))
         )

@@ -5,7 +5,7 @@ The reference's data model is file-granular and directory-partitioned
 our native layout is one parquet dataset per logical table, read with
 full predicate pushdown / column pruning.
 
-At 100 TB the same call works unchanged: `spark.read.parquet` over a
+At 100 TB the same call works unchanged: `engine.read_parquet` over a
 partitioned directory tree; partition pruning comes from Catalyst as
 long as filters reference the partition columns.
 """
@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from shared_etl_pipelines_spark.engine import read_parquet
 
 # The driver-generated test corpus (TESTDATA.md): TPC-H-ish star schema
 # + events stream + documents/embeddings for the LLM-data operators.
@@ -39,6 +41,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Accepts both `<dir>/<name>.parquet` (driver layout)
     and `<dir>/<name>` (partitioned dataset layout).
 
+    The loader starts no Spark job: the schema comes from one parquet
+    footer read on the driver (`engine.read_parquet`), not from Spark's
+    schema-inference job, so building a query that loads N tables costs
+    no serial job per table.
+
     Nanosecond-precision parquet timestamps (the `events.ts` column) are
     illegal for Spark's vectorized reader; we read them as long nanos
     (`spark.sql.legacy.parquet.nanosAsLong`) and rebuild a microsecond
@@ -57,7 +64,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # and day-of-year semantics; pin it here (the loader is the one chokepoint
     # every query passes through).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(p)
+    df = read_parquet(spark, p)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

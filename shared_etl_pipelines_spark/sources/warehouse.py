@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shared_etl_pipelines_spark.engine import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -42,7 +44,7 @@ def write_partitioned(
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def compact_partition(
@@ -76,7 +78,7 @@ def compact_partition(
         return {"files_before": len(files), "files_after": len(files), "bytes": total}
 
     tmp = path.rstrip("/") + "._compact_tmp"
-    spark.read.parquet(path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    read_parquet(spark, path).coalesce(n_out).write.mode("overwrite").parquet(tmp)
     old = path.rstrip("/") + "._compact_old"
     os.rename(path, old)
     os.rename(tmp, path)
@@ -177,7 +179,7 @@ def mor_apply_changes(
         dpath = _mor_deletes_path(path)
         seq = 1
         if fs_exists(spark, dpath):
-            prev = spark.read.parquet(dpath).agg(F.max("_seq")).collect()[0][0]
+            prev = read_parquet(spark, dpath).agg(F.max("_seq")).collect()[0][0]
             seq = int(prev or 0) + 1
         n_new = 0
         if upserts is not None:
@@ -209,10 +211,10 @@ def _mor_state(
 
     from shared_etl_pipelines_spark.engine import fs_exists
 
-    reader = spark.read
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    rows = reader.parquet(path)
+        rows = spark.read.option("mergeSchema", "true").parquet(path)
+    else:
+        rows = read_parquet(spark, path)
     if as_of_seq is not None:
         rows = rows.filter(F.col("_seq") <= int(as_of_seq))
     w = Window.partitionBy(*key_cols).orderBy(F.col("_seq").desc())
@@ -223,7 +225,7 @@ def _mor_state(
     )
     dpath = _mor_deletes_path(path)
     if fs_exists(spark, dpath):
-        tomb = spark.read.parquet(dpath)
+        tomb = read_parquet(spark, dpath)
         if as_of_seq is not None:
             tomb = tomb.filter(F.col("_seq") <= int(as_of_seq))
         tomb = tomb.groupBy(*key_cols).agg(F.max("_seq").alias("_dead_seq"))
@@ -338,7 +340,7 @@ def mor_history(spark: SparkSession, path: str) -> DataFrame:
     dpath = _mor_deletes_path(path)
     if fs_exists(spark, dpath):
         tombs = (
-            spark.read.parquet(dpath)
+            read_parquet(spark, dpath)
             .groupBy("_seq")
             .agg(F.count(F.lit(1)).alias("keys_tombstoned"))
         )
@@ -391,7 +393,7 @@ def mor_compact(spark: SparkSession, path: str, key_cols: list[str]) -> dict:
         )
         tmp = path.rstrip("/") + ".compacting"
         live.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
+        n = read_parquet(spark, tmp).count()
         old = path.rstrip("/") + ".old"
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)
@@ -715,7 +717,7 @@ def read_evolved(spark: SparkSession, path: str) -> DataFrame:
     out = None
     types: dict[str, str] = {}
     for e in eras:
-        df = spark.read.parquet(os.path.join(path, e["dir"]))
+        df = read_parquet(spark, os.path.join(path, e["dir"]))
         # Fail loud on type drift: a column that is data in one era and
         # a partition key in another must round-trip to the SAME type
         # (directory values are type-inferred — '1-URGENT' stays string,

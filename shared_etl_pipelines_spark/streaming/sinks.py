@@ -31,6 +31,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from shared_etl_pipelines_spark.engine import read_parquet
+
 
 class TxnBatchSink:
     """Idempotent foreachBatch sink over a plain directory target.
@@ -192,4 +194,4 @@ class TxnBatchSink:
         ]
         if not dirs:
             raise ValueError(f"no committed batches under {self.root}")
-        return spark.read.parquet(*dirs)
+        return read_parquet(spark, *dirs)

@@ -675,3 +675,20 @@ def test_zorder_plan_skips_only_under_morton_layout(spark, sf_dir):
     assert all(
         r["n_rows"] > 0 and r["mn_p_size"] <= r["mx_p_size"] for r in rows
     )
+
+
+def test_outlier_mad_builds_lazily_with_one_median_pass(spark, sf_dir):
+    """Building outlier_mad starts no Spark job, and its executed plan
+    runs the group-median percentile pass once, with no cache scan."""
+    import re
+
+    from shared_etl_pipelines_spark.queries import REGISTRY
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    out = REGISTRY["outlier_mad"].fn(spark, sf_dir)
+    assert sched.nextJobId() == before
+    assert len(out.collect()) == 3
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    assert len(re.findall(r"functions=\[percentile\(v#", plan)) == 1
