@@ -208,16 +208,10 @@ def lsh_bucket_topk(
     pinned in tests/test_llm_operators.py). At 100 TB the corpus is
     stored once per table, hash-partitioned by (table, bucket) — each
     query still scans ~L/2^n of the data, candidate generation stays
-    linear, and the (query, candidate) dedup is one shuffle on the pair
-    key before the exact rerank.
+    linear, and the (query, candidate) dedup and exact rerank share one
+    shuffle on the query id (``_rerank_topk``).
     """
     corpus = _prep(embeddings, id_col, vec_col)
-    # corpus feeds the bucket build AND the exact rerank; persist so the
-    # scan + norm prep runs once (same shape as embedding_near_dup_lsh).
-    # No eager count: the bucket join's job fills the cache as it scans.
-    # CALLERS MUST RECLAIM via StorageScope / engine.sweep_persistent_rdds
-    # — that contract is part of this operator's API (ADVICE r13 #4).
-    corpus = corpus.persist()
     qs = _prep(queries, id_col, vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("qv"),
@@ -236,11 +230,13 @@ def lsh_bucket_topk(
     if arrow_buckets:
         bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
         corpus_b = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-            id_col, F.posexplode("_bks").alias("tbl", "bucket")
+            id_col, "v", "norm", F.posexplode("_bks").alias("tbl", "bucket")
         )
     else:
         corpus_b = corpus.select(
             id_col,
+            "v",
+            "norm",
             F.posexplode(
                 F.array(
                     *[
@@ -268,29 +264,87 @@ def lsh_bucket_topk(
             for p in probes
         ]
     qs_b = qs.select(
-        "query_id", F.explode(F.array(*probe_entries)).alias("_e")
-    ).select("query_id", F.col("_e.tbl").alias("tbl"), F.col("_e.bucket").alias("bucket"))
-    pairs = (
-        F.broadcast(qs_b)
-        .join(corpus_b, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col)
-        .distinct()
+        "query_id", "qv", "qn", F.explode(F.array(*probe_entries)).alias("_e")
+    ).select("query_id", "qv", "qn", "_e.tbl", "_e.bucket")
+    # The corpus streams through one scan: each bucket collision is
+    # scored where the broadcast join finds it, and only (query,
+    # candidate, cosine) rows reach the rerank's one shuffle.
+    cands = F.broadcast(qs_b).join(corpus_b, ["tbl", "bucket"])
+    return _rerank_topk(cands, id_col, k)
+
+
+def _rerank_topk(cands: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Exact top-k per query from bucket collisions that carry both
+    vectors (``qv``/``qn`` and ``v``/``norm``, optionally ``seq``).
+
+    The cosine is computed in the collision's own stage, so no shuffle
+    carries a vector. One ``repartition("query_id")`` then serves both
+    windows: the (query, candidate) dedup — a candidate collides once
+    per shared table, and in an upserted index once per live version,
+    the newest (max ``seq``) of which wins — and the top-k rank."""
+    seq = F.col("seq") if "seq" in cands.columns else F.lit(0)
+    scored = cands.filter(F.col("query_id") != F.col(id_col)).select(
+        "query_id",
+        id_col,
+        (dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm"))).alias("cosine"),
+        seq.alias("_seq"),
     )
-    # Rerank with the CORPUS as the streamed side: the (query, candidate)
-    # set is small by construction (a query batch x bucket occupancy), and
-    # AQE sees its actual size after the distinct and plans the corpus
-    # join as broadcast — keeping the big table shuffle-free at any corpus
-    # size without forcing an eager driver-side broadcast build here.
-    scored = (
-        corpus.join(pairs.join(F.broadcast(qs), "query_id"), id_col)
-        .withColumn("cosine", dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")))
+    newest = Window.partitionBy("query_id", id_col).orderBy(
+        F.col("_seq").desc(), F.col("cosine").desc()
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        scored.repartition("query_id")
+        .withColumn("_v", F.row_number().over(newest))
+        .filter(F.col("_v") == 1)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("query_id", id_col, "cosine", "rn")
+    )
+
+
+# An index is pruned on ONE partition column that encodes (tbl, bucket)
+# as "<tbl>_<bucket>". The probe is a broadcast join on it, and dynamic
+# partition pruning filters each join key on its own: on a (tbl, bucket)
+# key pair a probe of {(0, 3), (1, 5)} would also read (0, 5) and
+# (1, 3), while on one key it reads exactly the probed partitions. The
+# directories still nest under ``tbl=<t>/`` so that no directory holds
+# more children than Spark lists on the driver (parallelPartitionDiscovery
+# threshold, 32): 64 sibling partitions would start a listing job on
+# every read of the index. Indexes written in the older
+# ``tbl=<t>/bucket=<b>`` layout must be rebuilt with write_ann_index.
+ANN_PART = "tbl_bucket"
+
+
+def _ann_key():
+    return F.format_string("%d_%d", "tbl", "bucket").alias(ANN_PART)
+
+
+def _index_rows(
+    embeddings: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_planes: int,
+    dim: int,
+    n_tables: int,
+    seq: int,
+) -> DataFrame:
+    """One index row per (table, vector): bucket ids from the Arrow GEMM
+    path, the partition key, and the batch's sequence number."""
+    corpus = _prep(embeddings, id_col, vec_col)
+    bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
+    return corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
+        F.col(id_col),
+        "v",
+        "norm",
+        F.posexplode("_bks").alias("tbl", "bucket"),
+    ).select(
+        id_col,
+        "v",
+        "norm",
+        "tbl",
+        _ann_key(),
+        F.lit(seq).cast("long").alias("seq"),
     )
 
 
@@ -305,22 +359,37 @@ def write_ann_index(
 ) -> None:
     """Materialize the SRP-LSH index the way a warehouse would: bucket ids
     computed ONCE at ingest (Arrow GEMM path), corpus stored
-    ``partitionBy(tbl, bucket)`` so query-time reads prune to the probed
-    buckets only. One row per (table, bucket, vector)."""
-    corpus = _prep(embeddings, id_col, vec_col)
-    bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
-    rows = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-        F.col(id_col), "v", "norm", F.posexplode("_bks").alias("tbl", "bucket")
-    ).withColumn("seq", F.lit(0).cast("long"))  # ingest epoch for upserts
-    rows.write.mode("overwrite").partitionBy("tbl", "bucket").parquet(path)
+    ``partitionBy(tbl, tbl_bucket)`` — one partition per (table, bucket)
+    — so a probe's scan is pruned at runtime to the probed partitions. One
+    row per (table, bucket, vector), ingest epoch ``seq`` 0."""
+    _index_rows(embeddings, id_col, vec_col, n_planes, dim, n_tables, 0).write.mode(
+        "overwrite"
+    ).partitionBy("tbl", ANN_PART).parquet(path)
 
 
 def _tombstone_path(index_path: str) -> str:
     # underscore prefix => invisible to the main parquet listing, so the
-    # bucket scan never sees tombstone files; explicit reads still work
+    # bucket scan never sees tombstone files
     import os
 
     return os.path.join(index_path, "_tombstones")
+
+
+def tombstone_files(spark, index_path: str) -> list[str]:
+    """The part files under the index's ``_tombstones/`` (none when no
+    upsert has run). Readers take the files, not the directory: Spark's
+    listing treats a root whose name starts with ``_`` as hidden and
+    warns that all paths were ignored."""
+    from shared_etl_pipelines_spark.engine import hadoop_fs
+
+    fs, root = hadoop_fs(spark, _tombstone_path(index_path))
+    if not fs.exists(root):
+        return []
+    return sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(root)
+        if st.getPath().getName().startswith("part-")
+    )
 
 
 def _apply_tombstones(
@@ -332,47 +401,45 @@ def _apply_tombstones(
 ) -> DataFrame:
     """Liveness filter for an upserted index: a row survives iff no
     tombstone for its id carries a NEWER sequence number (each upsert
-    batch tombstones the ids it re-ingests/deletes at its own seq).
+    batch tombstones the ids it re-ingests/deletes at its own seq) — a
+    broadcast anti-join, with no aggregate and so no shuffle.
     Pre-upsert indexes (no seq column / no tombstone dir) pass through
     unchanged. ``as_of_seq`` time-travels exactly like
     sources/warehouse.py mor_read: rows and tombstones with
     seq > as_of are invisible (0 = the index as originally written, or
     as of the last compaction, which resets history to seq 0).
 
+    ``idx`` may be the index scan or the probe's candidates joined to
+    it: the tombstones are a broadcast, so the filter runs in the
+    caller's stage, and applying it after the probe join leaves that
+    join directly on the scan, where dynamic pruning can reach it.
+
     Existence is checked through the Hadoop FileSystem API so hdfs://
     and s3a:// index paths resolve their tombstones exactly like
     file:// ones — ``os.path`` would silently answer False there and
     return deleted rows (ADVICE r5 #1).
 
-    Among live rows, only the newest version per id is kept (seq ==
-    max(seq) over id — a window on the already-pruned frame). This
-    makes the reader safe against the upsert crash window: data rows
-    append BEFORE tombstones, so a crash between the writes leaves
-    recoverable duplicates, and this filter resolves them to the newest
-    version."""
+    Several live versions of one id remain possible in the upsert crash
+    window: data rows append BEFORE tombstones, so a crash between the
+    writes leaves recoverable duplicates. Callers keep the newest
+    (max seq): compaction per id, the probe per (query, id) among the
+    partitions that query reads."""
     if "seq" not in idx.columns:
         idx = idx.withColumn("seq", F.lit(0).cast("long"))
     if as_of_seq is not None:
         idx = idx.filter(F.col("seq") <= int(as_of_seq))
-    from shared_etl_pipelines_spark.engine import fs_exists
-
-    tpath = _tombstone_path(index_path)
-    if not fs_exists(spark, tpath):
+    files = tombstone_files(spark, index_path)
+    if not files:
         return idx
-    tomb = read_parquet(spark, tpath)
-    if as_of_seq is not None:
-        tomb = tomb.filter(F.col("seq") <= int(as_of_seq))
-    tomb = tomb.groupBy(F.col(id_col)).agg(F.max("seq").alias("_dead_seq"))
-    live = (
-        idx.join(F.broadcast(tomb), id_col, "left")
-        .filter(F.col("_dead_seq").isNull() | (F.col("seq") >= F.col("_dead_seq")))
-        .drop("_dead_seq")
+    tomb = read_parquet(spark, *files).select(
+        F.col(id_col).alias("_dead_id"), F.col("seq").alias("_dead_seq")
     )
-    wmax = Window.partitionBy(id_col)
-    return (
-        live.withColumn("_mx", F.max("seq").over(wmax))
-        .filter(F.col("seq") == F.col("_mx"))
-        .drop("_mx")
+    if as_of_seq is not None:
+        tomb = tomb.filter(F.col("_dead_seq") <= int(as_of_seq))
+    return idx.join(
+        F.broadcast(tomb),
+        (F.col(id_col) == F.col("_dead_id")) & (F.col("_dead_seq") > F.col("seq")),
+        "left_anti",
     )
 
 
@@ -391,7 +458,7 @@ def ann_index_upsert(
     production continuous-ingest shape (the vector-store twin of
     operators/dedup.py incremental_minhash_lsh): a new/updated vector
     batch is bucketed with the SAME ingest path as write_ann_index and
-    APPENDED into its (tbl, bucket) partition directories; stale rows
+    APPENDED into its ``tbl_bucket`` partition directories; stale rows
     (previous versions of re-ingested ids anywhere in the index, plus
     explicit deletes) are masked by TOMBSTONES rather than rewritten —
     one (id, seq) parquet append under ``_tombstones/`` (hidden from the
@@ -415,20 +482,14 @@ def ann_index_upsert(
     Crash safety (ADVICE r5 #2): data rows append BEFORE tombstones. A
     crash between the two writes leaves recoverable duplicates — the
     old and new versions are both live until the batch is re-run, and
-    the reader's max-seq-per-id filter already resolves re-ingested ids
-    to the newest row — instead of vanished keys (the failure mode of
+    the reader keeps the newest version it probes — instead of vanished
+    keys (the failure mode of
     tombstone-first ordering, which masks every pre-existing version of
     the batch's ids with no replacement). Remaining window: a pure
     DELETE batch is one tombstone append; a crash before it simply
     loses the delete, recoverable by re-running the (idempotent) batch.
     """
-    import os
-
-    from shared_etl_pipelines_spark.engine import (
-        acquire_fs_lock,
-        fs_exists,
-        release_fs_lock,
-    )
+    from shared_etl_pipelines_spark.engine import acquire_fs_lock, release_fs_lock
 
     dead = None
     if batch is not None:
@@ -443,31 +504,24 @@ def ann_index_upsert(
     try:
         n_new = n_dead = 0
         seq = 1
-        tpath = _tombstone_path(index_path)
-        if fs_exists(spark, tpath):
-            prev = read_parquet(spark, tpath).agg(F.max("seq")).collect()[0][0]
+        files = tombstone_files(spark, index_path)
+        if files:
+            prev = read_parquet(spark, *files).agg(F.max("seq")).collect()[0][0]
             seq = int(prev or 0) + 1
         # each write counts its own rows through an Observation, so a
         # write is one job — no cache, no separate count job
         if batch is not None:
-            corpus = _prep(batch, id_col, vec_col)
-            bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
-            rows = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-                F.col(id_col),
-                "v",
-                "norm",
-                F.posexplode("_bks").alias("tbl", "bucket"),
-            ).withColumn("seq", F.lit(seq).cast("long"))
+            rows = _index_rows(batch, id_col, vec_col, n_planes, dim, n_tables, seq)
             obs = Observation()
             rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
                 "append"
-            ).partitionBy("tbl", "bucket").parquet(index_path)
+            ).partitionBy("tbl", ANN_PART).parquet(index_path)
             n_new = obs.get["n"]
         obs = Observation()
         tomb = dead.distinct().withColumn("seq", F.lit(seq).cast("long"))
         tomb.observe(obs, F.count(F.lit(1)).alias("n")).coalesce(1).write.mode(
             "append"
-        ).parquet(tpath)
+        ).parquet(_tombstone_path(index_path))
         n_dead = obs.get["n"]
     finally:
         release_fs_lock(spark, lock)
@@ -477,8 +531,9 @@ def ann_index_upsert(
 def compact_ann_index(
     spark, index_path: str, id_col: str = "vec_id"
 ) -> dict:
-    """Fold tombstone debt to zero: materialize the live rows (seq reset
-    to 0), atomically swap directories, drop ``_tombstones/``. Run when
+    """Fold tombstone debt to zero: materialize the live rows (the newest
+    version per id, seq reset to 0) in the same ``tbl_bucket`` layout,
+    atomically swap directories, drop ``_tombstones/``. Run when
     the dead fraction makes probe scans wasteful — the LSM-style
     compaction every tombstone design needs. (A cluster deployment
     writes the compacted copy to a new location and swaps the catalog
@@ -502,11 +557,16 @@ def compact_ann_index(
     acquire_fs_lock(spark, lock, owner="compact_ann_index")
     try:
         idx = read_parquet(spark, index_path)
-        live = _apply_tombstones(spark, index_path, idx, id_col).withColumn(
-            "seq", F.lit(0).cast("long")
+        live = _apply_tombstones(spark, index_path, idx, id_col)
+        newest = Window.partitionBy(id_col)
+        live = (
+            live.withColumn("_mx", F.max("seq").over(newest))
+            .filter(F.col("seq") == F.col("_mx"))
+            .drop("_mx")
+            .withColumn("seq", F.lit(0).cast("long"))
         )
         tmp = index_path.rstrip("/") + ".compacting"
-        live.write.mode("overwrite").partitionBy("tbl", "bucket").parquet(tmp)
+        live.write.mode("overwrite").partitionBy("tbl", ANN_PART).parquet(tmp)
         n = read_parquet(spark, tmp).count()
         old = index_path.rstrip("/") + ".old"
         shutil.rmtree(old, ignore_errors=True)
@@ -530,71 +590,48 @@ def lsh_topk_from_index(
     n_tables: int = 4,
     as_of_seq: int | None = None,
 ) -> DataFrame:
-    """Query the materialized index with PARTITION PRUNING: the query
-    batch's bucket ids are computed driver-side (a query batch is small
-    by definition — this is the one deliberate collect) and become
-    literal (tbl, bucket) predicates, so the scan touches only the
-    probed bucket directories — ~L*|queries| partitions of the corpus,
-    never a full scan. Results are identical to ``lsh_bucket_topk`` for
-    the same plane family (verified in tests). ``as_of_seq`` probes a
-    historical snapshot of the index (versions and tombstones with
-    seq > as_of invisible — the vector-store twin of mor_read time
-    travel; snapshot depth is bounded by the last compaction), at the
-    same cost as a current probe: the seq filter composes with the
-    bucket-pruned scan."""
-    qs = _prep(queries, id_col, vec_col).select(
+    """Query the materialized index with RUNTIME PARTITION PRUNING: the
+    index scan joins a broadcast of the query batch's probes (query id,
+    vector, norm and ``tbl_bucket`` key, one row per table), and Spark's
+    dynamic partition pruning reuses that broadcast to list only the
+    probed partitions — at most n_tables x |queries|, never a full scan.
+    Building the frame collects nothing and starts no job.
+
+    Tombstones apply to the joined candidates (a broadcast join in the
+    same stage), each candidate is scored there, and the rerank is one
+    shuffle on the query id (``_rerank_topk``); nothing is persisted.
+    Results are identical to ``lsh_bucket_topk`` for the same plane
+    family (verified in tests). ``as_of_seq`` probes a historical
+    snapshot of the index (versions and tombstones with seq > as_of
+    invisible — the vector-store twin of mor_read time travel; snapshot
+    depth is bounded by the last compaction), at the same cost as a
+    current probe: the seq filter composes with the pruned scan."""
+    probes = _prep(queries, id_col, vec_col).select(
         F.col(id_col).alias("query_id"),
         F.col("v").alias("qv"),
         F.col("norm").alias("qn"),
-    )
-    qb = qs.select(
-        "query_id",
         F.posexplode(
             F.array(
                 *[
-                    srp_bucket(F.col("qv"), n_planes, dim, t * n_planes)
+                    srp_bucket(F.col("v"), n_planes, dim, t * n_planes)
                     for t in range(n_tables)
                 ]
             )
         ).alias("tbl", "bucket"),
+    ).filter(
+        # always true; Spark adds a dynamic pruning filter only when the
+        # broadcast side carries a predicate it deems selective, and a
+        # query batch read whole (a table, a local relation) has none
+        F.col("tbl") < n_tables
+    ).select(
+        "query_id",
+        "qv",
+        "qn",
+        _ann_key(),
     )
-    probes = qb.collect()  # |queries| x n_tables rows — bounded by design
-    wanted = {(r["tbl"], r["bucket"]) for r in probes}
-    pred = None
-    for tbl, bucket in sorted(wanted):
-        c = (F.col("tbl") == tbl) & (F.col("bucket") == bucket)
-        pred = c if pred is None else (pred | c)
-    if pred is None:  # empty query batch: no probes, no matches
-        pred = F.lit(False)
-
-    idx = read_parquet(spark, index_path).filter(pred)
-    idx = _apply_tombstones(spark, index_path, idx, id_col, as_of_seq=as_of_seq)
-    # the pruned, tombstone-applied probe set feeds BOTH the candidate
-    # join and the exact-rescore side — without a persist each consumer
-    # re-ran the bucket-pruned scan + tombstone anti-joins (6 scans in
-    # the r13 audit, VERDICT r13 #7). The frame is bounded by design
-    # (~n_tables x |queries| buckets), so this is the small-frame
-    # persist class; callers reclaim via the session sweep.
-    idx = idx.persist()
-    pairs = (
-        F.broadcast(qb)
-        .join(idx, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", id_col)
-        .distinct()
-    )
-    scored = (
-        idx.select(id_col, "v", "norm")
-        .distinct()
-        .join(pairs.join(F.broadcast(qs), "query_id"), id_col)
-        .withColumn("cosine", dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("norm")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", id_col, "cosine", "rn")
-    )
+    cands = read_parquet(spark, index_path).join(F.broadcast(probes), ANN_PART)
+    cands = _apply_tombstones(spark, index_path, cands, id_col, as_of_seq=as_of_seq)
+    return _rerank_topk(cands, id_col, k)
 
 
 def ivf_topk(
@@ -717,12 +754,6 @@ def embedding_near_dup_lsh(
     corpora with a degenerate dominant direction; None preserves the
     exact legacy output."""
     corpus = _prep(embeddings, id_col, vec_col)
-    # corpus feeds three unreusable subtrees (the bucket build and both
-    # exact-verify vector sides); persist so the scan + norm prep runs
-    # once (executed plan before: 4 source scans, 0 ReusedExchange).
-    # No eager count: the bucket self-join's job fills the cache as it
-    # scans. Callers reclaim via StorageScope / the session sweep.
-    corpus = corpus.persist()
     if arrow_buckets:
         bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
         b = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
@@ -742,9 +773,14 @@ def embedding_near_dup_lsh(
                 )
             ).alias("tbl", "bucket"),
         )
-    keys = _cap_srp_buckets(b.select(id_col, "tbl", "bucket"), max_bucket_size)
-    l, r = keys.alias("l"), keys.alias("r")
-    cand = (
+    # Each collision is verified where the self-join finds it, so the
+    # only shuffle after the join carries the (id_a, id_b, cosine) rows
+    # that pass tau; no candidate-pair dedup runs over failing pairs and
+    # no second pass rejoins the vectors. A pair colliding in several
+    # tables scores identically each time, so distinct() dedups exactly.
+    b = _cap_srp_buckets(b, max_bucket_size)
+    l, r = b.alias("l"), b.alias("r")
+    return (
         l.join(
             r,
             (F.col("l.tbl") == F.col("r.tbl"))
@@ -752,22 +788,14 @@ def embedding_near_dup_lsh(
             & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
         )
         .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+            (
+                dot(F.col("l.v"), F.col("r.v")) / (F.col("l.norm") * F.col("r.norm"))
+            ).alias("cosine"),
         )
-        .distinct()
-    )
-    va = corpus.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("v_a"), F.col("norm").alias("n_a")
-    )
-    vb = corpus.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("v_b"), F.col("norm").alias("n_b")
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")))
         .filter(F.col("cosine") >= tau)
-        .select("id_a", "id_b", "cosine")
+        .distinct()
     )
 
 

@@ -1217,7 +1217,10 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     # frame between the LSH-audit and containment legs
     "curation_drop_audit",
     # VERDICT r13 task #5/#6: reuse the verified-pairs frame across the
-    # degree + CC passes; share the prepped corpus across batch probes
+    # degree + CC passes; share the prepped corpus across batch probes.
+    # embedding_near_dup_lsh (and so embedding_dbscan) changed again
+    # since: it verifies each collision in the self-join's stage and
+    # persists nothing
     "embedding_dbscan",
     "embedding_near_dup_lsh",
     "incremental_dedup",
@@ -1231,7 +1234,10 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     # green verdicts older than a change to their operators:
     # lsh_topk_from_index's r14 probe-side persist (ADVICE r14 #3), and
     # the eager count barriers dropped from lsh_bucket_topk and
-    # ann_index_upsert since
+    # ann_index_upsert since. All the LSH/ANN entries above and below
+    # changed again with the broadcast index probe: the tbl_bucket
+    # index layout, tombstones after the probe join, one-shuffle
+    # rerank, and indexes built from load_table without spread()
     "similarity_topk_lsh_indexed",
     "stream_ann_index_upsert",
     "similarity_topk_lsh",

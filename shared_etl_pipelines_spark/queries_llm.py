@@ -809,8 +809,9 @@ def q_similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Warehouse-materialized LSH: the SAME oracle as similarity_topk_lsh — the
-# index is bucket ids computed at WRITE time, stored partitionBy(tbl,
-# bucket); the query prunes its scan to the probed bucket directories.
+# index is bucket ids computed at WRITE time, stored under one
+# tbl_bucket partition key; the probe is a broadcast join that dynamic
+# partition pruning turns into a scan of the probed partitions only.
 # Proves the write-side story end to end with full hash parity.
 # ---------------------------------------------------------------------------
 from shared_etl_pipelines_spark.queries import REGISTRY as _REG  # noqa: E402
@@ -829,14 +830,18 @@ def q_similarity_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
 
     from shared_etl_pipelines_spark.operators.similarity import (
+        ANN_PART,
         lsh_topk_from_index,
         write_ann_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    # no spread(): a round-robin shuffle before a partitioned write only
+    # adds a job and multiplies the files per partition
+    emb = load_table(spark, sf_dir, "embeddings")
     # cache key includes a content fingerprint of the source parquet
     # (mtime+size), not just the dir name — regenerated embeddings under
-    # the same sf dir must not silently reuse a stale index
+    # the same sf dir must not silently reuse a stale index — and the
+    # layout's partition key, so an index in an older layout is rebuilt
     src = os.path.join(sf_dir, "embeddings.parquet")
     try:
         st = os.stat(src)
@@ -844,7 +849,9 @@ def q_similarity_topk_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     except OSError:
         fp = "nostat"
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ann_index_{tag}")
+    path = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_ann_index_{ANN_PART}_{tag}"
+    )
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_ann_index(emb, path)
     out = lsh_topk_from_index(
@@ -8923,11 +8930,12 @@ def _ann_upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from shared_etl_pipelines_spark.operators.similarity import (
+        ANN_PART,
         ann_index_upsert,
         write_ann_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")  # no spread(): see above
     src = os.path.join(sf_dir, "embeddings.parquet")
     try:
         st = os.stat(src)
@@ -8935,7 +8943,9 @@ def _ann_upsert_fixture(spark: SparkSession, sf_dir: str) -> str:
     except OSError:
         fp = "nostat"
     tag = f"{os.path.basename(os.path.normpath(sf_dir))}_{fp}"
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ann_upsert_{tag}")
+    path = os.path.join(
+        tempfile.gettempdir(), f"spark_graft_ann_upsert_{ANN_PART}_{tag}"
+    )
     done = path + ".done"
     if not os.path.exists(done):
         shutil.rmtree(path, ignore_errors=True)
@@ -8999,7 +9009,9 @@ def q_ann_index_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_topk_from_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    # the query batch is broadcast to the probe: spread() would only add
+    # a shuffle in front of it
+    emb = load_table(spark, sf_dir, "embeddings")
     path = _ann_upsert_fixture(spark, sf_dir)
     final_state = emb.filter(F.col("vec_id") % 10 != 7).select(
         "vec_id",
@@ -9455,7 +9467,7 @@ def q_ann_index_asof_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_topk_from_index,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     path = _ann_upsert_fixture(spark, sf_dir)
     # probe with the ORIGINAL query vectors: the snapshot predates the batch
     out = lsh_topk_from_index(
@@ -9523,9 +9535,9 @@ def q_stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from shared_etl_pipelines_spark.operators.similarity import (
         ann_index_upsert,
         lsh_topk_from_index,
+        tombstone_files,
         write_ann_index,
     )
-    from shared_etl_pipelines_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     root = tempfile.mkdtemp(prefix="spark_graft_ann_stream_")
@@ -9597,7 +9609,7 @@ def q_stream_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(key, prev)
 
         max_seq = (
-            read_parquet(spark, os.path.join(index, "_tombstones"))
+            read_parquet(spark, *tombstone_files(spark, index))
             .agg(F.max("seq"))
             .collect()[0][0]
         )

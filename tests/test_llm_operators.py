@@ -436,15 +436,53 @@ def test_ivf_trained_codebook_recall_not_worse_than_standin(spark, sf_dir):
     assert r_trained >= 0.3
 
 
+def _plan_nodes(plan):
+    """Every node of an executed (adaptive) plan, query stages and
+    broadcast subqueries included."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    yield plan
+    if "QueryStageExec" in name:
+        yield from _plan_nodes(plan.plan())
+        return
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _index_scan_partitions(df):
+    """``numPartitions`` of each partitioned file scan in ``df``'s
+    executed plan: the partitions the scan actually read."""
+    return [
+        n.metrics().apply("numPartitions").value()
+        for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and n.relation().partitionSchema().length() > 0
+    ]
+
+
+def _final_plan(df) -> str:
+    """The executed plan's text without the adaptive plan's initial
+    (pre-AQE) copy."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return text.split("\n+- == Initial Plan ==")[0]
+
+
 def test_materialized_ann_index_prunes_and_matches(spark, sf_dir, tmp_path):
     """Write-side LSH: the partitioned index returns EXACTLY the rows of
-    the on-the-fly path, and the pruned scan touches only the probed
-    bucket directories."""
+    the on-the-fly path, and dynamic partition pruning reads exactly the
+    distinct probed (table, bucket) partitions — for a fresh index, an
+    upserted (tombstoned) one and an ``as_of_seq=0`` snapshot probe."""
     from pyspark.sql import functions as F
 
     from shared_etl_pipelines_spark.operators.similarity import (
+        _prep,
+        ann_index_upsert,
         lsh_bucket_topk,
         lsh_topk_from_index,
+        srp_bucket,
         write_ann_index,
     )
     from shared_etl_pipelines_spark.sources.tables import load_table
@@ -462,34 +500,92 @@ def test_materialized_ann_index_prunes_and_matches(spark, sf_dir, tmp_path):
     want = lsh_bucket_topk(emb, queries).orderBy("query_id", "rn").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
-    # pruning evidence: the filtered scan reads <= |probed buckets| leaf
-    # dirs, strictly fewer files than the full index
-    qb_count = 5 * 4  # queries x tables upper bound on probed buckets
-    pruned = lsh_topk_from_index(spark, path, queries)
-    touched = {
-        f.rsplit("/", 1)[0]
-        for f in spark.read.parquet(path).inputFiles()
-    }
-    # recompute the probe set exactly as the operator does
-    from shared_etl_pipelines_spark.operators.similarity import _prep, srp_bucket
-
-    qs = _prep(queries, "vec_id", "embedding")
-    qb = qs.select(
+    # the probe set, recomputed apart from the operator
+    qb = _prep(queries, "vec_id", "embedding").select(
         F.posexplode(
             F.array(*[srp_bucket(F.col("v"), 4, 64, t * 4) for t in range(4)])
         ).alias("tbl", "bucket")
     ).collect()
     probed = {(r["tbl"], r["bucket"]) for r in qb}
-    assert len(probed) <= qb_count
-    probed_dirs = {
-        d for d in touched
-        if any(f"tbl={t}/bucket={b}" in d for t, b in probed)
+    n_index = len(spark.read.parquet(path).select("tbl_bucket").distinct().collect())
+    assert 0 < len(probed) < n_index
+
+    def scanned(df):
+        df.collect()
+        plan = _final_plan(df)
+        assert "dynamicpruningexpression(tbl_bucket" in plan, plan
+        return _index_scan_partitions(df)
+
+    assert scanned(lsh_topk_from_index(spark, path, queries)) == [len(probed)]
+    ann_index_upsert(
+        spark, path,
+        batch=emb.filter(F.col("vec_id") % 10 == 3).select(
+            "vec_id", F.reverse("embedding").alias("embedding")
+        ),
+        delete_ids=emb.filter(F.col("vec_id") % 10 == 7).select("vec_id"),
+    )
+    assert scanned(lsh_topk_from_index(spark, path, queries)) == [len(probed)]
+    assert scanned(
+        lsh_topk_from_index(spark, path, queries, as_of_seq=0)
+    ) == [len(probed)]
+
+
+def test_lsh_topk_paths_start_no_builder_job_and_rerank_in_one_shuffle(
+    spark, sf_dir, tmp_path
+):
+    """Both LSH top-k paths score candidates in the join's stage and
+    rerank through ONE query_id exchange, with nothing cached; building
+    the index probe collects nothing, so it starts no Spark job."""
+    from pyspark.sql import functions as F
+
+    from shared_etl_pipelines_spark.operators.similarity import (
+        ann_index_upsert,
+        lsh_bucket_topk,
+        lsh_topk_from_index,
+        write_ann_index,
+    )
+    from shared_etl_pipelines_spark.sources.tables import load_table
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    path = str(tmp_path / "ann_index")
+    write_ann_index(emb, path)
+    ann_index_upsert(
+        spark, path, delete_ids=emb.filter(F.col("vec_id") % 10 == 7).select("vec_id")
+    )
+    before = sched.nextJobId()
+    indexed = lsh_topk_from_index(spark, path, queries)
+    assert sched.nextJobId() == before
+    for df in (indexed, lsh_bucket_topk(emb, queries, arrow_buckets=True)):
+        assert len(df.collect()) == 50
+        plan = _final_plan(df)
+        assert "InMemoryTableScan" not in plan
+        assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
+
+
+def test_lsh_mix_queries_stay_within_job_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """Job census of the three LSH queries of the benchmark mix, built
+    and collected cold (their cached indexes land in a fresh temp dir).
+    Before the broadcast probe they started 10 / 20 / 13 jobs on the
+    sf0.01 corpus."""
+    import tempfile
+
+    from shared_etl_pipelines_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    budget = {
+        "embedding_near_dup_lsh": 4,
+        "ann_index_upsert_topk": 8,
+        "similarity_topk_lsh_indexed": 4,
     }
-    # the plan prunes on the partition columns, and the probed set is a
-    # strict subset of the index's leaf directories
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "tbl" in plan
-    assert len(probed_dirs) < len(touched)
+    used = {}
+    for name in budget:
+        before = sched.nextJobId()
+        REGISTRY[name].fn(spark, sf_dir).collect()
+        used[name] = sched.nextJobId() - before
+    assert all(used[n] <= budget[n] for n in budget), used
 
 
 def test_embedding_near_dup_lsh_recall_vs_exact(spark, sf_dir):
@@ -1347,6 +1443,7 @@ def test_ann_upsert_crash_window_resolves_to_newest(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from shared_etl_pipelines_spark.operators.similarity import (
+        ANN_PART,
         ann_index_upsert,
         lsh_topk_from_index,
         write_ann_index,
@@ -1369,7 +1466,7 @@ def test_ann_upsert_crash_window_resolves_to_newest(spark, sf_dir, tmp_path):
     crashed = idx.filter(F.col("vec_id") == 11).withColumn(
         "seq", F.lit(2).cast("long")
     )
-    crashed.write.mode("append").partitionBy("tbl", "bucket").parquet(path)
+    crashed.write.mode("append").partitionBy("tbl", ANN_PART).parquet(path)
 
     qs = emb.filter(F.col("vec_id") < 5)
     out = lsh_topk_from_index(spark, path, qs, k=10).collect()
