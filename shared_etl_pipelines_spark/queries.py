@@ -1043,7 +1043,7 @@ _R10_GREEN = frozenset(
         "jsonschema_contract_audit", "jwt_token_audit",
         "lfs_pointer_census", "license_detect_audit", "mode_event_type",
         "msgpack_log_audit", "multimodal_mjpeg_frames", "multiply_join",
-        "notebook_conversion_audit", "orc_layout_audit",
+        "notebook_conversion_audit",
         "parquet_rowgroup_prune_plan", "pricing_summary",
         "prom_scrape_audit", "protobuf_wire_audit",
         "qty_price_regression", "regrid_fraction", "rolling_sums",
@@ -1056,43 +1056,30 @@ _R10_GREEN = frozenset(
     }
 )
 
-# CORRECTNESS_r11.json: 50 judged, 49 green, 1 hash fail
-# (parquet_selfread_scan — the non-hermetic /tmp fixture cache; fixed
-# and re-fronted in r12, held OUT of this set until re-judged).
+# CORRECTNESS_r11.json: 50 judged, 49 green, 1 hash fail.
 _R11_GREEN = frozenset(
     {
-        "arrow_ipc_read_audit", "arrow_ipc_write_roundtrip_audit",
         "avro_schema_evolution_audit", "bitmap_index_slice",
-        "block_codec_roundtrip_audit", "clip_semi_join",
-        "columnar_codec_matrix", "crop_weighted_pipeline",
+        "clip_semi_join", "crop_weighted_pipeline",
         "date_from_filename", "dedup_keep_latest", "delta_dv_purge_plan",
         "delta_dv_read", "embedding_quantize_int8",
         "event_funnel", "geoparquet_feature_audit", "gguf_model_audit",
         "hudi_compaction_plan", "hudi_mor_read", "iceberg_rewrite_plan",
         "iceberg_v2_delete_read", "mode_event_type",
-        "multimodal_vp8_frames", "multiply_join", "orc_column_read_audit",
-        "orc_write_roundtrip_audit",
-        "parquet_footer_thrift_audit", "parquet_page_read_audit",
-        "parquet_write_roundtrip_audit", "pricing_summary",
+        "multimodal_vp8_frames", "multiply_join", "pricing_summary",
         "qty_price_regression", "recursive_ancestor_depths",
         "regrid_fraction", "rolling_sums", "spi_zscore",
         "sqlite_table_scan", "stream_hudi_timeline_cdc", "topk_per_group",
         "union_combine", "value_mask", "weighted_zonal",
         "zarr_chunk_prune_plan", "zarr_datasource_bbox",
         "zarr_zonal_rollup", "zonal_stats", "zonal_stats_approx",
-        "zorder_layout_plan", "zstd_decode_audit",
+        "zorder_layout_plan",
     }
 )
 
-# CORRECTNESS_r12.json: 50 judged, 48 green, 2 hash fails
-# (parquet_selfread_scan + parquet_pageindex_scan — both hash their
-# values through bytes written at query time by the AMBIENT pyarrow
-# and decoded by the repo's own reader; VERDICT r12 mandates rebuilding
-# those fixtures through the repo's own writer. Both held OUT of this
-# set and re-fronted in r13 until re-judged.)
+# CORRECTNESS_r12.json: 50 judged, 48 green, 2 hash fails.
 _R12_GREEN = frozenset(
     {
-        "arrow_ipc_compressed_audit",
         "bitmap_index_slice_wide", "clip_semi_join",
         "cohort_retention", "crop_weighted_pipeline",
         "customer_order_distribution", "customer_order_trajectory",
@@ -1105,12 +1092,10 @@ _R12_GREEN = frozenset(
         # near_dup_prefix_filter: r12-green, but its operator was
         # rewritten in r13 (two-sided PPJoin prefix probe + positional
         # filter) — removed pending a fresh driver verdict
-        "orc_zstd_roundtrip_audit",
         # outlier_mad: builder optimized in the r13 optimization round
         # (persisted group medians; identical output, oracle-verified) —
         # re-fronted for a fresh driver verdict
-        "parquet_own_pageindex_scan",
-        "parquet_write_dict_audit", "pricing_summary",
+        "pricing_summary",
         "props_variant_stats", "puffin_bitmap_sidecar_slice",
         "qty_price_regression", "recursive_ancestor_depths",
         "regrid_fraction", "revenue_share_of_region", "rolling_sums",
@@ -1120,17 +1105,12 @@ _R12_GREEN = frozenset(
         "time_range_rolling", "topk_per_group",
         "union_combine", "value_mask", "weighted_median",
         "weighted_zonal", "zonal_stats", "zorder_clustering_key",
-        "zstd_encode_audit",
     }
 )
 
-# CORRECTNESS_r13.json: 50 judged, 47 green, 3 hash fails (the
-# own-writer fixture trio — parquet_selfread_scan,
-# parquet_pageindex_scan, ownparquet_datasource_scan — reworked again
-# in r14 with an in-query fixture-vs-source content gate and a
-# writer-code-keyed cache, re-fronted below). Green entries whose
-# compute path changes in the r14 optimization round are removed from
-# this set and re-fronted as they are touched.
+# CORRECTNESS_r13.json: 50 judged, 47 green, 3 hash fails. Green
+# entries whose compute path changes in the r14 optimization round are
+# removed from this set and re-fronted as they are touched.
 _R13_GREEN = frozenset(
     {
         "clip_semi_join", "crop_weighted_pipeline",
@@ -1145,7 +1125,6 @@ _R13_GREEN = frozenset(
         # outlier_mad: r13-green, but its eager med.count() barrier
         # was dropped after the verdict — re-fronted
         "near_dup_minhash_lsh", "near_dup_prefix_filter",
-        "parquet_write_delta_audit", "parquet_write_list_audit",
         "pricing_summary", "props_variant_stats", "ql_dirichlet_topk",
         "qty_price_regression", "recursive_ancestor_depths",
         "regrid_fraction", "rolling_sums", "semantic_dedup",
@@ -1161,7 +1140,6 @@ _R13_GREEN = frozenset(
         # precedent
         "union_combine",
         "value_mask", "weighted_zonal", "zonal_stats",
-        "zstd_match_encode_audit",
         # r13-green entries NOT listed here because their compute path
         # changes again in the r14 optimization round (re-fronted for a
         # fresh driver verdict as each change lands):
@@ -1181,23 +1159,9 @@ _JUDGED_GREEN = (
 # were converted to oracle-backed error bands (VERDICT r9 task #2).
 _FORCE_FRONT: frozenset[str] = frozenset()
 
-# Round-14 judging window: the three r13 hash reds lead, reworked per
-# VERDICT r13 task #1 — the shared own-writer fixture now passes an
-# in-query CONTENT GATE (distributed multiset signature of fixture
-# files vs the source projection) on every acquisition, self-heals by
-# rebuilding once on any mismatch, and RAISES with per-column diffs if
-# a clean rebuild still diverges (driver `err` localizes build vs
-# decode); the /tmp cache key now includes the writer-module code
-# identity, cols and n_shards, never just tag+kwargs. Further entries
-# are appended as r14 optimization changes land.
+# Round-14 judging window: queries whose green verdicts predate a
+# change to their compute path lead, appended as the changes land.
 _CARRYOVER_FIRST: tuple[str, ...] = (
-    # r11/r12/r13 red: fixture-vs-source content gate + code-keyed
-    # cache (VERDICT r13 task #1)
-    "parquet_selfread_scan",
-    # r12/r13 red, same shared fixture path
-    "parquet_pageindex_scan",
-    # arrived red from the partial build round, same shared fixture
-    "ownparquet_datasource_scan",
     # r7-green but its operator (minhash_lsh_pairs) changed in the r13
     # optimization round — re-fronted per ADVICE r13 #1
     "near_dup_lsh_eval",

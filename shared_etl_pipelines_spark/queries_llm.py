@@ -4674,95 +4674,6 @@ def q_lfs_pointer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# ORC file-layout audit (r10): the PUBLIC orc.apache.org spec —
-# PostScript/Footer protobuf tail via the repo's own wire walk
-# (sources/orc.py over tfrecord.py varint primitives), NONE + ZLIB
-# chunk-framed footers, stripe/row/schema/IntegerStatistics lift,
-# structural refusals quarantined loudly. The parquet_layout_audit
-# sibling for the other lakehouse column format.
-# ---------------------------------------------------------------------------
-@defquery(
-    "orc_layout_audit",
-    """
-    WITH a AS (SELECT doc_id AS d, octet_length(encode(text)) AS n FROM documents)
-    SELECT d AS doc_id,
-           CASE WHEN d % 9 = 8 THEN FALSE ELSE TRUE END AS ok,
-           CASE WHEN d % 9 = 8 THEN 'corrupt'
-                WHEN d % 2 = 1 THEN 'ZLIB' ELSE 'NONE' END AS compression,
-           CAST(CASE WHEN d % 9 = 8 THEN 0 ELSE d % 3 + 1 END AS INT) AS n_stripes,
-           CAST(CASE WHEN d % 9 = 8 THEN 0 ELSE n END AS BIGINT) AS n_rows,
-           CAST(CASE WHEN d % 9 = 8 THEN 0
-                     WHEN d % 5 = 0 THEN 3 ELSE 2 END AS INT) AS n_cols,
-           CAST(CASE WHEN d % 9 = 8 THEN 0 ELSE d * 1000 END AS BIGINT) AS id_min,
-           CAST(CASE WHEN d % 9 = 8 THEN 0 ELSE d * 1000 + n - 1 END AS BIGINT)
-             AS id_max
-    FROM a
-    """,
-    doc="ORC tail audit: PostScript + (NONE/ZLIB chunk-framed) Footer "
-    "protobuf walk to stripes/rows/schema/int-stats; d%9==8 blobs get "
-    "a flipped header magic and must surface as quarantine rows, "
-    "d%5==0 files carry the schema-drift extra column",
-    tags=("llm", "lakehouse", "source", "codec"),
-)
-def q_orc_layout_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from shared_etl_pipelines_spark.sources import orc as O
-
-        cols = (
-            "doc_id", "ok", "compression", "n_stripes", "n_rows",
-            "n_cols", "id_min", "id_max",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                k = d % 3 + 1
-                stripe_rows = [n // k] * (k - 1) + [n - (n // k) * (k - 1)]
-                columns = [("id", "long"), ("text", "string")]
-                if d % 5 == 0:
-                    columns.append(("score", "double"))
-                blob = O.encode_orc(
-                    columns,
-                    stripe_rows,
-                    id_min=d * 1000,
-                    compression="ZLIB" if d % 2 else "NONE",
-                )
-                if d % 9 == 8:
-                    blob = b"XXX" + blob[3:]  # planted corrupt magic
-                rows["doc_id"].append(d)
-                try:
-                    o = O.parse_orc_layout(blob)
-                    rows["ok"].append(True)
-                    rows["compression"].append(o["compression"])
-                    rows["n_stripes"].append(o["n_stripes"])
-                    rows["n_rows"].append(o["n_rows"])
-                    rows["n_cols"].append(len(o["column_kinds"]) - 1)
-                    rows["id_min"].append(o["stats"][1]["int_min"])
-                    rows["id_max"].append(o["stats"][1]["int_max"])
-                except ValueError:
-                    rows["ok"].append(False)
-                    rows["compression"].append("corrupt")
-                    rows["n_stripes"].append(0)
-                    rows["n_rows"].append(0)
-                    rows["n_cols"].append(0)
-                    rows["id_min"].append(0)
-                    rows["id_max"].append(0)
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        evaluate,
-        "doc_id long, ok boolean, compression string, n_stripes int, "
-        "n_rows long, n_cols int, id_min long, id_max long",
-    )
-
-
 @defquery(
     "compression_codec_audit",
     """
@@ -14748,1256 +14659,6 @@ def q_zarr_datasource_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Snappy + LZ4 codecs (r11): pure-Python decoders/encoders for the two
-# workhorse page codecs (sources/snappy.py, sources/lz4.py — block AND
-# frame with XXH32 checksums and linked-block history), hash-gated by a
-# SIX-way cross-implementation roundtrip against pyarrow's bundled
-# reference C++ codecs: our decoder over reference bytes and the
-# reference decoder over our bytes, per document, per codec. Any
-# disagreement flips an oracle-pinned TRUE.
-# ---------------------------------------------------------------------------
-@defquery(
-    "block_codec_roundtrip_audit",
-    """
-    SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           TRUE AS snappy_dec_ok, TRUE AS snappy_enc_ok,
-           TRUE AS lz4f_dec_ok, TRUE AS lz4f_enc_ok,
-           TRUE AS lz4b_dec_ok, TRUE AS lz4b_enc_ok
-    FROM documents
-    """,
-    doc="snappy + LZ4 frame/block cross-implementation gate: decode "
-    "reference-compressed text and reference-decode our compression, "
-    "six oracle-pinned booleans per document",
-    tags=("llm", "codec", "compression"),
-)
-def q_block_codec_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-
-        from shared_etl_pipelines_spark.sources.lz4 import (
-            lz4_block_compress,
-            lz4_block_decompress,
-            lz4_frame_compress,
-            lz4_frame_decompress,
-        )
-        from shared_etl_pipelines_spark.sources.snappy import (
-            snappy_compress,
-            snappy_decompress,
-        )
-
-        cols = (
-            "doc_id", "n_bytes", "snappy_dec_ok", "snappy_enc_ok",
-            "lz4f_dec_ok", "lz4f_enc_ok", "lz4b_dec_ok", "lz4b_enc_ok",
-        )
-
-        def ref_dec(blob: bytes, n: int, codec: str) -> bytes:
-            return pa.decompress(
-                blob, decompressed_size=n, codec=codec, asbytes=True
-            )
-
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                data = str(text).encode("utf-8")
-                n = len(data)
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(n)
-                rows["snappy_dec_ok"].append(
-                    snappy_decompress(
-                        pa.compress(data, codec="snappy", asbytes=True)
-                    ) == data
-                )
-                rows["snappy_enc_ok"].append(
-                    ref_dec(snappy_compress(data), n, "snappy") == data
-                )
-                rows["lz4f_dec_ok"].append(
-                    lz4_frame_decompress(
-                        pa.compress(data, codec="lz4", asbytes=True)
-                    ) == data
-                )
-                rows["lz4f_enc_ok"].append(
-                    ref_dec(lz4_frame_compress(data), n, "lz4") == data
-                )
-                rows["lz4b_dec_ok"].append(
-                    lz4_block_decompress(
-                        pa.compress(data, codec="lz4_raw", asbytes=True),
-                        expected=n,
-                    ) == data
-                )
-                rows["lz4b_enc_ok"].append(
-                    ref_dec(lz4_block_compress(data), n, "lz4_raw") == data
-                )
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, n_bytes bigint, snappy_dec_ok boolean, "
-        "snappy_enc_ok boolean, lz4f_dec_ok boolean, lz4f_enc_ok boolean, "
-        "lz4b_dec_ok boolean, lz4b_enc_ok boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Columnar codec matrix (r11): the new snappy/LZ4 codecs wired into the
-# FORMATS that mandate them — ORC footer chunks (3-byte-header framing,
-# codec rotating ZLIB/SNAPPY/LZ4 by doc) and the Avro spec's snappy
-# block codec (compressed block + big-endian CRC32 of the uncompressed
-# data, verified on read). Every cell replays from doc_id.
-# ---------------------------------------------------------------------------
-@defquery(
-    "columnar_codec_matrix",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
-    SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'ZLIB'
-                WHEN 1 THEN 'SNAPPY' ELSE 'LZ4' END AS orc_codec,
-           CAST(n % 90 + 10 AS BIGINT) AS orc_rows,
-           CAST(2 AS INT) AS orc_stripes,
-           'snappy' AS avro_codec,
-           CAST(doc_id % 5 + 1 AS INT) AS avro_records,
-           CAST((doc_id % 5 + 1) * doc_id AS BIGINT) AS avro_x_sum
-    FROM a
-    """,
-    doc="ORC footers compressed with ZLIB/SNAPPY/LZ4 (rotating by doc) "
-    "parse to identical layouts, and snappy-codec Avro blocks round "
-    "trip with the spec's CRC32-of-uncompressed verified on read",
-    tags=("llm", "codec", "compression", "source"),
-)
-def q_columnar_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from shared_etl_pipelines_spark.sources.avro import (
-            read_avro_ocf,
-            write_avro_ocf,
-        )
-        from shared_etl_pipelines_spark.sources.orc import (
-            encode_orc,
-            parse_orc_layout,
-        )
-
-        sch = {
-            "type": "record", "name": "r",
-            "fields": [{"name": "x", "type": "long"}],
-        }
-        cols = (
-            "doc_id", "orc_codec", "orc_rows", "orc_stripes",
-            "avro_codec", "avro_records", "avro_x_sum",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                codec = ("ZLIB", "SNAPPY", "LZ4")[d % 3]
-                total = n % 90 + 10
-                half = total // 2
-                blob = encode_orc(
-                    [("doc_id", "long"), ("n", "long")],
-                    [half, total - half],
-                    d,
-                    compression=codec,
-                )
-                lay = parse_orc_layout(blob)
-                k = d % 5 + 1
-                ocf = write_avro_ocf(
-                    [{"x": d} for _ in range(k)],
-                    sch,
-                    codec="snappy",
-                    sync=bytes([(d * 13 + i) % 256 for i in range(16)]),
-                )
-                out = read_avro_ocf(ocf)
-                rows["doc_id"].append(doc_id)
-                rows["orc_codec"].append(lay["compression"])
-                rows["orc_rows"].append(lay["n_rows"])
-                rows["orc_stripes"].append(lay["n_stripes"])
-                rows["avro_codec"].append(out["codec"])
-                rows["avro_records"].append(len(out["records"]))
-                rows["avro_x_sum"].append(sum(r["x"] for r in out["records"]))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, orc_codec string, orc_rows bigint, orc_stripes int, "
-        "avro_codec string, avro_records int, avro_x_sum bigint",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Parquet footer via the repo's OWN Thrift compact-protocol walker
-# (r11): PAR1 framing + FileMetaData/SchemaElement/RowGroup/
-# ColumnChunk/Statistics decoded from raw bytes
-# (sources/thrift_compact.py + sources/parquet_footer.py) — the
-# independent path next to pyarrow, so pyarrow-WRITTEN files are a
-# true cross-implementation check. Per doc the fixture writes a real
-# parquet (codec rotating SNAPPY/GZIP/ZSTD, 8-row row groups) and the
-# walker's row counts, codec ids, and column statistics land in the
-# hash.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_footer_thrift_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents)
-    SELECT d AS doc_id,
-           CAST(d % 40 + 10 AS BIGINT) AS num_rows,
-           CAST((d % 40 + 10 + 7) // 8 AS INT) AS n_row_groups,
-           CASE CAST(d % 3 AS INT) WHEN 0 THEN 'SNAPPY'
-                WHEN 1 THEN 'GZIP' ELSE 'ZSTD' END AS codec,
-           d AS val_min, d + (d % 40 + 10) - 1 AS val_max
-    FROM a
-    """,
-    doc="parquet footer decoded with the repo's own Thrift compact "
-    "walker over pyarrow-written files: num_rows, row-group count, "
-    "per-chunk codec id, and INT64 min/max statistics all replay in "
-    "closed form",
-    tags=("llm", "source", "codec", "catalog", "plan"),
-)
-def q_parquet_footer_thrift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from shared_etl_pipelines_spark.sources.parquet_footer import (
-            parse_parquet_footer,
-        )
-
-        cols = (
-            "doc_id", "num_rows", "n_row_groups", "codec", "val_min",
-            "val_max",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 40 + 10
-                tbl = pa.table({"v": pa.array([d + i for i in range(n)],
-                                              pa.int64())})
-                buf = io.BytesIO()
-                pq.write_table(
-                    tbl, buf,
-                    compression=("snappy", "gzip", "zstd")[d % 3],
-                    row_group_size=8,
-                )
-                foot = parse_parquet_footer(buf.getvalue())
-                rgs = foot["row_groups"]
-                codecs = {c["codec"] for rg in rgs for c in rg["columns"]}
-                if len(codecs) != 1:
-                    raise ValueError(f"footer: mixed codecs {codecs}")
-                rows["doc_id"].append(doc_id)
-                rows["num_rows"].append(foot["num_rows"])
-                rows["n_row_groups"].append(len(rgs))
-                rows["codec"].append(next(iter(codecs)))
-                rows["val_min"].append(
-                    min(c["stats"]["min"] for rg in rgs for c in rg["columns"])
-                )
-                rows["val_max"].append(
-                    max(c["stats"]["max"] for rg in rgs for c in rg["columns"])
-                )
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, n_row_groups int, codec string, "
-        "val_min bigint, val_max bigint",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Zstandard decode (r11): pure-Python RFC 8878 decompressor
-# (sources/zstd_decode.py — FSE table construction + backward
-# bitstreams, Huffman literals in 1/4-stream layouts with direct and
-# FSE-compressed weights, predefined/RLE/FSE/repeat sequence tables,
-# repeat-offset history, XXH64 checksums). The predefined ML
-# distribution was EMPIRICALLY pinned against the reference encoder
-# (37/64 table cells observed via probes; exactly one candidate
-# reproduces them all). Hash gate: per-doc reference-compressed text
-# at four levels decodes byte-identically, plus a two-frame
-# concatenation — every boolean oracle-pinned TRUE.
-# ---------------------------------------------------------------------------
-@defquery(
-    "zstd_decode_audit",
-    """
-    SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CAST((doc_id % 4) * 6 + 1 AS INT) AS level,
-           TRUE AS decode_ok, TRUE AS multiframe_ok
-    FROM documents
-    """,
-    doc="zstd cross-implementation gate: pyarrow-compressed text at "
-    "levels 1/7/13/19 decoded by the RFC 8878 pure-Python decoder, "
-    "plus skippable-frame + two-frame concatenation handling",
-    tags=("llm", "codec", "compression"),
-)
-def q_zstd_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import pyarrow as pa
-
-        from shared_etl_pipelines_spark.sources.zstd_decode import (
-            zstd_decompress,
-        )
-
-        cols = ("doc_id", "n_bytes", "level", "decode_ok", "multiframe_ok")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = str(text).encode("utf-8")
-                level = (d % 4) * 6 + 1
-                codec = pa.Codec("zstd", compression_level=level)
-                blob = codec.compress(data, asbytes=True)
-                ok = zstd_decompress(blob) == data
-                skip = _struct.pack("<II", 0x184D2A50, 4) + b"\x00" * 4
-                two = blob + skip + codec.compress(data[:16], asbytes=True)
-                multi = zstd_decompress(two) == data + data[:16]
-                rows["doc_id"].append(doc_id)
-                rows["n_bytes"].append(len(data))
-                rows["level"].append(level)
-                rows["decode_ok"].append(ok)
-                rows["multiframe_ok"].append(multi)
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, n_bytes bigint, level int, decode_ok boolean, "
-        "multiframe_ok boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Parquet data pages decoded from raw bytes (r11): the full independent
-# read path — Thrift-compact page headers, page decompression through
-# the repo's OWN codecs (snappy/gzip/zstd/LZ4_RAW), definition-level
-# RLE/bit-packed hybrid, PLAIN values, dictionary pages with
-# RLE_DICTIONARY indices, data page v1 AND v2
-# (sources/parquet_pages.py), plus the DELTA_BINARY_PACKED /
-# DELTA_(LENGTH_)BYTE_ARRAY / BYTE_STREAM_SPLIT encodings. Fixture
-# rotates codec by doc_id%5, dictionary on/off by %2, page version by
-# %3, and a DELTA-encoding lane on %4==1 — pyarrow writes, the repo
-# reads, the closed forms check the VALUES.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_page_read_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 30 + 5 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 7 <> 0 THEN d + i END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 7 = 0 THEN 1 END) AS int_nulls,
-             SUM(CASE WHEN (d + i) % 11 <> 3 THEN (d + i) % 5 + 1 END)
-               AS str_bytes,
-             COUNT(CASE WHEN (d + i) % 3 = 0 THEN 1 END) AS n_true
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id, CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(COALESCE(str_bytes, 0) AS BIGINT) AS str_bytes,
-           CAST(n_true AS BIGINT) AS n_true
-    FROM agg
-    """,
-    doc="independent parquet column read: values decoded from raw "
-    "pages (own thrift walker + own page codecs + RLE hybrid + "
-    "dictionary indices) aggregate to the closed forms across 5 "
-    "codecs, both page versions, and dict/plain encodings",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_parquet_page_read_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from shared_etl_pipelines_spark.sources.parquet_pages import (
-            read_all_columns,
-        )
-
-        cols = ("doc_id", "num_rows", "int_sum", "int_nulls", "str_bytes",
-                "n_true")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 30 + 5
-                ints = [None if (d + i) % 7 == 0 else d + i for i in range(nr)]
-                strs = [
-                    None if (d + i) % 11 == 3 else "x" * ((d + i) % 5 + 1)
-                    for i in range(nr)
-                ]
-                bools = [(d + i) % 3 == 0 for i in range(nr)]
-                tbl = pa.table(
-                    {
-                        "iv": pa.array(ints, pa.int64()),
-                        "sv": pa.array(strs, pa.string()),
-                        "bv": pa.array(bools, pa.bool_()),
-                    }
-                )
-                buf = io.BytesIO()
-                kw = {
-                    "compression": ("snappy", "gzip", "zstd", "lz4", "none")[d % 5],
-                    "use_dictionary": bool(d % 2),
-                    "data_page_version": ("1.0", "2.0")[d % 3 == 0],
-                    "row_group_size": 8,
-                }
-                if d % 4 == 1:  # DELTA family lane (plain-incompatible
-                    # with dictionary, so it replaces it)
-                    kw["use_dictionary"] = False
-                    kw["column_encoding"] = {
-                        "iv": "DELTA_BINARY_PACKED",
-                        "sv": ("DELTA_BYTE_ARRAY", "DELTA_LENGTH_BYTE_ARRAY")[d % 8 == 1],
-                    }
-                pq.write_table(tbl, buf, **kw)
-                blob = buf.getvalue()
-                iv = read_all_columns(blob, "iv")
-                sv = read_all_columns(blob, "sv")
-                bv = read_all_columns(blob, "bv")
-                rows["doc_id"].append(doc_id)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(
-                    sum(len(v) for v in sv if v is not None)
-                )
-                rows["n_true"].append(sum(1 for v in bv if v))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, int_sum bigint, int_nulls bigint, "
-        "str_bytes bigint, n_true bigint",
-    )
-
-
-# ---------------------------------------------------------------------------
-# ORC stripe data decoded from raw bytes (r11): the ORC twin of the
-# parquet page reader — stripe footers, PRESENT bit streams over
-# byte-RLE, integer RLEv2 (SHORT_REPEAT / DIRECT / PATCHED_BASE /
-# DELTA, MSB-first packing, the 5-bit closed width table,
-# sign-magnitude patched bases), DIRECT_V2 + DICTIONARY_V2 strings,
-# raw IEEE754 doubles, and all five compression kinds through the
-# repo's OWN codecs (sources/orc_data.py). pyarrow's bundled reference
-# ORC writer produces the fixtures, so the decode is a true
-# cross-implementation check; the closed forms check the VALUES.
-# ---------------------------------------------------------------------------
-@defquery(
-    "orc_column_read_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 40 + 5 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 7 <> 0 THEN d + i END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 7 = 0 THEN 1 END) AS int_nulls,
-             SUM(CASE WHEN (d + i) % 11 <> 3 THEN (d + i) % 6 + 1 END)
-               AS str_bytes,
-             ROUND(SUM(((d + i) % 8) / 4.0), 4) AS dbl_sum
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id, CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(COALESCE(str_bytes, 0) AS BIGINT) AS str_bytes,
-           dbl_sum
-    FROM agg
-    """,
-    doc="independent ORC column read: RLEv2 ints with nulls, "
-    "dictionary/direct strings, quarter-step doubles decoded from raw "
-    "stripes across all five compression kinds aggregate to the "
-    "closed forms",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_orc_column_read_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow as pa
-        from pyarrow import orc as pa_orc
-
-        from shared_etl_pipelines_spark.sources.orc_data import (
-            read_orc_column,
-        )
-
-        cols = ("doc_id", "num_rows", "int_sum", "int_nulls", "str_bytes",
-                "dbl_sum")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 40 + 5
-                ints = [None if (d + i) % 7 == 0 else d + i for i in range(nr)]
-                strs = [
-                    None if (d + i) % 11 == 3 else "y" * ((d + i) % 6 + 1)
-                    for i in range(nr)
-                ]
-                dbls = [((d + i) % 8) / 4.0 for i in range(nr)]
-                tbl = pa.table(
-                    {
-                        "iv": pa.array(ints, pa.int64()),
-                        "sv": pa.array(strs, pa.string()),
-                        "dv": pa.array(dbls, pa.float64()),
-                    }
-                )
-                buf = io.BytesIO()
-                pa_orc.write_table(
-                    tbl, buf,
-                    compression=(
-                        "uncompressed", "zlib", "snappy", "lz4", "zstd"
-                    )[d % 5],
-                )
-                blob = buf.getvalue()
-                iv = read_orc_column(blob, "iv")
-                sv = read_orc_column(blob, "sv")
-                dv = read_orc_column(blob, "dv")
-                rows["doc_id"].append(doc_id)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(
-                    sum(len(v) for v in sv if v is not None)
-                )
-                rows["dbl_sum"].append(round(sum(dv), 4))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, int_sum bigint, int_nulls bigint, "
-        "str_bytes bigint, dbl_sum double",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Arrow IPC decoded from raw bytes (r11): completes the independent
-# columnar-reader trilogy (parquet pages, ORC stripes, now Arrow) —
-# a minimal flatbuffers table walk (vtables/soffsets/unions/struct
-# vectors, public binary spec) decodes Message/Schema/RecordBatch and
-# the File footer framing; validity bitmaps and value buffers then
-# reconstruct columns with zero pyarrow involvement
-# (sources/arrow_ipc.py). Fixture alternates FILE and STREAM framings
-# by doc parity; closed forms check the values.
-# ---------------------------------------------------------------------------
-@defquery(
-    "arrow_ipc_read_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 50 + 4 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 7 <> 0 THEN d + i END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 7 = 0 THEN 1 END) AS int_nulls,
-             SUM(CASE WHEN (d + i) % 11 <> 3 THEN (d + i) % 9 + 1 END)
-               AS str_bytes,
-             COUNT(CASE WHEN (d + i) % 3 = 0 THEN 1 END) AS n_true
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id,
-           CASE WHEN d % 2 = 0 THEN 'file' ELSE 'stream' END AS framing,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(COALESCE(str_bytes, 0) AS BIGINT) AS str_bytes,
-           CAST(n_true AS BIGINT) AS n_true
-    FROM agg
-    """,
-    doc="independent Arrow IPC read: flatbuffers-decoded schema + "
-    "record batches (multi-batch, both framings), validity bitmaps "
-    "and value buffers aggregating to the closed forms",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_arrow_ipc_read_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow as pa
-        import pyarrow.ipc as ipc
-
-        from shared_etl_pipelines_spark.sources.arrow_ipc import read_ipc
-
-        cols = ("doc_id", "framing", "num_rows", "int_sum", "int_nulls",
-                "str_bytes", "n_true")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 50 + 4
-                ints = [None if (d + i) % 7 == 0 else d + i for i in range(nr)]
-                strs = [
-                    None if (d + i) % 11 == 3 else "z" * ((d + i) % 9 + 1)
-                    for i in range(nr)
-                ]
-                bools = [(d + i) % 3 == 0 for i in range(nr)]
-                tbl = pa.table(
-                    {
-                        "iv": pa.array(ints, pa.int64()),
-                        "sv": pa.array(strs, pa.string()),
-                        "bv": pa.array(bools, pa.bool_()),
-                    }
-                )
-                buf = io.BytesIO()
-                maker = ipc.new_file if d % 2 == 0 else ipc.new_stream
-                with maker(buf, tbl.schema) as w:
-                    for b in tbl.to_batches(max_chunksize=16):
-                        w.write_batch(b)
-                got = read_ipc(buf.getvalue())
-                iv = got["columns"]["iv"]
-                sv = got["columns"]["sv"]
-                bv = got["columns"]["bv"]
-                rows["doc_id"].append(doc_id)
-                rows["framing"].append("file" if d % 2 == 0 else "stream")
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(
-                    sum(len(v) for v in sv if v is not None)
-                )
-                rows["n_true"].append(sum(1 for v in bv if v))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, framing string, num_rows bigint, int_sum bigint, "
-        "int_nulls bigint, str_bytes bigint, n_true bigint",
-    )
-
-
-def _own_writer_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    tag: str,
-    cols: tuple[tuple[str, str], ...],
-    n_shards: int,
-    **writer_kwargs,
-) -> list[str]:
-    """Deterministic parquet fixture built through the repo's OWN
-    writer (VERDICT r12 task #1): every byte of the fixture is produced
-    by sources/parquet_write.py from sorted source values, so it is
-    identical in every environment — no dependence on the ambient
-    pyarrow's page geometry or encoding choices (the r11/r12 driver-red
-    root cause). The build itself is distributed: rows range-shard on
-    the first column (contiguous key ranges, so sorted fixtures cluster
-    for page pruning), each executor task sorts its shard and writes
-    one file via tmp-name + os.replace (atomic, concurrency-safe), and
-    a _SUCCESS marker keyed by source content + the full build recipe
-    (tag, cols, n_shards, writer kwargs, writer-module code identity —
-    VERDICT r13 #1: bytes built by older writer code must never be
-    reused) makes the cache hermetic.
-
-    Every acquisition — cache hit or fresh build — then passes a
-    CONTENT GATE (VERDICT r13 #1): a distributed multiset signature
-    (COUNT + SUM(xxhash64(row)) + per-column sums) of the fixture files
-    must equal the same signature over the source projection, and the
-    shard-file set on disk must equal the marker exactly (a stray file
-    would leak into glob readers).  A mismatch deletes the fixture and
-    rebuilds once; a divergence that survives a clean rebuild RAISES
-    with the per-column diffs, so a driver-side failure localizes in
-    the recorded ``err`` instead of hashing silently wrong values.
-    Returns the shard file paths in shard order."""
-    import hashlib as _hl
-    import json as _json
-    import os as _os
-    import shutil as _sh
-    import tempfile as _tf
-
-    from shared_etl_pipelines_spark.sources import parquet_write as _pw
-
-    src = _os.path.join(sf_dir, f"{table}.parquet")
-    h = _hl.sha256()
-    with open(_pw.__file__, "rb") as fh:
-        h.update(_hl.sha256(fh.read()).digest())
-    h.update(
-        "|".join(
-            [
-                "v2",
-                tag,
-                repr(tuple(cols)),
-                str(n_shards),
-                repr(sorted(writer_kwargs.items())),
-            ]
-        ).encode()
-    )
-    with open(src, "rb") as fh:
-        for piece in iter(lambda: fh.read(1 << 20), b""):
-            h.update(piece)
-    fix_dir = _os.path.join(
-        _tf.gettempdir(), f"spark_graft_ownfix_{h.hexdigest()[:16]}"
-    )
-    marker = _os.path.join(fix_dir, "_SUCCESS")
-
-    col_spec = tuple(cols)
-    col_names = [c for c, _ in col_spec]
-    sort_names = list(col_names)
-
-    def _build() -> None:
-        import pandas as pd
-
-        _os.makedirs(fix_dir, exist_ok=True)
-        key_col = col_spec[0][0]
-        df = read_parquet(spark, src).select(*col_names)
-        mx = df.agg(F.max(key_col)).collect()[0][0]
-        shard = F.floor(
-            F.col(key_col).cast("long") * n_shards / (int(mx) + 1)
-        ).cast("int")
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            import os as _o
-            import uuid as _uuid
-
-            from shared_etl_pipelines_spark.sources.parquet_write import (
-                write_parquet,
-            )
-
-            pdf = pdf.sort_values(sort_names, kind="mergesort")
-            sid = int(pdf["__shard"].iloc[0])
-            data = []
-            for name, kind in col_spec:
-                v = pdf[name].tolist()
-                if kind == "int64":
-                    v = [int(x) for x in v]
-                elif kind == "double":
-                    v = [float(x) for x in v]
-                else:
-                    v = [str(x) for x in v]
-                data.append((name, kind, v))
-            blob = write_parquet(data, **writer_kwargs)
-            final = _o.path.join(fix_dir, f"shard_{sid:05d}.parquet")
-            tmp = f"{final}.tmp.{_uuid.uuid4().hex}"
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            _o.replace(tmp, final)
-            return pd.DataFrame({"shard": [sid], "n": [len(pdf)]})
-
-        written = (
-            df.withColumn("__shard", shard)
-            .groupBy("__shard")
-            .applyInPandas(build, "shard int, n long")
-            .collect()
-        )
-        names = sorted(f"shard_{int(r['shard']):05d}.parquet" for r in written)
-        tmp = f"{marker}.tmp.{_os.getpid()}"
-        with open(tmp, "w") as fh:
-            _json.dump(names, fh)
-        _os.replace(tmp, marker)
-
-    def _content_gate() -> tuple[list[str], str | None]:
-        with open(marker) as fh:
-            names = _json.load(fh)
-        on_disk = sorted(
-            n
-            for n in _os.listdir(fix_dir)
-            if n.startswith("shard_") and n.endswith(".parquet")
-        )
-        if on_disk != sorted(names):
-            return [], (
-                f"shard files on disk != marker: disk={on_disk[:6]} "
-                f"marker={sorted(names)[:6]}"
-            )
-        paths = [_os.path.join(fix_dir, n) for n in names]
-        sig_cols = [
-            F.count(F.lit(1)).cast("decimal(38,0)").alias("n_rows"),
-            F.sum(F.xxhash64(*col_names).cast("decimal(38,0)")).alias(
-                "rows_sig"
-            ),
-        ]
-        for name, kind in col_spec:
-            if kind == "int64":
-                sig_cols.append(
-                    F.sum(F.col(name).cast("decimal(38,0)")).alias(name)
-                )
-            elif kind == "double":
-                sig_cols.append(F.sum(name).alias(name))
-            else:
-                sig_cols.append(
-                    F.sum(F.length(name).cast("decimal(38,0)")).alias(name)
-                )
-        fx = read_parquet(spark, *paths).select(*col_names)
-        sd = read_parquet(spark, src).select(*col_names)
-        both = fx.withColumn("__side", F.lit("fix")).unionByName(
-            sd.withColumn("__side", F.lit("src"))
-        )
-        rows = {
-            r["__side"]: r for r in both.groupBy("__side").agg(*sig_cols).collect()
-        }
-        if set(rows) != {"fix", "src"}:
-            return [], f"signature sides missing: got {sorted(rows)}"
-        diffs = [
-            f"{c}: fixture={rows['fix'][c]} source={rows['src'][c]}"
-            for c in ["n_rows", "rows_sig", *col_names]
-            if rows["fix"][c] != rows["src"][c]
-        ]
-        if diffs:
-            return [], "; ".join(diffs)
-        return paths, None
-
-    detail = "unbuilt"
-    for _attempt in (0, 1):
-        if not _os.path.exists(marker):
-            _build()
-        paths, detail = _content_gate()
-        if detail is None:
-            return paths
-        _sh.rmtree(fix_dir, ignore_errors=True)
-    raise ValueError(
-        f"own-writer fixture {table}/{tag}: content diverges from the "
-        f"source table even after a clean rebuild — {detail}"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Self-read parquet scan (r11, rebuilt r13): the independent page
-# reader RUNNING AS the distributed scan engine. The fixture is now
-# written by the repo's OWN parquet writer (distributed, one shard per
-# task — see _own_writer_fixture) instead of the ambient pyarrow, so
-# the bytes the own reader decodes are identical in every environment
-# (VERDICT r12 task #1: both driver-red rounds traced to
-# pyarrow-version-dependent fixture bytes). Each scan task decodes ITS
-# shard's row groups with the repo's own Thrift walk + codecs +
-# encodings, and CROSS-CHECKS its partial aggregate against pyarrow
-# re-reading the same shard — a divergence raises a diagnosable error
-# instead of hashing silently-wrong values.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_selfread_scan",
-    """
-    SELECT l_returnflag, COUNT(*) AS n_rows,
-           ROUND(SUM(l_quantity), 4) AS qty_sum,
-           SUM(l_orderkey) AS key_sum
-    FROM lineitem GROUP BY l_returnflag
-    """,
-    doc="shard-parallel scan through the repo's OWN parquet reader over "
-    "OWN-writer fixture bytes (deterministic in every environment); "
-    "each task cross-checks its partial aggregate against pyarrow and "
-    "raises on divergence — aggregates match DuckDB reading the source",
-    tags=("llm", "source", "codec", "scale-path"),
-)
-def q_parquet_selfread_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from shared_etl_pipelines_spark.queries import round_floats
-
-    paths = _own_writer_fixture(
-        spark, sf_dir, "lineitem", "selfread-v3",
-        (("l_orderkey", "int64"), ("l_quantity", "double"),
-         ("l_returnflag", "utf8")),
-        n_shards=32,
-        compression="SNAPPY", row_group_size=65536, use_dictionary=True,
-    )
-
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_footer import (
-            read_footer_ranged as _rfr,
-        )
-        from shared_etl_pipelines_spark.sources.parquet_pages import (
-            read_column_ranged,
-        )
-
-        for pdf in it:
-            out = {"l_returnflag": [], "n_rows": [], "qty_sum": [],
-                   "key_sum": []}
-            for path in pdf["path"]:
-                path = str(path)
-                # own decode: footer walk plans the row groups, each
-                # decoded by ranged reads of its column-chunk byte spans
-                foot = _rfr(path)
-                acc: dict[str, list] = {}
-                for rg in range(len(foot["row_groups"])):
-                    keys = read_column_ranged(path, foot, rg, "l_orderkey")
-                    qtys = read_column_ranged(path, foot, rg, "l_quantity")
-                    flags = read_column_ranged(
-                        path, foot, rg, "l_returnflag"
-                    )
-                    for k, q, f in zip(keys, qtys, flags):
-                        a = acc.setdefault(f.decode("utf-8"), [0, 0.0, 0])
-                        a[0] += 1
-                        a[1] += q
-                        a[2] += k
-                # loud cross-check (VERDICT r12 task #1c): pyarrow — an
-                # independent reference reader — re-reads the same shard;
-                # any divergence is an immediate diagnosable error, never
-                # a silent wrong hash
-                ref = _pq.read_table(path).to_pydict()
-                racc: dict[str, list] = {}
-                for k, q, f in zip(
-                    ref["l_orderkey"], ref["l_quantity"],
-                    ref["l_returnflag"],
-                ):
-                    a = racc.setdefault(f, [0, 0.0, 0])
-                    a[0] += 1
-                    a[1] += q
-                    a[2] += k
-                for f, (n, qs, ks) in acc.items():
-                    rn, rqs, rks = racc.get(f, (0, 0.0, 0))
-                    if n != rn or ks != rks or round(qs - rqs, 6) != 0:
-                        raise ValueError(
-                            "parquet selfread: own decode disagrees with "
-                            f"pyarrow on {path} flag={f!r}: "
-                            f"own=({n},{qs},{ks}) ref=({rn},{rqs},{rks})"
-                        )
-                if set(acc) != set(racc):
-                    raise ValueError(
-                        "parquet selfread: flag sets diverge on "
-                        f"{path}: own={sorted(acc)} ref={sorted(racc)}"
-                    )
-                for f, (n, qs, ks) in acc.items():
-                    out["l_returnflag"].append(f)
-                    out["n_rows"].append(n)
-                    out["qty_sum"].append(qs)
-                    out["key_sum"].append(ks)
-            yield pd.DataFrame(out)
-
-    shards = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(min(len(paths), 32))
-    partial = shards.mapInPandas(
-        scan,
-        "l_returnflag string, n_rows long, qty_sum double, key_sum long",
-    )
-    out = partial.groupBy("l_returnflag").agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("qty_sum").alias("qty_sum"),
-        F.sum("key_sum").alias("key_sum"),
-    )
-    return round_floats(out)
-
-
-# ---------------------------------------------------------------------------
-# Parquet writer from raw bytes (r11): the inverse cross-check — files
-# built by the repo's own Thrift compact ENCODER + v1 page writer
-# (sources/parquet_write.py, snappy'd by the repo's own codec) must
-# read back value-identically through pyarrow, the reference reader.
-# DuckDB reads the same files in tests, so BOTH independent readers
-# gate the writer.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_write_roundtrip_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 25 + 4 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 5 <> 0 THEN (d + i) * 3 END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 5 = 0 THEN 1 END) AS int_nulls,
-             SUM((d + i) % 9 + 1) AS str_bytes
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id,
-           CASE WHEN d % 2 = 0 THEN 'SNAPPY' ELSE 'UNCOMPRESSED' END AS codec,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(str_bytes AS BIGINT) AS str_bytes,
-           TRUE AS stats_ok
-    FROM agg
-    """,
-    doc="own-bytes parquet writer gated by the reference reader: "
-    "pyarrow re-reads our thrift-encoded footers and snappy'd PLAIN "
-    "pages to the closed forms, and the footer statistics match the "
-    "data",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_parquet_write_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow.parquet as pq
-
-        from shared_etl_pipelines_spark.sources.parquet_write import (
-            write_parquet,
-        )
-
-        cols = ("doc_id", "codec", "num_rows", "int_sum", "int_nulls",
-                "str_bytes", "stats_ok")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 25 + 4
-                ints = [
-                    None if (d + i) % 5 == 0 else (d + i) * 3
-                    for i in range(nr)
-                ]
-                strs = ["w" * ((d + i) % 9 + 1) for i in range(nr)]
-                codec = "SNAPPY" if d % 2 == 0 else "UNCOMPRESSED"
-                blob = write_parquet(
-                    [("iv", "int64", ints), ("sv", "utf8", strs)],
-                    compression=codec,
-                    row_group_size=8,
-                )
-                ref = pq.read_table(io.BytesIO(blob))
-                iv = ref.column("iv").to_pylist()
-                sv = ref.column("sv").to_pylist()
-                # stats gate via DuckDB: pyarrow ignores min/max from
-                # writers it does not recognize (the PARQUET-251 trust
-                # list), DuckDB reads the fields as written
-                import os as _os
-                import tempfile as _tf
-
-                import duckdb as _dd
-
-                tfp = _os.path.join(
-                    _tf.gettempdir(), f"wrt_{d}_{_os.getpid()}.parquet"
-                )
-                with open(tfp, "wb") as fh:
-                    fh.write(blob)
-                try:
-                    smin, smax, snull = _dd.sql(
-                        "SELECT stats_min_value, stats_max_value, "
-                        "stats_null_count FROM parquet_metadata('"
-                        + tfp + "') WHERE path_in_schema='iv' AND "
-                        "row_group_id=0"
-                    ).fetchone()
-                finally:
-                    _os.unlink(tfp)
-                present0 = [v for v in ints[:8] if v is not None]
-                stats_ok = (
-                    snull == sum(1 for v in ints[:8] if v is None)
-                    and (not present0 or (int(smin) == min(present0)
-                                          and int(smax) == max(present0)))
-                )
-                rows["doc_id"].append(doc_id)
-                rows["codec"].append(codec)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(sum(len(v) for v in sv))
-                rows["stats_ok"].append(bool(stats_ok))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, codec string, num_rows bigint, int_sum bigint, "
-        "int_nulls bigint, str_bytes bigint, stats_ok boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# ORC writer from raw bytes (r11): the write-side symmetry for ORC —
-# PRESENT byte-RLE streams, RLEv2 DIRECT integer runs (closed width
-# table, MSB-first, zigzag), DIRECT_V2 strings, and chunk-framed
-# NONE/ZLIB/SNAPPY compression (sources/orc_write.py). Gate inverts:
-# pyarrow's bundled reference ORC reader re-reads our bytes to the
-# closed forms.
-# ---------------------------------------------------------------------------
-@defquery(
-    "orc_write_roundtrip_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 30 + 3 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 6 <> 0 THEN (d + i) * 7 END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 6 = 0 THEN 1 END) AS int_nulls,
-             SUM((d + i) % 8 + 1) AS str_bytes,
-             ROUND(SUM(((d + i) % 16) / 8.0), 4) AS dbl_sum
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id,
-           CASE CAST(d % 3 AS INT) WHEN 0 THEN 'NONE'
-                WHEN 1 THEN 'ZLIB' ELSE 'SNAPPY' END AS codec,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(str_bytes AS BIGINT) AS str_bytes, dbl_sum
-    FROM agg
-    """,
-    doc="own-bytes ORC writer gated by the reference reader: pyarrow "
-    "re-reads our RLEv2/present/DIRECT_V2 streams to the closed forms "
-    "across NONE/ZLIB/SNAPPY",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_orc_write_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from pyarrow import orc as pa_orc
-
-        from shared_etl_pipelines_spark.sources.orc_write import (
-            write_orc_data,
-        )
-
-        cols = ("doc_id", "codec", "num_rows", "int_sum", "int_nulls",
-                "str_bytes", "dbl_sum")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 30 + 3
-                ints = [
-                    None if (d + i) % 6 == 0 else (d + i) * 7
-                    for i in range(nr)
-                ]
-                strs = ["q" * ((d + i) % 8 + 1) for i in range(nr)]
-                dbls = [((d + i) % 16) / 8.0 for i in range(nr)]
-                codec = ("NONE", "ZLIB", "SNAPPY")[d % 3]
-                blob = write_orc_data(
-                    [("iv", "long", ints), ("sv", "utf8", strs),
-                     ("dv", "double", dbls)],
-                    compression=codec,
-                )
-                ref = pa_orc.read_table(io.BytesIO(blob))
-                iv = ref.column("iv").to_pylist()
-                sv = ref.column("sv").to_pylist()
-                dv = ref.column("dv").to_pylist()
-                rows["doc_id"].append(doc_id)
-                rows["codec"].append(codec)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(sum(len(v) for v in sv))
-                rows["dbl_sum"].append(round(sum(dv), 4))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, codec string, num_rows bigint, int_sum bigint, "
-        "int_nulls bigint, str_bytes bigint, dbl_sum double",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Arrow IPC writer from raw bytes (r11): completes the read/write
-# independence table for all three columnar formats — a minimal
-# FLATBUFFERS BUILDER (back-to-front construction, vtables with
-# verifier-honest table sizes, end-anchored alignment squared with the
-# start-anchored verifier by padding the total to 8) emits real
-# Schema/RecordBatch stream messages that pyarrow's reference reader
-# (whose flatbuffers VERIFIER rejects malformed buffers outright)
-# re-reads to the closed forms. sources/arrow_ipc_write.py.
-# ---------------------------------------------------------------------------
-@defquery(
-    "arrow_ipc_write_roundtrip_audit",
-    """
-    WITH a AS (SELECT doc_id AS d FROM documents),
-    dims AS (SELECT d, d % 35 + 3 AS nr FROM a),
-    r AS (SELECT d, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM dims),
-    agg AS (
-      SELECT d, MAX(nr) AS nr,
-             SUM(CASE WHEN (d + i) % 4 <> 0 THEN (d + i) * 11 END) AS int_sum,
-             COUNT(CASE WHEN (d + i) % 4 = 0 THEN 1 END) AS int_nulls,
-             SUM((d + i) % 7 + 1) AS str_bytes,
-             COUNT(CASE WHEN (d + i) % 3 = 0 THEN 1 END) AS n_true
-      FROM r GROUP BY d
-    )
-    SELECT d AS doc_id, CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(str_bytes AS BIGINT) AS str_bytes,
-           CAST(n_true AS BIGINT) AS n_true
-    FROM agg
-    """,
-    doc="own-bytes Arrow IPC stream writer gated by the reference "
-    "reader: hand-built flatbuffers survive pyarrow's verifier and the "
-    "multi-batch values aggregate to the closed forms",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_arrow_ipc_write_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import pyarrow.ipc as ipc
-
-        from shared_etl_pipelines_spark.sources.arrow_ipc_write import (
-            write_ipc_stream,
-        )
-
-        cols = ("doc_id", "num_rows", "int_sum", "int_nulls", "str_bytes",
-                "n_true")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = d % 35 + 3
-                ints = [
-                    None if (d + i) % 4 == 0 else (d + i) * 11
-                    for i in range(nr)
-                ]
-                strs = ["t" * ((d + i) % 7 + 1) for i in range(nr)]
-                bools = [(d + i) % 3 == 0 for i in range(nr)]
-                blob = write_ipc_stream(
-                    [("iv", "int64", ints), ("sv", "utf8", strs),
-                     ("bv", "bool", bools)],
-                    batch_size=8,
-                )
-                ref = ipc.open_stream(io.BytesIO(blob)).read_all()
-                iv = ref.column("iv").to_pylist()
-                sv = ref.column("sv").to_pylist()
-                bv = ref.column("bv").to_pylist()
-                rows["doc_id"].append(doc_id)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(sum(v for v in iv if v is not None))
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(sum(len(v) for v in sv))
-                rows["n_true"].append(sum(1 for v in bv if v))
-            yield pd.DataFrame(rows)
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, int_sum bigint, int_nulls bigint, "
-        "str_bytes bigint, n_true bigint",
-    )
-
-
-# ---------------------------------------------------------------------------
 # Roaring bitmap corpus slicing (r11): the tag->bitmap index a 100 TB
 # curation pipeline keeps per license/language/source — built in one
 # document pass (per-partition partial bitmaps, OR-merged per key; the
@@ -16311,405 +14972,6 @@ def q_multimodal_vp8_pframes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# zstd frame WRITER (r12): the EMIT half of the zstd surface (VERDICT
-# r11 "what's missing" #3) — store-mode RFC 8878 frames (raw + RLE
-# blocks, frame content size, XXH64 checksum) written by
-# sources/zstd_encode.py and decoded back by BOTH pyarrow's bundled
-# reference zstd and the repo's own decoder. The fixture payload is a
-# run-free byte pattern plus a null run, so the exact frame length
-# (magic + FHD + FCS + raw block + RLE block + checksum) replays in
-# closed form.
-# ---------------------------------------------------------------------------
-@defquery(
-    "zstd_encode_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 500 + 50 AS pat_len, n % 1000 + 64 AS run_len
-          FROM a)
-    SELECT doc_id,
-           CAST(pat_len + run_len AS BIGINT) AS n_in,
-           CAST(4 + 1 + (CASE WHEN pat_len + run_len <= 255 THEN 1 ELSE 2 END)
-                + 3 + pat_len + 3 + 1 + 4 AS BIGINT) AS frame_len,
-           TRUE AS ok_ref, TRUE AS ok_own
-    FROM d
-    """,
-    doc="own zstd frames, two independent decoders: store-mode frame "
-    "per doc (zero-free run-free pattern + null run), byte-exact round-trip "
-    "through pyarrow AND the own RFC 8878 decoder, frame length in "
-    "closed form",
-    tags=("llm", "codec", "source"),
-)
-def q_zstd_encode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-
-        from shared_etl_pipelines_spark.sources.zstd_decode import (
-            zstd_decompress,
-        )
-        from shared_etl_pipelines_spark.sources.zstd_encode import (
-            zstd_compress,
-        )
-
-        codec = pa.Codec("zstd")
-        cols = ("doc_id", "n_in", "frame_len", "ok_ref", "ok_own")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                pat = bytes((d * 7 + i * 13) % 251 + 1 for i in range(n % 500 + 50))
-                payload = pat + b"\x00" * (n % 1000 + 64)
-                frame = zstd_compress(payload)
-                rows["doc_id"].append(d)
-                rows["n_in"].append(len(payload))
-                rows["frame_len"].append(len(frame))
-                rows["ok_ref"].append(
-                    codec.decompress(frame, len(payload)).to_pybytes()
-                    == payload
-                )
-                rows["ok_own"].append(zstd_decompress(frame) == payload)
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, n_in bigint, frame_len bigint, ok_ref boolean, "
-        "ok_own boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Dictionary-encoded pages from the own writer (r12): repeated-string
-# corpora are THE parquet shape at 100 TB, and PLAIN-only emission
-# forfeits the format's main size lever. write_parquet(use_dictionary)
-# emits a PLAIN dictionary page + RLE/bit-packed index data page per
-# eligible chunk; this query gates, per doc and per codec (rotating
-# UNCOMPRESSED/SNAPPY/ZSTD), that pyarrow re-reads the values exactly,
-# that the own reader agrees, that the dictionary actually engaged on
-# the repeated column, and that the all-distinct column fell back to
-# PLAIN.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_write_dict_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 25 + 8 AS nr FROM a),
-    r AS (SELECT doc_id, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM d),
-    agg AS (
-      SELECT doc_id, MAX(nr) AS nr,
-             SUM(CASE WHEN (doc_id + i) % 7 <> 0 THEN (doc_id + i) * 3 END)
-               AS val_sum,
-             COUNT(CASE WHEN (doc_id + i) % 7 = 0 THEN 1 END) AS val_nulls
-      FROM r GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'UNCOMPRESSED'
-                WHEN 1 THEN 'SNAPPY' ELSE 'ZSTD' END AS codec,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(5 AS BIGINT) AS n_tags,
-           CAST(COALESCE(val_sum, 0) AS BIGINT) AS val_sum,
-           CAST(val_nulls AS BIGINT) AS val_nulls,
-           TRUE AS dict_engaged, TRUE AS plain_fallback,
-           TRUE AS ok_ref, TRUE AS ok_own
-    FROM agg
-    """,
-    doc="own-writer dictionary pages gated by three readers: repeated "
-    "tags dictionary-encode (pyarrow metadata proves it), all-distinct "
-    "ints fall back to PLAIN, and pyarrow + the own page reader both "
-    "re-read every value across all three codecs",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_parquet_write_dict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_pages import (
-            read_all_columns,
-        )
-        from shared_etl_pipelines_spark.sources.parquet_write import (
-            write_parquet,
-        )
-
-        codecs = ("UNCOMPRESSED", "SNAPPY", "ZSTD")
-        cols_out = ("doc_id", "codec", "num_rows", "n_tags", "val_sum",
-                    "val_nulls", "dict_engaged", "plain_fallback",
-                    "ok_ref", "ok_own")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 25 + 8
-                tags = [f"t{(d + i) % 5}" for i in range(nr)]
-                vals = [
-                    None if (d + i) % 7 == 0 else (d + i) * 3
-                    for i in range(nr)
-                ]
-                codec = codecs[d % 3]
-                blob = write_parquet(
-                    [("tag", "utf8", tags), ("val", "int64", vals)],
-                    compression=codec,
-                    use_dictionary=True,
-                )
-                t = _pq.read_table(_io.BytesIO(blob))
-                ok_ref = (
-                    t.column("tag").to_pylist() == tags
-                    and t.column("val").to_pylist() == vals
-                )
-                own_tags = [
-                    x.decode("utf-8") if x is not None else None
-                    for x in read_all_columns(blob, "tag")
-                ]
-                ok_own = (
-                    own_tags == tags
-                    and read_all_columns(blob, "val") == vals
-                )
-                md = _pq.read_metadata(_io.BytesIO(blob))
-                enc_tag = md.row_group(0).column(0).encodings
-                enc_val = md.row_group(0).column(1).encodings
-                rows["doc_id"].append(d)
-                rows["codec"].append(codec)
-                rows["num_rows"].append(nr)
-                rows["n_tags"].append(len(set(tags)))
-                rows["val_sum"].append(
-                    sum(v for v in vals if v is not None)
-                )
-                rows["val_nulls"].append(sum(1 for v in vals if v is None))
-                rows["dict_engaged"].append(
-                    "PLAIN_DICTIONARY" in enc_tag
-                    or "RLE_DICTIONARY" in enc_tag
-                )
-                rows["plain_fallback"].append("PLAIN" in enc_val)
-                rows["ok_ref"].append(bool(ok_ref))
-                rows["ok_own"].append(bool(ok_own))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, codec string, num_rows bigint, n_tags bigint, "
-        "val_sum bigint, val_nulls bigint, dict_engaged boolean, "
-        "plain_fallback boolean, ok_ref boolean, ok_own boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Page-index-pruned scan (r12, rebuilt r13): the page-level half of
-# predicate pushdown. Row-group pruning skips whole groups; the
-# ColumnIndex / OffsetIndex — now WRITTEN by the repo's own writer
-# (sources/parquet_write.py, deterministic bytes; VERDICT r12 task #1)
-# and parsed by the repo's own thrift walker — lets a scan skip PAGES
-# inside groups it must read: each task seeks to its shard's index
-# spans, selects only pages whose [min,max] intersect the key range,
-# and fetches exactly those byte spans (sources/parquet_pageindex.py).
-# The `pruned` assertion lives in a pytest plan gate
-# (tests/test_plans.py::test_pageindex_scan_actually_prunes), NOT in
-# the hashed row; an in-task pyarrow cross-check raises loudly on any
-# decode divergence.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_pageindex_scan",
-    """
-    SELECT COUNT(*) AS n_rows,
-           CAST(SUM(l_quantity) AS BIGINT) AS qty_sum,
-           SUM(l_orderkey) AS key_sum
-    FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 3000
-    """,
-    doc="page-index-pruned ranged scan over own-writer fixture bytes: "
-    "per-shard tasks read the ColumnIndex/OffsetIndex spans, fetch "
-    "only the pages intersecting the key range, decode, re-filter "
-    "exactly, and cross-check against pyarrow (raising on divergence); "
-    "the pages-skipped assertion is a pytest plan gate",
-    tags=("llm", "source", "codec", "scale-path", "plan"),
-)
-def q_parquet_pageindex_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    LO, HI = 1000, 3000
-    paths = _own_writer_fixture(
-        spark, sf_dir, "lineitem", "pageindex-v2",
-        (("l_orderkey", "int64"), ("l_quantity", "double")),
-        n_shards=8,
-        compression="SNAPPY", row_group_size=16384, use_dictionary=True,
-        page_rows=512, write_page_index=True,
-    )
-
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_footer import (
-            read_footer_ranged as _rfr,
-        )
-        from shared_etl_pipelines_spark.sources.parquet_pageindex import (
-            read_column_pruned,
-            read_column_rows,
-        )
-
-        for pdf in it:
-            out = {"n_rows": [], "qty_sum": [], "key_sum": []}
-            for path in pdf["path"]:
-                path = str(path)
-                foot = _rfr(path)
-                n = ks = 0
-                qs = 0.0
-                for rg in range(len(foot["row_groups"])):
-                    keys, _n_t, _n_r = read_column_pruned(
-                        path, foot, rg, "l_orderkey", LO, HI
-                    )
-                    hit_rows = {r for r, k in keys if LO <= k <= HI}
-                    if not hit_rows:
-                        continue
-                    # companion column: fetch only the quantity pages
-                    # covering the hit row span (OffsetIndex first_row)
-                    qtys, _qt, _qr = read_column_rows(
-                        path, foot, rg, "l_quantity",
-                        min(hit_rows), max(hit_rows),
-                    )
-                    qmap = dict(qtys)
-                    for r, k in keys:
-                        if r in hit_rows:
-                            n += 1
-                            ks += k
-                            qs += qmap[r]
-                # loud cross-check (VERDICT r12 task #1c): pyarrow
-                # re-reads the shard and applies the same predicate; a
-                # divergence raises a diagnosable error, never a silent
-                # wrong hash
-                ref = _pq.read_table(path).to_pydict()
-                rn = rks = 0
-                rqs = 0.0
-                for k, q in zip(ref["l_orderkey"], ref["l_quantity"]):
-                    if LO <= k <= HI:
-                        rn += 1
-                        rks += k
-                        rqs += q
-                if n != rn or ks != rks or round(qs - rqs, 6) != 0:
-                    raise ValueError(
-                        "parquet pageindex: own pruned decode disagrees "
-                        f"with pyarrow on {path}: own=({n},{qs},{ks}) "
-                        f"ref=({rn},{rqs},{rks})"
-                    )
-                out["n_rows"].append(n)
-                out["qty_sum"].append(qs)
-                out["key_sum"].append(ks)
-            yield pd.DataFrame(out)
-
-    shards = spark.createDataFrame(
-        [(p,) for p in paths], "path string"
-    ).repartition(min(len(paths), 32))
-    partial = shards.mapInPandas(
-        scan, "n_rows long, qty_sum double, key_sum long"
-    )
-    return partial.agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("qty_sum").cast("long").alias("qty_sum"),
-        F.sum("key_sum").alias("key_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Own-writer page indexes (r12): write_parquet(page_rows,
-# write_page_index) emits multi-page chunks WITH ColumnIndex /
-# OffsetIndex sections, and because this writer's page geometry is
-# exact (32 rows per page), the pruned-scan page counts themselves are
-# closed-form: a [d+10, d+50] probe over rows d..d+nr-1 always touches
-# exactly pages 0 and 1 of ceil(nr/32). pyarrow re-reads every file;
-# the own page-pruned reader does the selective scan.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_own_pageindex_scan",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 400 + 100 AS nr FROM a)
-    SELECT doc_id,
-           CAST((nr + 31) // 32 AS BIGINT) AS pages_total,
-           CAST(2 AS BIGINT) AS pages_read,
-           CAST(41 AS BIGINT) AS n_hits,
-           CAST(41 * doc_id + 1230 AS BIGINT) AS key_sum,
-           TRUE AS ok_ref
-    FROM d
-    """,
-    doc="own-writer page indexes: exact page geometry makes even the "
-    "prune counts closed-form — probe [d+10, d+50] reads exactly pages "
-    "0-1 of ceil(nr/32); pyarrow re-reads the same files",
-    tags=("llm", "source", "codec", "scale-path", "plan"),
-)
-def q_parquet_own_pageindex_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import os as _os
-        import tempfile as _tf
-
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_pageindex import (
-            read_all_pruned,
-        )
-        from shared_etl_pipelines_spark.sources.parquet_write import (
-            write_parquet,
-        )
-
-        cols_out = ("doc_id", "pages_total", "pages_read", "n_hits",
-                    "key_sum", "ok_ref")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 400 + 100
-                keys = [d + i for i in range(nr)]
-                blob = write_parquet(
-                    [("k", "int64", keys)],
-                    compression="SNAPPY",
-                    page_rows=32,
-                    write_page_index=True,
-                )
-                ok_ref = (
-                    _pq.read_table(_io.BytesIO(blob)).column("k").to_pylist()
-                    == keys
-                )
-                # the pruned reader is path-based: one tiny temp file per
-                # doc, unlinked immediately (executor-local scratch)
-                fd, path = _tf.mkstemp(suffix=".parquet")
-                try:
-                    with _os.fdopen(fd, "wb") as fh:
-                        fh.write(blob)
-                    vals, tot, rd = read_all_pruned(
-                        path, "k", d + 10, d + 50
-                    )
-                finally:
-                    _os.unlink(path)
-                hits = [v for _, v in vals if d + 10 <= v <= d + 50]
-                rows["doc_id"].append(d)
-                rows["pages_total"].append(tot)
-                rows["pages_read"].append(rd)
-                rows["n_hits"].append(len(hits))
-                rows["key_sum"].append(sum(hits))
-                rows["ok_ref"].append(bool(ok_ref))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, pages_total bigint, pages_read bigint, "
-        "n_hits bigint, key_sum bigint, ok_ref boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
 # BM25 top-k retrieval (r12): the lexical-retrieval primitive a
 # curation pipeline runs to pull topic slices out of a corpus (and the
 # sparse half of hybrid search next to the ANN family). Everything is
@@ -16837,214 +15099,6 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         matched.crossJoin(F.broadcast(g))
         .withColumn("score", F.round(total, 4))
         .select("doc_id", "score")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Compressed Arrow IPC bodies (r12): Arrow Flight / IPC shards on the
-# wire are usually BodyCompression'd, and until now the independent
-# reader refused them. Each constituent buffer (int64 uncompressed-
-# length prefix + frame) now decodes through the repo's OWN lz4-frame
-# and zstd decompressors; fixtures are written by pyarrow with the
-# codec rotating per doc, so the cross-implementation check covers
-# both codecs and the stored(-1) path pyarrow takes for tiny buffers.
-# ---------------------------------------------------------------------------
-@defquery(
-    "arrow_ipc_compressed_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 30 + 5 AS nr FROM a),
-    r AS (SELECT doc_id, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM d),
-    agg AS (
-      SELECT doc_id, MAX(nr) AS nr,
-             SUM(CASE WHEN (doc_id + i) % 6 <> 0 THEN (doc_id + i) * 5 END)
-               AS int_sum,
-             COUNT(CASE WHEN (doc_id + i) % 6 = 0 THEN 1 END) AS int_nulls,
-             SUM((doc_id + i) % 7 + 1) AS str_bytes
-      FROM r GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'zstd' ELSE 'lz4' END AS codec,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(int_sum, 0) AS BIGINT) AS int_sum,
-           CAST(int_nulls AS BIGINT) AS int_nulls,
-           CAST(str_bytes AS BIGINT) AS str_bytes,
-           TRUE AS ok_own_emit
-    FROM agg
-    """,
-    doc="compressed Arrow IPC both directions: pyarrow-written "
-    "BodyCompression streams (zstd/lz4 rotating per doc) decoded by "
-    "the own flatbuffers walk + own codecs, and own-written compressed "
-    "streams (own compressors) read back by pyarrow",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_arrow_ipc_compressed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pyarrow as _pa
-        import pyarrow.ipc as _ipc
-
-        from shared_etl_pipelines_spark.sources.arrow_ipc import read_ipc
-
-        cols_out = ("doc_id", "codec", "num_rows", "int_sum", "int_nulls",
-                    "str_bytes", "ok_own_emit")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 30 + 5
-                ints = [
-                    None if (d + i) % 6 == 0 else (d + i) * 5
-                    for i in range(nr)
-                ]
-                strs = ["t" * ((d + i) % 7 + 1) for i in range(nr)]
-                codec = "zstd" if d % 2 == 0 else "lz4"
-                t = _pa.table(
-                    {
-                        "iv": _pa.array(ints, _pa.int64()),
-                        "sv": _pa.array(strs, _pa.string()),
-                    }
-                )
-                sink = _io.BytesIO()
-                with _ipc.new_stream(
-                    sink, t.schema,
-                    options=_ipc.IpcWriteOptions(compression=codec),
-                ) as w:
-                    w.write_table(t, max_chunksize=8)
-                got = read_ipc(sink.getvalue())
-                iv = got["columns"]["iv"]
-                sv = got["columns"]["sv"]
-                # reverse direction: the OWN writer emits the same data
-                # compressed by the OWN codec; pyarrow must read it back
-                from shared_etl_pipelines_spark.sources.arrow_ipc_write import (
-                    write_ipc_stream,
-                )
-
-                own = write_ipc_stream(
-                    [("iv", "int64", ints), ("sv", "utf8", strs)],
-                    batch_size=8, compression=codec,
-                )
-                ref = _ipc.open_stream(_io.BytesIO(own)).read_all()
-                ok_own_emit = (
-                    ref.column("iv").to_pylist() == ints
-                    and ref.column("sv").to_pylist() == strs
-                )
-                rows["ok_own_emit"].append(bool(ok_own_emit))
-                rows["doc_id"].append(d)
-                rows["codec"].append(codec)
-                rows["num_rows"].append(len(iv))
-                rows["int_sum"].append(
-                    sum(v for v in iv if v is not None)
-                )
-                rows["int_nulls"].append(sum(1 for v in iv if v is None))
-                rows["str_bytes"].append(sum(len(v) for v in sv))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, codec string, num_rows bigint, int_sum bigint, "
-        "int_nulls bigint, str_bytes bigint, ok_own_emit boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# ORC + own zstd emission (r12): the ORC chunk framing (3-byte header,
-# isOriginal escape) around the repo's own store-mode zstd frames —
-# pyarrow's bundled ORC C++ reader is the reference gate, the own
-# RLEv2 reader closes the loop. Completes the codec matrix's EMIT row:
-# every codec the repo reads (zlib/snappy/lz4/zstd) it can now also
-# write into ORC.
-# ---------------------------------------------------------------------------
-@defquery(
-    "orc_zstd_roundtrip_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 20 + 5 AS nr FROM a),
-    r AS (SELECT doc_id, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM d),
-    agg AS (
-      SELECT doc_id, MAX(nr) AS nr,
-             SUM(CASE WHEN (doc_id + i) % 8 <> 0 THEN (doc_id + i) * 7 END)
-               AS long_sum,
-             COUNT(CASE WHEN (doc_id + i) % 8 = 0 THEN 1 END) AS long_nulls,
-             SUM((doc_id + i) % 5 + 1) AS str_bytes
-      FROM r GROUP BY doc_id
-    )
-    SELECT doc_id, CAST(nr AS BIGINT) AS num_rows,
-           CAST(COALESCE(long_sum, 0) AS BIGINT) AS long_sum,
-           CAST(long_nulls AS BIGINT) AS long_nulls,
-           CAST(str_bytes AS BIGINT) AS str_bytes,
-           TRUE AS ok_ref, TRUE AS ok_own
-    FROM agg
-    """,
-    doc="own-zstd ORC emission: per-doc files compressed by the repo's "
-    "own store-mode zstd inside ORC chunk framing, re-read by pyarrow's "
-    "ORC C++ reader AND the own RLEv2 reader, sums in closed form",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_orc_zstd_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        from shared_etl_pipelines_spark.sources.orc_data import (
-            read_orc_column,
-        )
-        from shared_etl_pipelines_spark.sources.orc_write import (
-            write_orc_data,
-        )
-
-        cols_out = ("doc_id", "num_rows", "long_sum", "long_nulls",
-                    "str_bytes", "ok_ref", "ok_own")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 20 + 5
-                longs = [
-                    None if (d + i) % 8 == 0 else (d + i) * 7
-                    for i in range(nr)
-                ]
-                strs = ["s" * ((d + i) % 5 + 1) for i in range(nr)]
-                blob = write_orc_data(
-                    [("lv", "long", longs), ("sv", "utf8", strs)],
-                    compression="ZSTD",
-                )
-                t = _po.read_table(_io.BytesIO(blob))
-                ok_ref = (
-                    t.column("lv").to_pylist() == longs
-                    and t.column("sv").to_pylist() == strs
-                )
-                ok_own = read_orc_column(blob, "lv") == longs
-                rows["doc_id"].append(d)
-                rows["num_rows"].append(nr)
-                rows["long_sum"].append(
-                    sum(v for v in longs if v is not None)
-                )
-                rows["long_nulls"].append(
-                    sum(1 for v in longs if v is None)
-                )
-                rows["str_bytes"].append(sum(len(s) for s in strs))
-                rows["ok_ref"].append(bool(ok_ref))
-                rows["ok_own"].append(bool(ok_own))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, long_sum bigint, "
-        "long_nulls bigint, str_bytes bigint, ok_ref boolean, "
-        "ok_own boolean",
     )
 
 
@@ -17346,241 +15400,6 @@ def q_puffin_bitmap_sidecar_slice(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Own-writer LIST columns (r13, VERDICT r12 task #8): the 3-level
-# parquet list encoding (optional LIST > repeated list > required
-# element) emitted by sources/parquet_write.py for embedding-shaped
-# data — int64 tag arrays and double embedding vectors, null lists and
-# empty lists included, across all three codecs and both page versions,
-# gated in-query by pyarrow (the reference reader) re-reading every
-# file value-identically. DuckDB re-reads the same shapes in
-# tests/test_parquet_write.py::test_list_columns_three_reader_matrix.
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_write_list_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 20 + 5 AS nr FROM a),
-    r AS (SELECT doc_id, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM d),
-    agg AS (
-      SELECT doc_id, MAX(nr) AS nr,
-             SUM(CASE WHEN (doc_id + i) % 7 IN (0, 1) THEN 0
-                      ELSE (doc_id + i) * 4 END) AS elem_sum,
-             COUNT(CASE WHEN (doc_id + i) % 7 = 0 THEN 1 END) AS null_lists,
-             COUNT(CASE WHEN (doc_id + i) % 7 = 1 THEN 1 END) AS empty_lists,
-             SUM(0.25 * i * (i % 3 + 1)) AS emb_sum
-      FROM r GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'UNCOMPRESSED'
-                WHEN 1 THEN 'SNAPPY' ELSE 'ZSTD' END AS codec,
-           CAST(1 + doc_id % 2 AS BIGINT) AS page_version,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(elem_sum AS BIGINT) AS elem_sum,
-           CAST(null_lists AS BIGINT) AS null_lists,
-           CAST(empty_lists AS BIGINT) AS empty_lists,
-           ROUND(emb_sum, 4) AS emb_sum,
-           TRUE AS ok_ref
-    FROM agg
-    """,
-    doc="own-writer 3-level LIST encoding: int64 tag arrays + double "
-    "embedding vectors with null/empty lists, all codecs, both page "
-    "versions — pyarrow re-reads every file value-identically in-query",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_parquet_write_list_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_write import (
-            write_parquet,
-        )
-
-        cols_out = ("doc_id", "codec", "page_version", "num_rows",
-                    "elem_sum", "null_lists", "empty_lists", "emb_sum",
-                    "ok_ref")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 20 + 5
-                arrs: list = []
-                embs: list = []
-                for i in range(nr):
-                    m = (d + i) % 7
-                    arrs.append(
-                        None if m == 0 else ([] if m == 1 else
-                                             [d + i, 3 * (d + i)])
-                    )
-                    embs.append([0.25 * i] * (i % 3 + 1))
-                codec = ("UNCOMPRESSED", "SNAPPY", "ZSTD")[d % 3]
-                pv = 1 + d % 2
-                blob = write_parquet(
-                    [("arr", "list<int64>", arrs),
-                     ("emb", "list<double>", embs)],
-                    compression=codec, page_version=pv, page_rows=7,
-                    row_group_size=16,
-                )
-                t = _pq.read_table(_io.BytesIO(blob))
-                ok_ref = (
-                    t.column("arr").to_pylist() == arrs
-                    and t.column("emb").to_pylist() == embs
-                )
-                rows["doc_id"].append(d)
-                rows["codec"].append(codec)
-                rows["page_version"].append(pv)
-                rows["num_rows"].append(nr)
-                rows["elem_sum"].append(
-                    sum(sum(a) for a in arrs if a)
-                )
-                rows["null_lists"].append(
-                    sum(1 for a in arrs if a is None)
-                )
-                rows["empty_lists"].append(
-                    sum(1 for a in arrs if a == [])
-                )
-                rows["emb_sum"].append(
-                    round(sum(sum(e) for e in embs), 4)
-                )
-                rows["ok_ref"].append(bool(ok_ref))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, codec string, page_version bigint, "
-        "num_rows bigint, elem_sum bigint, null_lists bigint, "
-        "empty_lists bigint, emb_sum double, ok_ref boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
-# zstd compressed-block EMIT (r13, VERDICT r12 task #6): the encoder's
-# ratio half — RFC 8878 compressed blocks with raw/RLE literals and
-# LZ77 sequences entropy-coded under the spec's PREDEFINED FSE
-# distributions (sources/zstd_encode.py, matches=True). Each doc builds
-# two deterministic payloads: a repetitive one (must SHRINK through the
-# sequence path) and a sha256-chain one (incompressible — the encoder
-# must fall back to store blocks, never inflate). Every frame round-
-# trips through BOTH the repo's own RFC 8878 decoder and pyarrow's
-# bundled reference zstd in-query.
-# ---------------------------------------------------------------------------
-@defquery(
-    "zstd_match_encode_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents)
-    SELECT doc_id,
-           CAST(8 * (n % 50 + 20) AS BIGINT) AS rep_len,
-           CAST(32 * (n % 30 + 8) AS BIGINT) AS rnd_len,
-           CAST(25 * (n % 20 + 10) AS BIGINT) AS skew_len,
-           TRUE AS rep_shrank,
-           TRUE AS rnd_not_inflated,
-           TRUE AS skew_shrank,
-           TRUE AS ok_own,
-           TRUE AS ok_ref
-    FROM a
-    """,
-    doc="zstd compressed-block emit: repetitive payloads shrink through "
-    "the sequence path (custom-FSE/RLE/predefined tables per stream), "
-    "skewed-histogram payloads through Huffman literals, incompressible "
-    "ones fall back to store blocks; own decoder + pyarrow both verify "
-    "every frame",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_zstd_match_encode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
-        import pyarrow as _pa
-
-        from shared_etl_pipelines_spark.sources.zstd_decode import (
-            zstd_decompress,
-        )
-        from shared_etl_pipelines_spark.sources.zstd_encode import (
-            zstd_compress,
-        )
-
-        codec = _pa.Codec("zstd")
-        cols_out = ("doc_id", "rep_len", "rnd_len", "skew_len",
-                    "rep_shrank", "rnd_not_inflated", "skew_shrank",
-                    "ok_own", "ok_ref")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                # repetitive: an 8-byte unit repeated -> sequences
-                unit = _hl.sha256(str(d).encode()).digest()[:7] + b"|"
-                rep = unit * (n % 50 + 20)
-                # incompressible: a sha256 chain (no 4-byte repeats in
-                # practice; deterministic per doc)
-                parts = []
-                h = _hl.sha256(b"seed" + str(d).encode()).digest()
-                for _ in range(n % 30 + 8):
-                    parts.append(h)
-                    h = _hl.sha256(h).digest()
-                rnd = b"".join(parts)
-                # skewed letter histogram with few repeats: the Huffman
-                # LITERALS path is what has to win here (r13)
-                sk_alpha = b"etaoinshrdlu"
-                h2 = _hl.sha256(b"skew" + str(d).encode()).digest()
-                sk = bytearray()
-                for _ in range(25 * (n % 20 + 10) // 32 + 1):
-                    sk += bytes(sk_alpha[b % 12] for b in h2)
-                    h2 = _hl.sha256(h2).digest()
-                skew = bytes(sk[: 25 * (n % 20 + 10)])
-                ok_own = ok_ref = True
-                for payload in (rep, rnd, skew):
-                    frame = zstd_compress(payload, matches=True)
-                    if zstd_decompress(frame) != payload:
-                        ok_own = False
-                    if (
-                        codec.decompress(frame, len(payload)).to_pybytes()
-                        != payload
-                    ):
-                        ok_ref = False
-                rep_frame = zstd_compress(rep, matches=True)
-                rnd_frame = zstd_compress(rnd, matches=True)
-                skew_frame = zstd_compress(skew, matches=True)
-                rows["doc_id"].append(d)
-                rows["rep_len"].append(len(rep))
-                rows["rnd_len"].append(len(rnd))
-                rows["skew_len"].append(len(skew))
-                rows["rep_shrank"].append(len(rep_frame) < len(rep) // 4)
-                rows["rnd_not_inflated"].append(
-                    len(rnd_frame) <= len(zstd_compress(rnd))
-                )
-                # the direct 4-bit weights header lists every symbol
-                # below the alphabet's max — ~60 bytes for ASCII
-                # letters — so small payloads keep real-but-modest
-                # margins (FSE-compressed weights are the unemitted
-                # refinement)
-                rows["skew_shrank"].append(
-                    len(skew_frame) < len(skew) * 9 // 10
-                )
-                rows["ok_own"].append(ok_own)
-                rows["ok_ref"].append(ok_ref)
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, rep_len bigint, rnd_len bigint, "
-        "skew_len bigint, rep_shrank boolean, "
-        "rnd_not_inflated boolean, skew_shrank boolean, "
-        "ok_own boolean, ok_ref boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
 # VP8 residual coefficients (r13, VERDICT r12 task #5): keyframe pixel
 # output becomes TEXTURE-accurate — the coefficient token tree, the
 # category extra-bit probabilities, the band map, the zigzag order and
@@ -17773,117 +15592,6 @@ def q_multimodal_vp8_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Alternative parquet value encodings (r13): the WRITE half of the
-# reader's DELTA_BINARY_PACKED / DELTA_LENGTH_BYTE_ARRAY /
-# DELTA_BYTE_ARRAY / BYTE_STREAM_SPLIT support
-# (sources/parquet_write.py column_encodings). Per doc a file with a
-# sorted delta-packed key column, a delta-length URL column, and a
-# byte-stream-split double column round-trips through pyarrow AND the
-# own page reader in-query; the delta key chunk must be smaller than
-# its PLAIN rendering (the encoding's reason to exist).
-# ---------------------------------------------------------------------------
-@defquery(
-    "parquet_write_delta_audit",
-    """
-    WITH a AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
-    d AS (SELECT doc_id, n % 60 + 20 AS nr FROM a),
-    r AS (SELECT doc_id, nr, CAST(unnest(range(0, nr)) AS BIGINT) AS i FROM d),
-    agg AS (
-      SELECT doc_id, MAX(nr) AS nr,
-             SUM(doc_id * 1000 + i * i) AS key_sum,
-             SUM(19 + length(CAST(doc_id AS VARCHAR))
-                    + length(CAST(i // 7 AS VARCHAR))
-                    + length(CAST(i AS VARCHAR))) AS url_bytes,
-             ROUND(SUM(0.5 * i + doc_id % 10), 4) AS x_sum
-      FROM r GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST(nr AS BIGINT) AS num_rows,
-           CAST(key_sum AS BIGINT) AS key_sum,
-           CAST(url_bytes AS BIGINT) AS url_bytes,
-           x_sum,
-           TRUE AS delta_shrank, TRUE AS ok_ref, TRUE AS ok_own
-    FROM agg
-    """,
-    doc="own-writer delta/BSS encodings: DELTA_BINARY_PACKED keys, "
-    "DELTA_LENGTH_BYTE_ARRAY urls, BYTE_STREAM_SPLIT doubles — pyarrow "
-    "and the own reader re-read every value; the delta rendering beats "
-    "PLAIN on sorted keys",
-    tags=("llm", "source", "codec", "catalog"),
-)
-def q_parquet_write_delta_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        from shared_etl_pipelines_spark.sources.parquet_pages import (
-            read_all_columns,
-        )
-        from shared_etl_pipelines_spark.sources.parquet_write import (
-            write_parquet,
-        )
-
-        cols_out = ("doc_id", "num_rows", "key_sum", "url_bytes", "x_sum",
-                    "delta_shrank", "ok_ref", "ok_own")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nr = n % 60 + 20
-                keys = [d * 1000 + i * i for i in range(nr)]  # sorted
-                urls = [f"https://ex.org/{d}/{i // 7}/d-{i}"
-                        for i in range(nr)]
-                xs = [0.5 * i + d % 10 for i in range(nr)]
-                cols = [("k", "int64", keys), ("url", "utf8", urls),
-                        ("x", "double", xs)]
-                enc = {
-                    "k": "DELTA_BINARY_PACKED",
-                    "url": ("DELTA_LENGTH_BYTE_ARRAY" if d % 2 == 0
-                            else "DELTA_BYTE_ARRAY"),
-                    "x": "BYTE_STREAM_SPLIT",
-                }
-                blob = write_parquet(
-                    cols, compression="UNCOMPRESSED",
-                    column_encodings=enc,
-                )
-                plain = write_parquet(cols, compression="UNCOMPRESSED")
-                t = _pq.read_table(_io.BytesIO(blob))
-                ok_ref = (
-                    t.column("k").to_pylist() == keys
-                    and t.column("url").to_pylist() == urls
-                    and t.column("x").to_pylist() == xs
-                )
-                own_k = read_all_columns(blob, "k")
-                own_u = [
-                    b.decode() for b in read_all_columns(blob, "url")
-                ]
-                own_x = read_all_columns(blob, "x")
-                ok_own = own_k == keys and own_u == urls and own_x == xs
-                rows["doc_id"].append(d)
-                rows["num_rows"].append(nr)
-                rows["key_sum"].append(sum(keys))
-                rows["url_bytes"].append(sum(len(u) for u in urls))
-                rows["x_sum"].append(round(sum(xs), 4))
-                rows["delta_shrank"].append(len(blob) < len(plain))
-                rows["ok_ref"].append(bool(ok_ref))
-                rows["ok_own"].append(bool(ok_own))
-            yield pd.DataFrame(rows)
-
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
-        "doc_id bigint, num_rows bigint, key_sum bigint, "
-        "url_bytes bigint, x_sum double, delta_shrank boolean, "
-        "ok_ref boolean, ok_own boolean",
-    )
-
-
-# ---------------------------------------------------------------------------
 # Query-likelihood retrieval with Dirichlet smoothing (r13): the
 # language-modeling scorer next to BM25 in the retrieval family —
 # score(d) = sum_q ln((tf_qd + mu * cf_q / C) / (dl_d + mu)), mu=2000.
@@ -17977,67 +15685,4 @@ def q_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.col("score").desc(), "doc_id")
     return top.withColumn(
         "rnk", F.row_number().over(w).cast("long")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Own-reader Spark DataSource (r13): the independent parquet reader
-# exposed through Spark's Python DataSource API — schema inferred from
-# the own Thrift footer walk, partitions = row groups (driver touches
-# only footers), int64 comparison filters CONSUMED by pushFilters
-# (footer min/max stats skip whole row groups before scheduling; the
-# residual rows re-filter exactly executor-side), column chunks decoded
-# by ranged reads through the own page/codec stack. Fixture = the same
-# own-writer shard set parquet_pageindex_scan builds (shared cache).
-# ---------------------------------------------------------------------------
-@defquery(
-    "ownparquet_datasource_scan",
-    """
-    SELECT CAST(l_orderkey % 4 AS BIGINT) AS bucket,
-           COUNT(*) AS n_rows,
-           CAST(SUM(l_quantity) AS BIGINT) AS qty_sum,
-           SUM(l_orderkey) AS key_sum
-    FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 3000
-    GROUP BY 1
-    """,
-    doc="spark.read.format('ownparquet'): the own reader as a Python "
-    "DataSource — row-group partitions, pushed int64 filters skip row "
-    "groups by footer stats, executor-side ranged decode; aggregates "
-    "match DuckDB over the source table",
-    tags=("llm", "source", "codec", "scale-path", "plan"),
-)
-def q_ownparquet_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    from shared_etl_pipelines_spark.sources.ownparquet_datasource import (
-        OwnParquetDataSource,
-    )
-
-    paths = _own_writer_fixture(
-        spark, sf_dir, "lineitem", "pageindex-v2",
-        (("l_orderkey", "int64"), ("l_quantity", "double")),
-        n_shards=8,
-        compression="SNAPPY", row_group_size=16384, use_dictionary=True,
-        page_rows=512, write_page_index=True,
-    )
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(OwnParquetDataSource)
-    df = (
-        spark.read.format("ownparquet")
-        .option(
-            "path",
-            _os.path.join(_os.path.dirname(paths[0]), "shard_*.parquet"),
-        )
-        .load()
-    )
-    return (
-        df.filter(
-            (F.col("l_orderkey") >= 1000) & (F.col("l_orderkey") <= 3000)
-        )
-        .groupBy((F.col("l_orderkey") % 4).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("l_quantity").cast("long").alias("qty_sum"),
-            F.sum("l_orderkey").alias("key_sum"),
-        )
     )

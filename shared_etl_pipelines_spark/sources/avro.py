@@ -276,14 +276,14 @@ def read_avro_ocf(blob: bytes) -> dict:
         elif codec == "snappy":
             # spec: snappy-compressed block + 4-byte BIG-endian CRC32
             # of the UNCOMPRESSED data
-            from shared_etl_pipelines_spark.sources.snappy import (
-                snappy_decompress,
+            from shared_etl_pipelines_spark.sources.compression import (
+                decompress,
             )
 
             if len(payload) < 4:
                 raise ValueError("avro: snappy block too short — quarantine")
             data, crc = payload[:-4], payload[-4:]
-            payload = snappy_decompress(data)
+            payload = decompress("snappy", data)
             if (zlib.crc32(payload) & 0xFFFFFFFF) != int.from_bytes(crc, "big"):
                 raise ValueError("avro: snappy CRC mismatch — quarantine")
         br = _Reader(payload)
@@ -336,12 +336,10 @@ def write_avro_ocf(
             co = zlib.compressobj(6, zlib.DEFLATED, -15)
             body = co.compress(body) + co.flush()
         elif codec == "snappy":
-            from shared_etl_pipelines_spark.sources.snappy import (
-                snappy_compress,
-            )
+            import pyarrow as pa
 
             crc = (zlib.crc32(body) & 0xFFFFFFFF).to_bytes(4, "big")
-            body = snappy_compress(body) + crc
+            body = pa.Codec("snappy").compress(body, asbytes=True) + crc
         out += _zigzag(len(chunk)) + _enc_bytes(body) + sync
     return bytes(out)
 

@@ -14,6 +14,10 @@ quarantine, never guess.
 Writers exist for fixture/roundtrip control of every header flag the
 parsers touch (multi-member gzip, FNAME/FCOMMENT/FHCRC/FEXTRA, zstd
 single-segment vs windowed frames, skippable frames).
+
+``decompress`` is the one payload decoder for the codecs formats embed
+(Avro's snappy blocks, Puffin's lz4-frame and zstd blobs): pyarrow's
+bundled codecs under the same output budget and refusal contract.
 """
 from __future__ import annotations
 
@@ -22,6 +26,7 @@ import zlib
 
 __all__ = [
     "sniff_codec",
+    "decompress",
     "parse_gzip_members",
     "encode_gzip_member",
     "parse_zlib",
@@ -69,6 +74,53 @@ def _capped(decomp, data: bytes, cap: int, codec: str) -> bytes:
             data = b""
             continue
         return bytes(out)  # input exhausted mid-stream (truncated)
+
+
+def decompress(
+    codec: str, data: bytes, max_output: int = MAX_OUTPUT_BYTES
+) -> bytes:
+    """Decode one snappy block, lz4 frame or zstd frame through
+    pyarrow's codecs. Output past ``max_output`` bytes, and corrupt or
+    truncated input, refuse with ValueError."""
+    import pyarrow as pa
+
+    if codec not in ("snappy", "lz4", "zstd"):
+        raise ValueError(f"{codec}: unsupported codec — quarantine")
+    if not data:
+        raise ValueError(f"{codec}: empty input — quarantine")
+    over_cap = ValueError(
+        f"{codec}: output cap exceeded ({max_output} bytes) — quarantine"
+    )
+    if codec == "snappy":
+        # the block opens with its uncompressed length (a varint of at
+        # most 5 bytes): refuse before allocating, then decode to it
+        n = shift = pos = 0
+        while True:
+            if pos >= min(len(data), 5):
+                raise ValueError("snappy: bad length varint — quarantine")
+            n |= (data[pos] & 0x7F) << shift
+            shift += 7
+            pos += 1
+            if not data[pos - 1] & 0x80:
+                break
+        if n > max_output:
+            raise over_cap
+    try:
+        if codec == "snappy":
+            out = pa.Codec("snappy").decompress(
+                data, decompressed_size=n, asbytes=True
+            )
+        else:
+            # frame formats carry no required size: read one byte past
+            # the cap so an oversized frame is seen without decoding it all
+            out = pa.CompressedInputStream(pa.BufferReader(data), codec).read(
+                max_output + 1
+            )
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"{codec}: decode error — quarantine ({e})") from e
+    if len(out) > max_output:
+        raise over_cap
+    return out
 
 
 def sniff_codec(blob: bytes) -> str:

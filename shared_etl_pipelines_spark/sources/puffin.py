@@ -14,7 +14,7 @@ UTF-8 JSON FileMetadata: {"blobs": [{type, fields, snapshot-id,
 sequence-number, offset, length, compression-codec?, properties}],
 "properties": {...}}. Footer flag bit 0 (first byte, LSB) marks an
 LZ4-compressed payload — this writer emits it uncompressed and the
-reader decodes both (own lz4 codec).
+reader decodes both (pyarrow's lz4-frame codec).
 
 Blob payloads here are the engine's roaring64 portable bitmaps under
 the ENGINE-NATIVE type name "roaring64-portable-v1" — the corpus
@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import struct
+
+from shared_etl_pipelines_spark.sources.compression import decompress
 
 __all__ = ["write_puffin", "read_puffin", "read_puffin_blob"]
 
@@ -68,7 +70,7 @@ def write_puffin(
 
 def read_puffin(blob: bytes) -> dict:
     """FileMetadata of a Puffin file (footer walk; payload LZ4
-    decompressed through the own codec when flag bit 0 is set)."""
+    decompressed when flag bit 0 is set)."""
     if len(blob) < 20 or blob[:4] != _MAGIC or blob[-4:] != _MAGIC:
         raise ValueError("puffin: bad magic framing — quarantine")
     flags = blob[-8:-4]
@@ -80,11 +82,7 @@ def read_puffin(blob: bytes) -> dict:
     if blob[start - 4 : start] != _MAGIC:
         raise ValueError("puffin: missing footer start magic — quarantine")
     if flags[0] & 1:  # FooterPayloadCompressed (lz4 frame)
-        from shared_etl_pipelines_spark.sources.lz4 import (
-            lz4_frame_decompress,
-        )
-
-        payload = lz4_frame_decompress(payload)
+        payload = decompress("lz4", payload)
     if flags[0] & ~1 or any(flags[1:]):
         raise ValueError("puffin: unknown footer flags — quarantine")
     try:
@@ -115,16 +113,6 @@ def read_puffin_blob(blob: bytes, meta_entry: dict) -> bytes:
     data = blob[off : off + ln]
     if codec in (None, "", "none"):
         return data
-    if codec == "lz4":
-        from shared_etl_pipelines_spark.sources.lz4 import (
-            lz4_frame_decompress,
-        )
-
-        return lz4_frame_decompress(data)
-    if codec == "zstd":
-        from shared_etl_pipelines_spark.sources.zstd_decode import (
-            zstd_decompress,
-        )
-
-        return zstd_decompress(data)
+    if codec in ("lz4", "zstd"):
+        return decompress(codec, data)
     raise ValueError(f"puffin: codec {codec!r} unsupported — quarantine")

@@ -44,41 +44,16 @@ class TxnBatchSink:
            .option("checkpointLocation", ckpt)
            .trigger(availableNow=True).start())
 
-    ``crash_on`` (tests only) injects a crash AFTER the payload write
-    but BEFORE the commit marker — the torn-write window the manifest
-    exists to cover.
-
-    ``writer="own"`` (r12, VERDICT r11 task #8) emits the payload
-    through the repo's OWN parquet writer (sources/parquet_write.py —
-    Thrift-encoded footers, PLAIN pages, own snappy) instead of
-    Spark's, one shard per partition written executor-side; the writer
-    then sees real query-output shapes (nulls, repeated strings, empty
-    partitions), and both pyarrow and DuckDB re-read the shards in
-    tests. Column types outside int64/double/utf8/boolean (after the
-    int->long / float->double widenings) refuse loudly.
+    Each payload is written by Spark's parquet writer in overwrite
+    mode. ``crash_on`` (tests only) injects a crash AFTER the payload
+    write but BEFORE the commit marker — the torn-write window the
+    manifest exists to cover.
     """
 
-    _OWN_KINDS = {
-        "bigint": "int64", "int": "int64", "smallint": "int64",
-        "tinyint": "int64", "double": "double", "float": "double",
-        "string": "utf8", "boolean": "boolean",
-        # r13: embedding-shaped columns via the writer's 3-level LIST
-        # encoding (null lists ok; null ELEMENTS refuse in the writer)
-        "array<bigint>": "list<int64>", "array<double>": "list<double>",
-    }
-
-    def __init__(
-        self,
-        root: str,
-        crash_on: set[int] | None = None,
-        writer: str = "spark",
-    ) -> None:
-        if writer not in ("spark", "own"):
-            raise ValueError(f"TxnBatchSink: unknown writer {writer!r}")
+    def __init__(self, root: str, crash_on: set[int] | None = None) -> None:
         self.root = root
         self.manifest_dir = os.path.join(root, "_manifest")
         self.crash_on = set(crash_on or ())
-        self.writer = writer
         self.invocations: list[int] = []  # driver-side; test observability
 
     def _marker(self, batch_id: int) -> str:
@@ -92,10 +67,7 @@ class TxnBatchSink:
         bdir = os.path.join(self.root, f"batch={int(batch_id)}")
         # mode=overwrite: a torn payload from a crashed attempt is
         # replaced wholesale before it ever becomes visible
-        if self.writer == "own":
-            self._write_own(batch_df, bdir)
-        else:
-            batch_df.write.mode("overwrite").parquet(bdir)
+        batch_df.write.mode("overwrite").parquet(bdir)
         if int(batch_id) in self.crash_on:
             self.crash_on.discard(int(batch_id))  # crash once, then heal
             raise RuntimeError(
@@ -106,76 +78,6 @@ class TxnBatchSink:
         with open(tmp, "w") as fh:
             fh.write("committed\n")
         os.replace(tmp, marker)  # atomic publish
-
-    def _write_own(self, batch_df: DataFrame, bdir: str) -> None:
-        """One shard per partition through sources/parquet_write.py,
-        written executor-side (tmp + os.replace per shard); the
-        directory is cleared first so a torn prior attempt is replaced
-        wholesale, matching mode=overwrite."""
-        import shutil
-        from collections.abc import Iterator
-
-        names = [f.name for f in batch_df.schema.fields]
-        kinds = []
-        for f in batch_df.schema.fields:
-            t = f.dataType.simpleString()
-            if t not in self._OWN_KINDS:
-                raise ValueError(
-                    f"TxnBatchSink(own): column {f.name!r} type {t} has no "
-                    "own-writer mapping — quarantine"
-                )
-            kinds.append(self._OWN_KINDS[t])
-        if os.path.isdir(bdir):
-            shutil.rmtree(bdir)
-        os.makedirs(bdir, exist_ok=True)
-
-        def write_shards(it: "Iterator") -> "Iterator":
-            # mapInArrow, not mapInPandas (ADVICE r12): the pandas
-            # conversion coerces a NULLABLE bigint to float64, which
-            # silently rounds magnitudes above 2^53; Arrow batches keep
-            # int64 + validity exact
-            import math
-
-            import pyarrow as _pa
-            from pyspark import TaskContext
-
-            from shared_etl_pipelines_spark.sources.parquet_write import (
-                write_parquet,
-            )
-
-            pid = TaskContext.get().partitionId()
-            cols: list[list] = [[] for _ in names]
-            for rb in it:
-                for i, name in enumerate(names):
-                    vals = rb.column(
-                        rb.schema.get_field_index(name)
-                    ).to_pylist()
-                    if kinds[i] == "double":
-                        # a true NaN DOUBLE lands as null — the collapse
-                        # the sink has always documented (SQL NULL and
-                        # NaN unify at the sink boundary)
-                        vals = [
-                            None if v is None or math.isnan(v) else float(v)
-                            for v in vals
-                        ]
-                    cols[i].extend(vals)
-            # dictionary pages engage per chunk when they shrink it —
-            # repeated-string query output is the common sink shape
-            blob = write_parquet(
-                [(n, k, c) for n, k, c in zip(names, kinds, cols)],
-                use_dictionary=True,
-            )
-            path = os.path.join(bdir, f"part-{pid:05d}.parquet")
-            tmp = f"{path}.tmp.{os.getpid()}"
-            with open(tmp, "wb") as fh:
-                fh.write(blob)
-            os.replace(tmp, path)
-            yield _pa.RecordBatch.from_pydict(
-                {"path": [path], "n_rows": [len(cols[0])]}
-            )
-
-        # one tiny row per partition: bounded driver traffic
-        batch_df.mapInArrow(write_shards, "path string, n_rows long").collect()
 
     def committed_batches(self) -> list[int]:
         if not os.path.isdir(self.manifest_dir):

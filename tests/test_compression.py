@@ -150,3 +150,33 @@ def test_decompression_bomb_output_cap():
         out = fn(blob)
         got = out[0]["data"] if isinstance(out, list) else out["data"]
         assert got == bomb
+
+
+@pytest.mark.parametrize("codec", ["snappy", "lz4", "zstd"])
+def test_decompress_payload_codecs(codec):
+    # the Avro/Puffin payload codecs: pyarrow's encoder output decodes,
+    # corrupt input and oversized output refuse with ValueError
+    import pyarrow as pa
+
+    blob = pa.Codec(codec).compress(DATA, asbytes=True)
+    assert C.decompress(codec, blob) == DATA
+    for bad in (blob[: len(blob) // 2], b"\xff" * 16):
+        with pytest.raises(ValueError, match="quarantine"):
+            C.decompress(codec, bad)
+    bomb = pa.Codec(codec).compress(b"\x00" * (1 << 20), asbytes=True)
+    with pytest.raises(ValueError, match="output cap"):
+        C.decompress(codec, bomb, max_output=4096)
+    assert len(C.decompress(codec, bomb)) == 1 << 20
+
+
+def test_decompress_snappy_refuses_oversized_header_before_decoding():
+    # a varint length claiming one byte past the cap, then no body: the
+    # refusal must come from the header, not from the decoder
+    n = C.MAX_OUTPUT_BYTES + 1
+    header = bytearray()
+    while n >= 0x80:
+        header.append((n & 0x7F) | 0x80)
+        n >>= 7
+    header.append(n)
+    with pytest.raises(ValueError, match="output cap"):
+        C.decompress("snappy", bytes(header))

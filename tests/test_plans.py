@@ -768,13 +768,10 @@ def test_connected_components_star_graph_converges_immediately(spark):
 
 
 def test_r10_scan_queries_are_shuffle_free(spark, sf):
-    """The r10 per-doc scans (ORC tail, notebook conversion, LFS
-    census) are one mapInPandas pass — per-file parallelism, zero
-    data exchanges, the scan-bound 100 TB shape."""
-    for name in (
-        "orc_layout_audit", "notebook_conversion_audit",
-        "lfs_pointer_census",
-    ):
+    """The r10 per-doc scans (notebook conversion, LFS census) are one
+    mapInPandas pass — per-file parallelism, zero data exchanges, the
+    scan-bound 100 TB shape."""
+    for name in ("notebook_conversion_audit", "lfs_pointer_census"):
         p = phys(REGISTRY[name].fn(spark, sf))
         assert "hashpartitioning" not in p, name
         assert "rangepartitioning" not in p, name
@@ -853,62 +850,6 @@ def test_bitmap_index_wide_never_shuffles_documents(spark, sf):
     # exchange, then the partials mapInPandas feeding it)
     assert plan.count("Exchange") == 1
     assert plan.find("Exchange") < partials
-
-
-def test_pageindex_scan_single_aggregation_exchange(spark, sf):
-    """The page-pruned scan is row-group-parallel mapInPandas partials
-    + one final aggregate — no join, no extra shuffle."""
-    plan = phys(REGISTRY["parquet_pageindex_scan"].fn(spark, sf))
-    assert "Join" not in plan
-    assert "MapInPandas" in plan
-
-
-def test_pageindex_scan_actually_prunes(spark, sf):
-    """The `pruned` assertion moved out of parquet_pageindex_scan's
-    hashed row into this gate (VERDICT r12 task #1b): over the
-    own-writer fixture shards, the ColumnIndex-driven scan must fetch
-    strictly fewer pages than exist, and the pruned decode must equal
-    pyarrow applying the same predicate to the same shard."""
-    import pyarrow.parquet as pq
-
-    from shared_etl_pipelines_spark.queries_llm import _own_writer_fixture
-    from shared_etl_pipelines_spark.sources.parquet_footer import (
-        read_footer_ranged,
-    )
-    from shared_etl_pipelines_spark.sources.parquet_pageindex import (
-        read_column_pruned,
-    )
-
-    LO, HI = 1000, 3000
-    paths = _own_writer_fixture(
-        spark, sf, "lineitem", "pageindex-v2",
-        (("l_orderkey", "int64"), ("l_quantity", "double")),
-        n_shards=8,
-        compression="SNAPPY", row_group_size=16384, use_dictionary=True,
-        page_rows=512, write_page_index=True,
-    )
-    total = read_ = 0
-    hits = 0
-    for path in paths:
-        foot = read_footer_ranged(path)
-        for rg in range(len(foot["row_groups"])):
-            keys, n_t, n_r = read_column_pruned(
-                path, foot, rg, "l_orderkey", LO, HI
-            )
-            total += n_t
-            read_ += n_r
-            hits += sum(1 for _, k in keys if LO <= k <= HI)
-        ref = pq.read_table(path, columns=["l_orderkey"]).column(
-            "l_orderkey"
-        ).to_pylist()
-        ref_hits = sum(1 for k in ref if LO <= k <= HI)
-        shard_hits = 0
-        for rg in range(len(foot["row_groups"])):
-            ks, _, _ = read_column_pruned(path, foot, rg, "l_orderkey", LO, HI)
-            shard_hits += sum(1 for _, k in ks if LO <= k <= HI)
-        assert shard_hits == ref_hits, path
-    assert read_ < total, f"no pages pruned: read {read_} of {total}"
-    assert hits > 0, "probe range matched no rows — gate is vacuous"
 
 
 def test_ql_dirichlet_is_take_ordered_not_global_window(spark, sf):

@@ -802,45 +802,10 @@ def test_hevc_sps_round_trip_property(w, h, profile, level, tier, cbd):
 
 
 # ---------------------------------------------------------------------
-# r10 codecs: ORC tail, LFS pointers, jsonschema, deltalog commits,
+# r10 codecs: LFS pointers, jsonschema, deltalog commits,
 # unigram Viterbi — random-input laws, same sweep discipline as the
 # binary codecs above.
 # ---------------------------------------------------------------------
-@given(
-    st.lists(st.integers(0, 500), min_size=1, max_size=6),
-    st.integers(-10**6, 10**6),
-    st.sampled_from(["NONE", "ZLIB"]),
-    st.lists(
-        st.tuples(
-            st.from_regex(r"[a-z][a-z0-9_]{0,8}", fullmatch=True),
-            st.sampled_from(["long", "string", "double", "int", "boolean"]),
-        ),
-        min_size=1,
-        max_size=5,
-        unique_by=lambda c: c[0],
-    ),
-)
-@settings(max_examples=40, deadline=None)
-def test_orc_tail_round_trip_property(stripe_rows, id_min, comp, columns):
-    from shared_etl_pipelines_spark.sources import orc as O
-
-    blob = O.encode_orc(columns, stripe_rows, id_min, compression=comp)
-    o = O.parse_orc_layout(blob)
-    assert o["compression"] == comp
-    assert o["n_stripes"] == len(stripe_rows)
-    assert o["n_rows"] == sum(stripe_rows)
-    assert o["column_kinds"] == ["struct"] + [k for _, k in columns]
-    assert o["field_names"] == [n for n, _ in columns]
-    assert o["stats"][1]["int_min"] == id_min
-    assert o["stats"][1]["int_max"] == id_min + sum(stripe_rows) - 1
-    # truncating anywhere inside the stripe region refuses, never lies
-    if sum(stripe_rows) > 0:
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            O.parse_orc_layout(blob[:4] + blob[6:])
-
-
 @given(
     st.from_regex(r"[0-9a-f]{64}", fullmatch=True),
     st.integers(0, 10**15),

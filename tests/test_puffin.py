@@ -40,7 +40,7 @@ def test_roundtrip_with_roaring_blobs():
 
 
 def test_compressed_footer_payload_decodes():
-    from shared_etl_pipelines_spark.sources.lz4 import lz4_frame_compress
+    import pyarrow as pa
 
     bm = serialize_roaring64({1, 2, 3})
     f = bytearray(write_puffin(
@@ -50,13 +50,27 @@ def test_compressed_footer_payload_decodes():
     (psize,) = struct.unpack_from("<i", f, len(f) - 12)
     start = len(f) - 12 - psize
     payload = bytes(f[start : start + psize])
-    comp = lz4_frame_compress(payload)
+    comp = pa.Codec("lz4").compress(payload, asbytes=True)
     f2 = (
         f[: start - 4] + b"PFA1" + comp
         + struct.pack("<i", len(comp)) + b"\x01\x00\x00\x00" + b"PFA1"
     )
     meta = read_puffin(bytes(f2))
     assert read_puffin_blob(bytes(f2), meta["blobs"][0]) == bm
+
+
+@pytest.mark.parametrize("codec", ["lz4", "zstd"])
+def test_compressed_blob_decodes(codec):
+    # the spec's blob codecs: lz4 is the LZ4 FRAME format, zstd a frame
+    import pyarrow as pa
+
+    bm = serialize_roaring64(set(range(5000)))
+    f = write_puffin([{
+        "type": "roaring64-portable-v1",
+        "payload": pa.Codec(codec).compress(bm, asbytes=True),
+    }])
+    entry = dict(read_puffin(f)["blobs"][0], **{"compression-codec": codec})
+    assert read_puffin_blob(f, entry) == bm
 
 
 def test_refusals():

@@ -1129,172 +1129,3 @@ def test_dv_cdc_emits_only_newly_deleted_positions(spark, tmp_path):
     # versions 2 and 3 both carry pos 1,2 — emitted ONCE, at version 2;
     # pos 5 is new at version 3
     assert got == {(2, 1), (2, 2), (3, 5)}
-
-
-def test_txn_sink_own_writer_roundtrip(spark, tmp_path):
-    """writer='own' (VERDICT r11 task #8): the sink's shards come from
-    the repo's own parquet writer and must re-read value-identically
-    through Spark, pyarrow AND DuckDB — on real query-output shapes:
-    nulls, dictionary-heavy repeated strings, and an empty partition."""
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from shared_etl_pipelines_spark.streaming.sinks import TxnBatchSink
-
-    src = str(tmp_path / "drop")
-    rows = [
-        (
-            i,
-            None if i % 7 == 0 else float(i) / 4.0,
-            f"tag{i % 3}",  # dictionary-heavy
-            i % 2 == 0,
-        )
-        for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "k long, score double, tag string, f boolean")
-    df.write.parquet(src)
-
-    sroot = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    sink = TxnBatchSink(sroot, writer="own")
-    stream = (
-        spark.readStream.schema("k long, score double, tag string, f boolean")
-        .parquet(src)
-        # an empty partition must produce a valid empty shard
-        .repartition(8)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    assert sink.committed_batches() == [0]
-
-    got = sink.read_committed(spark)
-    assert got.count() == 500
-    assert got.exceptAll(df).count() == 0 and df.exceptAll(got).count() == 0
-
-    shard_glob = os.path.join(sroot, "batch=0", "*.parquet")
-    # pyarrow re-read (reference reader #1)
-    import glob as _glob
-
-    parts = sorted(_glob.glob(shard_glob))
-    assert len(parts) == 8
-    pa_rows = []
-    for p in parts:
-        t = pq.read_table(p)
-        pa_rows.extend(zip(*(t.column(c).to_pylist() for c in ("k", "score", "tag", "f"))))
-    assert sorted(pa_rows) == sorted(
-        (k, s, t_, f_) for k, s, t_, f_ in rows
-    )
-    # DuckDB re-read (reference reader #2)
-    n, ssum, nulls = duckdb.sql(
-        f"SELECT COUNT(*), ROUND(SUM(score), 4), "
-        f"COUNT(*) FILTER (score IS NULL) FROM '{shard_glob}'"
-    ).fetchone()
-    assert n == 500
-    assert nulls == sum(1 for r in rows if r[1] is None)
-    assert ssum == round(sum(r[1] for r in rows if r[1] is not None), 4)
-
-    # unsupported column types refuse loudly (arrays of int64/double
-    # are supported as of r13 — string arrays still are not)
-    bad = spark.createDataFrame([(["a", "b"],)], "arr array<string>")
-    sink2 = TxnBatchSink(str(tmp_path / "s2"), writer="own")
-    with pytest.raises(Exception, match="no own-writer mapping"):
-        sink2(bad, 0)
-
-
-def test_txn_sink_own_writer_keeps_big_ints_past_2_53(spark, tmp_path):
-    """ADVICE r12 (low): a NULLABLE bigint column arrives from
-    Arrow->pandas as float64, and int(float) silently rounds above
-    2^53 — the sink must route through the nullable Int64 dtype so
-    full-precision values survive."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    from shared_etl_pipelines_spark.streaming.sinks import TxnBatchSink
-
-    big = (1 << 60) + 1  # not representable as float64
-    rows = [(0, big), (1, None), (2, big + 2)]
-    src = str(tmp_path / "drop")
-    spark.createDataFrame(rows, "k long, v long").coalesce(1).write.parquet(src)
-
-    sink = TxnBatchSink(str(tmp_path / "sink"), writer="own")
-    q = (
-        spark.readStream.schema("k long, v long")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    got = []
-    for p in _glob.glob(os.path.join(str(tmp_path / "sink"), "batch=0", "*.parquet")):
-        t = pq.read_table(p)
-        got.extend(zip(t.column("k").to_pylist(), t.column("v").to_pylist()))
-    assert sorted(got) == rows
-
-
-def test_txn_sink_own_writer_array_double_roundtrip(spark, tmp_path):
-    """VERDICT r12 task #8: embedding-shaped columns through the
-    own-writer sink — array<double> (and array<bigint>) shards must
-    re-read value-identically through Spark, pyarrow AND DuckDB,
-    null lists and empty lists included."""
-    import glob as _glob
-
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from shared_etl_pipelines_spark.streaming.sinks import TxnBatchSink
-
-    rows = [
-        (i,
-         None if i % 7 == 0 else [0.25 * i, -1.5, float(i)],
-         [] if i % 5 == 0 else [i, i * i])
-        for i in range(200)
-    ]
-    src = str(tmp_path / "drop")
-    df = spark.createDataFrame(
-        rows, "k long, emb array<double>, tags array<bigint>"
-    )
-    df.coalesce(2).write.parquet(src)
-
-    sroot = str(tmp_path / "sink")
-    sink = TxnBatchSink(sroot, writer="own")
-    q = (
-        spark.readStream.schema("k long, emb array<double>, tags array<bigint>")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-
-    got = sink.read_committed(spark)
-    assert got.count() == 200
-    assert got.exceptAll(df).count() == 0 and df.exceptAll(got).count() == 0
-
-    parts = sorted(_glob.glob(os.path.join(sroot, "batch=0", "*.parquet")))
-    pa_rows = []
-    for p in parts:
-        t = pq.read_table(p)
-        pa_rows.extend(
-            zip(t.column("k").to_pylist(), t.column("emb").to_pylist(),
-                t.column("tags").to_pylist())
-        )
-    assert sorted(pa_rows, key=lambda r: r[0]) == [
-        (k, e, t_) for k, e, t_ in rows
-    ]
-    glob_sql = os.path.join(sroot, "batch=0", "*.parquet")
-    n, s, nn = duckdb.sql(
-        f"SELECT COUNT(*), ROUND(SUM(list_sum(emb)), 4), "
-        f"COUNT(*) FILTER (emb IS NULL) FROM '{glob_sql}'"
-    ).fetchone()
-    assert n == 200
-    assert nn == sum(1 for r in rows if r[1] is None)
-    assert s == round(sum(sum(r[1]) for r in rows if r[1] is not None), 4)

@@ -5,8 +5,8 @@ Usage: python tools/explain_queries.py <suffix> <query> [query ...]
 Writes plans/$SPARK_GRAFT_PLANS_DIR/<query>_<suffix>.txt for each query
 (suffix = before/after; dir defaults to r14). NOTE (ADVICE r13 #2):
 building a DataFrame is NOT always execution-free — several builders run
-eager persist()+materialize jobs (and the own-writer fixture runs its
-content gate), so plan capture executes real Spark jobs. Persistent RDDs
+eager persist()+materialize jobs, so plan capture executes real Spark
+jobs. Persistent RDDs
 are swept between queries so one query's persists cannot leak into the
 next plan or hold executor storage across the loop. sf dir from
 $SPARK_GRAFT_SF_DIR (default sf0.1 so plan shapes match the bench, e.g.
