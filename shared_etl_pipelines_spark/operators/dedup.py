@@ -219,9 +219,11 @@ def lsh_bucket_audit(
 
     ``hash_rows`` (VERDICT r13 #4): a prebuilt ``(id_col, h)`` frame —
     deduplicated or not, the min() signature is duplicate-insensitive —
-    so a caller that also needs the shingle hashes (curation_drop_audit
-    shares one frame between this audit and its containment census)
-    builds them exactly once; ``n`` is ignored when it is given."""
+    so a caller that also needs the shingle hashes builds them once:
+    curation_drop_audit feeds this audit and its containment census
+    from one frame in one plan, where the second consumer reads the
+    shingles' ``id_col`` exchange as a ReusedExchange (nothing is
+    persisted). ``n`` is ignored when it is given."""
     rows_per_band = k // bands
     hrows = (
         hash_rows

@@ -187,6 +187,44 @@ def srp_buckets_udf(n_planes: int, dim: int, n_tables: int):
     return _buckets
 
 
+def _srp_bucket_rows(
+    corpus: DataFrame,
+    id_col: str,
+    n_planes: int,
+    dim: int,
+    n_tables: int,
+    arrow_buckets: bool,
+) -> DataFrame:
+    """One ``(id, v, norm, tbl, bucket)`` row per (vector, table) of a
+    ``_prep``'d corpus, with bucket ids from the Arrow UDF or from the
+    HOF expression (bit-identical either way).
+
+    The Arrow path explodes with ``posexplode_outer``: from a plain
+    ``posexplode`` the optimizer infers ``size(_bks) > 0`` and pushes it
+    below an exchange under the corpus (``spread``'s round robin), so
+    the UDF also ran on every vector of the one pre-shuffle task. The
+    UDF returns ``n_tables`` ids for every vector, so both explodes emit
+    the same rows."""
+    if arrow_buckets:
+        bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
+        return corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
+            id_col, "v", "norm", F.posexplode_outer("_bks").alias("tbl", "bucket")
+        )
+    return corpus.select(
+        id_col,
+        "v",
+        "norm",
+        F.posexplode(
+            F.array(
+                *[
+                    srp_bucket(F.col("v"), n_planes, dim, t * n_planes)
+                    for t in range(n_tables)
+                ]
+            )
+        ).alias("tbl", "bucket"),
+    )
+
+
 def lsh_bucket_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -227,25 +265,9 @@ def lsh_bucket_topk(
     # choice is moot: bucket ids are computed once at INGEST (with the
     # Arrow path, see write_ann_index) and stored, not recomputed per
     # query.
-    if arrow_buckets:
-        bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
-        corpus_b = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-            id_col, "v", "norm", F.posexplode("_bks").alias("tbl", "bucket")
-        )
-    else:
-        corpus_b = corpus.select(
-            id_col,
-            "v",
-            "norm",
-            F.posexplode(
-                F.array(
-                    *[
-                        srp_bucket(F.col("v"), n_planes, dim, t * n_planes)
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tbl", "bucket"),
-        )
+    corpus_b = _srp_bucket_rows(
+        corpus, id_col, n_planes, dim, n_tables, arrow_buckets
+    )
     # Multi-probe: besides its own bucket, each query probes the n_planes
     # buckets one hyperplane-bit away (the neighbors a near-miss falls
     # into). Probing is QUERY-side only — the corpus layout is untouched,
@@ -332,12 +354,8 @@ def _index_rows(
     """One index row per (table, vector): bucket ids from the Arrow GEMM
     path, the partition key, and the batch's sequence number."""
     corpus = _prep(embeddings, id_col, vec_col)
-    bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
-    return corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-        F.col(id_col),
-        "v",
-        "norm",
-        F.posexplode("_bks").alias("tbl", "bucket"),
+    return _srp_bucket_rows(
+        corpus, id_col, n_planes, dim, n_tables, arrow_buckets=True
     ).select(
         id_col,
         "v",
@@ -754,25 +772,7 @@ def embedding_near_dup_lsh(
     corpora with a degenerate dominant direction; None preserves the
     exact legacy output."""
     corpus = _prep(embeddings, id_col, vec_col)
-    if arrow_buckets:
-        bucket_all = srp_buckets_udf(n_planes, dim, n_tables)
-        b = corpus.withColumn("_bks", bucket_all(F.col("v"))).select(
-            id_col, "v", "norm", F.posexplode("_bks").alias("tbl", "bucket")
-        )
-    else:
-        b = corpus.select(
-            id_col,
-            "v",
-            "norm",
-            F.posexplode(
-                F.array(
-                    *[
-                        srp_bucket(F.col("v"), n_planes, dim, t * n_planes)
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias("tbl", "bucket"),
-        )
+    b = _srp_bucket_rows(corpus, id_col, n_planes, dim, n_tables, arrow_buckets)
     # Each collision is verified where the self-join finds it, so the
     # only shuffle after the join carries the (id_a, id_b, cosine) rows
     # that pass tau; no candidate-pair dedup runs over failing pairs and

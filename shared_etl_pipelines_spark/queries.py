@@ -1177,8 +1177,9 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     "bigram_nll_score",
     # VERDICT r13 task #3: de-skewed rarity guard (partial-agg form)
     "benchmark_contamination",
-    # VERDICT r13 task #4: curation_drop_audit shares one shingle-hash
-    # frame between the LSH-audit and containment legs
+    # curation_drop_audit: one lazy plan since its r9 green verdict;
+    # the LSH-audit and containment legs reuse one shingle exchange and
+    # its nine counts fold into one grouped aggregate
     "curation_drop_audit",
     # VERDICT r13 task #5/#6: reuse the verified-pairs frame across the
     # degree + CC passes; share the prepped corpus across batch probes.

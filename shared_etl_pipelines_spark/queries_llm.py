@@ -9561,6 +9561,51 @@ _AUDIT_BANDS_SQL = " UNION ALL ".join(
 )
 
 
+def stage_drop_counts(legs: list[tuple[str, DataFrame, F.Column]]) -> DataFrame:
+    """``(stage, n_units, n_dropped)``, one row per ``(stage, frame,
+    bad)`` leg, from ONE grouped aggregate over the union of the legs
+    (a global count per leg costs one single-partition exchange, and so
+    one job, each).
+
+    Every leg projects ``(stage, w=1, bad, _anchor)`` rows. One
+    zero-weight row per stage pads the union, so a stage whose frame is
+    empty still reads ``0, 0``, as a global count would. The padding is
+    built on the JVM from ``spark.range``: a ``createDataFrame`` of a
+    Python list would plan a scan of a Python RDD that starts workers.
+
+    ``_anchor`` (``0`` when the frame has none) keeps a DATA column
+    referenced through the aggregate: (a) Spark refuses corrupt-only-
+    column scans (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and (b) quarantine
+    is evaluated against the PRUNED parse schema, so the anchor must be
+    the typed leaf that actually fails. It is FOLDED INTO the output
+    value (``sum(bad) + sum(_anchor) * 0``): a separate column would be
+    pruned away, resurrecting the corrupt-only-scan error."""
+    names = [name for name, _, _ in legs]
+    zero = F.lit(0).cast("long")
+    rows = legs[0][1].sparkSession.range(0, len(names), 1, 1).select(
+        F.element_at(
+            F.array(*[F.lit(n) for n in names]), (F.col("id") + 1).cast("int")
+        ).alias("stage"),
+        zero.alias("w"),
+        zero.alias("bad"),
+        zero.alias("_anchor"),
+    )
+    for name, df, bad in legs:
+        anchor = F.col("_anchor") if "_anchor" in df.columns else zero
+        rows = rows.union(
+            df.select(
+                F.lit(name).alias("stage"),
+                F.lit(1).cast("long").alias("w"),
+                bad.cast("long").alias("bad"),
+                anchor.cast("long").alias("_anchor"),
+            )
+        )
+    return rows.groupBy("stage").agg(
+        F.sum("w").alias("n_units"),
+        (F.sum("bad") + F.sum("_anchor") * 0).alias("n_dropped"),
+    )
+
+
 @defquery(
     "curation_drop_audit",
     f"""
@@ -9636,25 +9681,6 @@ def q_curation_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-
-    def count_pair(df, name: str, bad) -> DataFrame:
-        # the _anchor sum keeps a DATA column referenced through the
-        # aggregate: (a) Spark refuses corrupt-only-column scans
-        # (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and (b) quarantine is
-        # evaluated against the PRUNED parse schema, so the anchor must
-        # be the typed leaf that actually fails (round-7 lesson)
-        if "_anchor" not in df.columns:
-            df = df.withColumn("_anchor", F.lit(0))
-        # the anchor is FOLDED INTO the output value (x + sum(a)*0): a
-        # separate dropped column would be pruned away by the optimizer,
-        # resurrecting the corrupt-only-scan error
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n_units"),
-            (F.sum(bad.cast("long")) + F.sum(F.col("_anchor")) * 0)
-            .cast("long")
-            .alias("n_dropped"),
-        ).select(F.lit(name).alias("stage"), "n_units", "n_dropped")
-
     jdf = read_jsonl(spark, ensure_demo_jsonl(sf_dir)).select(
         F.coalesce(F.col("doc_id"), F.lit(0)).alias("_anchor"),
         F.col("_corrupt_record").isNotNull().alias("bad"),
@@ -9679,39 +9705,31 @@ def q_curation_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     flac_rows = flac_audio_stats(synthetic_flac_assets(docs))
     mp3_rows = mp3_stream_scan(synthetic_mp3_assets(docs))
-    # ONE shingle-hash pass for both census legs (VERDICT r13 #4): the
-    # LSH-audit's min() signature is duplicate-insensitive, so it can
-    # consume the same DISTINCT (doc_id, h) frame the containment
-    # census needs — the tokenize + shingle window ran twice before.
-    # The distinct lands on the window's doc_id partitioning (no extra
-    # exchange); the persisted frame is the post-distinct census input,
-    # reclaimed by the session sweep.
+    # ONE distinct (doc_id, h) shingle-hash frame feeds both census legs
+    # (the LSH-audit's min() signature is duplicate-insensitive). The
+    # distinct lands on the shingle window's doc_id partitioning, so in
+    # the one plan below the second leg reads that exchange as a
+    # ReusedExchange: the tokens are split and shuffled once, and only
+    # the window above the exchange runs in each leg. Nothing is cached.
     sh = shingle_hash_rows(docs, "doc_id", "text", n=3).select(
         "doc_id", "h"
     ).distinct()
-    sh = sh.persist()
-    sh.count()
     audit = lsh_bucket_audit(
         docs, "doc_id", "text", k=8, bands=4, max_bucket_size=256,
         hash_rows=sh,
     )
     freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-
-    parts = [
-        count_pair(jdf, "jsonl_lines", F.col("bad")),
-        count_pair(cdf, "csv_rows", F.col("bad")),
-        count_pair(xdf, "xml_records", F.col("bad")),
-        count_pair(pdf_per_doc, "pdf_docs", F.col("bad_i") == 1),
-        count_pair(mp4_per_doc, "mp4_video_docs", F.col("bad_i") == 1),
-        count_pair(flac_rows, "flac_docs", ~F.col("is_real_decode")),
-        count_pair(mp3_rows, "mp3_docs", ~F.col("is_scanned")),
-        count_pair(audit, "lsh_band_buckets", F.col("dropped") == 1),
-        count_pair(freq, "containment_shingles", F.col("c") > 256),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return stage_drop_counts([
+        ("jsonl_lines", jdf, F.col("bad")),
+        ("csv_rows", cdf, F.col("bad")),
+        ("xml_records", xdf, F.col("bad")),
+        ("pdf_docs", pdf_per_doc, F.col("bad_i") == 1),
+        ("mp4_video_docs", mp4_per_doc, F.col("bad_i") == 1),
+        ("flac_docs", flac_rows, ~F.col("is_real_decode")),
+        ("mp3_docs", mp3_rows, ~F.col("is_scanned")),
+        ("lsh_band_buckets", audit, F.col("dropped") == 1),
+        ("containment_shingles", freq, F.col("c") > 256),
+    ])
 
 
 # ---------------------------------------------------------------------------

@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from shared_etl_pipelines_spark.functions.text import (
@@ -586,6 +587,76 @@ def test_lsh_mix_queries_stay_within_job_budget(spark, sf_dir, tmp_path, monkeyp
         REGISTRY[name].fn(spark, sf_dir).collect()
         used[name] = sched.nextJobId() - before
     assert all(used[n] <= budget[n] for n in budget), used
+
+
+
+@pytest.mark.parametrize("name", ["embedding_near_dup_lsh", "similarity_topk_lsh"])
+def test_srp_bucket_udf_runs_after_the_spread_exchange(spark, sf_dir, name):
+    """The Arrow bucket UDF evaluates each vector once per side: no
+    inferred filter on its output is pushed below the corpus's
+    round-robin exchange onto the one pre-shuffle task."""
+    from shared_etl_pipelines_spark.queries import REGISTRY
+
+    df = REGISTRY[name].fn(spark, sf_dir)
+    df.collect()
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    spreads = [
+        n for n in nodes
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+        and "RoundRobinPartitioning" in n.outputPartitioning().toString()
+    ]
+    assert spreads
+    assert any(n.getClass().getSimpleName() == "ArrowEvalPythonExec" for n in nodes)
+    for ex in spreads:
+        below = [n.getClass().getSimpleName() for n in _plan_nodes(ex.child())]
+        assert "ArrowEvalPythonExec" not in below
+
+
+def test_curation_drop_audit_is_one_lazy_plan(spark, sf_dir, tmp_path, monkeypatch):
+    """Built cold, curation_drop_audit starts no job in its builder and
+    at most 8 in all (20 when it persisted its shingle frame and ran
+    nine global counts): nothing is cached, nothing is scanned from a
+    Python RDD, and one round-robin exchange of the documents serves
+    every documents consumer."""
+    import tempfile
+
+    from shared_etl_pipelines_spark.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    df = REGISTRY["curation_drop_audit"].fn(spark, sf_dir)
+    built = sched.nextJobId()
+    assert len(df.collect()) == 9
+    assert built == before
+    assert sched.nextJobId() - before <= 8
+    plan = _final_plan(df)
+    assert "InMemoryTableScan" not in plan
+    assert "Scan ExistingRDD" not in plan
+    spreads = [
+        line for line in plan.splitlines()
+        if "Exchange RoundRobinPartitioning" in line
+        and "ReusedExchange" not in line
+    ]
+    assert len(spreads) == 1, plan
+
+
+def test_stage_drop_counts_keeps_an_empty_leg(spark):
+    """Every leg yields its row from the one grouped aggregate; an empty
+    leg reads (0, 0), as a global count over an empty frame would."""
+    from shared_etl_pipelines_spark.queries_llm import stage_drop_counts
+
+    five = spark.range(5)
+    legs = [(f"s{i}", five, F.col("id") < i) for i in range(8)]
+    legs.append(("empty", spark.range(5).filter("id > 10"), F.col("id") > 0))
+    legs[0] = ("anchored", five.withColumn("_anchor", F.col("id")), F.col("id") == 4)
+    got = {
+        r["stage"]: (r["n_units"], r["n_dropped"])
+        for r in stage_drop_counts(legs).collect()
+    }
+    want = {f"s{i}": (5, min(i, 5)) for i in range(1, 8)}
+    want.update(anchored=(5, 1), empty=(0, 0))
+    assert got == want
 
 
 def test_embedding_near_dup_lsh_recall_vs_exact(spark, sf_dir):
