@@ -3,17 +3,19 @@
 The reference's geo plugins consume TIGER polygons (states/counties) and
 grid rasters (SURVEY.md §2.2 G1/G4/G8). Grid-aligned operations need no
 geo library; the genuinely spatial piece is cell-in-polygon membership.
-Design decision (SURVEY.md §7.0): polygons ride as broadcast Python data
-and membership is a vectorized numpy ray-cast inside an Arrow-batched
-pandas UDF — zero non-pip dependencies, exact even-odd semantics,
-handles non-convex rings.
+Design decision (SURVEY.md §7.0): membership is a vectorized numpy
+ray-cast (``first_hit``) — zero non-pip dependencies, exact even-odd
+semantics, handles non-convex rings. Over integral pixel coordinates it
+runs once on the driver, per integer point of the polygons' bounding
+box, and rows look their zone up in one array literal; otherwise it runs
+inside an Arrow-batched pandas UDF that carries the polygons.
 
 Scale path: polygon tables (52 states / ~3.2k counties) are kilobytes —
-broadcast always. The UDF pre-filters each polygon by bounding box before
-the exact ray cast, so per-batch cost is O(points x polygons-overlapping-
-bbox). For millions of polygons you would instead bucket by a space-
-filling-curve cell id and equi-join buckets first; not needed at the
-reference's dimensionality.
+broadcast always. ``first_hit`` pre-filters each polygon by bounding box
+before the exact ray cast, so per-batch cost is O(points x polygons-
+overlapping-bbox). For millions of polygons you would instead bucket by
+a space-filling-curve cell id and equi-join buckets first
+(``bucket_clip``); not needed at the reference's dimensionality.
 
 Geometry convention: a polygon is (zone_id, attrs, ring) with ring =
 [[x0,y0], [x1,y1], ...] (closed implicitly). Points exactly on an edge
@@ -23,14 +25,16 @@ place sample points off polygon edges (cell centers at half-integers).
 
 from __future__ import annotations
 
+import json
+import math
 from dataclasses import dataclass, field
 from typing import Any, Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import IntegralType, StringType
 
 from shared_etl_pipelines_spark.operators.aggregates import zonal_aggregate
 
@@ -62,32 +66,88 @@ def ray_cast(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
     return inside
 
 
+# Largest integer lattice (points inside the polygons' joint bounding
+# box) that tag_zones turns into a lookup literal. Building the literal
+# and scanning rows through it stay in milliseconds up to about 2^16
+# points; past that both grow fast, and the pandas UDF takes over.
+LATTICE_MAX_POINTS = 1 << 16
+
+
+def _prepared(polygons: list[Polygon]) -> list[tuple[np.ndarray, tuple]]:
+    return [(np.asarray(p.ring, dtype="float64"), p.bbox()) for p in polygons]
+
+
+def first_hit(px: np.ndarray, py: np.ndarray, polys: list) -> np.ndarray:
+    """Index into ``polys`` (``(ring, bbox)`` pairs) of the FIRST polygon
+    containing each point — list order is the deterministic tie-break —
+    or -1 if none. Each polygon is pre-filtered by its bounding box
+    before the exact ray cast. Both tag_zones paths run this routine."""
+    out = np.full(len(px), -1, dtype=np.int64)
+    for i, (ring, (x0, y0, x1, y1)) in enumerate(polys):
+        cand = (out < 0) & (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+        if not cand.any():
+            continue
+        hit = np.zeros(len(px), dtype=bool)
+        hit[cand] = ray_cast(px[cand], py[cand], ring)
+        out[hit] = i
+    return out
+
+
 def assign_zone_udf(polygons: list[Polygon]):
-    """Pandas UDF (x, y) -> zone_id of the FIRST containing polygon (list
-    order is the deterministic tie-break), NULL if none."""
-    polys = [
-        (p.zone_id, np.asarray(p.ring, dtype="float64"), p.bbox()) for p in polygons
-    ]
+    """Pandas UDF (x, y) -> zone_id of the first containing polygon,
+    NULL if none."""
+    polys = _prepared(polygons)
+    # index -1 (no polygon) picks the trailing None
+    ids = np.array([p.zone_id for p in polygons] + [None], dtype=object)
 
     @F.pandas_udf(StringType())
     def _assign(x: pd.Series, y: pd.Series) -> pd.Series:
-        px = x.to_numpy(dtype="float64")
-        py = y.to_numpy(dtype="float64")
-        out = np.full(len(px), None, dtype=object)
-        unassigned = np.ones(len(px), dtype=bool)
-        for zone_id, ring, (x0, y0, x1, y1) in polys:
-            cand = (
-                unassigned & (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-            )
-            if not cand.any():
-                continue
-            hit = np.zeros(len(px), dtype=bool)
-            hit[cand] = ray_cast(px[cand], py[cand], ring)
-            out[hit] = zone_id
-            unassigned &= ~hit
-        return pd.Series(out)
+        hit = first_hit(x.to_numpy(dtype="float64"), y.to_numpy(dtype="float64"), polys)
+        return pd.Series(ids[hit])
 
     return _assign
+
+
+def _literal_array(values: list, element_type: str) -> Column:
+    """One array literal from one JSON string: a single JVM call however
+    long the list (``F.lit(list)`` costs one py4j round trip per
+    element). The optimizer folds it into a constant."""
+    return F.from_json(F.lit(json.dumps(values)), f"array<{element_type}>")
+
+
+def lattice_zones(polygons: list[Polygon], x_col: str, y_col: str) -> Column | None:
+    """Zone id column for integral (x, y) as a Catalyst lookup: each
+    integer point of the polygons' joint bounding box gets its zone on
+    the driver (``first_hit``, as in the UDF), the indexes ride as one
+    array literal, and a row reads its slot ``(y - y0) * w + (x - x0)``.
+    Rows outside the box, or with a NULL coordinate, read NULL before
+    any arithmetic runs, so no ANSI overflow or index error can fire.
+    None if the lattice is over ``LATTICE_MAX_POINTS``, or a vertex is
+    non-finite or beyond +-2^62, where the caller keeps the UDF."""
+    boxes = [p.bbox() for p in polygons]
+    if not boxes:
+        return F.lit(None).cast(StringType())
+    if not all(abs(v) < 1 << 62 for b in boxes for v in b):  # NaN fails too
+        return None
+    x0, y0 = math.ceil(min(b[0] for b in boxes)), math.ceil(min(b[1] for b in boxes))
+    x1, y1 = math.floor(max(b[2] for b in boxes)), math.floor(max(b[3] for b in boxes))
+    w, h = x1 - x0 + 1, y1 - y0 + 1
+    if w <= 0 or h <= 0:
+        return F.lit(None).cast(StringType())
+    if w * h > LATTICE_MAX_POINTS:
+        return None
+    px = np.tile(np.arange(x0, x1 + 1, dtype="float64"), h)
+    py = np.repeat(np.arange(y0, y1 + 1, dtype="float64"), w)
+    hit = first_hit(px, py, _prepared(polygons))
+    # 1-based positions into the zone-id literal, NULL where no polygon hits
+    slots = _literal_array([int(i) + 1 if i >= 0 else None for i in hit], "int")
+    ids = _literal_array([p.zone_id for p in polygons], "string")
+    x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
+    slot = ((y - y0) * w + (x - x0) + 1).cast("int")
+    return F.when(
+        x.between(x0, x1) & y.between(y0, y1),
+        F.element_at(ids, F.element_at(slots, slot)),
+    )
 
 
 def tag_zones(
@@ -97,9 +157,26 @@ def tag_zones(
     y_col: str = "cy",
     zone_col: str = "zone_id",
 ) -> DataFrame:
-    """Add the containing polygon's zone id (NULL outside every polygon)."""
-    udf = assign_zone_udf(list(polygons))
-    return cells.withColumn(zone_col, udf(F.col(x_col), F.col(y_col)))
+    """Add the first containing polygon's zone id (NULL outside every
+    polygon).
+
+    Two paths, chosen by the input. Integral coordinates (the raster
+    long table's ``x``/``y`` pixel indexes) take ``lattice_zones``: a
+    plain Catalyst lookup, no Python per row, while the polygons' joint
+    bounding box holds at most ``LATTICE_MAX_POINTS`` integer points.
+    Anything else (double cell centres, lon/lat, a larger lattice) runs
+    ``assign_zone_udf``. Both assign zones with ``first_hit``.
+    """
+    polygons = list(polygons)
+    zone = None
+    if all(
+        isinstance(f.dataType, IntegralType)
+        for f in cells.select(x_col, y_col).schema.fields
+    ):
+        zone = lattice_zones(polygons, x_col, y_col)
+    if zone is None:
+        zone = assign_zone_udf(polygons)(F.col(x_col), F.col(y_col))
+    return cells.withColumn(zone_col, zone)
 
 
 def clip_by_polygon(
@@ -180,8 +257,11 @@ def bucket_clip(
     for idx, p in enumerate(selected):
         x0, y0, x1, y1 = p.bbox()
         metas.append((idx, float(x0), float(y0), float(x1), float(y1)))
+    # a pandas input plans a LocalRelation; a Python list would plan a
+    # Scan ExistingRDD that starts Python workers to read it back
     bboxes = spark.createDataFrame(
-        metas, "poly_idx int, x0 double, y0 double, x1 double, y1 double"
+        pd.DataFrame(metas, columns=["poly_idx", "x0", "y0", "x1", "y1"]),
+        "poly_idx int, x0 double, y0 double, x1 double, y1 double",
     )
     g = float(cell_size)
     cover = bboxes.select(

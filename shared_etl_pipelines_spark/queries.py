@@ -648,8 +648,10 @@ _R1_GREEN = frozenset(
         "revenue_share_of_region", "customer_order_trajectory",
         "cohort_retention", "weighted_median",
         "gap_fill_interpolated", "heavy_hitters_topk", "ewma_daily_value",
-        "hll_daily_distinct", "trimmed_mean_price", "geo_clip_polygon",
-        "geo_zonal_polygons", "geo_clip_bucketed",
+        "hll_daily_distinct", "trimmed_mean_price",
+        # "geo_clip_polygon", "geo_zonal_polygons" and "geo_clip_bucketed"
+        # were r1-green but operators/geo.py changed since (tag_zones'
+        # lattice path, bucket_clip's bbox relation) — re-fronted.
         "dedup_exact", "dedup_normalized", "minhash_signature",
         # "near_dup_minhash_lsh" was r1-green but minhash_lsh_pairs
         # gained the hot-bucket guard this round — re-fronted.
@@ -678,7 +680,8 @@ _R2_GREEN = frozenset(
         # "raster_tif_rollsum" re-fronted: its fixture corpus now rotates
         # TIFF-LZW in with DEFLATE/uncompressed (decoded values identical,
         # locally re-verified) — a fresh verdict should cover the new codec.
-        "shapefile_clip",
+        # "shapefile_clip" was r2-green but tag_zones (operators/geo.py)
+        # changed since — re-fronted.
         "doc_fingerprint", "similarity_topk",
         "embedding_near_dup",
         # "similarity_topk_lsh" was r2-green but lsh_bucket_topk's
@@ -1216,6 +1219,14 @@ _CARRYOVER_FIRST: tuple[str, ...] = (
     "stream_mor_cdc_apply",
     "stream_delta_dv_cdc",
     "stream_iceberg_delete_cdc",
+    # green verdicts older than operators/geo.py's change: tag_zones
+    # looks integral coordinates up in a driver-built lattice (these
+    # double-coordinate queries keep the UDF, now over the shared
+    # first_hit routine), and bucket_clip's bboxes became a local relation
+    "geo_clip_polygon",
+    "geo_zonal_polygons",
+    "shapefile_clip",
+    "geo_clip_bucketed",
 )
 
 

@@ -15,13 +15,17 @@ rings), one ``Polygon`` per ring. Shapefile winding (outer=CW,
 hole=CCW) is surfaced on each part so callers can drop or handle holes;
 ``read_shapefile`` keeps outer rings only by default — TIGER boundary
 files are overwhelmingly hole-free, and the first-containing-polygon
-semantics of ``assign_zone_udf`` would otherwise count hole interiors
+semantics of ``tag_zones`` would otherwise count hole interiors
 as inside.
 
 Scale posture: boundary tables are kilobytes-to-megabytes (52 states /
-3.2k counties) and are parsed driver-side ONCE, then broadcast inside
-the pandas-UDF closures exactly like hand-built polygons — the data
-side of the join stays fully distributed.
+3.2k counties) and are parsed driver-side ONCE, then used exactly like
+hand-built polygons. Over integral pixel coordinates ``tag_zones``
+resolves each integer point of their joint bounding box on the driver
+and ships one array literal (a plain Catalyst lookup, up to
+``LATTICE_MAX_POINTS`` points); otherwise the polygons ride inside the
+pandas-UDF closure. Either way there is no join, and the data side
+stays fully distributed.
 """
 
 from __future__ import annotations

@@ -91,6 +91,141 @@ def test_bucket_clip_matches_broadcast_clip(spark, sf_dir):
     ca = Counter(tuple(r) for r in a.select(cols).collect())
     cb = Counter(tuple(r) for r in b.select(cols).collect())
     assert ca == cb and sum(ca.values()) > 0
+    # the polygon bboxes are a local relation, never a Python RDD scan
+    plan = _executed(b)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+# ---------------------------------------------------------------------------
+# tag_zones over integral coordinates: the driver-built lattice lookup
+# ---------------------------------------------------------------------------
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+# overlapping squares (first hit wins), a concave L, a triangle whose
+# hypotenuse runs through integer points, and a box with fractional
+# vertices in negative space
+_LATTICE_POLYS = [
+    Polygon("sq", [[0, 0], [4, 0], [4, 4], [0, 4]]),
+    Polygon("big", [[-1, -1], [8, -1], [8, 8], [-1, 8]]),
+    Polygon("L", [[10, 0], [16, 0], [16, 3], [13, 3], [13, 6], [10, 6]]),
+    Polygon("tri", [[0, 10], [6, 10], [0, 16]]),
+    Polygon("neg", [[-9.5, -7.25], [-2.5, -7.25], [-2.5, -2.5], [-9.5, -2.5]]),
+]
+
+
+def _lattice_cells(spark, kind):
+    pts = [(x, y) for x in range(-11, 19) for y in range(-9, 18)]
+    edge = [(0, 0), (4, 4), (2, 0), (0, 2), (4, 2), (3, 13), (13, 3), (13, 5)]
+    nulls = [(None, 1), (1, None), (None, None)]
+    far = [(2**31 - 1, 2), (-(2**31), 2), (2, 2**31 - 1)]
+    if kind == "long":
+        far += [(2**40, 2), (2, -(2**40)), (2**63 - 1, 2**63 - 1), (-(2**63), 0)]
+    return spark.createDataFrame(pts + edge + nulls + far, f"cx {kind}, cy {kind}")
+
+
+def _zones_by_point(df):
+    from collections import Counter
+
+    return Counter(((r["cx"], r["cy"]), r["zone_id"]) for r in df.collect())
+
+
+@pytest.mark.parametrize("kind", ["int", "long"])
+@pytest.mark.parametrize(
+    "polys", [_LATTICE_POLYS, []], ids=["polygons", "no_polygons"]
+)
+def test_lattice_tag_zones_matches_udf(spark, kind, polys):
+    """Integral coordinates take the lookup; every point (edges, vertices,
+    overlaps, NULLs, points outside every bbox and beyond the int range,
+    where ANSI arithmetic would raise) gets the zone the UDF gives it."""
+    from shared_etl_pipelines_spark.operators.geo import assign_zone_udf
+
+    cells = _lattice_cells(spark, kind)
+    lattice = tag_zones(cells, polys)
+    udf = cells.withColumn("zone_id", assign_zone_udf(polys)(F.col("cx"), F.col("cy")))
+    got = _zones_by_point(lattice)
+    assert got == _zones_by_point(udf)
+    plan = _executed(lattice)
+    assert not any(n in plan for n in _PYTHON_NODES)
+    if polys:
+        zones = dict(got.keys())
+        assert zones[(2, 2)] == "sq" and zones[(6, 6)] == "big"
+        assert zones[(14, 5)] is None and zones[(11, 5)] == "L"
+        assert {z for _, z in got} == {None, "sq", "big", "L", "tri", "neg"}
+
+
+@pytest.mark.parametrize("shape", ["over_cap", "infinite_vertex"])
+def test_lattice_out_of_reach_keeps_udf(spark, shape):
+    """A polygon box holding more integer points than the cap, or one
+    with a vertex no lattice can hold, runs the UDF, with the same
+    answer."""
+    from shared_etl_pipelines_spark.operators.geo import (
+        LATTICE_MAX_POINTS,
+        assign_zone_udf,
+    )
+
+    side = int(LATTICE_MAX_POINTS**0.5) + 1
+    far = side if shape == "over_cap" else float("inf")
+    polys = [Polygon("wide", [[0, 0], [far, 0], [0, side]])]
+    cells = spark.createDataFrame(
+        [(0, 0), (side - 1, 1), (side, 1), (1, side - 2), (None, 3)], "cx int, cy int"
+    )
+    tagged = tag_zones(cells, polys)
+    assert "ArrowEvalPython" in _executed(tagged)
+    udf = cells.withColumn("zone_id", assign_zone_udf(polys)(F.col("cx"), F.col("cy")))
+    assert _zones_by_point(tagged) == _zones_by_point(udf)
+
+
+def _pixels(spark):
+    """A 48 x 64 integer pixel grid, as read_geotiff's long table has it."""
+    return spark.range(48 * 64).select(
+        (F.col("id") % 64).cast("int").alias("x"),
+        (F.col("id") / 64).cast("int").alias("y"),
+        (F.col("id") % 17 * 0.5).alias("value"),
+    )
+
+
+@pytest.mark.parametrize("op", ["clip", "zonal"])
+def test_integer_pixel_clip_and_zonal_plan_has_no_python_or_join(spark, op):
+    """Over integer pixels, clip and zonal stats plan no Python UDF and no
+    join, build without a job, and run in no more jobs than the UDF form
+    over the same cells as doubles."""
+    polys = [
+        Polygon("w", [[-0.5, -0.5], [30.5, -0.5], [30.5, 47.5], [-0.5, 47.5]],
+                {"st": "MI"}),
+        Polygon("e", [[30.5, -0.5], [63.5, -0.5], [63.5, 20.5], [30.5, 40.5]],
+                {"st": "MI"}),
+        Polygon("x", [[40.5, 30.5], [63.5, 30.5], [63.5, 47.5]], {"st": "OH"}),
+    ]
+
+    def build(cells):
+        if op == "clip":
+            return clip_by_polygon(cells, polys, key="st", value="MI", x_col="x", y_col="y")
+        return zonal_stats_polygons(cells, polys, "value", "min,med,max",
+                                    x_col="x", y_col="y")
+
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    pixels = _pixels(spark)
+    doubles = pixels.select(
+        F.col("x").cast("double").alias("x"), F.col("y").cast("double").alias("y"), "value"
+    )
+    runs = {}
+    for name, cells in (("lattice", pixels), ("udf", doubles)):
+        before = sched.nextJobId()
+        out = build(cells)
+        built = sched.nextJobId()
+        rows = sorted(tuple(r) for r in out.collect())
+        runs[name] = (built - before, sched.nextJobId() - built, rows, _executed(out))
+    (b_jobs, r_jobs, rows, plan), (_, udf_jobs, udf_rows, udf_plan) = runs["lattice"], runs["udf"]
+    assert rows == udf_rows and rows
+    assert b_jobs == 0 and r_jobs <= udf_jobs
+    assert not any(n in plan for n in _PYTHON_NODES + ("Join",))
+    assert "ArrowEvalPython" in udf_plan
 
 
 # ---------------------------------------------------------------------------

@@ -38,7 +38,7 @@ SHOWCASE = {
     "similarity_topk_lsh": "multi-table LSH: explode over tables, bucket equi-join, exact rerank",
     "raster_tif_rollsum": "GeoTIFF decode in the scan tasks (no Exchange before MapInPandas), then one window shuffle",
     "shapefile_clip": "shapefile zones ride the UDF closure: ArrowEvalPython, zero joins",
-    "zonal_stats_ranked": "distributed-exact quantiles: range partition + rank offsets, no per-group buffer",
+    "zonal_stats_ranked": "distributed-exact quantiles: boundary sketch, one counts pass, broadcast range probe; no range shuffle, no per-group buffer",
     "embedding_covariance": "pair products as codegen expression array; one 36-key shuffle",
     "benchmark_contamination": "5-gram equi-join, benchmark side broadcast",
     "token_entropy_quality": "entropy via log-sum identity: mergeable aggregates only, no per-doc window",
