@@ -3,6 +3,13 @@
 Thin adapter over shared_etl_pipelines_spark.queries.REGISTRY — the
 engine's named-query registry where every implemented operator from
 SURVEY.md §2 lives alongside its DuckDB oracle SQL.
+
+``queries()`` and ``oracle_sql()`` list the registry in gate order, which
+they derive when called (shared_etl_pipelines_spark/fingerprint.py): the
+queries whose latest verdict in ``CORRECTNESS_r*.json`` is not green, or
+whose code changed since the fingerprint pinned for that verdict, come
+first, oldest passing verdict first; then the fresh queries; then the
+queries without oracle SQL. ``REGISTRY`` itself stays in definition order.
 """
 
 from __future__ import annotations
@@ -47,11 +54,18 @@ def _fresh(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
+def _gate_order() -> list[str]:
+    from shared_etl_pipelines_spark.fingerprint import gate_order
+
+    return gate_order(Q.REGISTRY)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _fresh(qd.fn) for name, qd in Q.REGISTRY.items()}
+    """One entry per implemented operator from SURVEY.md §2, in gate order."""
+    return {name: _fresh(Q.REGISTRY[name].fn) for name in _gate_order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL per query (omitted => rows-only check)."""
-    return {name: qd.sql for name, qd in Q.REGISTRY.items() if qd.sql is not None}
+    """DuckDB-runnable ANSI SQL per query (omitted => rows-only check),
+    in gate order."""
+    return {n: Q.REGISTRY[n].sql for n in _gate_order() if Q.REGISTRY[n].sql is not None}

@@ -12,8 +12,9 @@ explicitly:
    an m-bit filter, aggregated as 64-bit words via bit_or — one
    map-side-combinable pass, result is m/64 longs (BOUNDED driver
    collect: 2 KiB-2 MiB regardless of data size, like a broadcast var).
-2. fact side: the words become an array literal; membership is k pure
-   JVM bit tests inside whole-stage codegen — no shuffle, no Python.
+2. fact side: the words become one array literal, built in one JVM call;
+   membership is k pure JVM bit tests inside whole-stage codegen — no
+   shuffle, no Python.
 3. survivors flow into the EXACT semi-join (bloom false positives are
    removed there; blooms have no false negatives, so the result is
    exactly the semi-join), which now shuffles only the survivors.
@@ -27,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from shared_etl_pipelines_spark.functions.literals import literal_array
 
 
 def _positions(key: Column, n_hashes: int, m_bits: int) -> list[Column]:
@@ -68,7 +71,7 @@ def build_bloom(dim: DataFrame, key: str | Column, n_hashes: int = 5,
 def bloom_might_contain(words: list[int], key: Column, n_hashes: int = 5,
                         m_bits: int = 1 << 20) -> Column:
     """Membership predicate over the broadcast words — pure JVM bit tests."""
-    arr = F.lit(words)
+    arr = literal_array(words, "bigint")
     cond = F.lit(True)
     for p in _positions(key, n_hashes, m_bits):
         word = F.element_at(arr, (p / 64).cast("int") + 1)

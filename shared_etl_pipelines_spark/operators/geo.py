@@ -25,7 +25,6 @@ place sample points off polygon edges (cell centers at half-integers).
 
 from __future__ import annotations
 
-import json
 import math
 from dataclasses import dataclass, field
 from typing import Any, Iterable
@@ -36,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType, StringType
 
+from shared_etl_pipelines_spark.functions.literals import literal_array
 from shared_etl_pipelines_spark.operators.aggregates import zonal_aggregate
 
 
@@ -108,13 +108,6 @@ def assign_zone_udf(polygons: list[Polygon]):
     return _assign
 
 
-def _literal_array(values: list, element_type: str) -> Column:
-    """One array literal from one JSON string: a single JVM call however
-    long the list (``F.lit(list)`` costs one py4j round trip per
-    element). The optimizer folds it into a constant."""
-    return F.from_json(F.lit(json.dumps(values)), f"array<{element_type}>")
-
-
 def lattice_zones(polygons: list[Polygon], x_col: str, y_col: str) -> Column | None:
     """Zone id column for integral (x, y) as a Catalyst lookup: each
     integer point of the polygons' joint bounding box gets its zone on
@@ -140,8 +133,8 @@ def lattice_zones(polygons: list[Polygon], x_col: str, y_col: str) -> Column | N
     py = np.repeat(np.arange(y0, y1 + 1, dtype="float64"), w)
     hit = first_hit(px, py, _prepared(polygons))
     # 1-based positions into the zone-id literal, NULL where no polygon hits
-    slots = _literal_array([int(i) + 1 if i >= 0 else None for i in hit], "int")
-    ids = _literal_array([p.zone_id for p in polygons], "string")
+    slots = literal_array([int(i) + 1 if i >= 0 else None for i in hit], "int")
+    ids = literal_array([p.zone_id for p in polygons], "string")
     x, y = F.col(x_col).cast("long"), F.col(y_col).cast("long")
     slot = ((y - y0) * w + (x - x0) + 1).cast("int")
     return F.when(

@@ -20,7 +20,6 @@ hashes line up:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -615,653 +614,6 @@ from shared_etl_pipelines_spark import queries_relational  # noqa: E402,F401
 from shared_etl_pipelines_spark import queries_streaming  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------
-# Driver-gate ordering. The external correctness gate walks REGISTRY in
-# insertion order under a time budget (~50 entries/round). Three blocks:
-#
-#   1. FRONT  — oracle-bearing queries with no green verdict yet: the 23
-#      never-judged relational/analytics entries, queries whose code
-#      changed since their last verdict, and anything new this round.
-#   2. BACK   — the cumulative judged-green set (r1+r2): re-confirmable,
-#      but lowest information value per gate slot.
-#   3. LAST   — sql=None entries. The driver scores these "err:
-#      no_oracle" every time they are judged (rows-only at best), so
-#      they must never displace an oracle-bearing query from the window.
-#      Exception: _FORCE_FRONT pins entries that need a fresh rows-only
-#      verdict (embedding_pca_project crashed the r2 canonicalizer on an
-#      array column; its output is now scalarized).
-#
-# _JUDGED_GREEN must only contain queries UNCHANGED since their verdict —
-# tests/test_registry_meta.py pins each entry's (sql, builder-source)
-# fingerprint against tools/query_fingerprints.json and fails if a listed
-# query was edited without being removed from this set (the rolling_sums
-# b7648b7 staleness class).
-# ---------------------------------------------------------------------------
-_R1_GREEN = frozenset(
-    {
-        "zonal_stats", "clip_semi_join", "value_mask", "multiply_join",
-        "weighted_zonal", "regrid_fraction", "spi_zscore",
-        "union_combine", "topk_per_group", "date_from_filename",
-        "crop_weighted_pipeline", "pricing_summary", "event_funnel",
-        "mode_event_type", "qty_price_regression",
-        "dedup_keep_latest", "embedding_quantize_int8",
-        "customer_order_distribution", "zorder_clustering_key",
-        "revenue_share_of_region", "customer_order_trajectory",
-        "cohort_retention", "weighted_median",
-        "gap_fill_interpolated", "heavy_hitters_topk", "ewma_daily_value",
-        "hll_daily_distinct", "trimmed_mean_price",
-        # "geo_clip_polygon", "geo_zonal_polygons" and "geo_clip_bucketed"
-        # were r1-green but operators/geo.py changed since (tag_zones'
-        # lattice path, bucket_clip's bbox relation) — re-fronted.
-        "dedup_exact", "dedup_normalized", "minhash_signature",
-        # "near_dup_minhash_lsh" was r1-green but minhash_lsh_pairs
-        # gained the hot-bucket guard this round — re-fronted.
-        "ngram_jaccard_pairs", "simhash_fingerprint",
-        # "near_dup_simhash" was r1-green but its banded machinery was
-        # touched in r7 after its last verdict (VERDICT r7 item 7) —
-        # re-fronted for a fresh driver verdict.
-        "text_metrics", "lang_id", "token_counts",
-        # "rolling_sums" was r1-green but modified by b7648b7 (sum_14
-        # added) — needs a fresh verdict, so it is NOT in this set.
-    }
-)
-
-# CORRECTNESS_r02.json greens: all 50 judged entries except
-# corpus_curation (hash fail — oracle SQL fixed this round, needs
-# re-verdict), embedding_pca_project (canonicalizer crash — output
-# scalarized this round), and the two no_oracle rows (sql=None,
-# handled by the LAST block).
-_R2_GREEN = frozenset(
-    {
-        "recursive_ancestor_depths", "props_variant_stats",
-        "expectations_check", "time_range_rolling",
-        # "data_quality_profile" was r2-green but profile_columns was
-        # rewritten this round (Expand-free union-of-branches) — re-fronted
-        # for a fresh verdict.
-        # "raster_tif_rollsum" re-fronted: its fixture corpus now rotates
-        # TIFF-LZW in with DEFLATE/uncompressed (decoded values identical,
-        # locally re-verified) — a fresh verdict should cover the new codec.
-        # "shapefile_clip" was r2-green but tag_zones (operators/geo.py)
-        # changed since — re-fronted.
-        "doc_fingerprint", "similarity_topk",
-        "embedding_near_dup",
-        # "similarity_topk_lsh" was r2-green but lsh_bucket_topk's
-        # query-side probe construction was refactored for multi-probe
-        # this round (behavior-identical for single probe, locally
-        # re-verified) — re-fronted for a fresh verdict.
-        "similarity_topk_ivf",
-        "multimodal_decode", "multimodal_frame_sample", "multimodal_features",
-        "stratified_sample_docs", "multimodal_resize", "vocab_top_terms",
-        "fuzzy_name_pairs", "embedding_label_stats",
-        # "dedup_clusters" was r2-green but connected_components gained
-        # path halving this session (result verified identical by the
-        # local oracle) — re-fronted for a fresh verdict.
-        "tfidf_top_terms", "user_value_iqr", "text_scrub_redactions",
-        "embedding_dim_stats", "chunk_documents", "doc_repetition_metrics",
-        # "embedding_covariance" and "similarity_topk_lsh_indexed" were
-        # r2-green but modified this round (ragged-input guard; index
-        # cache fingerprint) — re-fronted for fresh verdicts.
-        # "embedding_near_dup_lsh" was r2-green but touched in r7 after
-        # its last verdict (VERDICT r7 item 7) — re-fronted.
-        "rollup_pricing", "cube_order_counts",
-        "distinct_aggs", "intersect_except", "asof_purchase_view",
-        "salted_hot_key_agg", "spi_doy_climatology",
-        "pipeline_crop_weighted_yaml", "sessionize_events",
-        "range_join_campaigns", "hypertable_rollup",
-        "anti_join_inactive_customers",
-    }
-)
-
-# CORRECTNESS_r03.json greens: all 50 judged entries passed
-# rows+schema+hash — the 23 r1/r2 carryovers, the 8 judged-then-modified
-# re-fronts, and 19 of the r3 additions.
-_R3_GREEN = frozenset(
-    {
-        "regional_revenue", "salted_skew_join", "grouping_sets_pricing",
-        "global_top_orders", "json_props_rollup", "pivot_status_by_month",
-        "daily_revenue_deltas", "gap_fill_user_days", "scd2_customer_merge",
-        "above_customer_avg_orders", "ntile_order_quartiles",
-        "price_histogram", "value_distribution_ranks", "rolling_median_7",
-        "priority_extremes", "exists_late_orders", "not_in_null_aware",
-        "having_large_orders", "top_revenue_suppliers", "lateral_top_orders",
-        "null_safe_join", "setops_multiset", "unpivot_flag_metrics",
-        # "similarity_topk_lsh_indexed" was r3-green but re-fronted this
-        # round: lsh_topk_from_index gained the upsert tombstone
-        # liveness join (no-tombstone reads bit-identical, locally
-        # re-verified).
-        "rolling_sums",
-        # "embedding_covariance" was r3-green but its oracle SQL gained
-        # the CAST(embedding AS DOUBLE[]) quantization fix in r9 (the
-        # float32-multiply half-boundary bug found via
-        # embedding_pca_project at sf0.001) — re-fronted.
-        "corpus_curation", "data_quality_profile",
-        # "similarity_topk_lsh" was r3-green but flipped to the Arrow
-        # bucket path this round (bit-identical buckets, 1.7x faster —
-        # VERDICT r4 #4) — re-fronted for a fresh verdict.
-        # "raster_tif_rollsum" was r3-green but re-fronted this round:
-        # its fixture corpus now rotates BigTIFF containers + chained
-        # overview IFDs in (same pixel values, locally re-verified).
-        # "dedup_clusters" was r3-green but its pair source
-        # (minhash_lsh_pairs) gained the hot-bucket guard — re-fronted.
-        "label_prop_communities",
-        "kcore_peeling", "hard_negative_mining",
-        # "embedding_jl_project" was r3-green but its oracle SQL changed
-        # this round (multiply-by-reciprocal to match the operator's
-        # arithmetic exactly, ADVICE r3) — re-fronted for a fresh verdict.
-        "kmv_distinct_intersection", "kaplan_meier_conversion",
-        "similarity_topk_blocked",
-        # semantic_dedup: builder optimized in the r13 optimization round
-        # (min_by argmin + persisted assignment; identical output,
-        # oracle-verified at all three SFs) — re-fronted for a fresh
-        # driver verdict
-        # "multimodal_gif_decode" was r3-green but its fixture corpus
-        # now rotates 4-pass INTERLACED GIFs in (odd doc_ids; same
-        # pixels, locally hash-green) — re-fronted (r8).
-        "topk_per_group_partial", "dsir_importance_weights",
-        # langid_confusion: r3-green, builder restructured in r13
-        # (broadcast bigram model + per-doc pre-aggregation) —
-        # re-fronted pending a fresh driver verdict
-        "theil_sen_trend", "seasonal_decompose_daily",
-        "ts_pattern_match", "correlation_matrix", "chi2_event_dow",
-        "incremental_rollup_refresh", "copurchase_triangles",
-    }
-)
-
-# CORRECTNESS_r04.json greens: all 50 judged entries passed
-# rows+schema+hash except embedding_pca_project, which is sql=None and
-# scored "err: no_oracle" (ran, 4000 rows) — it stays out of this set
-# and out of _FORCE_FRONT (VERDICT r4: stop spending slots on sql=None).
-_R4_GREEN = frozenset(
-    {
-        "stream_tumbling_daily", "stream_running_totals", "stream_sliding_3d",
-        "stream_session_windows", "stream_dedup_hashes",
-        "stream_static_enrichment", "stream_interval_join",
-        # "stream_new_doc_dedup" was r4-green but touched in r7 after
-        # its last verdict (VERDICT r7 item 7) — re-fronted.
-        "stream_raster_daily",
-        "gopher_quality_rules", "rendezvous_shard_stats", "ann_recall_eval",
-        "bpe_encode_apply", "bpe_learn_merges", "k_anonymity_audit",
-        "url_canonicalize", "warc_ingest_stats", "warc_curation_funnel",
-        "html_extract_text", "pca_project_fixed_basis",
-        # "incremental_near_dup" was r4-green but incremental_minhash_lsh
-        # gained the overlapping-doc_id guard this round (ADVICE r4 #1;
-        # disjoint-fixture output locally re-verified identical) —
-        # re-fronted for a fresh verdict.
-        "waiting_supplier_blame", "idle_rich_customers",
-        "snapshot_diff_orders", "fk_integrity_check", "pit_dimension_join",
-        "pk_uniqueness_check", "local_supplier_revenue",
-        "promo_revenue_disjunctive", "min_cost_supplier_region",
-        "nation_pair_trade_volume", "nation_market_share",
-        "product_type_profit", "important_stock_value",
-        "ship_lag_priority_counts", "part_supplier_variety",
-        "small_qty_order_revenue", "large_volume_customers",
-        "excess_shipper_names", "shipping_priority_top10",
-        "forecast_revenue_change", "returned_item_customers",
-        "promo_revenue_share", "embedding_jl_project",
-        # "incremental_dedup" shares the guarded helper — re-fronted too.
-        # "multimodal_png_decode" was r4-green but its fixture corpus now
-        # rotates Adam7 INTERLACED streams in (odd doc_ids; same pixels,
-        # locally hash-green) — re-fronted for a verdict on the new mix.
-        # "multimodal_wav_decode" was r4-green but WAV gained the mu-law
-        # + ADPCM paths in r7 after its last verdict (VERDICT r7 item 7)
-        # — re-fronted.
-        # "multimodal_avi_frames" was r4-green but decode_avi gained the
-        # MJPEG ('00dc') path this round — re-fronted.
-        "multimodal_bmp_decode",
-    }
-)
-
-# CORRECTNESS_r05.json greens: all 50 judged entries passed
-# rows+schema+hash — the first perfect round. Entries later re-fronted
-# this round (code/fixture changes) must be REMOVED from this set per
-# the re-fronting convention (tests/test_registry_meta.py enforces it).
-_R5_GREEN = frozenset(
-    {
-        "affine_regrid_rotated",
-        # "ann_index_upsert_topk" and "similarity_topk_lsh_indexed" were
-        # r5-green but the shared upsert/probe machinery changed this
-        # round (data-before-tombstone crash ordering, fail-loud writer
-        # lock, Hadoop-FS tombstone resolution, reader max-seq-per-id
-        # dedup — ADVICE r5 #1/#2; normal-path results locally
-        # re-verified identical) — re-fronted for fresh verdicts.
-        "audio_fingerprint_neardup", "bigram_lm_quality",
-        "bloom_prefilter_join", "bm25_search", "bpe_top_pairs",
-        "code_detect_heuristic", "curation_funnel", "dup_span_profile",
-        # "dup_spans" and "hilbert_layout_audit" were r5-green but
-        # touched in r7 after their last verdicts (VERDICT r7 item 7) —
-        # re-fronted.
-        # "embedding_dbscan" was green here but its builder switched
-        # persist -> localCheckpoint in r11 (floor cut, VERDICT r10
-        # task #6) — re-fronted for a fresh verdict.
-        "embedding_kmeans_assign",
-        "image_ahash_neardup",
-        # "incremental_near_dup", "near_dup_levenshtein" and
-        # "near_dup_lsh_eval" were r5-green but their shared banded-LSH
-        # machinery gained the hot-bucket guard — re-fronted.
-        # "incremental_dedup" was r5-green but touched in r7 after its
-        # last verdict (VERDICT r7 item 7) — re-fronted.
-        "jsonl_nested_ingest",
-        # "mor_orders_state" was r5-green but mor_apply_changes/mor_read
-        # changed this round (same hardening as above) — re-fronted.
-        # "multimodal_jpeg_decode" and "image_ahash_neardup_jpeg" were
-        # r5-green but their fixture corpora now rotate PROGRESSIVE
-        # (SOF2) streams in (odd doc_ids; same closed-form pixel values,
-        # locally hash-green) — re-fronted for verdicts on the new
-        # container mix.
-        # "multimodal_resize_real" was r5-green but shares the PNG
-        # fixture corpus that now rotates Adam7 in — re-fronted.
-        # "near_dup_prefix_filter" was r5-green but touched in r7 after
-        # its last verdict (VERDICT r7 item 7) — re-fronted.
-        # "pagerank_one_step" stays: it does NOT call the pagerank
-        # operator (self-contained integer one-step builder).
-        "pagerank_one_step",
-        "per_source_cap", "phrase_search", "pii_scan_events",
-        "pmi_collocations", "pq_assign_codes", "quality_band_filter",
-        "raster_overview_scan", "raster_tif_rollsum", "sequence_pack",
-        "similarity_topk_pq",
-        "sorted_neighborhood_pairs", "source_mixing_weights",
-        "tfidf_cosine_pairs", "token_budget_pack", "token_entropy_quality",
-        "train_val_test_split", "url_domain_stats",
-        # "video_keyframe_detect" was r5-green but its fixture corpus now
-        # mixes MJPEG containers in (odd doc_ids, half DHT-less; same
-        # closed-form deltas, locally hash-green) — re-fronted.
-        "vocab_zipf_stats", "weighted_sample_docs",
-    }
-)
-
-# CORRECTNESS_r06.json greens: 49 of 50 judged entries passed
-# rows+schema+hash (the 50th, pagerank_copurchase, is sql=None and got
-# its rows-only verdict — cumulative driver coverage of the pre-r6
-# registry is complete). Entries re-fronted THIS round (ADVICE r6
-# fixes touched their builders/shared operators; results locally
-# re-verified identical) are NOT in this set per the re-fronting
-# convention: near_dup_minhash_lsh, dedup_clusters, near_dup_lsh_eval
-# (banded-LSH hot-bucket guard now collects the hot set instead of
-# persisting it), mor_orders_state (fixture .done-marker gating),
-# ann_index_upsert_topk (shared upsert fixture factored + .done gate).
-_R6_GREEN = frozenset(
-    {
-        "acf_daily_revenue", "attribution_last_touch", "basket_lift_pairs",
-        "benford_first_digit", "brand_rank_shift", "cell_overlap_weights",
-        "churn_score_logistic", "conversion_latency", "conversion_wilson_ci",
-        "cusum_changepoint", "embedding_quantile_normalize",
-        "forget_cascade_audit", "funnel_within_windows",
-        "geo_nearest_supplier", "geo_radius_join", "growing_degree_days",
-        "hashed_features", "incremental_join_refresh",
-        "interval_union_coverage", "join_fanout_audit", "key_skew_report",
-        "label_centroid_similarity", "largest_remainder_alloc",
-        "longest_user_streak", "markov_event_transitions",
-        "max_concurrent_open_orders",
-        # "mor_orders_state_bucketed" was r6-green but touched in r7
-        # after its last verdict AND the bucketed-MoR writer lock moved
-        # to a sibling path this round (ADVICE r7 #1) — re-fronted.
-        "mutual_information_bins", "nb_train_langid", "new_vs_returning",
-        "pareto_frontier", "profile_drift", "psi_drift_check",
-        "raster_focal_mean", "rle_compression_stats", "roc_auc_exact",
-        "rolling_corr_14", "rolling_wau", "sax_window_vocab",
-        "sequential_patterns", "shapefile_zone_metrics",
-        # "similarity_topk_lsh_indexed" was r6-green but touched in r7
-        # after its last verdict (VERDICT r7 item 7) — re-fronted.
-        "target_encode_loo",
-        "zonal_majority_class",
-    }
-)
-
-# CORRECTNESS_r07.json greens: all 50 judged entries passed
-# rows+schema+hash (the third perfect file in a row). Entries re-fronted
-# in round 8 are NOT in this set per the re-fronting convention:
-# ann_index_upsert_topk / ann_index_asof_topk / stream_ann_index_upsert
-# (the ANN maintenance lock moved to a swap-surviving sibling path,
-# ADVICE r7 #1), mor_orders_state / _time_travel / _changelog /
-# mor_history_audit / mor_schema_evolution / stream_mor_cdc_apply (same
-# for the MoR lock), holt_linear_daily (typed order-column fold, ADVICE
-# r7 #2), gif_animated_frames (background-index disposal restore,
-# ADVICE r7 #3), record_linkage_fs (re-blocked onto sub-quadratic
-# sorted-neighborhood candidates, VERDICT r7 item 2). zonal_stats
-# (re-judged r7) already sits in _R1_GREEN.
-_R7_GREEN = frozenset(
-    {
-        # "incremental_near_dup" was r7-green but the fixture-batch
-        # probe path changes in the r14 optimization round — re-fronted.
-        "near_dup_levenshtein",
-        "multimodal_jpeg_decode", "image_ahash_neardup_jpeg",
-        "video_keyframe_detect",
-        # "multimodal_avi_frames" was r7-green but sample_video_frames
-        # gained the MP4 dispatch branch in r8 (AVI path byte-identical,
-        # locally re-verified) — re-fronted.
-        "audio_spectral_tones", "ks_drift_exact", "gini_customer_spend",
-        "orc_roundtrip_pricing", "jpeg_marker_scan",
-        "csv_quarantine_ingest", "similarity_topk_ivfpq",
-        "ab_welch_ttest", "ts_subsequence_search",
-        # "near_dup_lsh_eval" was r7-green but its operator
-        # (minhash_lsh_pairs) changed in the r13 optimization round
-        # (conditional sig-count skip) — re-fronted per ADVICE r13 #1.
-        "xml_nested_ingest",
-        "kn_bigram_lm_quality", "mann_whitney_u",
-        "partition_evolution_read", "multimodal_mulaw_decode",
-        "multimodal_png_decode", "multimodal_resize_real",
-        # "stream_custom_state_alarms" was green, but its builder now
-        # reads its parquet schema through engine.parquet_schema —
-        # re-fronted.
-        "spearman_spend_orders",
-        "anova_priority_f", "stream_interval_join_outer",
-        "clustering_coefficient", "multimodal_adpcm_decode",
-        "near_dup_containment", "twap_event_value", "oov_rate_split",
-        "cart_stump_returnflag", "periodogram_daily_revenue",
-    }
-)
-
-# CORRECTNESS_r08.json greens: all 50 judged entries passed
-# rows+schema+hash (the fourth perfect file in a row; the nine geo
-# re-judges already sit in their original sets). Entries touched in
-# round 9 are NOT in this set per the re-fronting convention:
-# mp4_track_scan / multimodal_mp4_frames / curation_drop_audit (the
-# MP4 fixtures now carry real avcC/esds extradata and parse_mp4 gained
-# the stsd-children walk — outputs locally re-verified identical),
-# pdf_extract_text (resolve()/pages() circular-reference guards,
-# ADVICE r8 #1), multimodal_flac_decode (flac_audio_stats docstring
-# corrected, ADVICE r8 #3 — code path unchanged),
-# stream_webdataset_ingest (basename+first-dot member keys, ADVICE r8
-# #2), record_linkage_fs_blocked (block-occupancy cap, VERDICT r8
-# item 3), webdataset_ingest / corpus_shard_manifest /
-# zipdataset_ingest (the shard writers were refactored through
-# _write_one_tar / gained the zip64 flag — bytes locally re-verified
-# identical).
-_R8_GREEN = frozenset(
-    {
-        "multimodal_wav_decode", "mor_orders_state_bucketed",
-        # near_dup_prefix_filter: r8-green, but its operator was edited
-        # in r12 (freq groupBy+join -> window count, the 5.1 -> 4.5 s
-        # floor cut) — removed pending a fresh driver verdict
-        # "similarity_topk_lsh_indexed" was r8-green, but its operator
-        # lsh_topk_from_index gained a probe-side persist in r14 after
-        # the verdict (ADVICE r14 #3) — re-fronted.
-        # "incremental_dedup" was r8-green but the fixture-batch probe
-        # path changes in the r14 optimization round — re-fronted.
-        "dup_spans", "near_dup_simhash",
-        "hilbert_layout_audit",
-        # "ann_index_upsert_topk" / "ann_index_asof_topk" were r8-green
-        # but lsh_topk_from_index's probe side changes in the r14
-        # optimization round — re-fronted.
-        # "stream_ann_index_upsert" was r8-green, but it reads through
-        # lsh_topk_from_index (changed in r14) and calls
-        # ann_index_upsert, whose writes now count through observed
-        # metrics instead of persist + count barriers — re-fronted.
-        # "stream_new_doc_dedup" / "stream_mor_cdc_apply" were green,
-        # but their builders now read parquet through
-        # engine.read_parquet / parquet_schema — re-fronted.
-        "mor_orders_state", "mor_orders_time_travel",
-        "mor_orders_changelog", "mor_history_audit",
-        "mor_schema_evolution",
-        "holt_linear_daily", "gif_animated_frames", "record_linkage_fs",
-        "pagerank_copurchase", "multimodal_avi_frames", "mp3_stream_scan",
-        "mann_kendall_trend", "dp_noisy_group_counts", "kruskal_wallis_h",
-        "link_prediction_jaccard", "multimodal_gif_decode",
-        "multimodal_alaw_decode",
-    }
-)
-
-# CORRECTNESS_r09.json: 50 judged, 50 green (ninth consecutive
-# zero-regression round; fourth perfect sample).
-_R9_GREEN = frozenset(
-    {
-        "av1_codec_params", "avro_ingest_stats", "caption_cue_extract",
-        "compression_codec_audit", "corpus_reshard_plan",
-        "corpus_shard_manifest", "crawl_coverage_audit",
-        # "curation_drop_audit" was r9-green but the LSH-audit and
-        # containment legs share one shingle-hash frame from the r14
-        # optimization round (VERDICT r13 task #4) — re-fronted.
-        "email_mime_audit", "embedding_covariance",
-        "embedding_kmeans", "embedding_pca_project", "feed_entry_audit",
-        "heic_exif_gps_audit", "heif_item_audit", "hevc_codec_params",
-        "jpeg_exif_gps_audit", "jsonld_entity_extract",
-        "linkage_block_audit", "markdown_structure_audit",
-        "mkv_subtitle_cues", "mkv_track_scan", "mojibake_repair",
-        "mp3_id3_tags", "mp4_codec_params", "mp4_track_scan",
-        "multimodal_flac_decode", "multimodal_mp4_frames", "ogg_page_scan",
-        "paragraph_dedup_profile", "parquet_layout_audit",
-        "pdf_extract_text", "pdf_info_audit", "record_linkage_fs_blocked",
-        "robots_crawl_audit", "similarity_topk_ivf_trained",
-        "sitemap_url_audit", "stream_tfrecord_ingest",
-        "stream_webdataset_ingest", "stream_zipdataset_ingest",
-        "svg_image_audit", "tensor_manifest_audit",
-        "tfrecord_example_stats", "unicode_normalization_audit",
-        "url_canonical_dedup", "webdataset_ingest", "webm_codec_params",
-        "webm_vp8_keyframes", "webp_image_audit", "zipdataset_ingest",
-    }
-)
-
-# CORRECTNESS_r10.json: 50 judged, 50 green (tenth consecutive
-# zero-regression round; fifth perfect sample — with this set, every
-# registry query has a cumulative green driver verdict).
-_R10_GREEN = frozenset(
-    {
-        "arrow_ipc_audit", "cbor_manifest_audit", "clip_semi_join",
-        "crop_weighted_pipeline", "date_from_filename",
-        "delta_log_history", "delta_snapshot_audit",
-        "delta_time_travel_audit", "delta_vacuum_plan",
-        "distinct_users_approx", "event_funnel", "geojson_feature_audit",
-        "hudi_snapshot_slices", "hudi_timeline_audit", "ical_event_audit",
-        "iceberg_expire_plan", "iceberg_manifest_churn",
-        "iceberg_snapshot_audit", "iceberg_time_travel_audit",
-        "jsonschema_contract_audit", "jwt_token_audit",
-        "lfs_pointer_census", "license_detect_audit", "mode_event_type",
-        "msgpack_log_audit", "multimodal_mjpeg_frames", "multiply_join",
-        "notebook_conversion_audit",
-        "parquet_rowgroup_prune_plan", "pricing_summary",
-        "prom_scrape_audit", "protobuf_wire_audit",
-        "qty_price_regression", "regrid_fraction", "rolling_sums",
-        "secret_scan_audit", "spi_zscore", "stream_delta_log_cdc",
-        "topk_per_group", "torrent_metainfo_audit",
-        "union_combine", "value_mask",
-        "vcard_pii_census", "weighted_zonal", "zonal_stats",
-        # zonal_stats_approx: builder edited in r11 (small-zone band
-        # guard, ADVICE r10) — removed pending a fresh driver verdict
-    }
-)
-
-# CORRECTNESS_r11.json: 50 judged, 49 green, 1 hash fail.
-_R11_GREEN = frozenset(
-    {
-        "avro_schema_evolution_audit", "bitmap_index_slice",
-        "clip_semi_join", "crop_weighted_pipeline",
-        "date_from_filename", "dedup_keep_latest", "delta_dv_purge_plan",
-        "delta_dv_read", "embedding_quantize_int8",
-        "event_funnel", "geoparquet_feature_audit", "gguf_model_audit",
-        "hudi_compaction_plan", "hudi_mor_read", "iceberg_rewrite_plan",
-        "iceberg_v2_delete_read", "mode_event_type",
-        "multimodal_vp8_frames", "multiply_join", "pricing_summary",
-        "qty_price_regression", "recursive_ancestor_depths",
-        "regrid_fraction", "rolling_sums", "spi_zscore",
-        "sqlite_table_scan", "stream_hudi_timeline_cdc", "topk_per_group",
-        "union_combine", "value_mask", "weighted_zonal",
-        "zarr_chunk_prune_plan", "zarr_datasource_bbox",
-        "zarr_zonal_rollup", "zonal_stats", "zonal_stats_approx",
-        "zorder_layout_plan",
-    }
-)
-
-# CORRECTNESS_r12.json: 50 judged, 48 green, 2 hash fails.
-_R12_GREEN = frozenset(
-    {
-        "bitmap_index_slice_wide", "clip_semi_join",
-        "cohort_retention", "crop_weighted_pipeline",
-        "customer_order_distribution", "customer_order_trajectory",
-        "data_quality_profile", "date_from_filename",
-        "dedup_keep_latest", "distinct_users_approx", "event_funnel",
-        "expectations_check", "embedding_quantize_int8",
-        "gap_fill_interpolated", "heavy_hitters_topk",
-        "hilbert_layout_audit", "mode_event_type",
-        "multimodal_vp8_pframes", "multiply_join",
-        # near_dup_prefix_filter: r12-green, but its operator was
-        # rewritten in r13 (two-sided PPJoin prefix probe + positional
-        # filter) — removed pending a fresh driver verdict
-        # outlier_mad: builder optimized in the r13 optimization round
-        # (persisted group medians; identical output, oracle-verified) —
-        # re-fronted for a fresh driver verdict
-        "pricing_summary",
-        "props_variant_stats", "puffin_bitmap_sidecar_slice",
-        "qty_price_regression", "recursive_ancestor_depths",
-        "regrid_fraction", "revenue_share_of_region", "rolling_sums",
-        "spi_zscore", "sqlite_without_rowid_scan",
-        # stream_delta_dv_cdc: builder now reads its parquet schema
-        # through engine.parquet_schema — re-fronted
-        "time_range_rolling", "topk_per_group",
-        "union_combine", "value_mask", "weighted_median",
-        "weighted_zonal", "zonal_stats", "zorder_clustering_key",
-    }
-)
-
-# CORRECTNESS_r13.json: 50 judged, 47 green, 3 hash fails. Green
-# entries whose compute path changes in the r14 optimization round are
-# removed from this set and re-fronted as they are touched.
-_R13_GREEN = frozenset(
-    {
-        "clip_semi_join", "crop_weighted_pipeline",
-        "customer_order_distribution", "date_from_filename",
-        "dedup_cluster_best_keeper", "dedup_clusters",
-        "dedup_keep_latest",
-        # embedding_near_dup_lsh: r13-green, but r14 switched its bucket
-        # build to the (bit-identical) Arrow GEMM path — re-fronted
-        "embedding_quantize_int8", "event_funnel",
-        "heavy_demand_parts_sketch", "langid_confusion",
-        "mode_event_type", "multimodal_vp8_residuals", "multiply_join",
-        # outlier_mad: r13-green, but its eager med.count() barrier
-        # was dropped after the verdict — re-fronted
-        "near_dup_minhash_lsh", "near_dup_prefix_filter",
-        "pricing_summary", "props_variant_stats", "ql_dirichlet_topk",
-        "qty_price_regression", "recursive_ancestor_depths",
-        "regrid_fraction", "rolling_sums", "semantic_dedup",
-        # similarity_topk_lsh / similarity_topk_lsh_multiprobe:
-        # r13-green, but lsh_bucket_topk dropped its eager corpus count
-        # after the verdict — re-fronted
-        # stream_iceberg_delete_cdc: r13-green, but its builder now
-        # reads parquet through engine.read_parquet — re-fronted
-        "spi_zscore", "topk_per_group",
-        # unigram_lm_train / unigram_segment_stats: r13-green, but the
-        # r14 round capped the per-task Viterbi memos (VERDICT r13
-        # minor #6) — identical output, re-fronted per the compute-path
-        # precedent
-        "union_combine",
-        "value_mask", "weighted_zonal", "zonal_stats",
-        # r13-green entries NOT listed here because their compute path
-        # changes again in the r14 optimization round (re-fronted for a
-        # fresh driver verdict as each change lands):
-        # benchmark_contamination, bigram_nll_score, bm25_topk,
-        # embedding_dbscan, hybrid_rrf_topk,
-        # zonal_stats_disc, zonal_stats_ranked
-    }
-)
-
-_JUDGED_GREEN = (
-    _R1_GREEN | _R2_GREEN | _R3_GREEN | _R4_GREEN | _R5_GREEN | _R6_GREEN
-    | _R7_GREEN | _R8_GREEN | _R9_GREEN | _R10_GREEN | _R11_GREEN
-    | _R12_GREEN | _R13_GREEN
-)
-
-# Round 10: zero sql=None entries remain — the last two approx sketches
-# were converted to oracle-backed error bands (VERDICT r9 task #2).
-_FORCE_FRONT: frozenset[str] = frozenset()
-
-# Round-14 judging window: queries whose green verdicts predate a
-# change to their compute path lead, appended as the changes land.
-_CARRYOVER_FIRST: tuple[str, ...] = (
-    # r7-green but its operator (minhash_lsh_pairs) changed in the r13
-    # optimization round — re-fronted per ADVICE r13 #1
-    "near_dup_lsh_eval",
-    # r13-green entries whose compute path changes again in r14
-    # (VERDICT r13 task #2: lighten the O(N)/O(tokens) persists):
-    "zonal_stats_ranked",
-    "zonal_stats_disc",
-    "hybrid_rrf_topk",
-    # bm25_topk / bigram_nll_score: r13-green, but the r14 round
-    # removed their O(tokens) persists (one-pass conditional-count
-    # scorer; array-sliced bigrams) — re-fronted
-    "bm25_topk",
-    "bigram_nll_score",
-    # VERDICT r13 task #3: de-skewed rarity guard (partial-agg form)
-    "benchmark_contamination",
-    # curation_drop_audit: one lazy plan since its r9 green verdict;
-    # the LSH-audit and containment legs reuse one shingle exchange and
-    # its nine counts fold into one grouped aggregate
-    "curation_drop_audit",
-    # VERDICT r13 task #5/#6: reuse the verified-pairs frame across the
-    # degree + CC passes; share the prepped corpus across batch probes.
-    # embedding_near_dup_lsh (and so embedding_dbscan) changed again
-    # since: it verifies each collision in the self-join's stage and
-    # persists nothing
-    "embedding_dbscan",
-    "embedding_near_dup_lsh",
-    "incremental_dedup",
-    "incremental_near_dup",
-    # VERDICT r13 task #7: probe-side reuse inside lsh_topk_from_index
-    "ann_index_upsert_topk",
-    "ann_index_asof_topk",
-    # per-task Viterbi memo caps (identical output, compute path touched)
-    "unigram_lm_train",
-    "unigram_segment_stats",
-    # green verdicts older than a change to their operators:
-    # lsh_topk_from_index's r14 probe-side persist (ADVICE r14 #3), and
-    # the eager count barriers dropped from lsh_bucket_topk and
-    # ann_index_upsert since. All the LSH/ANN entries above and below
-    # changed again with the broadcast index probe: the tbl_bucket
-    # index layout, tombstones after the probe join, one-shuffle
-    # rerank, and indexes built from load_table without spread()
-    "similarity_topk_lsh_indexed",
-    "stream_ann_index_upsert",
-    "similarity_topk_lsh",
-    "similarity_topk_lsh_multiprobe",
-    # green verdicts older than their builder's edits: outlier_mad's
-    # eager count barrier went; the streaming builders read parquet
-    # (or its schema) through engine.read_parquet / parquet_schema
-    "outlier_mad",
-    "stream_custom_state_alarms",
-    "stream_new_doc_dedup",
-    "stream_mor_cdc_apply",
-    "stream_delta_dv_cdc",
-    "stream_iceberg_delete_cdc",
-    # green verdicts older than operators/geo.py's change: tag_zones
-    # looks integral coordinates up in a driver-built lattice (these
-    # double-coordinate queries keep the UDF, now over the shared
-    # first_hit routine), and bucket_clip's bboxes became a local relation
-    "geo_clip_polygon",
-    "geo_zonal_polygons",
-    "shapefile_clip",
-    "geo_clip_bucketed",
-)
-
-
-def _rotate_registry() -> None:
-    first: dict[str, QueryDef] = {}
-    front: dict[str, QueryDef] = {}
-    back: dict[str, QueryDef] = {}
-    last: dict[str, QueryDef] = {}
-    for name in _CARRYOVER_FIRST:
-        if name in REGISTRY and (
-            REGISTRY[name].sql is not None or name in _FORCE_FRONT
-        ):
-            first[name] = REGISTRY[name]
-    for k, v in REGISTRY.items():
-        if k in first:
-            continue
-        if k in _FORCE_FRONT:
-            front[k] = v
-        elif v.sql is None:
-            last[k] = v
-        elif k in _JUDGED_GREEN:
-            back[k] = v
-        else:
-            front[k] = v
-    REGISTRY.clear()
-    REGISTRY.update(first)
-    REGISTRY.update(front)
-    REGISTRY.update(back)
-    REGISTRY.update(last)
-
-
-_rotate_registry()
-
-
-# ---------------------------------------------------------------------------
 # Top-K per group, map-side-combine form — operators/windows.py
 # partial_topk: per-batch per-key top-k pruning before the ranking
 # window, so the shuffle carries k rows per (key, batch) instead of
@@ -1289,8 +641,3 @@ def q_topk_per_group_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("event_type", "event_id", "value")
     out = partial_topk(ev, ["event_type"], "value", "event_id", 5)
     return out.select("event_type", "event_id", "value", "rn")
-
-
-# queries defined below the first _rotate_registry() call (this module's
-# own late additions) would otherwise trail the sql=None block; re-sort.
-_rotate_registry()

@@ -310,6 +310,30 @@ def test_bloom_semi_join_exact_and_filtering(spark):
     assert survivors < fact.count()
 
 
+def test_bloom_probe_literal_matches_lit_form(spark, monkeypatch):
+    """The probe's one-call array literal must test exactly the bits the
+    per-word ``F.lit(words)`` form tests, at the default 2^20-bit filter
+    and with words that have bit 63 set (negative longs)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from shared_etl_pipelines_spark.operators import bloom
+
+    m_bits = 1 << 20
+    rng = random.Random(7)
+    words = [rng.getrandbits(64) - (1 << 63) for _ in range(m_bits // 64)]
+    words[:3] = [-(1 << 63), -1, 0]
+    assert sum(w < 0 for w in words) > len(words) // 3
+    keys = spark.range(20000)
+    new = bloom.bloom_might_contain(words, F.col("id"), m_bits=m_bits)
+    monkeypatch.setattr(bloom, "literal_array", lambda values, element_type: F.lit(values))
+    old = bloom.bloom_might_contain(words, F.col("id"), m_bits=m_bits)
+    rows = keys.select(new.alias("new"), old.alias("old")).collect()
+    assert all(r["new"] == r["old"] for r in rows)
+    assert 0 < sum(r["new"] for r in rows) < len(rows)
+
+
 def test_partial_topk_identical_to_window_form(spark, sf_dir):
     """Per-batch pruning must lose nothing: the partial form returns the
     exact same rows/ranks as the plain ranking window, including ties,

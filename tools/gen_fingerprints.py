@@ -1,44 +1,66 @@
-"""Snapshot per-query fingerprints for the judged-green staleness guard.
+"""Pin the fingerprints of the queries a new verdict file judged green.
 
-Writes tools/query_fingerprints.json: for every registry entry in
-_JUDGED_GREEN, sha256 over (oracle SQL, builder source). Regenerate ONLY
-when a query's driver verdict is fresh — i.e. right after updating
-_JUDGED_GREEN from a new CORRECTNESS_r{N}.json. The paired test
-(tests/test_registry_meta.py::test_judged_green_entries_unchanged) fails
-if a fingerprinted query is edited without being removed from
-_JUDGED_GREEN, which is exactly the b7648b7 staleness class: a query
-changed after its verdict but still sorted behind the gate window.
+    python tools/gen_fingerprints.py CORRECTNESS_rN.json
 
-Usage: python tools/gen_fingerprints.py
+For every query that file judged green, pins its current transitive
+fingerprint at round N in tools/query_fingerprints.json; drops the pin of
+every query it judged otherwise. Refuses N at or below the highest round
+already pinned: a query edited after round N's gate ran must not be
+blessed by re-running an old file. The gate order
+(shared_etl_pipelines_spark/fingerprint.py) treats a query as fresh only
+while its pin matches its latest verdict round and its code.
+
+Run it right after landing the new CORRECTNESS_rN.json in the repo root,
+before editing any query.
 """
 
 from __future__ import annotations
 
-import hashlib
-import inspect
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from shared_etl_pipelines_spark.queries import _JUDGED_GREEN, REGISTRY  # noqa: E402
+from shared_etl_pipelines_spark import fingerprint as fp  # noqa: E402
 
 
-def fingerprint(name: str) -> str:
-    qd = REGISTRY[name]
-    src = inspect.getsource(qd.fn)
-    blob = (qd.sql or "") + "\x00" + src
-    return hashlib.sha256(blob.encode()).hexdigest()
+def pin(verdict_path: str, registry: dict, root: str = fp.ROOT) -> dict[str, dict]:
+    """Update the pins under ``root`` from one verdict file; return them."""
+    rnd = fp.verdict_round(verdict_path)
+    pins = fp.load_pins(root)
+    top = max((p["round"] for p in pins.values()), default=0)
+    if rnd <= top:
+        raise SystemExit(f"round {rnd} is not after the highest pinned round {top}; refusing")
+    with open(verdict_path) as fh:
+        judged = json.load(fh)
+    walker = fp.Fingerprinter()
+    for name, verdict in judged.items():
+        if fp.passed(verdict) and name in registry:
+            pins[name] = {"round": rnd, "sha256": walker.fingerprint(registry[name])}
+        else:
+            pins.pop(name, None)
+    write_pins(pins, root)
+    return pins
 
 
-def main() -> None:
-    out = {name: fingerprint(name) for name in sorted(_JUDGED_GREEN) if name in REGISTRY}
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "query_fingerprints.json")
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1, sort_keys=True)
-    print(f"wrote {len(out)} fingerprints to {path}")
+def write_pins(pins: dict[str, dict], root: str = fp.ROOT) -> None:
+    """One line per query, so a re-pin diffs as the lines it changed."""
+    lines = [f" {json.dumps(n)}: {json.dumps(pins[n], sort_keys=True)}" for n in sorted(pins)]
+    with open(os.path.join(root, fp.PINS), "w") as fh:
+        fh.write("{\n" + ",\n".join(lines) + "\n}\n")
+
+
+def main(argv: list[str]) -> None:
+    if len(argv) != 2:
+        raise SystemExit(__doc__)
+    from shared_etl_pipelines_spark.queries import REGISTRY
+
+    pins = pin(argv[1], REGISTRY)
+    rnd = fp.verdict_round(argv[1])
+    print(f"{sum(p['round'] == rnd for p in pins.values())} pinned at round {rnd}; "
+          f"{len(pins)} pins in all")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv)
