@@ -4,16 +4,18 @@ Thin adapter over shared_etl_pipelines_spark.queries.REGISTRY — the
 engine's named-query registry where every implemented operator from
 SURVEY.md §2 lives alongside its DuckDB oracle SQL.
 
-``queries()`` and ``oracle_sql()`` list the registry in gate order, which
-they derive when called (shared_etl_pipelines_spark/fingerprint.py): the
-queries whose latest verdict in ``CORRECTNESS_r*.json`` is not green, or
-whose code changed since the fingerprint pinned for that verdict, come
-first, oldest passing verdict first; then the fresh queries; then the
-queries without oracle SQL. ``REGISTRY`` itself stays in definition order.
+``queries()`` and ``oracle_sql()`` list the registry in gate order, derived
+once per process when either is first called
+(shared_etl_pipelines_spark/fingerprint.py): the queries whose latest
+verdict in ``CORRECTNESS_r*.json`` is not green, or whose code changed
+since the fingerprint pinned for that verdict, come first, oldest passing
+verdict first; then the fresh queries; then the queries without oracle
+SQL. ``REGISTRY`` itself stays in definition order.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -54,10 +56,13 @@ def _fresh(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-def _gate_order() -> list[str]:
+@functools.cache
+def _gate_order() -> tuple[str, ...]:
+    """Derived once per process: ``queries()`` and ``oracle_sql()`` share
+    one walk over the package source."""
     from shared_etl_pipelines_spark.fingerprint import gate_order
 
-    return gate_order(Q.REGISTRY)
+    return tuple(gate_order(Q.REGISTRY))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

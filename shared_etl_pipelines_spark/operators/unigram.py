@@ -35,9 +35,10 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from shared_etl_pipelines_spark.functions.rows import map_rows
 
 __all__ = ["viterbi_segment", "unigram_train", "unigram_segment_table"]
 
@@ -86,35 +87,30 @@ def _estep_counts(
     """(piece, n) weighted usage counts from Viterbi-segmenting the
     word table under ``probs``. Arrow-batched; partials combine
     map-side in the groupBy."""
-    from collections.abc import Iterator
+    # viterbi_segment is a pure function of (word, probs) and probs
+    # is fixed for the whole task — memoize per distinct word, so a
+    # word table with repeated surface forms (the common case before
+    # any upstream frequency collapse) pays one DP per distinct word
+    # per task instead of one per row. Each task unpickles its own copy
+    # of the memo with the kernel. Capped (VERDICT r13 minor):
+    # an unbounded per-partition dict is a §5 memory hazard when a
+    # task holds millions of distinct keys — once full, misses just
+    # recompute.
+    memo: dict[str, list[str]] = {}
+    MEMO_CAP = 1 << 18
 
-    def seg(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # viterbi_segment is a pure function of (word, probs) and probs
-        # is fixed for the whole task — memoize per distinct word, so a
-        # word table with repeated surface forms (the common case before
-        # any upstream frequency collapse) pays one DP per distinct word
-        # per task instead of one per row. Capped (VERDICT r13 minor):
-        # an unbounded per-partition dict is a §5 memory hazard when a
-        # task holds millions of distinct keys — once full, misses just
-        # recompute.
-        memo: dict[str, list[str]] = {}
-        MEMO_CAP = 1 << 18
-        for pdf in it:
-            rows: dict[str, list] = {"piece": [], "n": []}
-            for w, cnt in zip(pdf["w"], pdf["cnt"]):
-                ws = str(w)
-                parse = memo.get(ws)
-                if parse is None:
-                    parse = viterbi_segment(ws, probs, max_piece_len)
-                    if len(memo) < MEMO_CAP:
-                        memo[ws] = parse
-                for piece in parse:
-                    rows["piece"].append(piece)
-                    rows["n"].append(int(cnt))
-            yield pd.DataFrame(rows)
+    def seg(w, cnt):
+        ws = str(w)
+        parse = memo.get(ws)
+        if parse is None:
+            parse = viterbi_segment(ws, probs, max_piece_len)
+            if len(memo) < MEMO_CAP:
+                memo[ws] = parse
+        for piece in parse:
+            yield piece, int(cnt)
 
     return (
-        words.mapInPandas(seg, "piece string, n long")
+        map_rows(words.select("w", "cnt"), seg, "piece string, n long")
         .groupBy("piece")
         .agg(F.sum("n").alias("n"))
     )
@@ -161,31 +157,23 @@ def unigram_segment_table(
 ) -> DataFrame:
     """(id, n_pieces, n_chars) per document under a trained prob
     table — the apply-side twin (bpe_segment's sibling)."""
-    from collections.abc import Iterator
-
     max_len = max(len(p) for p in probs)
+    # same per-task memo as the E-step: the parse is pure in
+    # (text, probs), so duplicate documents cost one DP each.
+    # Capped like the E-step memo — document keys can be large and
+    # plentiful; once full, misses just recompute.
+    n_pieces_memo: dict[str, int] = {}
+    MEMO_CAP = 1 << 16
 
-    def seg(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # same per-task memo as the E-step: the parse is pure in
-        # (text, probs), so duplicate documents cost one DP each.
-        # Capped like the E-step memo — document keys can be large and
-        # plentiful; once full, misses just recompute.
-        n_pieces_memo: dict[str, int] = {}
-        MEMO_CAP = 1 << 16
-        for pdf in it:
-            rows: dict[str, list] = {"id": [], "n_pieces": [], "n_chars": []}
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                ts = str(t)
-                np_ = n_pieces_memo.get(ts)
-                if np_ is None:
-                    np_ = len(viterbi_segment(ts, probs, max_len))
-                    if len(n_pieces_memo) < MEMO_CAP:
-                        n_pieces_memo[ts] = np_
-                rows["id"].append(int(i))
-                rows["n_pieces"].append(np_)
-                rows["n_chars"].append(len(ts))
-            yield pd.DataFrame(rows)
+    def seg(i, t):
+        ts = str(t)
+        np_ = n_pieces_memo.get(ts)
+        if np_ is None:
+            np_ = len(viterbi_segment(ts, probs, max_len))
+            if len(n_pieces_memo) < MEMO_CAP:
+                n_pieces_memo[ts] = np_
+        yield int(i), np_, len(ts)
 
-    return docs.select(id_col, text_col).mapInPandas(
-        seg, "id long, n_pieces int, n_chars int"
+    return map_rows(
+        docs.select(id_col, text_col), seg, "id long, n_pieces int, n_chars int"
     )

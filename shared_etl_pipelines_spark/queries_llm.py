@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from shared_etl_pipelines_spark.engine import parquet_schema, read_parquet
+from shared_etl_pipelines_spark.functions.rows import map_rows
 from shared_etl_pipelines_spark.functions.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -4211,88 +4212,60 @@ def q_hudi_timeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "code", "multimodal", "source"),
 )
 def q_notebook_conversion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, text):
         from shared_etl_pipelines_spark.sources import notebooks as NB
 
-        cols = (
-            "doc_id", "ok", "language", "n_code", "n_md", "n_raw",
-            "code_chars", "outputs_stripped", "output_bytes_stripped",
-            "image_outputs",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                nc = d % 4 + 1
-                cells = []
-                for i in range(nc):
-                    outs = []
-                    if i % 2 == 0:
-                        outs.append(
-                            {"output_type": "stream", "name": "stdout",
-                             "text": "o" * (n % 40 + 1)}
-                        )
-                    if d % 5 == 0 and i == 0:
-                        outs.append(
-                            {"output_type": "display_data",
-                             "data": {"image/png": "A" * (n % 64 + 16)}}
-                        )
-                    cells.append(
-                        {"cell_type": "code",
-                         "source": ["x = 1\n"] * (i % 3 + 1),
-                         "execution_count": i + 1, "outputs": outs}
-                    )
-                for _ in range(d % 3):
-                    cells.append({"cell_type": "markdown", "source": "# title"})
-                if d % 7 == 0:
-                    cells.append({"cell_type": "raw", "source": "raw"})
-                blob = NB.build_notebook(cells)
-                if d % 9 == 8:  # planted pre-v4 notebook
-                    blob = blob.replace(b'"nbformat": 4', b'"nbformat": 3')
-                rows["doc_id"].append(d)
-                try:
-                    o = NB.parse_notebook(blob)
-                    cs = o["cells"]
-                    rows["ok"].append(True)
-                    rows["language"].append(o["language"])
-                    rows["n_code"].append(
-                        sum(1 for c in cs if c["cell_type"] == "code")
-                    )
-                    rows["n_md"].append(
-                        sum(1 for c in cs if c["cell_type"] == "markdown")
-                    )
-                    rows["n_raw"].append(
-                        sum(1 for c in cs if c["cell_type"] == "raw")
-                    )
-                    rows["code_chars"].append(
-                        sum(c["n_chars"] for c in cs if c["cell_type"] == "code")
-                    )
-                    rows["outputs_stripped"].append(
-                        sum(c["n_outputs"] for c in cs)
-                    )
-                    rows["output_bytes_stripped"].append(
-                        sum(c["output_bytes"] for c in cs)
-                    )
-                    rows["image_outputs"].append(
-                        sum(c["image_outputs"] for c in cs)
-                    )
-                    # the conversion itself must run and be output-free
-                    script = NB.notebook_to_script(blob)
-                    assert "image/png" not in script
-                except ValueError:
-                    rows["ok"].append(False)
-                    rows["language"].append("")
-                    for k in cols[3:]:
-                        rows[k].append(0)
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        nc = d % 4 + 1
+        cells = []
+        for i in range(nc):
+            outs = []
+            if i % 2 == 0:
+                outs.append(
+                    {"output_type": "stream", "name": "stdout",
+                     "text": "o" * (n % 40 + 1)}
+                )
+            if d % 5 == 0 and i == 0:
+                outs.append(
+                    {"output_type": "display_data",
+                     "data": {"image/png": "A" * (n % 64 + 16)}}
+                )
+            cells.append(
+                {"cell_type": "code",
+                 "source": ["x = 1\n"] * (i % 3 + 1),
+                 "execution_count": i + 1, "outputs": outs}
+            )
+        for _ in range(d % 3):
+            cells.append({"cell_type": "markdown", "source": "# title"})
+        if d % 7 == 0:
+            cells.append({"cell_type": "raw", "source": "raw"})
+        blob = NB.build_notebook(cells)
+        if d % 9 == 8:  # planted pre-v4 notebook
+            blob = blob.replace(b'"nbformat": 4', b'"nbformat": 3')
+        try:
+            o = NB.parse_notebook(blob)
+            cs = o["cells"]
+            out = (
+                d, True, o["language"],
+                sum(1 for c in cs if c["cell_type"] == "code"),
+                sum(1 for c in cs if c["cell_type"] == "markdown"),
+                sum(1 for c in cs if c["cell_type"] == "raw"),
+                sum(c["n_chars"] for c in cs if c["cell_type"] == "code"),
+                sum(c["n_outputs"] for c in cs),
+                sum(c["output_bytes"] for c in cs),
+                sum(c["image_outputs"] for c in cs),
+            )
+            # the conversion itself must run and be output-free
+            script = NB.notebook_to_script(blob)
+            assert "image/png" not in script
+        except ValueError:
+            out = (d, False, "", 0, 0, 0, 0, 0, 0, 0)
+        yield out
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id long, ok boolean, language string, n_code int, n_md int, "
         "n_raw int, code_chars long, outputs_stripped int, "
@@ -4318,26 +4291,15 @@ def _synthetic_unigram_words(docs: DataFrame) -> DataFrame:
     """(w, cnt, doc_id): word d = concat of (n%6+4) pieces, piece j =
     PAIRS[(d*7+j) % 5], count d%3+1 — every cell replayable from
     doc_id alone."""
-    from collections.abc import Iterator
+    def build(doc_id, text):
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        m = n % 6 + 4
+        w = "".join(_UNIGRAM_PAIRS[(d * 7 + j) % 5] for j in range(m))
+        yield w, d % 3 + 1, d
 
-    import pandas as pd
-
-    def build(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {"w": [], "cnt": [], "doc_id": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                m = n % 6 + 4
-                rows["w"].append(
-                    "".join(_UNIGRAM_PAIRS[(d * 7 + j) % 5] for j in range(m))
-                )
-                rows["cnt"].append(d % 3 + 1)
-                rows["doc_id"].append(d)
-            yield pd.DataFrame(rows)
-
-    return docs.select("doc_id", "text").mapInPandas(
-        build, "w string, cnt long, doc_id long"
+    return map_rows(
+        docs.select("doc_id", "text"), build, "w string, cnt long, doc_id long"
     )
 
 
@@ -4533,65 +4495,55 @@ def q_parquet_rowgroup_prune_plan(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("llm", "quality", "expectations", "source"),
 )
 def q_jsonschema_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    schema = {
+        "type": "object",
+        "required": ["id", "name", "score", "tag"],
+        "additionalProperties": False,
+        "properties": {
+            "id": {"type": "integer"},
+            "name": {"type": "string", "maxLength": 40},
+            "score": {"type": "number", "minimum": 0, "maximum": 100},
+            "tag": {"enum": ["a", "b", "c"]},
+            "flags": {"type": "array", "items": {"type": "boolean"}},
+        },
+    }
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, text):
         import json as _json
 
         from shared_etl_pipelines_spark.sources.jsonschema import (
             validate_record,
         )
 
-        schema = {
-            "type": "object",
-            "required": ["id", "name", "score", "tag"],
-            "additionalProperties": False,
-            "properties": {
-                "id": {"type": "integer"},
-                "name": {"type": "string", "maxLength": 40},
-                "score": {"type": "number", "minimum": 0, "maximum": 100},
-                "tag": {"enum": ["a", "b", "c"]},
-                "flags": {"type": "array", "items": {"type": "boolean"}},
-            },
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        rec = {
+            "id": d,
+            "name": "n" * (n % 30),
+            "score": d % 100,
+            "tag": ["a", "b", "c"][d % 3],
+            "flags": [True],
         }
-        cols = ("doc_id", "verdict", "n_violations", "first_path")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                rec = {
-                    "id": d,
-                    "name": "n" * (n % 30),
-                    "score": d % 100,
-                    "tag": ["a", "b", "c"][d % 3],
-                    "flags": [True],
-                }
-                c = d % 6
-                if c == 1:
-                    del rec["id"]
-                elif c == 2:
-                    rec["id"] = "not-an-int"
-                elif c == 3:
-                    rec["score"] = 150
-                elif c == 4:
-                    rec["tag"] = "z"
-                elif c == 5:
-                    rec["name"] = "n" * 50
-                blob = _json.dumps(rec, sort_keys=True).encode()
-                if d % 9 == 8:
-                    blob = blob[: max(len(blob) - 3, 1)]  # torn record
-                v = validate_record(blob, schema)
-                rows["doc_id"].append(d)
-                rows["verdict"].append(v["verdict"])
-                rows["n_violations"].append(v["n_violations"])
-                rows["first_path"].append(v["first_path"])
-            yield pd.DataFrame(rows)
+        c = d % 6
+        if c == 1:
+            del rec["id"]
+        elif c == 2:
+            rec["id"] = "not-an-int"
+        elif c == 3:
+            rec["score"] = 150
+        elif c == 4:
+            rec["tag"] = "z"
+        elif c == 5:
+            rec["name"] = "n" * 50
+        blob = _json.dumps(rec, sort_keys=True).encode()
+        if d % 9 == 8:
+            blob = blob[: max(len(blob) - 3, 1)]  # torn record
+        v = validate_record(blob, schema)
+        yield d, v["verdict"], v["n_violations"], v["first_path"]
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id long, verdict string, n_violations int, first_path string",
     )
@@ -4618,57 +4570,40 @@ def q_jsonschema_contract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "code", "source"),
 )
 def q_lfs_pointer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, text):
         import hashlib
 
         from shared_etl_pipelines_spark.sources import lfs as L
 
-        cols = ("doc_id", "kind", "oid", "size", "n_extra")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                oid = hashlib.sha256(str(d).encode()).hexdigest()
-                c = d % 4
-                if c == 0:
-                    blob = L.build_lfs_pointer(oid, n * 1000)
-                elif c == 1:
-                    blob = L.build_lfs_pointer(
-                        oid, n * 1000, extra={"x-meta": "demo"}
-                    )
-                elif c == 2:
-                    blob = f"def f():\n    return {d}\n".encode()
-                else:  # almost-pointer: oid too short
-                    blob = L.build_lfs_pointer(oid, n * 1000).replace(
-                        oid.encode(), oid[:60].encode()
-                    )
-                rows["doc_id"].append(d)
-                if not L.is_probably_pointer(blob):
-                    rows["kind"].append("source")
-                    rows["oid"].append("")
-                    rows["size"].append(0)
-                    rows["n_extra"].append(0)
-                    continue
-                try:
-                    p = L.parse_lfs_pointer(blob)
-                    rows["kind"].append("pointer")
-                    rows["oid"].append(p["oid"])
-                    rows["size"].append(p["size"])
-                    rows["n_extra"].append(len(p["extra_keys"]))
-                except ValueError:
-                    rows["kind"].append("malformed")
-                    rows["oid"].append("")
-                    rows["size"].append(0)
-                    rows["n_extra"].append(0)
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        oid = hashlib.sha256(str(d).encode()).hexdigest()
+        c = d % 4
+        if c == 0:
+            blob = L.build_lfs_pointer(oid, n * 1000)
+        elif c == 1:
+            blob = L.build_lfs_pointer(
+                oid, n * 1000, extra={"x-meta": "demo"}
+            )
+        elif c == 2:
+            blob = f"def f():\n    return {d}\n".encode()
+        else:  # almost-pointer: oid too short
+            blob = L.build_lfs_pointer(oid, n * 1000).replace(
+                oid.encode(), oid[:60].encode()
+            )
+        if not L.is_probably_pointer(blob):
+            yield d, "source", "", 0, 0
+            return
+        try:
+            p = L.parse_lfs_pointer(blob)
+            out = (d, "pointer", p["oid"], p["size"], len(p["extra_keys"]))
+        except ValueError:
+            out = (d, "malformed", "", 0, 0)
+        yield out
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id long, kind string, oid string, size long, n_extra int",
     )
@@ -4723,134 +4658,111 @@ def q_lfs_pointer_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_compression_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def build(d: int, payload: bytes) -> bytes:
         import bz2
         import lzma
         import zlib as _zlib
 
         from shared_etl_pipelines_spark.sources import compression as C
 
-        def build(d: int, payload: bytes) -> bytes:
-            c = d % 5
-            if c == 0:
-                blob = C.encode_gzip_member(
-                    payload, mtime=d * 3600, os_byte=d % 13,
-                    fname=f"doc-{d}.txt" if d % 2 == 0 else "",
-                    fcomment="c" if d % 3 == 0 else "",
-                    hcrc=d % 7 == 2,
-                    extra=b"XX\x02\x00ab" if d % 11 == 9 else None,
+        c = d % 5
+        if c == 0:
+            blob = C.encode_gzip_member(
+                payload, mtime=d * 3600, os_byte=d % 13,
+                fname=f"doc-{d}.txt" if d % 2 == 0 else "",
+                fcomment="c" if d % 3 == 0 else "",
+                hcrc=d % 7 == 2,
+                extra=b"XX\x02\x00ab" if d % 11 == 9 else None,
+            )
+            if d % 4 == 0:
+                blob += C.encode_gzip_member(payload, mtime=d * 3600)
+        elif c == 1:
+            blob = _zlib.compress(payload, 6)
+        elif c == 2:
+            frame = C.encode_zstd_frame(
+                len(payload),
+                window_log=None if d % 2 == 1 else 10 + d % 10,
+                dict_id=d * 7 % 70000 + 1 if d % 6 == 3 else 0,
+                checksum=d % 4 == 2,
+                payload=bytes((d + j) % 256 for j in range(9)),
+            )
+            blob = (
+                C.encode_zstd_skippable(
+                    bytes((d + j) % 256 for j in range(d % 7 + 1)),
+                    nibble=d % 16,
                 )
-                if d % 4 == 0:
-                    blob += C.encode_gzip_member(payload, mtime=d * 3600)
-            elif c == 1:
-                blob = _zlib.compress(payload, 6)
-            elif c == 2:
-                frame = C.encode_zstd_frame(
-                    len(payload),
-                    window_log=None if d % 2 == 1 else 10 + d % 10,
-                    dict_id=d * 7 % 70000 + 1 if d % 6 == 3 else 0,
-                    checksum=d % 4 == 2,
-                    payload=bytes((d + j) % 256 for j in range(9)),
+                + frame
+                if d % 3 == 0
+                else frame
+            )
+        elif c == 3:
+            blob = lzma.compress(
+                payload,
+                check=lzma.CHECK_CRC32 if d % 2 == 1 else lzma.CHECK_CRC64,
+            )
+        else:
+            blob = bz2.compress(payload, d % 9 + 1)
+        if d % 9 == 8:
+            blob = blob[:6]  # structural break -> quarantine
+        return blob
+
+    def evaluate(doc_id, payload):
+        from shared_etl_pipelines_spark.sources import compression as C
+
+        d = int(doc_id)
+        data = str(payload).encode("utf-8")
+        blob = build(d, data)
+        codec = C.sniff_codec(blob)
+        try:
+            if codec == "gzip":
+                ms = C.parse_gzip_members(blob)
+                out = (
+                    d, codec, len(ms),
+                    sum(m["n_uncompressed"] for m in ms), 0,
+                    "crc32", ms[0]["mtime"], ms[0]["fname"], 0,
+                    True, "ok",
                 )
-                blob = (
-                    C.encode_zstd_skippable(
-                        bytes((d + j) % 256 for j in range(d % 7 + 1)),
-                        nibble=d % 16,
-                    )
-                    + frame
-                    if d % 3 == 0
-                    else frame
+            elif codec == "zlib":
+                o = C.parse_zlib(blob)
+                out = (
+                    d, codec, 1, o["n_uncompressed"],
+                    o["window_log"], "adler32", 0, "", 0, True, "ok",
                 )
-            elif c == 3:
-                blob = lzma.compress(
-                    payload,
-                    check=lzma.CHECK_CRC32 if d % 2 == 1 else lzma.CHECK_CRC64,
+            elif codec == "zstd":
+                fr = C.parse_zstd_frames(blob)
+                z = [f for f in fr if f["kind"] == "zstd"][0]
+                out = (
+                    d, codec, len(fr), z["content_size"],
+                    z["window_log"],
+                    "xxh64" if z["has_checksum"] else "none",
+                    0, "", 0, False, "header-only",
+                )
+            elif codec == "xz":
+                o = C.parse_xz(blob)
+                out = (
+                    d, codec, 1, o["n_uncompressed"], 0,
+                    o["check_type"], 0, "", 0, True, "ok",
+                )
+            elif codec == "bzip2":
+                o = C.parse_bzip2(blob)
+                out = (
+                    d, codec, 1, o["n_uncompressed"], 0, "crc32",
+                    0, "", o["level"], True, "ok",
                 )
             else:
-                blob = bz2.compress(payload, d % 9 + 1)
-            if d % 9 == 8:
-                blob = blob[:6]  # structural break -> quarantine
-            return blob
-
-        cols = (
-            "doc_id", "codec", "n_frames", "content_size", "window_log",
-            "check_type", "mtime", "fname", "bz_level", "is_full_decode",
-            "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def emit(d, codec, nf, cs, wl, ct, mt, fn, lvl, full, reason):
-                rows["doc_id"].append(d)
-                rows["codec"].append(codec)
-                rows["n_frames"].append(nf)
-                rows["content_size"].append(cs)
-                rows["window_log"].append(wl)
-                rows["check_type"].append(ct)
-                rows["mtime"].append(mt)
-                rows["fname"].append(fn)
-                rows["bz_level"].append(lvl)
-                rows["is_full_decode"].append(full)
-                rows["reason"].append(reason)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = str(payload).encode("utf-8")
-                blob = build(d, data)
-                codec = C.sniff_codec(blob)
-                try:
-                    if codec == "gzip":
-                        ms = C.parse_gzip_members(blob)
-                        emit(
-                            d, codec, len(ms),
-                            sum(m["n_uncompressed"] for m in ms), 0,
-                            "crc32", ms[0]["mtime"], ms[0]["fname"], 0,
-                            True, "ok",
-                        )
-                    elif codec == "zlib":
-                        o = C.parse_zlib(blob)
-                        emit(
-                            d, codec, 1, o["n_uncompressed"],
-                            o["window_log"], "adler32", 0, "", 0, True, "ok",
-                        )
-                    elif codec == "zstd":
-                        fr = C.parse_zstd_frames(blob)
-                        z = [f for f in fr if f["kind"] == "zstd"][0]
-                        emit(
-                            d, codec, len(fr), z["content_size"],
-                            z["window_log"],
-                            "xxh64" if z["has_checksum"] else "none",
-                            0, "", 0, False, "header-only",
-                        )
-                    elif codec == "xz":
-                        o = C.parse_xz(blob)
-                        emit(
-                            d, codec, 1, o["n_uncompressed"], 0,
-                            o["check_type"], 0, "", 0, True, "ok",
-                        )
-                    elif codec == "bzip2":
-                        o = C.parse_bzip2(blob)
-                        emit(
-                            d, codec, 1, o["n_uncompressed"], 0, "crc32",
-                            0, "", o["level"], True, "ok",
-                        )
-                    else:
-                        raise ValueError("unknown codec")
-                except ValueError:
-                    # sniff may still name the codec; keep it visible
-                    emit(
-                        d,
-                        ("gzip", "zlib", "zstd", "xz", "bzip2")[d % 5],
-                        0, 0, 0, "", 0, "", 0, False, "corrupt",
-                    )
-            yield pd.DataFrame(rows)
+                raise ValueError("unknown codec")
+        except ValueError:
+            # sniff may still name the codec; keep it visible
+            out = (
+                d,
+                ("gzip", "zlib", "zstd", "xz", "bzip2")[d % 5],
+                0, 0, 0, "", 0, "", 0, False, "corrupt",
+            )
+        yield out
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, codec string, n_frames int, content_size bigint, "
         "window_log int, check_type string, mtime bigint, fname string, "
@@ -9832,38 +9744,26 @@ def q_mp3_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "curation", "unicode"),
 )
 def q_unicode_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    # cls 1 injects the DECOMPOSED form: 'e' + U+0301 combining
+    # acute — visually 'cafe-acute' but not NFC
+    suffixes = (" ok", " cafe\u0301", " \uFF21\uFF22", " \uFB01le")
 
-    import pandas as pd
-
-    def audit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def audit(d, text):
         import unicodedata
 
-        # cls 1 injects the DECOMPOSED form: 'e' + U+0301 combining
-        # acute — visually 'cafe-acute' but not NFC
-        suffixes = (" ok", " cafe\u0301", " \uFF21\uFF22", " \uFB01le")
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "cls": [], "is_nfc": [], "is_nfkc": [],
-                "nfc_text": [], "nfkc_text": [],
-            }
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                doc = str(text) + suffixes[d % 4]
-                rows["doc_id"].append(d)
-                rows["cls"].append(d % 4)
-                rows["is_nfc"].append(
-                    unicodedata.is_normalized("NFC", doc)
-                )
-                rows["is_nfkc"].append(
-                    unicodedata.is_normalized("NFKC", doc)
-                )
-                rows["nfc_text"].append(unicodedata.normalize("NFC", doc))
-                rows["nfkc_text"].append(unicodedata.normalize("NFKC", doc))
-            yield pd.DataFrame(rows)
+        d = int(d)
+        doc = str(text) + suffixes[d % 4]
+        yield (
+            d, d % 4,
+            unicodedata.is_normalized("NFC", doc),
+            unicodedata.is_normalized("NFKC", doc),
+            unicodedata.normalize("NFC", doc),
+            unicodedata.normalize("NFKC", doc),
+        )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         audit,
         "doc_id bigint, cls int, is_nfc boolean, is_nfkc boolean, "
         "nfc_text string, nfkc_text string",
@@ -9907,51 +9807,39 @@ def q_unicode_normalization_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("llm", "curation", "crawl", "dedup"),
 )
 def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def canon(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def canon(d):
         from shared_etl_pipelines_spark.functions.urls import (
             canonicalize_url,
         )
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "is_valid": [], "canonical": [], "reason": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                g, pa, pb = d % 15, d % 6, d % 9
-                variant = d % 5
-                if d % 23 == 0:
-                    url = f"http://site{g}.test/%zz"
-                elif variant == 0:
-                    url = f"http://site{g}.test:80/dir{pa}/page{pb}"
-                elif variant == 1:
-                    url = f"HTTP://SITE{g}.TEST/dir{pa}/page{pb}"
-                elif variant == 2:
-                    url = (
-                        f"http://site{g}.test/dir{pa}/../dir{pa}"
-                        f"/./page{pb}"
-                    )
-                elif variant == 3:
-                    url = f"http://site{g}.test/dir{pa}/pag%65{pb}"
-                else:
-                    url = f"http://site{g}.test/dir{pa}/page{pb}#sec{d % 3}"
-                try:
-                    canonical = canonicalize_url(url)
-                    ok, reason = True, "ok"
-                except ValueError:
-                    canonical, ok, reason = "", False, "malformed_escape"
-                rows["doc_id"].append(d)
-                rows["is_valid"].append(ok)
-                rows["canonical"].append(canonical)
-                rows["reason"].append(reason)
-            yield pd.DataFrame(rows)
+        d = int(d)
+        g, pa, pb = d % 15, d % 6, d % 9
+        variant = d % 5
+        if d % 23 == 0:
+            url = f"http://site{g}.test/%zz"
+        elif variant == 0:
+            url = f"http://site{g}.test:80/dir{pa}/page{pb}"
+        elif variant == 1:
+            url = f"HTTP://SITE{g}.TEST/dir{pa}/page{pb}"
+        elif variant == 2:
+            url = (
+                f"http://site{g}.test/dir{pa}/../dir{pa}"
+                f"/./page{pb}"
+            )
+        elif variant == 3:
+            url = f"http://site{g}.test/dir{pa}/pag%65{pb}"
+        else:
+            url = f"http://site{g}.test/dir{pa}/page{pb}#sec{d % 3}"
+        try:
+            canonical = canonicalize_url(url)
+            ok, reason = True, "ok"
+        except ValueError:
+            canonical, ok, reason = "", False, "malformed_escape"
+        yield d, ok, canonical, reason
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         canon,
         "doc_id bigint, is_valid boolean, canonical string, reason string",
     )
@@ -10002,38 +9890,25 @@ def q_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "curation", "crawl", "audit"),
 )
 def q_robots_crawl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    cache: dict[int, object] = {}  # per task: each unpickles its own
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(d):
         from shared_etl_pipelines_spark.sources.robots import robots_allowed
 
-        cache: dict[int, object] = {}
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "domain": [], "path": [], "allowed": [],
-                "rule": [],
-            }
-            for d in pdf["doc_id"]:
-                d = int(d)
-                g = d % 20
-                path = f"/p{d % 7}/q{d % 11}"
-                if g not in cache:
-                    cache[g] = _robots_fixture(g)
-                if cache[g] is None:
-                    allowed, rule = True, ""
-                else:
-                    allowed, rule = robots_allowed(cache[g], "sparkbot", path)
-                rows["doc_id"].append(d)
-                rows["domain"].append(g)
-                rows["path"].append(path)
-                rows["allowed"].append(allowed)
-                rows["rule"].append(rule)
-            yield pd.DataFrame(rows)
+        d = int(d)
+        g = d % 20
+        path = f"/p{d % 7}/q{d % 11}"
+        if g not in cache:
+            cache[g] = _robots_fixture(g)
+        if cache[g] is None:
+            allowed, rule = True, ""
+        else:
+            allowed, rule = robots_allowed(cache[g], "sparkbot", path)
+        yield d, g, path, allowed, rule
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, domain int, path string, allowed boolean, "
         "rule string",
@@ -10198,63 +10073,39 @@ def _robots_fixture(g: int):
     tags=("llm", "curation", "crawl", "audit"),
 )
 def q_sitemap_url_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.sitemaps import (
             parse_sitemap,
             validate_entry,
         )
 
-        build_xml = _sitemap_fixture_xml
-        cols = (
-            "doc_id", "kind", "entry_idx", "loc", "lastmod", "changefreq",
-            "priority_eff", "is_valid", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def emit(d, kind, idx, loc, lm, cf, pr, ok, reason):
-                rows["doc_id"].append(d)
-                rows["kind"].append(kind)
-                rows["entry_idx"].append(idx)
-                rows["loc"].append(loc)
-                rows["lastmod"].append(lm)
-                rows["changefreq"].append(cf)
-                rows["priority_eff"].append(pr)
-                rows["is_valid"].append(ok)
-                rows["reason"].append(reason)
-
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                try:
-                    parsed = parse_sitemap(build_xml(d, n))
-                except ValueError:
-                    emit(d, "corrupt", -1, "", "", "", 0.0, False, "corrupt")
-                    continue
-                kind = parsed["kind"]
-                for i, entry in enumerate(parsed["entries"]):
-                    ok, reason = validate_entry(entry, kind)
-                    if kind == "urlset" and ok:
-                        pr = (
-                            round(float(entry["priority"]), 4)
-                            if entry["priority"] is not None
-                            else 0.5
-                        )
-                    else:
-                        pr = 0.0
-                    emit(
-                        d, kind, i, entry["loc"] or "",
-                        entry["lastmod"] or "",
-                        entry["changefreq"] or "", pr, ok, reason,
-                    )
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        try:
+            parsed = parse_sitemap(_sitemap_fixture_xml(d, n))
+        except ValueError:
+            yield d, "corrupt", -1, "", "", "", 0.0, False, "corrupt"
+            return
+        kind = parsed["kind"]
+        for i, entry in enumerate(parsed["entries"]):
+            ok, reason = validate_entry(entry, kind)
+            if kind == "urlset" and ok:
+                pr = (
+                    round(float(entry["priority"]), 4)
+                    if entry["priority"] is not None
+                    else 0.5
+                )
+            else:
+                pr = 0.0
+            yield (
+                d, kind, i, entry["loc"] or "",
+                entry["lastmod"] or "",
+                entry["changefreq"] or "", pr, ok, reason,
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, kind string, entry_idx int, loc string, "
         "lastmod string, changefreq string, priority_eff double, "
@@ -10323,84 +10174,59 @@ def q_sitemap_url_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "codec", "image"),
 )
 def q_heif_item_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import heif
 
-        cols = (
-            "doc_id", "item_id", "item_type", "is_primary", "width",
-            "height", "n_bytes", "hevc_profile", "hevc_level", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                w = (n % 4 + 1) * 16 + 2 * (d % 3)
-                h = ((n // 4) % 4 + 1) * 16 + 2 * ((d // 3) % 3)
-                items = [
-                    dict(
-                        item_id=1, item_type="hvc1",
-                        payload=bytes((d + j) % 256 for j in range(20 + d % 7)),
-                        ispe=(w, h),
-                        hvcc=(d % 3 + 1, (90, 93, 120, 123)[d % 4], (d // 2) % 2),
-                    ),
-                    dict(
-                        item_id=2, item_type="hvc1", payload=b"\x04" * 8,
-                        ispe=(48, 32), hvcc=(1, 60, 0),
-                    ),
-                ]
-                if d % 2 == 1:
-                    items.append(
-                        dict(
-                            item_id=3, item_type="Exif",
-                            payload=b"E" * (10 + d % 5),
-                        )
-                    )
-                if d % 5 == 0:
-                    items.append(
-                        dict(
-                            item_id=4, item_type="grid",
-                            payload=bytes([0, 0, (d // 5) % 3, d % 3])
-                            + (w * 2).to_bytes(2, "big")
-                            + (h * 2).to_bytes(2, "big"),
-                        )
-                    )
-                blob = heif.encode_heif(items, primary_id=1)
-                if d % 9 == 8:
-                    blob = blob[:40]  # torn meta -> quarantine
-                try:
-                    out = heif.parse_heif(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["item_id"].append(-1)
-                    rows["item_type"].append("corrupt")
-                    rows["is_primary"].append(False)
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["n_bytes"].append(0)
-                    rows["hevc_profile"].append(0)
-                    rows["hevc_level"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for item in out["items"]:
-                    rows["doc_id"].append(d)
-                    rows["item_id"].append(item["item_id"])
-                    rows["item_type"].append(item["item_type"])
-                    rows["is_primary"].append(item["is_primary"])
-                    rows["width"].append(item["width"])
-                    rows["height"].append(item["height"])
-                    rows["n_bytes"].append(item["n_bytes"])
-                    rows["hevc_profile"].append(item["hevc_profile"])
-                    rows["hevc_level"].append(item["hevc_level"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        w = (n % 4 + 1) * 16 + 2 * (d % 3)
+        h = ((n // 4) % 4 + 1) * 16 + 2 * ((d // 3) % 3)
+        items = [
+            dict(
+                item_id=1, item_type="hvc1",
+                payload=bytes((d + j) % 256 for j in range(20 + d % 7)),
+                ispe=(w, h),
+                hvcc=(d % 3 + 1, (90, 93, 120, 123)[d % 4], (d // 2) % 2),
+            ),
+            dict(
+                item_id=2, item_type="hvc1", payload=b"\x04" * 8,
+                ispe=(48, 32), hvcc=(1, 60, 0),
+            ),
+        ]
+        if d % 2 == 1:
+            items.append(
+                dict(
+                    item_id=3, item_type="Exif",
+                    payload=b"E" * (10 + d % 5),
+                )
+            )
+        if d % 5 == 0:
+            items.append(
+                dict(
+                    item_id=4, item_type="grid",
+                    payload=bytes([0, 0, (d // 5) % 3, d % 3])
+                    + (w * 2).to_bytes(2, "big")
+                    + (h * 2).to_bytes(2, "big"),
+                )
+            )
+        blob = heif.encode_heif(items, primary_id=1)
+        if d % 9 == 8:
+            blob = blob[:40]  # torn meta -> quarantine
+        try:
+            out = heif.parse_heif(blob)
+        except ValueError:
+            yield d, -1, "corrupt", False, 0, 0, 0, 0, 0, "corrupt"
+            return
+        for item in out["items"]:
+            yield (
+                d, item["item_id"], item["item_type"], item["is_primary"],
+                item["width"], item["height"], item["n_bytes"],
+                item["hevc_profile"], item["hevc_level"], "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, item_id int, item_type string, is_primary boolean, "
         "width int, height int, n_bytes int, hevc_profile int, "
@@ -10448,64 +10274,45 @@ def q_heif_item_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "storage", "audit", "curation"),
 )
 def q_prom_scrape_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    def build(d: int, n: int) -> str:
+        k = n % 4 + 1
+        lines = ["# HELP app_temp Current temperature.",
+                 "# TYPE app_temp gauge"]
+        for i in range(k):
+            lines.append(
+                f'app_temp{{host="h{i}",dc="dc\\"{d % 3}"}} '
+                f"{(d % 40) - 10 + i}"
+            )
+        lines += ["# TYPE req_total counter",
+                  f"req_total {d * 3 + 1} 1755302400000",
+                  "# TYPE lat histogram",
+                  f'lat_bucket{{le="0.5"}} {d % 5}',
+                  f'lat_bucket{{le="1"}} {d % 5 + 2}']
+        if d % 7 != 4:  # the broken class drops its +Inf bucket
+            lines.append(f'lat_bucket{{le="+Inf"}} {d % 5 + 4}')
+        lines += [f"lat_count {d % 5 + 4}", f"lat_sum {d % 5 + 4}.5"]
+        out = "\n".join(lines)
+        return out + "\n}{ broken" if d % 9 == 8 else out
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.promtext import (
             parse_prom_text,
         )
 
-        def build(d: int, n: int) -> str:
-            k = n % 4 + 1
-            lines = ["# HELP app_temp Current temperature.",
-                     "# TYPE app_temp gauge"]
-            for i in range(k):
-                lines.append(
-                    f'app_temp{{host="h{i}",dc="dc\\"{d % 3}"}} '
-                    f"{(d % 40) - 10 + i}"
-                )
-            lines += ["# TYPE req_total counter",
-                      f"req_total {d * 3 + 1} 1755302400000",
-                      "# TYPE lat histogram",
-                      f'lat_bucket{{le="0.5"}} {d % 5}',
-                      f'lat_bucket{{le="1"}} {d % 5 + 2}']
-            if d % 7 != 4:  # the broken class drops its +Inf bucket
-                lines.append(f'lat_bucket{{le="+Inf"}} {d % 5 + 4}')
-            lines += [f"lat_count {d % 5 + 4}", f"lat_sum {d % 5 + 4}.5"]
-            out = "\n".join(lines)
-            return out + "\n}{ broken" if d % 9 == 8 else out
-
-        cols = ("doc_id", "family", "mtype", "n_samples", "buckets_ok",
-                "reason")
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                try:
-                    o = parse_prom_text(build(d, n))
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["family"].append("")
-                    rows["mtype"].append("")
-                    rows["n_samples"].append(0)
-                    rows["buckets_ok"].append(False)
-                    rows["reason"].append("corrupt")
-                    continue
-                for fam in sorted(o["metrics"]):
-                    meta = o["metrics"][fam]
-                    rows["doc_id"].append(d)
-                    rows["family"].append(fam)
-                    rows["mtype"].append(meta["type"])
-                    rows["n_samples"].append(meta["n_samples"])
-                    rows["buckets_ok"].append(meta["buckets_ok"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        try:
+            o = parse_prom_text(build(d, n))
+        except ValueError:
+            yield d, "", "", 0, False, "corrupt"
+            return
+        for fam in sorted(o["metrics"]):
+            meta = o["metrics"][fam]
+            yield d, fam, meta["type"], meta["n_samples"], meta["buckets_ok"], "ok"
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, family string, mtype string, n_samples int, "
         "buckets_ok boolean, reason string",
@@ -10541,83 +10348,62 @@ def q_prom_scrape_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "pii", "audit", "curation"),
 )
 def q_jwt_token_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    import base64
+    import json
+    import re
 
-    import pandas as pd
+    rx = re.compile(
+        r"eyJ[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\.[A-Za-z0-9_-]*"
+    )
 
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import base64
-        import json
-        import re
+    def b64url(obj) -> str:
+        raw = json.dumps(obj, separators=(",", ":")).encode()
+        return base64.urlsafe_b64encode(raw).rstrip(b"=").decode()
 
-        rx = re.compile(
-            r"eyJ[A-Za-z0-9_-]+\.[A-Za-z0-9_-]+\.[A-Za-z0-9_-]*"
+    def b64url_dec(part: str) -> dict:
+        pad = "=" * (-len(part) % 4)
+        out = json.loads(base64.urlsafe_b64decode(part + pad))
+        if not isinstance(out, dict):
+            raise ValueError("jwt: segment is not an object")
+        return out
+
+    def evaluate(doc_id, payload):
+        d = int(doc_id)
+        line = str(payload)
+        if d % 6 != 5:
+            header = b64url(
+                {"alg": ("HS256", "RS256", "none", "ES256")[d % 4],
+                 "typ": "JWT"}
+            )
+            claims = b64url(
+                {"sub": f"u{d}", "exp": 1755302400 + d}
+            )
+            sig = b64url({"s": d % 97})[:20]
+            tok = f"{header}.{claims}.{sig}"
+            if d % 9 == 8:
+                # base64url-charset but not JSON -> bad-encoding
+                tok = f"{header}.AAAA.{sig}"
+            line = f"{line} bearer={tok}"
+        m = rx.search(line)
+        if m is None:
+            yield d, False, "", False, False, 0, "no-jwt"
+            return
+        h_part, p_part, _sig = m.group(0).split(".")
+        try:
+            header = b64url_dec(h_part)
+            claims = b64url_dec(p_part)
+        except (ValueError, json.JSONDecodeError):
+            yield d, True, "", False, False, 0, "bad-encoding"
+            return
+        alg = str(header.get("alg", ""))
+        yield (
+            d, True, alg, alg.lower() == "none",
+            "sub" in claims, int(claims.get("exp", 0)), "ok",
         )
-
-        def b64url(obj) -> str:
-            raw = json.dumps(obj, separators=(",", ":")).encode()
-            return base64.urlsafe_b64encode(raw).rstrip(b"=").decode()
-
-        def b64url_dec(part: str) -> dict:
-            pad = "=" * (-len(part) % 4)
-            out = json.loads(base64.urlsafe_b64decode(part + pad))
-            if not isinstance(out, dict):
-                raise ValueError("jwt: segment is not an object")
-            return out
-
-        cols = (
-            "doc_id", "has_jwt", "alg", "is_none_alg", "has_sub", "exp",
-            "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                line = str(payload)
-                if d % 6 != 5:
-                    header = b64url(
-                        {"alg": ("HS256", "RS256", "none", "ES256")[d % 4],
-                         "typ": "JWT"}
-                    )
-                    claims = b64url(
-                        {"sub": f"u{d}", "exp": 1755302400 + d}
-                    )
-                    sig = b64url({"s": d % 97})[:20]
-                    tok = f"{header}.{claims}.{sig}"
-                    if d % 9 == 8:
-                        # base64url-charset but not JSON -> bad-encoding
-                        tok = f"{header}.AAAA.{sig}"
-                    line = f"{line} bearer={tok}"
-
-                def emit(hj, alg, none_, sub, exp, reason):
-                    rows["doc_id"].append(d)
-                    rows["has_jwt"].append(hj)
-                    rows["alg"].append(alg)
-                    rows["is_none_alg"].append(none_)
-                    rows["has_sub"].append(sub)
-                    rows["exp"].append(exp)
-                    rows["reason"].append(reason)
-
-                m = rx.search(line)
-                if m is None:
-                    emit(False, "", False, False, 0, "no-jwt")
-                    continue
-                h_part, p_part, _sig = m.group(0).split(".")
-                try:
-                    header = b64url_dec(h_part)
-                    claims = b64url_dec(p_part)
-                except (ValueError, json.JSONDecodeError):
-                    emit(True, "", False, False, 0, "bad-encoding")
-                    continue
-                alg = str(header.get("alg", ""))
-                emit(
-                    True, alg, alg.lower() == "none",
-                    "sub" in claims, int(claims.get("exp", 0)), "ok",
-                )
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, has_jwt boolean, alg string, is_none_alg boolean, "
         "has_sub boolean, exp bigint, reason string",
@@ -10660,62 +10446,41 @@ def q_jwt_token_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_cbor_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import cbor as C
 
-        cols = (
-            "doc_id", "claim", "n_assertions", "ts", "digest_len",
-            "score", "n_keys", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        manifest = {
+            "claim": f"urn:c2pa:{d}",
+            "gen": "spark-graft",
+            "ts": ("tag", 1, 1755302400 + d),
+            "assertions": [
+                {"label": f"a{i}", "n": (d + i) % 50,
+                 "ok": (d + i) % 2 == 0}
+                for i in range(n % 4 + 1)
+            ],
+            "digest": bytes((d + j) % 256 for j in range(8)),
+            "score": (d % 16) / 8,
+        }
+        blob = C.encode_cbor(manifest)
+        if d % 9 == 8:
+            blob = blob[:-5]
+        try:
+            m = C.decode_cbor(blob)
+        except ValueError:
+            yield d, "", 0, 0, 0, 0.0, 0, "corrupt"
+            return
+        tag, tagno, ts = m["ts"]
+        yield (
+            d, m["claim"], len(m["assertions"]),
+            int(ts) if tagno == 1 else 0, len(m["digest"]),
+            round(float(m["score"]), 4), len(m), "ok",
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                manifest = {
-                    "claim": f"urn:c2pa:{d}",
-                    "gen": "spark-graft",
-                    "ts": ("tag", 1, 1755302400 + d),
-                    "assertions": [
-                        {"label": f"a{i}", "n": (d + i) % 50,
-                         "ok": (d + i) % 2 == 0}
-                        for i in range(n % 4 + 1)
-                    ],
-                    "digest": bytes((d + j) % 256 for j in range(8)),
-                    "score": (d % 16) / 8,
-                }
-                blob = C.encode_cbor(manifest)
-                if d % 9 == 8:
-                    blob = blob[:-5]
-                try:
-                    m = C.decode_cbor(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["claim"].append("")
-                    rows["n_assertions"].append(0)
-                    rows["ts"].append(0)
-                    rows["digest_len"].append(0)
-                    rows["score"].append(0.0)
-                    rows["n_keys"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                tag, tagno, ts = m["ts"]
-                rows["doc_id"].append(d)
-                rows["claim"].append(m["claim"])
-                rows["n_assertions"].append(len(m["assertions"]))
-                rows["ts"].append(int(ts) if tagno == 1 else 0)
-                rows["digest_len"].append(len(m["digest"]))
-                rows["score"].append(round(float(m["score"]), 4))
-                rows["n_keys"].append(len(m))
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, claim string, n_assertions int, ts bigint, "
         "digest_len int, score double, n_keys int, reason string",
@@ -10800,88 +10565,61 @@ def q_cbor_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_geojson_feature_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
-    from collections.abc import Iterator
+    def build(d: int, n: int) -> str:
+        w, h = n % 7 + 2, d % 5 + 2
+        rings = [[[0, 0], [w, 0], [w, h], [0, h], [0, 0]]]
+        if d % 3 == 0:
+            rings.append([[1, 1], [1, 2], [2, 2], [2, 1], [1, 1]])
+        feats = [
+            {"type": "Feature", "properties": {"zone": d % 7},
+             "geometry": {"type": "Polygon", "coordinates": rings}},
+        ]
+        if d % 4 == 1:
+            w2 = d % 3 + 2
+            feats.append(
+                {"type": "Feature", "properties": {},
+                 "geometry": {"type": "Polygon", "coordinates":
+                    [[[0, 0], [0, 2], [w2, 2], [w2, 0], [0, 0]]]}}
+            )
+        feats.append(
+            {"type": "Feature",
+             "properties": {"id": d, "kind": "poi"},
+             "geometry": {"type": "Point",
+                          "coordinates": [d % 100, n % 50]}}
+        )
+        if d % 5 == 2:
+            feats.append(
+                {"type": "Feature", "properties": {},
+                 "geometry": {"type": "MultiLineString", "coordinates":
+                    [[[0, 0], [d % 9, n % 9]], [[1, 1], [2, 2]]]}}
+            )
+        doc = {"type": "FeatureCollection", "features": feats}
+        out = json.dumps(doc)
+        return out[:-9] if d % 9 == 8 else out
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.geojson import parse_geojson
 
-        def build(d: int, n: int) -> str:
-            w, h = n % 7 + 2, d % 5 + 2
-            rings = [[[0, 0], [w, 0], [w, h], [0, h], [0, 0]]]
-            if d % 3 == 0:
-                rings.append([[1, 1], [1, 2], [2, 2], [2, 1], [1, 1]])
-            feats = [
-                {"type": "Feature", "properties": {"zone": d % 7},
-                 "geometry": {"type": "Polygon", "coordinates": rings}},
-            ]
-            if d % 4 == 1:
-                w2 = d % 3 + 2
-                feats.append(
-                    {"type": "Feature", "properties": {},
-                     "geometry": {"type": "Polygon", "coordinates":
-                        [[[0, 0], [0, 2], [w2, 2], [w2, 0], [0, 0]]]}}
-                )
-            feats.append(
-                {"type": "Feature",
-                 "properties": {"id": d, "kind": "poi"},
-                 "geometry": {"type": "Point",
-                              "coordinates": [d % 100, n % 50]}}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        try:
+            feats = parse_geojson(build(d, n))
+        except ValueError:
+            yield d, -1, "", 0, 0, False, 0.0, 0.0, 0.0, 0.0, 0.0, 0, "corrupt"
+            return
+        for i, ft in enumerate(feats):
+            bb = ft["bbox"]
+            yield (
+                d, i, ft["geom_type"], ft["n_points"], ft["n_rings"],
+                ft["winding_ok"], round(ft["area2"], 4),
+                round(float(bb[0]), 4), round(float(bb[1]), 4),
+                round(float(bb[2]), 4), round(float(bb[3]), 4),
+                ft["n_props"], "ok",
             )
-            if d % 5 == 2:
-                feats.append(
-                    {"type": "Feature", "properties": {},
-                     "geometry": {"type": "MultiLineString", "coordinates":
-                        [[[0, 0], [d % 9, n % 9]], [[1, 1], [2, 2]]]}}
-                )
-            doc = {"type": "FeatureCollection", "features": feats}
-            out = json.dumps(doc)
-            return out[:-9] if d % 9 == 8 else out
-
-        cols = (
-            "doc_id", "feat_idx", "geom_type", "n_points", "n_rings",
-            "winding_ok", "area2", "minx", "miny", "maxx", "maxy",
-            "n_props", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                try:
-                    feats = parse_geojson(build(d, n))
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["feat_idx"].append(-1)
-                    rows["geom_type"].append("")
-                    rows["n_points"].append(0)
-                    rows["n_rings"].append(0)
-                    rows["winding_ok"].append(False)
-                    for f in ("area2", "minx", "miny", "maxx", "maxy"):
-                        rows[f].append(0.0)
-                    rows["n_props"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, ft in enumerate(feats):
-                    rows["doc_id"].append(d)
-                    rows["feat_idx"].append(i)
-                    rows["geom_type"].append(ft["geom_type"])
-                    rows["n_points"].append(ft["n_points"])
-                    rows["n_rings"].append(ft["n_rings"])
-                    rows["winding_ok"].append(ft["winding_ok"])
-                    rows["area2"].append(round(ft["area2"], 4))
-                    bb = ft["bbox"]
-                    rows["minx"].append(round(float(bb[0]), 4))
-                    rows["miny"].append(round(float(bb[1]), 4))
-                    rows["maxx"].append(round(float(bb[2]), 4))
-                    rows["maxy"].append(round(float(bb[3]), 4))
-                    rows["n_props"].append(ft["n_props"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, feat_idx int, geom_type string, n_points int, "
         "n_rings int, winding_ok boolean, area2 double, minx double, "
@@ -11166,74 +10904,50 @@ def q_license_detect_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "storage", "audit", "crawl"),
 )
 def q_torrent_metainfo_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import bencode as B
 
-        cols = (
-            "doc_id", "announce", "name", "piece_length", "n_pieces",
-            "total_length", "n_files", "private", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        pieces = bytes((d + j) % 256 for j in range(20 * (n % 50 + 1)))
+        info: dict = {
+            b"name": f"corpus-{d}".encode(),
+            b"piece length": 16384 * (n % 3 + 1),
+            b"pieces": pieces,
+        }
+        if d % 2 == 0:
+            info[b"length"] = (d % 97 + 1) * 1000
+        else:
+            info[b"files"] = [
+                {b"length": 500, b"path": [f"f{j}".encode()]}
+                for j in range(d % 4 + 1)
+            ]
+        if d % 3 == 0:
+            info[b"private"] = 1
+        # bencode requires sorted keys — build in sorted order
+        info = dict(sorted(info.items()))
+        blob = B.bencode(
+            {
+                b"announce":
+                    f"http://tr{d % 11}.test/announce".encode(),
+                b"info": info,
+            }
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                pieces = bytes((d + j) % 256 for j in range(20 * (n % 50 + 1)))
-                info: dict = {
-                    b"name": f"corpus-{d}".encode(),
-                    b"piece length": 16384 * (n % 3 + 1),
-                    b"pieces": pieces,
-                }
-                if d % 2 == 0:
-                    info[b"length"] = (d % 97 + 1) * 1000
-                else:
-                    info[b"files"] = [
-                        {b"length": 500, b"path": [f"f{j}".encode()]}
-                        for j in range(d % 4 + 1)
-                    ]
-                if d % 3 == 0:
-                    info[b"private"] = 1
-                # bencode requires sorted keys — build in sorted order
-                info = dict(sorted(info.items()))
-                blob = B.bencode(
-                    {
-                        b"announce":
-                            f"http://tr{d % 11}.test/announce".encode(),
-                        b"info": info,
-                    }
-                )
-                if d % 9 == 8:
-                    blob = blob[:-7]
-                try:
-                    o = B.parse_torrent(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["announce"].append("")
-                    rows["name"].append("")
-                    rows["piece_length"].append(0)
-                    rows["n_pieces"].append(0)
-                    rows["total_length"].append(0)
-                    rows["n_files"].append(0)
-                    rows["private"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                rows["doc_id"].append(d)
-                rows["announce"].append(o["announce"])
-                rows["name"].append(o["name"])
-                rows["piece_length"].append(o["piece_length"])
-                rows["n_pieces"].append(o["n_pieces"])
-                rows["total_length"].append(o["total_length"])
-                rows["n_files"].append(o["n_files"])
-                rows["private"].append(o["private"])
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        if d % 9 == 8:
+            blob = blob[:-7]
+        try:
+            o = B.parse_torrent(blob)
+        except ValueError:
+            yield d, "", "", 0, 0, 0, 0, 0, "corrupt"
+            return
+        yield (
+            d, o["announce"], o["name"], o["piece_length"], o["n_pieces"],
+            o["total_length"], o["n_files"], o["private"], "ok",
+        )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, announce string, name string, piece_length bigint, "
         "n_pieces int, total_length bigint, n_files int, private int, "
@@ -11284,73 +10998,42 @@ def q_torrent_metainfo_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "pii", "audit", "curation"),
 )
 def q_vcard_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import ical
 
-        cols = (
-            "doc_id", "card_idx", "version", "has_fn", "n_emails",
-            "n_phones", "n_email_domains", "email_domains", "has_photo",
-            "has_address", "n_props", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        text = "".join(
+            ical.encode_vcard(
+                f"Person {d}-{j}",
+                [
+                    f"user{d}@ex{(d * 5 + e) % 20}.test"
+                    for e in range((d + j) % 3)
+                ],
+                phones=(d + j) % 2,
+                photo=d % 6 == 1,
+                address=d % 4 == 2,
+            )
+            for j in range(n % 2 + 1)
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                text = "".join(
-                    ical.encode_vcard(
-                        f"Person {d}-{j}",
-                        [
-                            f"user{d}@ex{(d * 5 + e) % 20}.test"
-                            for e in range((d + j) % 3)
-                        ],
-                        phones=(d + j) % 2,
-                        photo=d % 6 == 1,
-                        address=d % 4 == 2,
-                    )
-                    for j in range(n % 2 + 1)
-                )
-                if d % 9 == 8:
-                    text = text.rsplit("END:VCARD", 1)[0]
-                try:
-                    cards = ical.parse_vcards(text)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["card_idx"].append(-1)
-                    rows["version"].append("")
-                    rows["has_fn"].append(False)
-                    rows["n_emails"].append(0)
-                    rows["n_phones"].append(0)
-                    rows["n_email_domains"].append(0)
-                    rows["email_domains"].append("")
-                    rows["has_photo"].append(False)
-                    rows["has_address"].append(False)
-                    rows["n_props"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for j, c in enumerate(cards):
-                    rows["doc_id"].append(d)
-                    rows["card_idx"].append(j)
-                    rows["version"].append(c["version"])
-                    rows["has_fn"].append(c["has_fn"])
-                    rows["n_emails"].append(c["n_emails"])
-                    rows["n_phones"].append(c["n_phones"])
-                    rows["n_email_domains"].append(len(c["email_domains"]))
-                    rows["email_domains"].append(
-                        ",".join(c["email_domains"])
-                    )
-                    rows["has_photo"].append(c["has_photo"])
-                    rows["has_address"].append(c["has_address"])
-                    rows["n_props"].append(c["n_props"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        if d % 9 == 8:
+            text = text.rsplit("END:VCARD", 1)[0]
+        try:
+            cards = ical.parse_vcards(text)
+        except ValueError:
+            yield d, -1, "", False, 0, 0, 0, "", False, False, 0, "corrupt"
+            return
+        for j, c in enumerate(cards):
+            yield (
+                d, j, c["version"], c["has_fn"], c["n_emails"],
+                c["n_phones"], len(c["email_domains"]),
+                ",".join(c["email_domains"]), c["has_photo"],
+                c["has_address"], c["n_props"], "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, card_idx int, version string, has_fn boolean, "
         "n_emails int, n_phones int, n_email_domains int, "
@@ -11403,76 +11086,53 @@ def q_vcard_pii_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "audit", "curation"),
 )
 def q_ical_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import ical
 
-        cols = (
-            "doc_id", "event_idx", "uid", "summary", "dtstart", "dtend",
-            "location", "has_rrule", "organizer_domain", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                events = []
-                for i in range(n % 3 + 1):
-                    m = d + i
-                    events.append(
-                        dict(
-                            uid=f"ev-{d}-{i}@ex{d % 20}.test",
-                            summary=f"sync {d}-{i}, "
-                            + "agenda item " * (n % 6),
-                            dtstart=f"2026081{m % 9}T0{d % 9}0000Z",
-                            dtend=(
-                                f"2026081{m % 9}T1{d % 9}0000Z"
-                                if i % 2 == 0
-                                else ""
-                            ),
-                            location=f"room {d % 7}" if d % 4 == 0 else "",
-                            rrule=(
-                                "FREQ=WEEKLY;COUNT=4" if m % 5 == 0 else ""
-                            ),
-                            organizer=(
-                                f"user{d % 23}@ex{(d * 3) % 20}.test"
-                                if i == 0
-                                else ""
-                            ),
-                        )
-                    )
-                text = ical.encode_ics(events)
-                if d % 9 == 8:
-                    text = text.replace("END:VCALENDAR\r\n", "")
-                try:
-                    out = ical.parse_ics(text)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["event_idx"].append(-1)
-                    for f in ("uid", "summary", "dtstart", "dtend",
-                              "location", "organizer_domain"):
-                        rows[f].append("")
-                    rows["has_rrule"].append(False)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, e in enumerate(out["events"]):
-                    rows["doc_id"].append(d)
-                    rows["event_idx"].append(i)
-                    rows["uid"].append(e["uid"])
-                    rows["summary"].append(e["summary"])
-                    rows["dtstart"].append(e["dtstart"])
-                    rows["dtend"].append(e["dtend"])
-                    rows["location"].append(e["location"])
-                    rows["has_rrule"].append(e["has_rrule"])
-                    rows["organizer_domain"].append(e["organizer_domain"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        events = []
+        for i in range(n % 3 + 1):
+            m = d + i
+            events.append(
+                dict(
+                    uid=f"ev-{d}-{i}@ex{d % 20}.test",
+                    summary=f"sync {d}-{i}, "
+                    + "agenda item " * (n % 6),
+                    dtstart=f"2026081{m % 9}T0{d % 9}0000Z",
+                    dtend=(
+                        f"2026081{m % 9}T1{d % 9}0000Z"
+                        if i % 2 == 0
+                        else ""
+                    ),
+                    location=f"room {d % 7}" if d % 4 == 0 else "",
+                    rrule=(
+                        "FREQ=WEEKLY;COUNT=4" if m % 5 == 0 else ""
+                    ),
+                    organizer=(
+                        f"user{d % 23}@ex{(d * 3) % 20}.test"
+                        if i == 0
+                        else ""
+                    ),
+                )
+            )
+        text = ical.encode_ics(events)
+        if d % 9 == 8:
+            text = text.replace("END:VCALENDAR\r\n", "")
+        try:
+            out = ical.parse_ics(text)
+        except ValueError:
+            yield d, -1, "", "", "", "", "", False, "", "corrupt"
+            return
+        for i, e in enumerate(out["events"]):
+            yield (
+                d, i, e["uid"], e["summary"], e["dtstart"], e["dtend"],
+                e["location"], e["has_rrule"], e["organizer_domain"], "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, event_idx int, uid string, summary string, "
         "dtstart string, dtend string, location string, "
@@ -11510,74 +11170,58 @@ def q_ical_event_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "storage", "audit"),
 )
 def q_arrow_ipc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         import io
 
         import pyarrow as pa
         import pyarrow.ipc as ipc
 
-        cols = ("doc_id", "batch_idx", "n_rows", "n_columns", "reason")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nb = n % 3 + 1
-                total = d % 40 + 8
-                schema = pa.schema(
-                    [("id", pa.int64()), ("v", pa.float64()),
-                     ("s", pa.string())]
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nb = n % 3 + 1
+        total = d % 40 + 8
+        schema = pa.schema(
+            [("id", pa.int64()), ("v", pa.float64()),
+             ("s", pa.string())]
+        )
+        sink = io.BytesIO()
+        with ipc.new_stream(sink, schema) as w:
+            emitted = 0
+            for b in range(nb):
+                cnt = max(0, min(16, total - 16 * b))
+                batch = pa.record_batch(
+                    [
+                        pa.array(
+                            [d * 100 + emitted + j for j in range(cnt)],
+                            pa.int64(),
+                        ),
+                        pa.array(
+                            [(emitted + j) / 4 for j in range(cnt)],
+                            pa.float64(),
+                        ),
+                        pa.array(
+                            [f"r{j}" for j in range(cnt)], pa.string()
+                        ),
+                    ],
+                    schema=schema,
                 )
-                sink = io.BytesIO()
-                with ipc.new_stream(sink, schema) as w:
-                    emitted = 0
-                    for b in range(nb):
-                        cnt = max(0, min(16, total - 16 * b))
-                        batch = pa.record_batch(
-                            [
-                                pa.array(
-                                    [d * 100 + emitted + j for j in range(cnt)],
-                                    pa.int64(),
-                                ),
-                                pa.array(
-                                    [(emitted + j) / 4 for j in range(cnt)],
-                                    pa.float64(),
-                                ),
-                                pa.array(
-                                    [f"r{j}" for j in range(cnt)], pa.string()
-                                ),
-                            ],
-                            schema=schema,
-                        )
-                        w.write_batch(batch)
-                        emitted += cnt
-                blob = sink.getvalue()
-                if d % 9 == 8:
-                    blob = blob[: len(blob) - 11]
-                try:
-                    reader = ipc.open_stream(io.BytesIO(blob))
-                    batches = list(reader)
-                except (pa.ArrowInvalid, OSError):
-                    rows["doc_id"].append(d)
-                    rows["batch_idx"].append(-1)
-                    rows["n_rows"].append(0)
-                    rows["n_columns"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, b in enumerate(batches):
-                    rows["doc_id"].append(d)
-                    rows["batch_idx"].append(i)
-                    rows["n_rows"].append(b.num_rows)
-                    rows["n_columns"].append(b.num_columns)
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+                w.write_batch(batch)
+                emitted += cnt
+        blob = sink.getvalue()
+        if d % 9 == 8:
+            blob = blob[: len(blob) - 11]
+        try:
+            reader = ipc.open_stream(io.BytesIO(blob))
+            batches = list(reader)
+        except (pa.ArrowInvalid, OSError):
+            yield d, -1, 0, 0, "corrupt"
+            return
+        for i, b in enumerate(batches):
+            yield d, i, b.num_rows, b.num_columns, "ok"
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, batch_idx int, n_rows bigint, n_columns int, "
         "reason string",
@@ -11638,11 +11282,7 @@ def q_arrow_ipc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_protobuf_wire_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         import struct
 
         from shared_etl_pipelines_spark.sources.tfrecord import (
@@ -11653,57 +11293,38 @@ def q_protobuf_wire_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         def tag(fno: int, wt: int) -> bytes:
             return _varint((fno << 3) | wt)
 
-        cols = (
-            "doc_id", "field_no", "wire_type", "n_occurrences",
-            "total_len", "value_sum", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = str(payload).encode("utf-8")
-                n = len(data)
-                msg = b""
-                for i in range(n % 3 + 1):
-                    msg += tag(1, 0) + _varint(n % 100 + i)
-                msg += tag(2, 2) + _varint(n) + data
-                nested = tag(1, 0) + _varint(d % 7)
-                msg += tag(3, 2) + _varint(len(nested)) + nested
-                msg += tag(4, 1) + struct.pack("<Q", d * 3)
-                if d % 2 == 1:
-                    msg += tag(5, 5) + struct.pack("<I", d % 1000)
-                if d % 9 == 8:
-                    msg = msg[:-3]  # truncation -> quarantine
-                stats: dict[tuple[int, int], list] = {}
-                try:
-                    for fno, wt, v in _fields(msg):
-                        s = stats.setdefault((fno, wt), [0, 0, 0])
-                        s[0] += 1
-                        if wt == 2:
-                            s[1] += len(v)
-                        else:
-                            s[2] += int(v)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["field_no"].append(-1)
-                    rows["wire_type"].append(-1)
-                    rows["n_occurrences"].append(0)
-                    rows["total_len"].append(0)
-                    rows["value_sum"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for (fno, wt), (occ, tl, vs) in sorted(stats.items()):
-                    rows["doc_id"].append(d)
-                    rows["field_no"].append(fno)
-                    rows["wire_type"].append(wt)
-                    rows["n_occurrences"].append(occ)
-                    rows["total_len"].append(tl)
-                    rows["value_sum"].append(vs)
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        data = str(payload).encode("utf-8")
+        n = len(data)
+        msg = b""
+        for i in range(n % 3 + 1):
+            msg += tag(1, 0) + _varint(n % 100 + i)
+        msg += tag(2, 2) + _varint(n) + data
+        nested = tag(1, 0) + _varint(d % 7)
+        msg += tag(3, 2) + _varint(len(nested)) + nested
+        msg += tag(4, 1) + struct.pack("<Q", d * 3)
+        if d % 2 == 1:
+            msg += tag(5, 5) + struct.pack("<I", d % 1000)
+        if d % 9 == 8:
+            msg = msg[:-3]  # truncation -> quarantine
+        stats: dict[tuple[int, int], list] = {}
+        try:
+            for fno, wt, v in _fields(msg):
+                s = stats.setdefault((fno, wt), [0, 0, 0])
+                s[0] += 1
+                if wt == 2:
+                    s[1] += len(v)
+                else:
+                    s[2] += int(v)
+        except ValueError:
+            yield d, -1, -1, 0, 0, 0, "corrupt"
+            return
+        for (fno, wt), (occ, tl, vs) in sorted(stats.items()):
+            yield d, fno, wt, occ, tl, vs, "ok"
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, field_no int, wire_type int, n_occurrences int, "
         "total_len bigint, value_sum bigint, reason string",
@@ -11749,65 +11370,41 @@ def q_protobuf_wire_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_msgpack_log_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import msgpack as M
 
-        cols = (
-            "doc_id", "event_idx", "tag", "ts", "level", "ms", "host",
-            "n_fields", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                events = [
-                    [
-                        f"app{d % 5}." + ("log", "err", "acc")[(d + i) % 3],
-                        1755302400 + d * 60 + i,
-                        {
-                            "level": ("info", "warn", "error")[(d + i) % 3],
-                            "ms": (d * 7 + i) % 500,
-                            "host": f"h{(d + i) % 9}",
-                        },
-                    ]
-                    for i in range(n % 4 + 2)
-                ]
-                blob = b"".join(M.encode_msgpack(e) for e in events)
-                if d % 9 == 8:
-                    blob = blob[:-3]  # truncation -> quarantine
-                try:
-                    decoded = M.decode_stream(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["event_idx"].append(-1)
-                    rows["tag"].append("")
-                    rows["ts"].append(0)
-                    rows["level"].append("")
-                    rows["ms"].append(0)
-                    rows["host"].append("")
-                    rows["n_fields"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, e in enumerate(decoded):
-                    tag, ts, rec = e
-                    rows["doc_id"].append(d)
-                    rows["event_idx"].append(i)
-                    rows["tag"].append(tag)
-                    rows["ts"].append(ts)
-                    rows["level"].append(rec["level"])
-                    rows["ms"].append(rec["ms"])
-                    rows["host"].append(rec["host"])
-                    rows["n_fields"].append(len(rec))
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        events = [
+            [
+                f"app{d % 5}." + ("log", "err", "acc")[(d + i) % 3],
+                1755302400 + d * 60 + i,
+                {
+                    "level": ("info", "warn", "error")[(d + i) % 3],
+                    "ms": (d * 7 + i) % 500,
+                    "host": f"h{(d + i) % 9}",
+                },
+            ]
+            for i in range(n % 4 + 2)
+        ]
+        blob = b"".join(M.encode_msgpack(e) for e in events)
+        if d % 9 == 8:
+            blob = blob[:-3]  # truncation -> quarantine
+        try:
+            decoded = M.decode_stream(blob)
+        except ValueError:
+            yield d, -1, "", 0, "", 0, "", 0, "corrupt"
+            return
+        for i, e in enumerate(decoded):
+            tag, ts, rec = e
+            yield (
+                d, i, tag, ts, rec["level"], rec["ms"], rec["host"],
+                len(rec), "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, event_idx int, tag string, ts bigint, "
         "level string, ms int, host string, n_fields int, reason string",
@@ -11847,11 +11444,7 @@ def q_msgpack_log_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "pii", "audit", "curation"),
 )
 def q_email_mime_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from email import policy
         from email.message import EmailMessage
         from email.parser import BytesParser
@@ -11877,51 +11470,37 @@ def q_email_mime_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             return msg.as_bytes()
 
-        cols = (
-            "doc_id", "subject", "from_domain", "n_parts", "has_html",
-            "n_attachments", "attachment_bytes", "body_chars", "has_date",
-            "reason",
-        )
         parser = BytesParser(policy=policy.default)
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                text = str(payload)
-                msg = parser.parsebytes(build(d, text))
-                n_parts = 0
-                has_html = False
-                n_att = 0
-                att_bytes = 0
-                body_chars = 0
-                for part in msg.walk():
-                    if part.is_multipart():
-                        continue
-                    n_parts += 1
-                    dispo = part.get_content_disposition()
-                    ctype = part.get_content_type()
-                    if dispo == "attachment":
-                        n_att += 1
-                        att_bytes += len(part.get_content())
-                    elif ctype == "text/html":
-                        has_html = True
-                    elif ctype == "text/plain":
-                        body_chars += len(part.get_content())
-                addr = msg["From"].addresses[0]
-                rows["doc_id"].append(d)
-                rows["subject"].append(str(msg["Subject"]))
-                rows["from_domain"].append(addr.domain)
-                rows["n_parts"].append(n_parts)
-                rows["has_html"].append(has_html)
-                rows["n_attachments"].append(n_att)
-                rows["attachment_bytes"].append(att_bytes)
-                rows["body_chars"].append(body_chars)
-                rows["has_date"].append(msg["Date"] is not None)
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        text = str(payload)
+        msg = parser.parsebytes(build(d, text))
+        n_parts = 0
+        has_html = False
+        n_att = 0
+        att_bytes = 0
+        body_chars = 0
+        for part in msg.walk():
+            if part.is_multipart():
+                continue
+            n_parts += 1
+            dispo = part.get_content_disposition()
+            ctype = part.get_content_type()
+            if dispo == "attachment":
+                n_att += 1
+                att_bytes += len(part.get_content())
+            elif ctype == "text/html":
+                has_html = True
+            elif ctype == "text/plain":
+                body_chars += len(part.get_content())
+        addr = msg["From"].addresses[0]
+        yield (
+            d, str(msg["Subject"]), addr.domain, n_parts, has_html, n_att,
+            att_bytes, body_chars, msg["Date"] is not None, "ok",
+        )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, subject string, from_domain string, n_parts int, "
         "has_html boolean, n_attachments int, attachment_bytes bigint, "
@@ -11973,102 +11552,80 @@ def q_email_mime_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "curation", "crawl", "audit"),
 )
 def q_feed_entry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    def build(d: int, n: int) -> str:
+        k = n % 3 + 1
+        if d % 2 == 0:
+            items = []
+            for i in range(k):
+                m = d + i
+                parts = [f"<title>post {d}-{i}</title>"]
+                if m % 17 != 16:
+                    parts.append(
+                        f"<link>https://ex{d % 20}.test/post/"
+                        f"{m % 97}</link>"
+                    )
+                if m % 13 != 12:
+                    parts.append(f"<guid>id-{d}-{i}</guid>")
+                parts.append(f"<pubDate>2026-08-0{m % 9 + 1}</pubDate>")
+                if m % 5 != 4:
+                    parts.append(f"<description>body {i}</description>")
+                items.append(f"<item>{''.join(parts)}</item>")
+            xml = (
+                '<rss version="2.0"><channel>'
+                f"<title>feed {d}</title>{''.join(items)}"
+                "</channel></rss>"
+            )
+        else:
+            items = []
+            for i in range(k):
+                m = d + i
+                parts = [f"<title>post {d}-{i}</title>"]
+                if m % 17 != 16:
+                    # a rel='self' decoy first — selection must skip it
+                    parts.append(
+                        '<link rel="self" href="https://x.test/feed"/>'
+                        f'<link href="https://ex{d % 20}.test/post/'
+                        f'{m % 97}"/>'
+                    )
+                if m % 13 != 12:
+                    parts.append(f"<id>id-{d}-{i}</id>")
+                parts.append(f"<updated>2026-08-0{m % 9 + 1}</updated>")
+                if m % 5 != 4:
+                    parts.append(f"<content>body {i}</content>")
+                items.append(f"<entry>{''.join(parts)}</entry>")
+            xml = (
+                '<feed xmlns="http://www.w3.org/2005/Atom">'
+                f"<title>feed {d}</title>{''.join(items)}</feed>"
+            )
+        return xml[:-9] if d % 9 == 8 else xml
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.feeds import (
             parse_feed,
             validate_entry,
         )
 
-        def build(d: int, n: int) -> str:
-            k = n % 3 + 1
-            if d % 2 == 0:
-                items = []
-                for i in range(k):
-                    m = d + i
-                    parts = [f"<title>post {d}-{i}</title>"]
-                    if m % 17 != 16:
-                        parts.append(
-                            f"<link>https://ex{d % 20}.test/post/"
-                            f"{m % 97}</link>"
-                        )
-                    if m % 13 != 12:
-                        parts.append(f"<guid>id-{d}-{i}</guid>")
-                    parts.append(f"<pubDate>2026-08-0{m % 9 + 1}</pubDate>")
-                    if m % 5 != 4:
-                        parts.append(f"<description>body {i}</description>")
-                    items.append(f"<item>{''.join(parts)}</item>")
-                xml = (
-                    '<rss version="2.0"><channel>'
-                    f"<title>feed {d}</title>{''.join(items)}"
-                    "</channel></rss>"
-                )
-            else:
-                items = []
-                for i in range(k):
-                    m = d + i
-                    parts = [f"<title>post {d}-{i}</title>"]
-                    if m % 17 != 16:
-                        # a rel='self' decoy first — selection must skip it
-                        parts.append(
-                            '<link rel="self" href="https://x.test/feed"/>'
-                            f'<link href="https://ex{d % 20}.test/post/'
-                            f'{m % 97}"/>'
-                        )
-                    if m % 13 != 12:
-                        parts.append(f"<id>id-{d}-{i}</id>")
-                    parts.append(f"<updated>2026-08-0{m % 9 + 1}</updated>")
-                    if m % 5 != 4:
-                        parts.append(f"<content>body {i}</content>")
-                    items.append(f"<entry>{''.join(parts)}</entry>")
-                xml = (
-                    '<feed xmlns="http://www.w3.org/2005/Atom">'
-                    f"<title>feed {d}</title>{''.join(items)}</feed>"
-                )
-            return xml[:-9] if d % 9 == 8 else xml
-
-        cols = (
-            "doc_id", "kind", "entry_idx", "title", "link", "entry_id",
-            "published", "has_content", "is_valid", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                try:
-                    feed = parse_feed(build(d, n))
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["kind"].append("rss" if d % 2 == 0 else "atom")
-                    rows["entry_idx"].append(-1)
-                    rows["title"].append("")
-                    rows["link"].append("")
-                    rows["entry_id"].append("")
-                    rows["published"].append("")
-                    rows["has_content"].append(False)
-                    rows["is_valid"].append(False)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, e in enumerate(feed["entries"]):
-                    ok, reason = validate_entry(e)
-                    rows["doc_id"].append(d)
-                    rows["kind"].append(feed["kind"])
-                    rows["entry_idx"].append(i)
-                    rows["title"].append(e["title"])
-                    rows["link"].append(e["link"] or "")
-                    rows["entry_id"].append(e["entry_id"] or "")
-                    rows["published"].append(e["published"])
-                    rows["has_content"].append(e["has_content"])
-                    rows["is_valid"].append(ok)
-                    rows["reason"].append(reason)
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        try:
+            feed = parse_feed(build(d, n))
+        except ValueError:
+            yield (
+                d, "rss" if d % 2 == 0 else "atom", -1, "", "", "", "",
+                False, False, "corrupt",
+            )
+            return
+        for i, e in enumerate(feed["entries"]):
+            ok, reason = validate_entry(e)
+            yield (
+                d, feed["kind"], i, e["title"], e["link"] or "",
+                e["entry_id"] or "", e["published"], e["has_content"],
+                ok, reason,
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, kind string, entry_idx int, title string, "
         "link string, entry_id string, published string, "
@@ -12116,98 +11673,72 @@ def q_feed_entry_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "image", "audit", "curation"),
 )
 def q_svg_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    def build(d: int, n: int) -> str:
+        w, h = (n % 4 + 1) * 100, ((n // 4) % 4 + 1) * 50
+        dims = (
+            f'viewBox="0 0 {w} {h}"'
+            if d % 2 == 0
+            else f'width="{w}px" height="{h}"'
+        )
+        body = []
+        for s in range(n % 5 + 1):
+            kind = ("path", "rect", "circle")[s % 3]
+            attrs = {
+                "path": f'd="M0 0 L{s + 1} {s + 2}"',
+                "rect": f'x="{s}" y="0" width="4" height="4"',
+                "circle": f'cx="{s}" cy="1" r="2"',
+            }[kind]
+            handler = (
+                ' onclick="steal()"'
+                if d % 7 == 6 and s == 0
+                else ""
+            )
+            body.append(f"<{kind} {attrs}{handler}/>")
+        if d % 3 == 0:
+            body.append(f'<text x="1" y="2">label {d}</text>')
+        if d % 11 == 9:
+            body.append("<script>fetch('http://x.test')</script>")
+        if d % 13 == 7:
+            body.append(
+                '<image xlink:href="http://cdn.test/i.png" width="4" '
+                'height="4"/>'
+            )
+        if d % 13 == 11:
+            body.append(
+                '<image href="data:image/png;base64,AAAA" width="4" '
+                'height="4"/>'
+            )
+        xml = (
+            f'<svg xmlns="http://www.w3.org/2000/svg" '
+            f'xmlns:xlink="http://www.w3.org/1999/xlink" {dims}>'
+            + "".join(body)
+            + "</svg>"
+        )
+        return xml[:-8] if d % 9 == 8 else xml
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.svg import parse_svg
 
-        def build(d: int, n: int) -> str:
-            w, h = (n % 4 + 1) * 100, ((n // 4) % 4 + 1) * 50
-            dims = (
-                f'viewBox="0 0 {w} {h}"'
-                if d % 2 == 0
-                else f'width="{w}px" height="{h}"'
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        try:
+            o = parse_svg(build(d, n))
+        except ValueError:
+            yield (
+                d, 0.0, 0.0, False, 0, 0, 0, False, False, False, False,
+                "corrupt",
             )
-            body = []
-            for s in range(n % 5 + 1):
-                kind = ("path", "rect", "circle")[s % 3]
-                attrs = {
-                    "path": f'd="M0 0 L{s + 1} {s + 2}"',
-                    "rect": f'x="{s}" y="0" width="4" height="4"',
-                    "circle": f'cx="{s}" cy="1" r="2"',
-                }[kind]
-                handler = (
-                    ' onclick="steal()"'
-                    if d % 7 == 6 and s == 0
-                    else ""
-                )
-                body.append(f"<{kind} {attrs}{handler}/>")
-            if d % 3 == 0:
-                body.append(f'<text x="1" y="2">label {d}</text>')
-            if d % 11 == 9:
-                body.append("<script>fetch('http://x.test')</script>")
-            if d % 13 == 7:
-                body.append(
-                    '<image xlink:href="http://cdn.test/i.png" width="4" '
-                    'height="4"/>'
-                )
-            if d % 13 == 11:
-                body.append(
-                    '<image href="data:image/png;base64,AAAA" width="4" '
-                    'height="4"/>'
-                )
-            xml = (
-                f'<svg xmlns="http://www.w3.org/2000/svg" '
-                f'xmlns:xlink="http://www.w3.org/1999/xlink" {dims}>'
-                + "".join(body)
-                + "</svg>"
-            )
-            return xml[:-8] if d % 9 == 8 else xml
-
-        cols = (
-            "doc_id", "width", "height", "from_viewbox", "n_shapes",
-            "n_text", "text_chars", "has_script", "has_event_handlers",
-            "has_external_ref", "has_embedded_image", "reason",
+            return
+        yield (
+            d, round(o["width"], 4), round(o["height"], 4), d % 2 == 0,
+            o["n_shapes"], o["n_text"], o["text_chars"], o["has_script"],
+            o["has_event_handlers"], o["has_external_ref"],
+            o["has_embedded_image"], "ok",
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                try:
-                    o = parse_svg(build(d, n))
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["width"].append(0.0)
-                    rows["height"].append(0.0)
-                    rows["from_viewbox"].append(False)
-                    rows["n_shapes"].append(0)
-                    rows["n_text"].append(0)
-                    rows["text_chars"].append(0)
-                    rows["has_script"].append(False)
-                    rows["has_event_handlers"].append(False)
-                    rows["has_external_ref"].append(False)
-                    rows["has_embedded_image"].append(False)
-                    rows["reason"].append("corrupt")
-                    continue
-                rows["doc_id"].append(d)
-                rows["width"].append(round(o["width"], 4))
-                rows["height"].append(round(o["height"], 4))
-                rows["from_viewbox"].append(d % 2 == 0)
-                rows["n_shapes"].append(o["n_shapes"])
-                rows["n_text"].append(o["n_text"])
-                rows["text_chars"].append(o["text_chars"])
-                rows["has_script"].append(o["has_script"])
-                rows["has_event_handlers"].append(o["has_event_handlers"])
-                rows["has_external_ref"].append(o["has_external_ref"])
-                rows["has_embedded_image"].append(o["has_embedded_image"])
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, width double, height double, from_viewbox boolean, "
         "n_shapes int, n_text int, text_chars int, has_script boolean, "
@@ -12264,104 +11795,88 @@ def q_svg_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit", "embedding"),
 )
 def q_tensor_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    dtype_norm = {"F32": "float32", "I64": "int64",
+                  "<f4": "float32", "<i8": "int64"}
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import tensors as TS
 
-        cols = (
-            "doc_id", "container", "name", "dtype", "n_dims", "n_elems",
-            "n_bytes", "int_checksum", "reason",
-        )
-        dtype_norm = {"F32": "float32", "I64": "int64",
-                      "<f4": "float32", "<i8": "int64"}
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                r, k = n % 5 + 1, n % 3 + 1
-                emb = (
-                    np.arange(r * 4, dtype="<f4") / 8 + (d % 97)
-                ).tobytes()
-                ids = (np.arange(k, dtype="<i8") + 10 * d).tobytes()
-                if d % 2 == 0:
-                    blob = TS.encode_safetensors(
-                        [("emb", "F32", [r, 4], emb),
-                         ("ids", "I64", [k], ids)],
-                        metadata={"fmt": "fixture"},
-                    )
-                else:
-                    blob = TS.encode_npz(
-                        {"emb": ("<f4", [r, 4], emb),
-                         "ids": ("<i8", [k], ids)}
-                    )
-                container = "safetensors" if d % 2 == 0 else "npz"
-                if d % 9 == 8:
-                    blob = blob[: len(blob) // 2]
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        r, k = n % 5 + 1, n % 3 + 1
+        emb = (
+            np.arange(r * 4, dtype="<f4") / 8 + (d % 97)
+        ).tobytes()
+        ids = (np.arange(k, dtype="<i8") + 10 * d).tobytes()
+        if d % 2 == 0:
+            blob = TS.encode_safetensors(
+                [("emb", "F32", [r, 4], emb),
+                 ("ids", "I64", [k], ids)],
+                metadata={"fmt": "fixture"},
+            )
+        else:
+            blob = TS.encode_npz(
+                {"emb": ("<f4", [r, 4], emb),
+                 "ids": ("<i8", [k], ids)}
+            )
+        container = "safetensors" if d % 2 == 0 else "npz"
+        if d % 9 == 8:
+            blob = blob[: len(blob) // 2]
+        found = []  # tensors listed before a ValueError keep their rows
 
-                def emit(name, dt, nd, ne, nb, ck, reason):
-                    rows["doc_id"].append(d)
-                    rows["container"].append(container)
-                    rows["name"].append(name)
-                    rows["dtype"].append(dt)
-                    rows["n_dims"].append(nd)
-                    rows["n_elems"].append(ne)
-                    rows["n_bytes"].append(nb)
-                    rows["int_checksum"].append(ck)
-                    rows["reason"].append(reason)
+        def emit(name, dt, nd, ne, nb, ck, reason):
+            found.append((d, container, name, dt, nd, ne, nb, ck, reason))
 
-                try:
-                    if container == "safetensors":
-                        out = TS.parse_safetensors(blob)
-                        buf_base = 8 + len(blob) - 8 - sum(
-                            t["n_bytes"] for t in out["tensors"]
-                        )
-                        for t in sorted(
-                            out["tensors"], key=lambda x: x["name"]
-                        ):
-                            ne = 1
-                            for s in t["shape"]:
-                                ne *= s
-                            raw = blob[
-                                buf_base + t["offset"] :
-                                buf_base + t["offset"] + t["n_bytes"]
-                            ]
-                            ck = (
-                                int(np.frombuffer(raw, "<i8").sum())
-                                if t["dtype"] == "I64"
-                                else 0
-                            )
-                            emit(
-                                t["name"], dtype_norm[t["dtype"]],
-                                len(t["shape"]), ne, t["n_bytes"], ck, "ok",
-                            )
-                    else:
-                        out = TS.parse_npz(blob)
-                        for name in sorted(out):
-                            t = out[name]
-                            ne = 1
-                            for s in t["shape"]:
-                                ne *= s
-                            ck = (
-                                int(np.frombuffer(t["data"], "<i8").sum())
-                                if t["descr"] == "<i8"
-                                else 0
-                            )
-                            emit(
-                                name, dtype_norm[t["descr"]],
-                                len(t["shape"]), ne, t["n_bytes"], ck, "ok",
-                            )
-                except ValueError:
-                    emit("", "", 0, 0, 0, 0, "corrupt")
-            yield pd.DataFrame(rows)
+        try:
+            if container == "safetensors":
+                out = TS.parse_safetensors(blob)
+                buf_base = 8 + len(blob) - 8 - sum(
+                    t["n_bytes"] for t in out["tensors"]
+                )
+                for t in sorted(
+                    out["tensors"], key=lambda x: x["name"]
+                ):
+                    ne = 1
+                    for s in t["shape"]:
+                        ne *= s
+                    raw = blob[
+                        buf_base + t["offset"] :
+                        buf_base + t["offset"] + t["n_bytes"]
+                    ]
+                    ck = (
+                        int(np.frombuffer(raw, "<i8").sum())
+                        if t["dtype"] == "I64"
+                        else 0
+                    )
+                    emit(
+                        t["name"], dtype_norm[t["dtype"]],
+                        len(t["shape"]), ne, t["n_bytes"], ck, "ok",
+                    )
+            else:
+                out = TS.parse_npz(blob)
+                for name in sorted(out):
+                    t = out[name]
+                    ne = 1
+                    for s in t["shape"]:
+                        ne *= s
+                    ck = (
+                        int(np.frombuffer(t["data"], "<i8").sum())
+                        if t["descr"] == "<i8"
+                        else 0
+                    )
+                    emit(
+                        name, dtype_norm[t["descr"]],
+                        len(t["shape"]), ne, t["n_bytes"], ck, "ok",
+                    )
+        except ValueError:
+            emit("", "", 0, 0, 0, 0, "corrupt")
+        return found
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, container string, name string, dtype string, "
         "n_dims int, n_elems bigint, n_bytes bigint, int_checksum bigint, "
@@ -12404,63 +11919,41 @@ def q_tensor_manifest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "pii", "audit"),
 )
 def q_pdf_info_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.pdf import (
             encode_pdf,
             pdf_document_info,
         )
 
-        cols = (
-            "doc_id", "has_info", "n_pages", "title", "author",
-            "producer", "creation_date", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        pages = [[f"line {d} {p}"] for p in range(1 + n % 2)]
+        info = (
+            {
+                "Title": f"Doc {d}",
+                "Author": f"author-{d % 11}",
+                "Producer": "spark-graft-pdf",
+                "CreationDate": f"D:2026010{d % 9 + 1}120000Z",
+            }
+            if d % 7 != 3
+            else None
         )
-        for pdf_ in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf_["doc_id"], pdf_["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                pages = [[f"line {d} {p}"] for p in range(1 + n % 2)]
-                info = (
-                    {
-                        "Title": f"Doc {d}",
-                        "Author": f"author-{d % 11}",
-                        "Producer": "spark-graft-pdf",
-                        "CreationDate": f"D:2026010{d % 9 + 1}120000Z",
-                    }
-                    if d % 7 != 3
-                    else None
-                )
-                blob = encode_pdf(pages, compress=d % 2 == 0, info=info)
-                if d % 9 == 8:
-                    blob = blob[:-30]  # torn trailer -> quarantine
-                try:
-                    o = pdf_document_info(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["has_info"].append(False)
-                    rows["n_pages"].append(0)
-                    rows["title"].append("")
-                    rows["author"].append("")
-                    rows["producer"].append("")
-                    rows["creation_date"].append("")
-                    rows["reason"].append("corrupt")
-                    continue
-                rows["doc_id"].append(d)
-                rows["has_info"].append(o["has_info"])
-                rows["n_pages"].append(o["n_pages"])
-                rows["title"].append(o["title"])
-                rows["author"].append(o["author"])
-                rows["producer"].append(o["producer"])
-                rows["creation_date"].append(o["creation_date"])
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        blob = encode_pdf(pages, compress=d % 2 == 0, info=info)
+        if d % 9 == 8:
+            blob = blob[:-30]  # torn trailer -> quarantine
+        try:
+            o = pdf_document_info(blob)
+        except ValueError:
+            yield d, False, 0, "", "", "", "", "corrupt"
+            return
+        yield (
+            d, o["has_info"], o["n_pages"], o["title"], o["author"],
+            o["producer"], o["creation_date"], "ok",
+        )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, has_info boolean, n_pages int, title string, "
         "author string, producer string, creation_date string, "
@@ -12516,94 +12009,77 @@ def q_pdf_info_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_heic_exif_gps_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def gps_row(d, ok, o, mk, e, reason):
+        return (
+            d, ok, o, mk, e.get("has_gps", False),
+            int(e.get("lat_deg", 0)), int(e.get("lat_min", 0)),
+            int(e.get("lat_sec_centi", 0)), e.get("lat_ref", ""),
+            int(e.get("lon_deg", 0)), int(e.get("lon_min", 0)),
+            int(e.get("lon_sec_centi", 0)), e.get("lon_ref", ""),
+            reason,
+        )
 
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id):
         from shared_etl_pipelines_spark.sources import heif
         from shared_etl_pipelines_spark.sources.exif import (
             encode_exif_app1,
             parse_exif_app1,
         )
 
-        cols = (
-            "doc_id", "has_exif", "orientation", "make", "has_gps",
-            "lat_deg", "lat_min", "lat_sec_centi", "lat_ref",
-            "lon_deg", "lon_min", "lon_sec_centi", "lon_ref", "reason",
+        d = int(doc_id)
+        gps = (
+            (
+                d % 90, d % 60, (d * 37) % 6000,
+                "N" if d % 4 < 2 else "S",
+                d % 180, (d // 2) % 60, (d * 53) % 6000,
+                "E" if d % 8 < 4 else "W",
+            )
+            if d % 3 != 0
+            else None
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                gps = (
-                    (
-                        d % 90, d % 60, (d * 37) % 6000,
-                        "N" if d % 4 < 2 else "S",
-                        d % 180, (d // 2) % 60, (d * 53) % 6000,
-                        "E" if d % 8 < 4 else "W",
-                    )
-                    if d % 3 != 0
-                    else None
-                )
-                app1 = encode_exif_app1(
-                    f"maker-{d % 7}", f"model-{d % 13}", d % 8 + 1,
-                    f"2023:01:0{d % 9 + 1} 12:00:00", gps,
-                    big_endian=d % 2 == 1,
-                )
-                # ExifDataBlock: u32 tiff-header offset, then the Exif
-                # payload ('Exif\\0\\0' + TIFF -> offset 6)
-                exif_item = struct.pack(">I", 6) + app1
-                items = [
-                    dict(
-                        item_id=1, item_type="hvc1", payload=b"\x01" * 12,
-                        ispe=(64, 48), hvcc=(1, 90, 0),
-                    ),
-                    dict(item_id=2, item_type="Exif", payload=exif_item),
-                ]
-                blob = heif.encode_heif(items, primary_id=1)
-                if d % 9 == 8:
-                    blob = blob[:48]
-
-                def emit(ok, o, mk, e, reason):
-                    rows["doc_id"].append(d)
-                    rows["has_exif"].append(ok)
-                    rows["orientation"].append(o)
-                    rows["make"].append(mk)
-                    rows["has_gps"].append(e.get("has_gps", False))
-                    for f in (
-                        "lat_deg", "lat_min", "lat_sec_centi",
-                        "lon_deg", "lon_min", "lon_sec_centi",
-                    ):
-                        rows[f].append(int(e.get(f, 0)))
-                    rows["lat_ref"].append(e.get("lat_ref", ""))
-                    rows["lon_ref"].append(e.get("lon_ref", ""))
-                    rows["reason"].append(reason)
-
-                try:
-                    out = heif.parse_heif(blob)
-                    exif_items = [
-                        i for i in out["items"] if i["item_type"] == "Exif"
-                    ]
-                    if not exif_items:
-                        raise ValueError("no Exif item")
-                    # the payload comes from the PARSED iloc extents —
-                    # the composite exercises the real item plumbing
-                    data = exif_items[0]["payload"]
-                    if len(data) < 4:
-                        raise ValueError("ExifDataBlock truncated")
-                    (off,) = struct.unpack(">I", data[:4])
-                    if off < 6 or 4 + off - 6 >= len(data):
-                        raise ValueError("ExifDataBlock offset out of range")
-                    e = parse_exif_app1(data[4 + off - 6 :])
-                except ValueError:
-                    emit(False, 0, "", {}, "corrupt")
-                    continue
-                emit(True, e["orientation"], e["make"], e, "ok")
-            yield pd.DataFrame(rows)
+        app1 = encode_exif_app1(
+            f"maker-{d % 7}", f"model-{d % 13}", d % 8 + 1,
+            f"2023:01:0{d % 9 + 1} 12:00:00", gps,
+            big_endian=d % 2 == 1,
+        )
+        # ExifDataBlock: u32 tiff-header offset, then the Exif
+        # payload ('Exif\\0\\0' + TIFF -> offset 6)
+        exif_item = struct.pack(">I", 6) + app1
+        items = [
+            dict(
+                item_id=1, item_type="hvc1", payload=b"\x01" * 12,
+                ispe=(64, 48), hvcc=(1, 90, 0),
+            ),
+            dict(item_id=2, item_type="Exif", payload=exif_item),
+        ]
+        blob = heif.encode_heif(items, primary_id=1)
+        if d % 9 == 8:
+            blob = blob[:48]
+        try:
+            out = heif.parse_heif(blob)
+            exif_items = [
+                i for i in out["items"] if i["item_type"] == "Exif"
+            ]
+            if not exif_items:
+                raise ValueError("no Exif item")
+            # the payload comes from the PARSED iloc extents —
+            # the composite exercises the real item plumbing
+            data = exif_items[0]["payload"]
+            if len(data) < 4:
+                raise ValueError("ExifDataBlock truncated")
+            (off,) = struct.unpack(">I", data[:4])
+            if off < 6 or 4 + off - 6 >= len(data):
+                raise ValueError("ExifDataBlock offset out of range")
+            e = parse_exif_app1(data[4 + off - 6 :])
+        except ValueError:
+            yield gps_row(d, False, 0, "", {}, "corrupt")
+            return
+        yield gps_row(d, True, e["orientation"], e["make"], e, "ok")
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, has_exif boolean, orientation int, make string, "
         "has_gps boolean, lat_deg int, lat_min int, lat_sec_centi int, "
@@ -12648,67 +12124,46 @@ def q_heic_exif_gps_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_tfrecord_example_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import tfrecord as T
 
-        cols = (
-            "doc_id", "rec_idx", "rid", "text_len", "score", "n_tags",
-            "n_unknown", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                data = str(payload).encode("utf-8")
-                n = len(data)
-                exs = [
-                    T.encode_example(
-                        {
-                            "id": ("int64", [d * 10 + i]),
-                            "text": ("bytes", [data]),
-                            "score": ("float", [(d % 50) / 4 + i]),
-                            "tags": (
-                                "int64", [(d + j) % 100 for j in range(i % 3)]
-                            ),
-                        }
-                    )
-                    for i in range(n % 3 + 1)
-                ]
-                blob = T.write_tfrecords(exs)
-                if d % 9 == 8:
-                    flip = bytearray(blob)
-                    flip[14] ^= 0xFF  # payload byte -> CRC mismatch
-                    blob = bytes(flip)
-                try:
-                    payloads = T.read_tfrecords(blob)
-                    recs = [T.parse_example(p) for p in payloads]
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["rec_idx"].append(-1)
-                    rows["rid"].append(0)
-                    rows["text_len"].append(0)
-                    rows["score"].append(0.0)
-                    rows["n_tags"].append(0)
-                    rows["n_unknown"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, (feats, unknown) in enumerate(recs):
-                    rows["doc_id"].append(d)
-                    rows["rec_idx"].append(i)
-                    rows["rid"].append(feats["id"][1][0])
-                    rows["text_len"].append(len(feats["text"][1][0]))
-                    rows["score"].append(round(feats["score"][1][0], 4))
-                    rows["n_tags"].append(len(feats["tags"][1]))
-                    rows["n_unknown"].append(unknown)
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        data = str(payload).encode("utf-8")
+        n = len(data)
+        exs = [
+            T.encode_example(
+                {
+                    "id": ("int64", [d * 10 + i]),
+                    "text": ("bytes", [data]),
+                    "score": ("float", [(d % 50) / 4 + i]),
+                    "tags": (
+                        "int64", [(d + j) % 100 for j in range(i % 3)]
+                    ),
+                }
+            )
+            for i in range(n % 3 + 1)
+        ]
+        blob = T.write_tfrecords(exs)
+        if d % 9 == 8:
+            flip = bytearray(blob)
+            flip[14] ^= 0xFF  # payload byte -> CRC mismatch
+            blob = bytes(flip)
+        try:
+            payloads = T.read_tfrecords(blob)
+            recs = [T.parse_example(p) for p in payloads]
+        except ValueError:
+            yield d, -1, 0, 0, 0.0, 0, 0, "corrupt"
+            return
+        for i, (feats, unknown) in enumerate(recs):
+            yield (
+                d, i, feats["id"][1][0], len(feats["text"][1][0]),
+                round(feats["score"][1][0], 4), len(feats["tags"][1]),
+                unknown, "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, rec_idx int, rid bigint, text_len int, "
         "score double, n_tags int, n_unknown int, reason string",
@@ -12760,10 +12215,6 @@ def q_tfrecord_example_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "storage", "audit"),
 )
 def q_avro_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     _SCHEMA = {
         "type": "record",
         "name": "Rec",
@@ -12783,75 +12234,50 @@ def q_avro_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     }
 
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.avro import (
             read_avro_ocf,
             write_avro_ocf,
         )
 
-        cols = (
-            "doc_id", "rec_idx", "codec", "n_blocks", "rid", "name",
-            "score", "ok", "n_tags", "note", "kind", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        k = n % 4 + 2
+        recs = [
+            {
+                "id": d * 100 + i,
+                "name": f"rec-{d}-{i}",
+                "score": (d % 97) / 8 + i,
+                "ok": (d + i) % 2 == 0,
+                "tags": [f"t{j}" for j in range(i % 3)],
+                "note": None if (d + i) % 3 == 0 else f"n{i}",
+                "kind": "ABC"[(d + i) % 3],
+            }
+            for i in range(k)
+        ]
+        blob = write_avro_ocf(
+            recs, _SCHEMA,
+            codec="deflate" if d % 2 else "null",
+            sync=bytes((d + j) % 256 for j in range(16)),
+            block_size=3,
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                k = n % 4 + 2
-                recs = [
-                    {
-                        "id": d * 100 + i,
-                        "name": f"rec-{d}-{i}",
-                        "score": (d % 97) / 8 + i,
-                        "ok": (d + i) % 2 == 0,
-                        "tags": [f"t{j}" for j in range(i % 3)],
-                        "note": None if (d + i) % 3 == 0 else f"n{i}",
-                        "kind": "ABC"[(d + i) % 3],
-                    }
-                    for i in range(k)
-                ]
-                blob = write_avro_ocf(
-                    recs, _SCHEMA,
-                    codec="deflate" if d % 2 else "null",
-                    sync=bytes((d + j) % 256 for j in range(16)),
-                    block_size=3,
-                )
-                if d % 9 == 8:
-                    blob = blob[:-9]  # torn trailer -> quarantine
-                try:
-                    out = read_avro_ocf(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["rec_idx"].append(-1)
-                    rows["codec"].append("")
-                    rows["n_blocks"].append(0)
-                    rows["rid"].append(0)
-                    rows["name"].append("")
-                    rows["score"].append(0.0)
-                    rows["ok"].append(False)
-                    rows["n_tags"].append(0)
-                    rows["note"].append("")
-                    rows["kind"].append("")
-                    rows["reason"].append("corrupt")
-                    continue
-                for i, rec in enumerate(out["records"]):
-                    rows["doc_id"].append(d)
-                    rows["rec_idx"].append(i)
-                    rows["codec"].append(out["codec"])
-                    rows["n_blocks"].append(out["n_blocks"])
-                    rows["rid"].append(rec["id"])
-                    rows["name"].append(rec["name"])
-                    rows["score"].append(round(rec["score"], 4))
-                    rows["ok"].append(rec["ok"])
-                    rows["n_tags"].append(len(rec["tags"]))
-                    rows["note"].append(rec["note"] or "")
-                    rows["kind"].append(rec["kind"])
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        if d % 9 == 8:
+            blob = blob[:-9]  # torn trailer -> quarantine
+        try:
+            out = read_avro_ocf(blob)
+        except ValueError:
+            yield d, -1, "", 0, 0, "", 0.0, False, 0, "", "", "corrupt"
+            return
+        for i, rec in enumerate(out["records"]):
+            yield (
+                d, i, out["codec"], out["n_blocks"], rec["id"], rec["name"],
+                round(rec["score"], 4), rec["ok"], len(rec["tags"]),
+                rec["note"] or "", rec["kind"], "ok",
+            )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, rec_idx int, codec string, n_blocks int, "
         "rid bigint, name string, score double, ok boolean, n_tags int, "
@@ -12902,64 +12328,42 @@ def q_avro_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "codec", "image"),
 )
 def q_webp_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources import webp
 
-        cols = (
-            "doc_id", "kind", "width", "height", "has_alpha",
-            "has_animation", "n_frames", "reason",
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        w = (n % 4 + 1) * 16
+        h = ((n // 4) % 4 + 1) * 16
+        if d % 3 == 0:
+            blob = webp.encode_webp_vp8(
+                w, h, bytes((d + j) % 256 for j in range(6))
+            )
+        elif d % 3 == 1:
+            blob = webp.encode_webp_vp8l(
+                w + 985, h - 9, alpha=d % 2 == 0
+            )
+        elif d % 2 == 0:
+            blob = webp.encode_webp_vp8x(
+                w, h, n_anim_frames=n % 3 + 1
+            )
+        else:
+            blob = webp.encode_webp_vp8x(w, h, alpha=True)
+        if d % 9 == 8:
+            blob = blob[:14]  # truncation -> quarantine
+        try:
+            o = webp.parse_webp(blob)
+        except ValueError:
+            yield d, "", 0, 0, False, False, 0, "corrupt"
+            return
+        yield (
+            d, o["kind"], o["width"], o["height"], o["has_alpha"],
+            o["has_animation"], o["n_frames"], "ok",
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                w = (n % 4 + 1) * 16
-                h = ((n // 4) % 4 + 1) * 16
-                if d % 3 == 0:
-                    blob = webp.encode_webp_vp8(
-                        w, h, bytes((d + j) % 256 for j in range(6))
-                    )
-                elif d % 3 == 1:
-                    blob = webp.encode_webp_vp8l(
-                        w + 985, h - 9, alpha=d % 2 == 0
-                    )
-                elif d % 2 == 0:
-                    blob = webp.encode_webp_vp8x(
-                        w, h, n_anim_frames=n % 3 + 1
-                    )
-                else:
-                    blob = webp.encode_webp_vp8x(w, h, alpha=True)
-                if d % 9 == 8:
-                    blob = blob[:14]  # truncation -> quarantine
-                try:
-                    o = webp.parse_webp(blob)
-                except ValueError:
-                    rows["doc_id"].append(d)
-                    rows["kind"].append("")
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["has_alpha"].append(False)
-                    rows["has_animation"].append(False)
-                    rows["n_frames"].append(0)
-                    rows["reason"].append("corrupt")
-                    continue
-                rows["doc_id"].append(d)
-                rows["kind"].append(o["kind"])
-                rows["width"].append(o["width"])
-                rows["height"].append(o["height"])
-                rows["has_alpha"].append(o["has_alpha"])
-                rows["has_animation"].append(o["has_animation"])
-                rows["n_frames"].append(o["n_frames"])
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, kind string, width int, height int, "
         "has_alpha boolean, has_animation boolean, n_frames int, "
@@ -12995,58 +12399,42 @@ def q_webp_image_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "extraction", "curation"),
 )
 def q_markdown_structure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    def build_md(d: int, text: str, n: int) -> str:
+        lang = ("python", "js", "sql", "")[d % 4]
+        lines = [f"# Title {d}", text]
+        if d % 3 > 0:
+            lines.append(
+                " ".join(
+                    f"[link{k}](https://ex{d % 20}.test/p{k})"
+                    for k in range(d % 3)
+                )
+            )
+        if d % 2 == 0:
+            lines.append(f"## Section {d % 5}")
+        lines.append(f"```{lang}")
+        lines.extend(f"code line {k} of {d}" for k in range(n % 3 + 1))
+        if d % 9 != 8:
+            lines.append("```")  # d%9==8 leaves the fence open
+        return "\n".join(lines)
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.markdown import (
             parse_markdown_structure,
         )
 
-        def build_md(d: int, text: str, n: int) -> str:
-            lang = ("python", "js", "sql", "")[d % 4]
-            lines = [f"# Title {d}", text]
-            if d % 3 > 0:
-                lines.append(
-                    " ".join(
-                        f"[link{k}](https://ex{d % 20}.test/p{k})"
-                        for k in range(d % 3)
-                    )
-                )
-            if d % 2 == 0:
-                lines.append(f"## Section {d % 5}")
-            lines.append(f"```{lang}")
-            lines.extend(f"code line {k} of {d}" for k in range(n % 3 + 1))
-            if d % 9 != 8:
-                lines.append("```")  # d%9==8 leaves the fence open
-            return "\n".join(lines)
-
-        cols = (
-            "doc_id", "n_headings", "max_depth", "n_code_blocks",
-            "code_lang", "n_code_lines", "n_links", "prose_tokens",
-            "unterminated",
+        d = int(doc_id)
+        text = str(payload)
+        n = len(text.encode("utf-8"))
+        s = parse_markdown_structure(build_md(d, text, n))
+        yield (
+            d, s["n_headings"], s["max_depth"], s["n_code_blocks"],
+            s["code_langs"], s["n_code_lines"], s["n_links"],
+            s["prose_tokens"], s["unterminated"],
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                text = str(payload)
-                n = len(text.encode("utf-8"))
-                s = parse_markdown_structure(build_md(d, text, n))
-                rows["doc_id"].append(d)
-                rows["n_headings"].append(s["n_headings"])
-                rows["max_depth"].append(s["max_depth"])
-                rows["n_code_blocks"].append(s["n_code_blocks"])
-                rows["code_lang"].append(s["code_langs"])
-                rows["n_code_lines"].append(s["n_code_lines"])
-                rows["n_links"].append(s["n_links"])
-                rows["prose_tokens"].append(s["prose_tokens"])
-                rows["unterminated"].append(s["unterminated"])
-            yield pd.DataFrame(rows)
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, n_headings int, max_depth int, n_code_blocks int, "
         "code_lang string, n_code_lines int, n_links int, "
@@ -13108,105 +12496,83 @@ def q_markdown_structure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "extraction", "curation", "crawl"),
 )
 def q_jsonld_entity_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    import json
 
-    import pandas as pd
+    def block(d: int, j: int) -> str:
+        cls = (d + j) % 4
+        if cls == 0:
+            obj = {
+                "@context": "https://schema.org",
+                "@type": "Article",
+                "headline": f"Doc {d}-{j}",
+                "wordCount": d % 97,
+            }
+        elif cls == 1:
+            obj = {
+                "@type": "Product",
+                "name": f"Item {d}-{j}",
+                "offers": {"@type": "Offer", "price": d % 50},
+            }
+        elif cls == 2:
+            obj = [
+                {"@type": "Person", "name": f"P {d}-{j}"},
+                {
+                    "@type": "Organization",
+                    "name": f"O {d}-{j}",
+                    "url": f"https://ex{d % 20}.test/",
+                },
+            ]
+        else:
+            obj = {
+                "@context": "https://schema.org",
+                "@graph": [
+                    {"@type": "WebSite", "name": f"W {d}-{j}"},
+                    {
+                        "@type": "BreadcrumbList",
+                        "itemListElement": [d % 5],
+                    },
+                ],
+            }
+        body = json.dumps(obj)
+        if d % 9 == 8 and j == 0:
+            body = body[:-2]  # malformed JSON -> per-block quarantine
+        # tag-form variety: case, quote style, attribute order
+        if d % 2 == 0:
+            return (
+                '<script type="application/ld+json">'
+                + body
+                + "</script>"
+            )
+        return (
+            "<SCRIPT async type='application/ld+json'>"
+            + body
+            + "</SCRIPT >"
+        )
 
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-
+    def evaluate(doc_id, payload):
         from shared_etl_pipelines_spark.sources.structured_data import (
             extract_json_ld,
         )
 
-        def block(d: int, j: int) -> str:
-            cls = (d + j) % 4
-            if cls == 0:
-                obj = {
-                    "@context": "https://schema.org",
-                    "@type": "Article",
-                    "headline": f"Doc {d}-{j}",
-                    "wordCount": d % 97,
-                }
-            elif cls == 1:
-                obj = {
-                    "@type": "Product",
-                    "name": f"Item {d}-{j}",
-                    "offers": {"@type": "Offer", "price": d % 50},
-                }
-            elif cls == 2:
-                obj = [
-                    {"@type": "Person", "name": f"P {d}-{j}"},
-                    {
-                        "@type": "Organization",
-                        "name": f"O {d}-{j}",
-                        "url": f"https://ex{d % 20}.test/",
-                    },
-                ]
-            else:
-                obj = {
-                    "@context": "https://schema.org",
-                    "@graph": [
-                        {"@type": "WebSite", "name": f"W {d}-{j}"},
-                        {
-                            "@type": "BreadcrumbList",
-                            "itemListElement": [d % 5],
-                        },
-                    ],
-                }
-            body = json.dumps(obj)
-            if d % 9 == 8 and j == 0:
-                body = body[:-2]  # malformed JSON -> per-block quarantine
-            # tag-form variety: case, quote style, attribute order
-            if d % 2 == 0:
-                return (
-                    '<script type="application/ld+json">'
-                    + body
-                    + "</script>"
-                )
-            return (
-                "<SCRIPT async type='application/ld+json'>"
-                + body
-                + "</SCRIPT >"
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        html = (
+            f"<html><head><title>Doc {d}</title>"
+            + "".join(block(d, j) for j in range(n % 2 + 1))
+            + f"</head><body><p>{payload}</p></body></html>"
+        )
+        ents, errs = extract_json_ld(html)
+        for si, reason in errs:
+            yield d, si, -1, "", "", 0, reason
+        for si, ei, ent in ents:
+            yield (
+                d, si, ei, str(ent.get("@type", "")),
+                str(ent.get("name", ent.get("headline", ""))), len(ent), "ok",
             )
 
-        cols = (
-            "doc_id", "script_idx", "entity_idx", "etype", "name",
-            "n_keys", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                html = (
-                    f"<html><head><title>Doc {d}</title>"
-                    + "".join(block(d, j) for j in range(n % 2 + 1))
-                    + f"</head><body><p>{payload}</p></body></html>"
-                )
-                ents, errs = extract_json_ld(html)
-                for si, reason in errs:
-                    rows["doc_id"].append(d)
-                    rows["script_idx"].append(si)
-                    rows["entity_idx"].append(-1)
-                    rows["etype"].append("")
-                    rows["name"].append("")
-                    rows["n_keys"].append(0)
-                    rows["reason"].append(reason)
-                for si, ei, ent in ents:
-                    rows["doc_id"].append(d)
-                    rows["script_idx"].append(si)
-                    rows["entity_idx"].append(ei)
-                    rows["etype"].append(str(ent.get("@type", "")))
-                    rows["name"].append(
-                        str(ent.get("name", ent.get("headline", "")))
-                    )
-                    rows["n_keys"].append(len(ent))
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, script_idx int, entity_idx int, etype string, "
         "name string, n_keys int, reason string",
@@ -13251,49 +12617,37 @@ def q_jsonld_entity_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "curation", "crawl", "audit", "composite"),
 )
 def q_crawl_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    cache: dict[int, object] = {}  # per task: each unpickles its own
 
-    import pandas as pd
-
-    def evaluate(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(doc_id, payload):
         from urllib.parse import urlparse
 
         from shared_etl_pipelines_spark.sources.robots import robots_allowed
         from shared_etl_pipelines_spark.sources.sitemaps import parse_sitemap
 
-        cache: dict[int, object] = {}
-        cols = ("doc_id", "entry_idx", "domain", "path", "allowed", "rule")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                if d % 9 == 8 or d % 6 == 0:
-                    continue  # corrupt/index docs carry no crawlable URLs
-                parsed = parse_sitemap(_sitemap_fixture_xml(d, n))
-                g = d % 20
-                if g not in cache:
-                    cache[g] = _robots_fixture(g)
-                for i, entry in enumerate(parsed["entries"]):
-                    if not entry["loc"]:
-                        continue
-                    path = urlparse(entry["loc"]).path
-                    if cache[g] is None:
-                        allowed, rule = True, ""
-                    else:
-                        allowed, rule = robots_allowed(
-                            cache[g], "sparkbot", path
-                        )
-                    rows["doc_id"].append(d)
-                    rows["entry_idx"].append(i)
-                    rows["domain"].append(g)
-                    rows["path"].append(path)
-                    rows["allowed"].append(allowed)
-                    rows["rule"].append(rule)
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        if d % 9 == 8 or d % 6 == 0:
+            return  # corrupt/index docs carry no crawlable URLs
+        parsed = parse_sitemap(_sitemap_fixture_xml(d, n))
+        g = d % 20
+        if g not in cache:
+            cache[g] = _robots_fixture(g)
+        for i, entry in enumerate(parsed["entries"]):
+            if not entry["loc"]:
+                continue
+            path = urlparse(entry["loc"]).path
+            if cache[g] is None:
+                allowed, rule = True, ""
+            else:
+                allowed, rule = robots_allowed(
+                    cache[g], "sparkbot", path
+                )
+            yield d, i, g, path, allowed, rule
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         evaluate,
         "doc_id bigint, entry_idx int, domain int, path string, "
         "allowed boolean, rule string",
@@ -13337,42 +12691,27 @@ def q_crawl_coverage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "text", "curation", "quality"),
 )
 def q_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def corrupt_then_repair(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: dict[str, list]
-        for pdf in it:
-            rows = {
-                "doc_id": [], "was_mojibake": [], "n_chars_in": [],
-                "n_chars_out": [], "repaired": [],
-            }
-            for d, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(d)
-                # fixture side: give the ASCII corpus a non-ASCII tail,
-                # then double-decode the d%3==0 class
-                doc = f"{text} café№{d % 10}"
-                if d % 3 == 0:
-                    doc = doc.encode("utf-8").decode("latin-1")
-                # repair side (the operator under test): reverse round
-                # trip, accepted only if it succeeds AND changes
-                repaired, was = doc, False
-                try:
-                    cand = doc.encode("latin-1").decode("utf-8")
-                    if cand != doc:
-                        repaired, was = cand, True
-                except (UnicodeEncodeError, UnicodeDecodeError):
-                    pass
-                rows["doc_id"].append(d)
-                rows["was_mojibake"].append(was)
-                rows["n_chars_in"].append(len(doc))
-                rows["n_chars_out"].append(len(repaired))
-                rows["repaired"].append(repaired)
-            yield pd.DataFrame(rows)
+    def corrupt_then_repair(d, text):
+        d = int(d)
+        # fixture side: give the ASCII corpus a non-ASCII tail,
+        # then double-decode the d%3==0 class
+        doc = f"{text} café№{d % 10}"
+        if d % 3 == 0:
+            doc = doc.encode("utf-8").decode("latin-1")
+        # repair side (the operator under test): reverse round
+        # trip, accepted only if it succeeds AND changes
+        repaired, was = doc, False
+        try:
+            cand = doc.encode("latin-1").decode("utf-8")
+            if cand != doc:
+                repaired, was = cand, True
+        except (UnicodeEncodeError, UnicodeDecodeError):
+            pass
+        yield d, was, len(doc), len(repaired), repaired
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return docs.mapInPandas(
+    return map_rows(
+        docs,
         corrupt_then_repair,
         "doc_id bigint, was_mojibake boolean, n_chars_in int, "
         "n_chars_out int, repaired string",
@@ -14537,10 +13876,6 @@ def q_gguf_model_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "source", "codec", "catalog"),
 )
 def q_avro_schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     READER = {
         "type": "record",
         "name": "doc",
@@ -14555,67 +13890,62 @@ def q_avro_schema_evolution_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             },
         ],
     }
+    v1 = {
+        "type": "record", "name": "doc",
+        "fields": [
+            {"name": "doc_id", "type": "int"},
+            {"name": "quality", "type": "float"},
+            {"name": "legacy", "type": "string"},
+        ],
+    }
+    v2 = {
+        "type": "record", "name": "doc",
+        "fields": [
+            {"name": "doc_id", "type": "long"},
+            {"name": "quality", "type": "double"},
+            {"name": "lang", "type": "string"},
+        ],
+    }
+    v3 = {
+        "type": "record", "name": "doc",
+        "fields": [
+            {"name": "doc_id", "type": "int"},
+            {"name": "lang", "type": "string"},
+            {"name": "tags", "type": {"type": "array", "items": "string"}},
+        ],
+    }
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resolve(doc_id):
         from shared_etl_pipelines_spark.sources.avro import (
             read_avro_ocf_resolved,
             write_avro_ocf,
         )
 
-        v1 = {
-            "type": "record", "name": "doc",
-            "fields": [
-                {"name": "doc_id", "type": "int"},
-                {"name": "quality", "type": "float"},
-                {"name": "legacy", "type": "string"},
-            ],
-        }
-        v2 = {
-            "type": "record", "name": "doc",
-            "fields": [
-                {"name": "doc_id", "type": "long"},
-                {"name": "quality", "type": "double"},
-                {"name": "lang", "type": "string"},
-            ],
-        }
-        v3 = {
-            "type": "record", "name": "doc",
-            "fields": [
-                {"name": "doc_id", "type": "int"},
-                {"name": "lang", "type": "string"},
-                {"name": "tags", "type": {"type": "array", "items": "string"}},
-            ],
-        }
-        cols = ("doc_id", "writer_version", "quality", "lang", "n_tags")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                q = (d % 8) / 4.0
-                if d % 3 == 0:
-                    blob = write_avro_ocf(
-                        [{"doc_id": d, "quality": q, "legacy": "x"}], v1
-                    )
-                elif d % 3 == 1:
-                    blob = write_avro_ocf(
-                        [{"doc_id": d, "quality": q, "lang": "en"}], v2
-                    )
-                else:
-                    blob = write_avro_ocf(
-                        [{"doc_id": d, "lang": "fr", "tags": ["t"] * (d % 5)}],
-                        v3,
-                    )
-                (rec,) = read_avro_ocf_resolved(blob, READER)["records"]
-                rows["doc_id"].append(rec["doc_id"])
-                rows["writer_version"].append(d % 3 + 1)
-                rows["quality"].append(round(rec["quality"], 4))
-                rows["lang"].append(rec["lang"])
-                rows["n_tags"].append(len(rec["tags"]))
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        q = (d % 8) / 4.0
+        if d % 3 == 0:
+            blob = write_avro_ocf(
+                [{"doc_id": d, "quality": q, "legacy": "x"}], v1
+            )
+        elif d % 3 == 1:
+            blob = write_avro_ocf(
+                [{"doc_id": d, "quality": q, "lang": "en"}], v2
+            )
+        else:
+            blob = write_avro_ocf(
+                [{"doc_id": d, "lang": "fr", "tags": ["t"] * (d % 5)}],
+                v3,
+            )
+        (rec,) = read_avro_ocf_resolved(blob, READER)["records"]
+        yield (
+            rec["doc_id"], d % 3 + 1, round(rec["quality"], 4), rec["lang"],
+            len(rec["tags"]),
+        )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    return docs.mapInPandas(
-        batches,
+    return map_rows(
+        docs,
+        resolve,
         "doc_id long, writer_version int, quality double, lang string, "
         "n_tags int",
     )
@@ -14829,11 +14159,7 @@ def q_bitmap_index_slice_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "source", "codec", "catalog"),
 )
 def q_sqlite_without_rowid_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(doc_id, text):
         import sqlite3
 
         from shared_etl_pipelines_spark.sources.sqlitefile import (
@@ -14841,54 +14167,43 @@ def q_sqlite_without_rowid_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             scan_table,
         )
 
-        cols = ("doc_id", "pk_ordered", "n_rows", "b_bytes", "a_sum",
-                "c_sum", "idx_entries", "idx_c_sum")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                con = sqlite3.connect(":memory:")
-                con.execute("PRAGMA page_size=512")
-                con.execute(
-                    "CREATE TABLE kv (b TEXT, a INTEGER, c INTEGER,"
-                    " PRIMARY KEY (a, b)) WITHOUT ROWID"
-                )
-                nr = n % 6 + 2
-                con.executemany(
-                    "INSERT INTO kv VALUES (?,?,?)",
-                    [
-                        ("s" * ((d + r) % 9 + 1), r, (d + r) % 5)
-                        for r in range(nr)
-                    ],
-                )
-                con.execute(
-                    "INSERT INTO kv VALUES (?,?,?)",
-                    ("z" * (600 + n % 40), 999, None),
-                )
-                con.execute("CREATE INDEX idx_c ON kv(c)")
-                con.commit()
-                blob = con.serialize()
-                con.close()
-                got = scan_table(blob, "kv")  # declared order (b, a, c)
-                keys = [(v[1], v[0]) for _, v in got]
-                idx = scan_index(blob, "idx_c")  # records (c, a, b)
-                rows["doc_id"].append(d)
-                rows["pk_ordered"].append(keys == sorted(keys))
-                rows["n_rows"].append(len(got))
-                rows["b_bytes"].append(sum(len(v[0]) for _, v in got))
-                rows["a_sum"].append(sum(v[1] for _, v in got))
-                rows["c_sum"].append(
-                    sum(v[2] for _, v in got if v[2] is not None)
-                )
-                rows["idx_entries"].append(len(idx))
-                rows["idx_c_sum"].append(
-                    sum(e[0] for e in idx if e[0] is not None)
-                )
-            yield pd.DataFrame(rows)
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        con = sqlite3.connect(":memory:")
+        con.execute("PRAGMA page_size=512")
+        con.execute(
+            "CREATE TABLE kv (b TEXT, a INTEGER, c INTEGER,"
+            " PRIMARY KEY (a, b)) WITHOUT ROWID"
+        )
+        nr = n % 6 + 2
+        con.executemany(
+            "INSERT INTO kv VALUES (?,?,?)",
+            [
+                ("s" * ((d + r) % 9 + 1), r, (d + r) % 5)
+                for r in range(nr)
+            ],
+        )
+        con.execute(
+            "INSERT INTO kv VALUES (?,?,?)",
+            ("z" * (600 + n % 40), 999, None),
+        )
+        con.execute("CREATE INDEX idx_c ON kv(c)")
+        con.commit()
+        blob = con.serialize()
+        con.close()
+        got = scan_table(blob, "kv")  # declared order (b, a, c)
+        keys = [(v[1], v[0]) for _, v in got]
+        idx = scan_index(blob, "idx_c")  # records (c, a, b)
+        yield (
+            d, keys == sorted(keys), len(got), sum(len(v[0]) for _, v in got),
+            sum(v[1] for _, v in got),
+            sum(v[2] for _, v in got if v[2] is not None),
+            len(idx), sum(e[0] for e in idx if e[0] is not None),
+        )
 
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
+    return map_rows(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        scan,
         "doc_id bigint, pk_ordered boolean, n_rows bigint, b_bytes bigint, "
         "a_sum bigint, c_sum bigint, idx_entries bigint, idx_c_sum bigint",
     )
@@ -14938,52 +14253,36 @@ def q_sqlite_without_rowid_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("llm", "multimodal", "codec", "video"),
 )
 def q_multimodal_vp8_pframes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from shared_etl_pipelines_spark.sources.multimodal import (
         synthetic_vp8_pframe_webm_assets,
     )
 
     assets = synthetic_vp8_pframe_webm_assets(_t(spark, sf_dir, "documents"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def frames(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mkv, vp8
 
-        cols = ("doc_id", "frame_idx", "is_key", "n_mb", "mv_dx_sum",
-                "mv_dy_sum", "n_newmv", "px_sum")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                parsed = mkv.parse_mkv(bytes(blob), collect_frames=True)
-                vt = [
-                    t for t in parsed["tracks"]
-                    if t.get("codec_id") == "V_VP8"
-                ][0]
-                decoded = vp8.decode_sequence(
-                    [p for _bi, _key, p in vt["frames"]]
-                )
-                for fi, out in enumerate(decoded):
-                    mvs = out.get("mvs", [])
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_idx"].append(fi)
-                    rows["is_key"].append(fi == 0)
-                    rows["n_mb"].append(
-                        (out["width"] // 16) * (out["height"] // 16)
-                    )
-                    rows["mv_dx_sum"].append(sum(m[2] // 4 for m in mvs))
-                    rows["mv_dy_sum"].append(sum(m[3] // 4 for m in mvs))
-                    rows["n_newmv"].append(
-                        sum(1 for m in mvs if m[1] == "NEW")
-                    )
-                    rows["px_sum"].append(
-                        sum(out["y"]) + sum(out["u"]) + sum(out["v"])
-                    )
-            yield pd.DataFrame(rows)
+        parsed = mkv.parse_mkv(bytes(blob), collect_frames=True)
+        vt = [
+            t for t in parsed["tracks"]
+            if t.get("codec_id") == "V_VP8"
+        ][0]
+        decoded = vp8.decode_sequence(
+            [p for _bi, _key, p in vt["frames"]]
+        )
+        for fi, out in enumerate(decoded):
+            mvs = out.get("mvs", [])
+            yield (
+                int(doc_id), fi, fi == 0,
+                (out["width"] // 16) * (out["height"] // 16),
+                sum(m[2] // 4 for m in mvs), sum(m[3] // 4 for m in mvs),
+                sum(1 for m in mvs if m[1] == "NEW"),
+                sum(out["y"]) + sum(out["u"]) + sum(out["v"]),
+            )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        frames,
         "doc_id bigint, frame_idx int, is_key boolean, n_mb bigint, "
         "mv_dx_sum bigint, mv_dy_sum bigint, n_newmv bigint, px_sum bigint",
     )
@@ -15492,11 +14791,9 @@ def q_puffin_bitmap_sidecar_slice(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("llm", "multimodal", "codec"),
 )
 def q_multimodal_vp8_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
+    skip_ref: dict = {}  # per task: each unpickles its own
 
-    import pandas as pd
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def residuals(doc_id, text):
         from shared_etl_pipelines_spark.sources.vp8 import (
             DC_PRED,
             TM_PRED,
@@ -15506,104 +14803,95 @@ def q_multimodal_vp8_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_keyframe_skip,
         )
 
-        cols_out = ("doc_id", "y_sum", "u_sum", "v_sum", "n_skip",
-                    "flat_ok", "ok_ac")
-        skip_ref = None
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols_out}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                n = len(str(text).encode("utf-8"))
-                ls = [(n + d + 7 * k) % 13 for k in range(4)]
-                mus = [(n + d + 3 * k) % 9 for k in range(4)]
-                mvs = [(n + 2 * d + 5 * k) % 7 for k in range(4)]
-                mbs = []
-                for k in range(4):
-                    y2 = [0] * 16
-                    y2[0] = ls[k]
-                    u = [[0] * 16 for _ in range(4)]
-                    v = [[0] * 16 for _ in range(4)]
-                    for b in range(4):
-                        u[b][0] = mus[k]
-                        v[b][0] = mvs[k]
-                    mbs.append({"ymode": DC_PRED, "uvmode": DC_PRED,
-                                "y2": y2, "u": u, "v": v})
-                dec = decode_keyframe(encode_keyframe_coeffs(32, 32, mbs))
+        d = int(doc_id)
+        n = len(str(text).encode("utf-8"))
+        ls = [(n + d + 7 * k) % 13 for k in range(4)]
+        mus = [(n + d + 3 * k) % 9 for k in range(4)]
+        mvs = [(n + 2 * d + 5 * k) % 7 for k in range(4)]
+        mbs = []
+        for k in range(4):
+            y2 = [0] * 16
+            y2[0] = ls[k]
+            u = [[0] * 16 for _ in range(4)]
+            v = [[0] * 16 for _ in range(4)]
+            for b in range(4):
+                u[b][0] = mus[k]
+                v[b][0] = mvs[k]
+            mbs.append({"ymode": DC_PRED, "uvmode": DC_PRED,
+                        "y2": y2, "u": u, "v": v})
+        dec = decode_keyframe(encode_keyframe_coeffs(32, 32, mbs))
 
-                def mb_flat(plane, width, r, c, size):
-                    vals = {
-                        plane[(r * size + i) * width + (c * size + j)]
-                        for i in range(size) for j in range(size)
-                    }
-                    return vals.pop() if len(vals) == 1 else None
+        def mb_flat(plane, width, r, c, size):
+            vals = {
+                plane[(r * size + i) * width + (c * size + j)]
+                for i in range(size) for j in range(size)
+            }
+            return vals.pop() if len(vals) == 1 else None
 
-                flat_ok = True
-                yv = [[0, 0], [0, 0]]
-                uv = [[0, 0], [0, 0]]
-                wv = [[0, 0], [0, 0]]
-                for r in range(2):
-                    for c in range(2):
-                        fy = mb_flat(dec["y"], 32, r, c, 16)
-                        fu = mb_flat(dec["u"], 16, r, c, 8)
-                        fw = mb_flat(dec["v"], 16, r, c, 8)
-                        if fy is None or fu is None or fw is None:
-                            flat_ok = False
-                        else:
-                            yv[r][c], uv[r][c], wv[r][c] = fy, fu, fw
-                n_skip = sum(
-                    1 for k in range(4)
-                    if ls[k] == 0 and mus[k] == 0 and mvs[k] == 0
-                )
-                # AC-path gate: cat tokens, negatives, zero runs, a
-                # skipped MB between coefficient MBs, V/TM modes
-                ac_mbs = []
-                for k in range(4):
-                    if k == 2:
-                        ac_mbs.append({"ymode": DC_PRED,
-                                       "uvmode": DC_PRED})
-                        continue
-                    y2 = [0] * 16
-                    y2[0] = (d + k) % 21 - 10
-                    y2[3] = 2
-                    yb = []
-                    for sb in range(16):
-                        b = [0] * 16
-                        b[1] = [0, 1, -1, 5, 37, -70, 120][
-                            (d + sb + k) % 7
-                        ]
-                        b[15] = 2 if (d + sb) % 3 == 0 else 0
-                        yb.append(b)
-                    u = [[0] * 16 for _ in range(4)]
-                    u[0][2] = -4
-                    u[3][0] = 68
-                    ac_mbs.append(
-                        {"ymode": [DC_PRED, V_PRED, None, TM_PRED][k],
-                         "uvmode": DC_PRED, "y2": y2, "y": yb, "u": u}
-                    )
-                ac_frame = encode_keyframe_coeffs(32, 32, ac_mbs)
-                ac1 = decode_keyframe(ac_frame)
-                ac2 = decode_keyframe(ac_frame)
-                if skip_ref is None:
-                    skip_ref = decode_keyframe(
-                        encode_keyframe_skip(32, 32)
-                    )["y"]
-                ok_ac = (
-                    ac1["y"] == ac2["y"]
-                    and ac1["u"] == ac2["u"]
-                    and ac1["y"] != skip_ref
-                    and encode_keyframe_coeffs(32, 32, ac_mbs) == ac_frame
-                )
-                rows["doc_id"].append(d)
-                rows["y_sum"].append(256 * sum(sum(r_) for r_ in yv))
-                rows["u_sum"].append(64 * sum(sum(r_) for r_ in uv))
-                rows["v_sum"].append(64 * sum(sum(r_) for r_ in wv))
-                rows["n_skip"].append(n_skip)
-                rows["flat_ok"].append(flat_ok)
-                rows["ok_ac"].append(bool(ok_ac))
-            yield pd.DataFrame(rows)
+        flat_ok = True
+        yv = [[0, 0], [0, 0]]
+        uv = [[0, 0], [0, 0]]
+        wv = [[0, 0], [0, 0]]
+        for r in range(2):
+            for c in range(2):
+                fy = mb_flat(dec["y"], 32, r, c, 16)
+                fu = mb_flat(dec["u"], 16, r, c, 8)
+                fw = mb_flat(dec["v"], 16, r, c, 8)
+                if fy is None or fu is None or fw is None:
+                    flat_ok = False
+                else:
+                    yv[r][c], uv[r][c], wv[r][c] = fy, fu, fw
+        n_skip = sum(
+            1 for k in range(4)
+            if ls[k] == 0 and mus[k] == 0 and mvs[k] == 0
+        )
+        # AC-path gate: cat tokens, negatives, zero runs, a
+        # skipped MB between coefficient MBs, V/TM modes
+        ac_mbs = []
+        for k in range(4):
+            if k == 2:
+                ac_mbs.append({"ymode": DC_PRED,
+                               "uvmode": DC_PRED})
+                continue
+            y2 = [0] * 16
+            y2[0] = (d + k) % 21 - 10
+            y2[3] = 2
+            yb = []
+            for sb in range(16):
+                b = [0] * 16
+                b[1] = [0, 1, -1, 5, 37, -70, 120][
+                    (d + sb + k) % 7
+                ]
+                b[15] = 2 if (d + sb) % 3 == 0 else 0
+                yb.append(b)
+            u = [[0] * 16 for _ in range(4)]
+            u[0][2] = -4
+            u[3][0] = 68
+            ac_mbs.append(
+                {"ymode": [DC_PRED, V_PRED, None, TM_PRED][k],
+                 "uvmode": DC_PRED, "y2": y2, "y": yb, "u": u}
+            )
+        ac_frame = encode_keyframe_coeffs(32, 32, ac_mbs)
+        ac1 = decode_keyframe(ac_frame)
+        ac2 = decode_keyframe(ac_frame)
+        if "y" not in skip_ref:
+            skip_ref["y"] = decode_keyframe(
+                encode_keyframe_skip(32, 32)
+            )["y"]
+        ok_ac = (
+            ac1["y"] == ac2["y"]
+            and ac1["u"] == ac2["u"]
+            and ac1["y"] != skip_ref["y"]
+            and encode_keyframe_coeffs(32, 32, ac_mbs) == ac_frame
+        )
+        yield (
+            d, 256 * sum(sum(r_) for r_ in yv), 64 * sum(sum(r_) for r_ in uv),
+            64 * sum(sum(r_) for r_ in wv), n_skip, flat_ok, bool(ok_ac),
+        )
 
-    return _t(spark, sf_dir, "documents").select("doc_id", "text").mapInPandas(
-        batches,
+    return map_rows(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        residuals,
         "doc_id bigint, y_sum bigint, u_sum bigint, v_sum bigint, "
         "n_skip bigint, flat_ok boolean, ok_ac boolean",
     )

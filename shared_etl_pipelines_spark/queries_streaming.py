@@ -867,11 +867,10 @@ def q_stream_custom_state_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import tarfile
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
+    from shared_etl_pipelines_spark.functions.rows import map_rows
     from shared_etl_pipelines_spark.sources.webdataset import (
         ensure_demo_webdataset,
     )
@@ -888,25 +887,19 @@ def q_stream_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {"key": [], "ext": [], "n_bytes": []}
-            for content in pdf["content"]:
-                with tarfile.open(fileobj=io.BytesIO(bytes(content))) as t:
-                    for m in t.getmembers():
-                        if not m.isfile():
-                            continue
-                        # first-dot split on the basename — the
-                        # WebDataset key convention, matching the batch
-                        # reader read_webdataset (advice r9 #2)
-                        base = os.path.basename(m.name)
-                        key, _, ext = base.partition(".")
-                        rows["key"].append(key)
-                        rows["ext"].append(ext)
-                        rows["n_bytes"].append(int(m.size))
-            yield pd.DataFrame(rows)
+    def explode(_path, content):
+        with tarfile.open(fileobj=io.BytesIO(bytes(content))) as t:
+            for m in t.getmembers():
+                if not m.isfile():
+                    continue
+                # first-dot split on the basename — the
+                # WebDataset key convention, matching the batch
+                # reader read_webdataset (advice r9 #2)
+                base = os.path.basename(m.name)
+                key, _, ext = base.partition(".")
+                yield key, ext, int(m.size)
 
-    members = raw.mapInPandas(batches, "key string, ext string, n_bytes long")
+    members = map_rows(raw, explode, "key string, ext string, n_bytes long")
     out = members.select(
         F.col("key").cast("long").alias("doc_id"), "ext", "n_bytes"
     )
@@ -938,11 +931,10 @@ def q_stream_webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_zipdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import zipfile
-    from collections.abc import Iterator
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
+    from shared_etl_pipelines_spark.functions.rows import map_rows
     from shared_etl_pipelines_spark.sources.webdataset import (
         ensure_demo_zipdataset,
     )
@@ -959,24 +951,18 @@ def q_stream_zipdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {"key": [], "ext": [], "n_bytes": []}
-            for content in pdf["content"]:
-                with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
-                    for name in z.namelist():
-                        if name.endswith("/"):
-                            continue
-                        base = os.path.basename(name)
-                        key, _, ext = base.partition(".")
-                        rows["key"].append(key)
-                        rows["ext"].append(ext)
-                        # decompressed size — read the member so the
-                        # stream exercises DEFLATE, not just the walk
-                        rows["n_bytes"].append(len(z.read(name)))
-            yield pd.DataFrame(rows)
+    def explode(_path, content):
+        with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
+            for name in z.namelist():
+                if name.endswith("/"):
+                    continue
+                base = os.path.basename(name)
+                key, _, ext = base.partition(".")
+                # decompressed size — read the member so the
+                # stream exercises DEFLATE, not just the walk
+                yield key, ext, len(z.read(name))
 
-    members = raw.mapInPandas(batches, "key string, ext string, n_bytes long")
+    members = map_rows(raw, explode, "key string, ext string, n_bytes long")
     out = members.select(
         F.col("key").cast("long").alias("doc_id"), "ext", "n_bytes"
     )
@@ -1004,11 +990,9 @@ def q_stream_zipdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "llm", "source", "multimodal"),
 )
 def q_stream_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
 
+    from shared_etl_pipelines_spark.functions.rows import map_rows
     from shared_etl_pipelines_spark.sources.tfrecord import (
         ensure_demo_tfrecords,
     )
@@ -1025,24 +1009,19 @@ def q_stream_tfrecord_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def explode(content):
         from shared_etl_pipelines_spark.sources import tfrecord as T
 
-        cols = ("doc_id", "n_features", "text_len", "n_tags", "score")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for content in pdf["content"]:
-                for payload in T.read_tfrecords(bytes(content)):
-                    feats, _ = T.parse_example(payload)
-                    rows["doc_id"].append(feats["id"][1][0])
-                    rows["n_features"].append(len(feats))
-                    rows["text_len"].append(len(feats["text"][1][0]))
-                    rows["n_tags"].append(len(feats["tags"][1]))
-                    rows["score"].append(round(feats["score"][1][0], 4))
-            yield pd.DataFrame(rows)
+        for payload in T.read_tfrecords(bytes(content)):
+            feats, _ = T.parse_example(payload)
+            yield (
+                feats["id"][1][0], len(feats), len(feats["text"][1][0]),
+                len(feats["tags"][1]), round(feats["score"][1][0], 4),
+            )
 
-    out = raw.mapInPandas(
-        batches,
+    out = map_rows(
+        raw,
+        explode,
         "doc_id long, n_features int, text_len int, n_tags int, "
         "score double",
     )
@@ -1393,6 +1372,7 @@ def q_stream_iceberg_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    from shared_etl_pipelines_spark.functions.rows import map_rows
     from shared_etl_pipelines_spark.sources.iceberg import (
         ensure_demo_iceberg_stream_table,
     )
@@ -1409,77 +1389,66 @@ def q_stream_iceberg_delete_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("content")
     )
 
-    def resolve_deletes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resolve_deletes(blob):
         import pyarrow.parquet as _pq
 
         from shared_etl_pipelines_spark.sources.avro import read_avro_ocf
 
-        for pdf in it:
-            out = {"data_path": [], "pos": [], "seq": [], "kind": []}
-            for blob in pdf["content"]:
-                recs = read_avro_ocf(bytes(blob))["records"]
-                data_entries: list[tuple[str, int]] = []  # (path, seq)
-                del_entries: list[dict] = []
-                for m in recs:
-                    with open(m["manifest_path"], "rb") as fh:
-                        entries = read_avro_ocf(fh.read())["records"]
-                    for e in entries:
-                        f = e["data_file"]
-                        if f["content"] == 0:
-                            data_entries.append(
-                                (f["file_path"], e["sequence_number"])
-                            )
-                        else:
-                            del_entries.append(
-                                {
-                                    "path": f["file_path"],
-                                    "content": f["content"],
-                                    "seq": e["sequence_number"],
-                                    "eq_ids": f["equality_ids"],
-                                }
-                            )
-                for de in del_entries:
-                    if de["content"] == 1:
-                        t = _pq.read_table(de["path"])
-                        for p, pos in zip(
-                            t.column("file_path").to_pylist(),
-                            t.column("pos").to_pylist(),
-                        ):
-                            out["data_path"].append(p)
-                            out["pos"].append(int(pos))
-                            out["seq"].append(int(de["seq"]))
-                            out["kind"].append("position")
-                    else:
-                        if de["eq_ids"] != [1]:
-                            raise ValueError(
-                                "iceberg cdc: equality delete on fields "
-                                f"{de['eq_ids']} unsupported — quarantine"
-                            )
-                        vals = set(
-                            _pq.read_table(de["path"])
-                            .column("doc_id")
-                            .to_pylist()
-                        )
-                        # strictly-smaller rule: only data files written
-                        # BEFORE the delete's sequence are scanned (a
-                        # 100 TB consumer prunes by manifest stats first)
-                        for dp, dseq in data_entries:
-                            if dseq >= de["seq"]:
-                                continue
-                            col = _pq.read_table(
-                                dp, columns=["doc_id"]
-                            ).column("doc_id").to_pylist()
-                            for pos, v in enumerate(col):
-                                if v in vals:
-                                    out["data_path"].append(dp)
-                                    out["pos"].append(pos)
-                                    out["seq"].append(int(de["seq"]))
-                                    out["kind"].append("equality")
-            yield pd.DataFrame(out)
+        recs = read_avro_ocf(bytes(blob))["records"]
+        data_entries: list[tuple[str, int]] = []  # (path, seq)
+        del_entries: list[dict] = []
+        for m in recs:
+            with open(m["manifest_path"], "rb") as fh:
+                entries = read_avro_ocf(fh.read())["records"]
+            for e in entries:
+                f = e["data_file"]
+                if f["content"] == 0:
+                    data_entries.append(
+                        (f["file_path"], e["sequence_number"])
+                    )
+                else:
+                    del_entries.append(
+                        {
+                            "path": f["file_path"],
+                            "content": f["content"],
+                            "seq": e["sequence_number"],
+                            "eq_ids": f["equality_ids"],
+                        }
+                    )
+        for de in del_entries:
+            if de["content"] == 1:
+                t = _pq.read_table(de["path"])
+                for p, pos in zip(
+                    t.column("file_path").to_pylist(),
+                    t.column("pos").to_pylist(),
+                ):
+                    yield p, int(pos), int(de["seq"]), "position"
+            else:
+                if de["eq_ids"] != [1]:
+                    raise ValueError(
+                        "iceberg cdc: equality delete on fields "
+                        f"{de['eq_ids']} unsupported — quarantine"
+                    )
+                vals = set(
+                    _pq.read_table(de["path"])
+                    .column("doc_id")
+                    .to_pylist()
+                )
+                # strictly-smaller rule: only data files written
+                # BEFORE the delete's sequence are scanned (a
+                # 100 TB consumer prunes by manifest stats first)
+                for dp, dseq in data_entries:
+                    if dseq >= de["seq"]:
+                        continue
+                    col = _pq.read_table(
+                        dp, columns=["doc_id"]
+                    ).column("doc_id").to_pylist()
+                    for pos, v in enumerate(col):
+                        if v in vals:
+                            yield dp, pos, int(de["seq"]), "equality"
 
-    claims = raw.mapInPandas(
-        resolve_deletes,
-        "data_path string, pos long, seq long, kind string",
+    claims = map_rows(
+        raw, resolve_deletes, "data_path string, pos long, seq long, kind string"
     )
 
     def emit_new_deletes(

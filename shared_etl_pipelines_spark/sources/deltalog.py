@@ -445,7 +445,6 @@ def snapshot_rows(
     (path, _metadata.row_index).
     """
     import re as _re
-    from collections.abc import Iterator
 
     snap = snapshot_files(spark, table_path, version)
     files = snap.select("path", "deletionVector").collect()
@@ -486,7 +485,7 @@ def snapshot_rows(
         F.broadcast(storage), data["_relpath"] == storage["path"], "inner"
     ).drop("path")
     if dv_rows:
-        import pandas as pd
+        from shared_etl_pipelines_spark.functions.rows import map_rows
 
         desc_df = spark.createDataFrame(
             dv_rows,
@@ -494,28 +493,22 @@ def snapshot_rows(
             "offset int, sizeInBytes int, cardinality long",
         ).repartition(min(len(dv_rows), 32))
 
-        def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(path, storage_type, path_or_inline, offset, size, cardinality):
             from shared_etl_pipelines_spark.sources.deletion_vectors import (
                 read_dv_descriptor,
             )
 
-            for pdf in it:
-                paths: list[str] = []
-                poss: list[int] = []
-                for rec in pdf.itertuples(index=False):
-                    desc = {
-                        "storageType": rec.storageType,
-                        "pathOrInlineDv": rec.pathOrInlineDv,
-                        "offset": rec.offset,
-                        "sizeInBytes": rec.sizeInBytes,
-                        "cardinality": rec.cardinality,
-                    }
-                    for pos in read_dv_descriptor(prefix, desc):
-                        paths.append(rec.path)
-                        poss.append(pos)
-                yield pd.DataFrame({"path": paths, "pos": poss})
+            desc = {
+                "storageType": storage_type,
+                "pathOrInlineDv": path_or_inline,
+                "offset": offset,
+                "sizeInBytes": size,
+                "cardinality": cardinality,
+            }
+            for pos in read_dv_descriptor(prefix, desc):
+                yield path, pos
 
-        dv_pos = desc_df.mapInPandas(decode, "path string, pos long")
+        dv_pos = map_rows(desc_df, decode, "path string, pos long")
         out = out.join(
             dv_pos,
             (out["_relpath"] == dv_pos["path"]) & (out["_pos"] == dv_pos["pos"]),

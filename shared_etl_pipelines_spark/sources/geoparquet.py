@@ -41,46 +41,29 @@ def read_geo_metadata(path: str) -> dict:
 def scan_geoparquet(spark, path: str):
     """Distributed feature scan: id columns + per-geometry stats
     (type, n_points, area, bbox width) from the WKB decode."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from shared_etl_pipelines_spark.engine import read_parquet
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
     geo = read_geo_metadata(path)
     gcol = geo["primary_column"]
     df = read_parquet(spark, path)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(feat_id, blob):
         from shared_etl_pipelines_spark.sources.vector import parse_wkb
 
-        cols = ("feat_id", "ok", "reason", "gtype", "n_points", "area", "bbox_w")
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for feat_id, blob in zip(pdf["feat_id"], pdf[gcol]):
-                try:
-                    g = parse_wkb(bytes(blob))
-                    rows["feat_id"].append(feat_id)
-                    rows["ok"].append(True)
-                    rows["reason"].append("")
-                    rows["gtype"].append(g["type"])
-                    rows["n_points"].append(g["n_points"])
-                    rows["area"].append(float(g["area"]))
-                    rows["bbox_w"].append(
-                        float(g["bbox"][2] - g["bbox"][0]) if g["bbox"] else 0.0
-                    )
-                except ValueError as e:
-                    rows["feat_id"].append(feat_id)
-                    rows["ok"].append(False)
-                    rows["reason"].append(str(e)[:80])
-                    rows["gtype"].append("")
-                    rows["n_points"].append(0)
-                    rows["area"].append(0.0)
-                    rows["bbox_w"].append(0.0)
-            yield pd.DataFrame(rows)
+        try:
+            g = parse_wkb(bytes(blob))
+            out = (
+                feat_id, True, "", g["type"], g["n_points"], float(g["area"]),
+                float(g["bbox"][2] - g["bbox"][0]) if g["bbox"] else 0.0,
+            )
+        except ValueError as e:
+            out = (feat_id, False, str(e)[:80], "", 0, 0.0, 0.0)
+        yield out
 
-    return df.select("feat_id", gcol).mapInPandas(
-        batches,
+    return map_rows(
+        df.select("feat_id", gcol),
+        scan,
         "feat_id bigint, ok boolean, reason string, gtype string, "
         "n_points int, area double, bbox_w double",
     )

@@ -248,116 +248,94 @@ def synthetic_gguf_assets(df, id_col: str = "doc_id", payload_col: str = "text")
     [32*(d%2+1)] (scale 0.25, q=((j+d)%17)-8), Q4_0 gate [32] (scale
     0.5, nibble (j+d)%16) — plus typed metadata (string/int/bool/
     string-array). Every value replays from doc_id."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, _payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                k, m = d % 5 + 2, d % 2 + 1
-                f32 = struct.pack(
-                    f"<{8 * k}f", *[((i * 3 + d) % 7) * 0.25 for i in range(8 * k)]
-                )
-                f16 = struct.pack(
-                    "<16e", *[((i + d) % 5) * 0.5 for i in range(16)]
-                )
-                q8 = b"".join(
-                    struct.pack("<e", 0.25)
-                    + struct.pack(
-                        "<32b", *[((b * 32 + i + d) % 17) - 8 for i in range(32)]
-                    )
-                    for b in range(m)
-                )
-                lo = [(j + d) % 16 for j in range(16)]
-                hi = [(j + 16 + d) % 16 for j in range(16)]
-                q4 = struct.pack("<e", 0.5) + bytes(
-                    (l | (h << 4)) for l, h in zip(lo, hi)
-                )
-                blob = encode_gguf(
-                    {
-                        "general.name": f"model-{d}",
-                        "general.alignment": 32,
-                        "llm.context_length": 512 + d % 7,
-                        "general.quantized": True,
-                        "tokenizer.tokens": ["tok"] * (d % 3 + 1),
-                    },
-                    [
-                        ("embd.weight", 0, [8, k], f32),
-                        ("attn.weight", 1, [16], f16),
-                        ("ffn.weight", 8, [32 * m], q8),
-                        ("gate.weight", 2, [32], q4),
-                    ],
-                )
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "application/gguf", "blob": blobs}
-            )
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    def fixture(doc_id, _payload):
+        d = int(doc_id)
+        k, m = d % 5 + 2, d % 2 + 1
+        f32 = struct.pack(
+            f"<{8 * k}f", *[((i * 3 + d) % 7) * 0.25 for i in range(8 * k)]
+        )
+        f16 = struct.pack(
+            "<16e", *[((i + d) % 5) * 0.5 for i in range(16)]
+        )
+        q8 = b"".join(
+            struct.pack("<e", 0.25)
+            + struct.pack(
+                "<32b", *[((b * 32 + i + d) % 17) - 8 for i in range(32)]
+            )
+            for b in range(m)
+        )
+        lo = [(j + d) % 16 for j in range(16)]
+        hi = [(j + 16 + d) % 16 for j in range(16)]
+        q4 = struct.pack("<e", 0.5) + bytes(
+            (l | (h << 4)) for l, h in zip(lo, hi)
+        )
+        blob = encode_gguf(
+            {
+                "general.name": f"model-{d}",
+                "general.alignment": 32,
+                "llm.context_length": 512 + d % 7,
+                "general.quantized": True,
+                "tokenizer.tokens": ["tok"] * (d % 3 + 1),
+            },
+            [
+                ("embd.weight", 0, [8, k], f32),
+                ("attn.weight", 1, [16], f16),
+                ("ffn.weight", 8, [32 * m], q8),
+                ("gate.weight", 2, [32], q4),
+            ],
+        )
+        yield doc_id, "application/gguf", blob
+
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
 def audit_gguf_assets(assets):
     """Per-model census + dequant spot sums: tensor/param counts,
     metadata echo, and the value sum of each tensor through the real
-    dequantization path. Corrupt blobs quarantine with the reason."""
-    from collections.abc import Iterator
+    dequantization path. Corrupt blobs quarantine with the reason, and
+    so does a missing or non-integer ``llm.context_length``."""
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
-    import pandas as pd
+    def audit(doc_id, blob):
+        try:
+            blob = bytes(blob)
+            p = parse_gguf(blob)
+            sums = {
+                t["name"]: float(sum(dequant_tensor(blob, p, t["name"])))
+                for t in p["tensors"]
+            }
+            ctx = p["metadata"].get("llm.context_length")
+            try:
+                context_length = int(ctx)
+            except (TypeError, ValueError):
+                raise ValueError(
+                    f"gguf: llm.context_length missing or not an integer: {ctx!r}"
+                ) from None
+            out = (
+                doc_id, True, "", len(p["tensors"]),
+                sum(t["n_elems"] for t in p["tensors"]),
+                context_length,
+                len(p["metadata"].get("tokenizer.tokens", [])),
+                sums.get("embd.weight", 0.0),
+                sums.get("attn.weight", 0.0),
+                sums.get("ffn.weight", 0.0),
+                sums.get("gate.weight", 0.0),
+            )
+        except ValueError as e:
+            out = (doc_id, False, str(e)[:80], 0, 0, 0, 0, 0.0, 0.0, 0.0, 0.0)
+        yield out
 
-    cols = (
-        "doc_id", "ok", "reason", "n_tensors", "total_params",
-        "context_length", "n_tokens_meta",
-        "embd_sum", "attn_sum", "ffn_sum", "gate_sum",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {c: [] for c in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    blob = bytes(blob)
-                    p = parse_gguf(blob)
-                    sums = {
-                        t["name"]: float(sum(dequant_tensor(blob, p, t["name"])))
-                        for t in p["tensors"]
-                    }
-                    rows["doc_id"].append(doc_id)
-                    rows["ok"].append(True)
-                    rows["reason"].append("")
-                    rows["n_tensors"].append(len(p["tensors"]))
-                    rows["total_params"].append(
-                        sum(t["n_elems"] for t in p["tensors"])
-                    )
-                    rows["context_length"].append(
-                        int(p["metadata"]["llm.context_length"])
-                    )
-                    rows["n_tokens_meta"].append(
-                        len(p["metadata"].get("tokenizer.tokens", []))
-                    )
-                    rows["embd_sum"].append(sums.get("embd.weight", 0.0))
-                    rows["attn_sum"].append(sums.get("attn.weight", 0.0))
-                    rows["ffn_sum"].append(sums.get("ffn.weight", 0.0))
-                    rows["gate_sum"].append(sums.get("gate.weight", 0.0))
-                except ValueError as e:
-                    rows["doc_id"].append(doc_id)
-                    rows["ok"].append(False)
-                    rows["reason"].append(str(e)[:80])
-                    for c in ("n_tensors", "total_params", "context_length",
-                              "n_tokens_meta"):
-                        rows[c].append(0)
-                    for c in ("embd_sum", "attn_sum", "ffn_sum", "gate_sum"):
-                        rows[c].append(0.0)
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        audit,
         "doc_id bigint, ok boolean, reason string, n_tensors int, "
         "total_params bigint, context_length bigint, n_tokens_meta int, "
         "embd_sum double, attn_sum double, ffn_sum double, gate_sum double",

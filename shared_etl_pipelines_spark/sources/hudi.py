@@ -271,8 +271,6 @@ def snapshot_mor_rows(spark: SparkSession, table_path: str) -> DataFrame:
     """Merge-on-read snapshot rows: (doc_id, size, day, from_log).
     ``from_log`` is True when the winning record version came from a
     log block rather than the base file."""
-    from collections.abc import Iterator
-
     completed = [
         i
         for i in timeline_instants(table_path)
@@ -302,43 +300,32 @@ def snapshot_mor_rows(spark: SparkSession, table_path: str) -> DataFrame:
 
     merged = base
     if log_paths:
-        import pandas as pd
+        from shared_etl_pipelines_spark.functions.rows import map_rows
 
-        def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def decode(path):
             from shared_etl_pipelines_spark.sources.hudilog import (
                 BLOCK_AVRO,
                 BLOCK_DELETE,
                 read_log_blocks,
             )
 
-            cols = ("doc_id", "size", "day", "instant", "op")
-            for pdf in it:
-                rows: dict[str, list] = {k: [] for k in cols}
-                for path in pdf["log_path"]:
-                    with open(path, "rb") as fh:
-                        blocks = read_log_blocks(fh.read())
-                    for b in blocks:
-                        if b["type"] == BLOCK_AVRO:
-                            for r in b["records"]:
-                                rows["doc_id"].append(r["doc_id"])
-                                rows["size"].append(r["size"])
-                                rows["day"].append(r["day"])
-                                rows["instant"].append(b["instant"])
-                                rows["op"].append("U")
-                        elif b["type"] == BLOCK_DELETE:
-                            for k in b["keys"]:
-                                rows["doc_id"].append(int(k))
-                                rows["size"].append(0)
-                                rows["day"].append(0)
-                                rows["instant"].append(b["instant"])
-                                rows["op"].append("D")
-                yield pd.DataFrame(rows)
+            with open(path, "rb") as fh:
+                blocks = read_log_blocks(fh.read())
+            for b in blocks:
+                if b["type"] == BLOCK_AVRO:
+                    for r in b["records"]:
+                        yield r["doc_id"], r["size"], r["day"], b["instant"], "U"
+                elif b["type"] == BLOCK_DELETE:
+                    for k in b["keys"]:
+                        yield int(k), 0, 0, b["instant"], "D"
 
         paths_df = spark.createDataFrame(
             [(p,) for p in sorted(set(log_paths))], "log_path string"
         ).repartition(min(len(set(log_paths)), 32))
-        log_rows = paths_df.mapInPandas(
-            decode, "doc_id long, size long, day int, instant string, op string"
+        log_rows = map_rows(
+            paths_df,
+            decode,
+            "doc_id long, size long, day int, instant string, op string",
         )
         merged = base.unionByName(log_rows)
 

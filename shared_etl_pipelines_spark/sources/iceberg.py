@@ -121,9 +121,7 @@ def snapshot_files(
     """Live data files of a snapshot: status EXISTING/ADDED entries
     across all its manifests (DELETED tombstones drop). Manifest decode
     is executor-side; only the manifest LIST rides the driver."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
     meta = read_table_metadata(table_path)
     snap = _pick_snapshot(meta, snapshot_id)
@@ -131,32 +129,22 @@ def snapshot_files(
     if not manifests:
         raise ValueError("iceberg: snapshot has no manifests — quarantine")
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "file_path", "file_format", "partition_json",
-            "record_count", "file_size_in_bytes", "status",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for path in pdf["manifest_path"]:
-                with open(path, "rb") as fh:
-                    recs = read_avro_ocf(fh.read())["records"]
-                for e in recs:
-                    df_ = e["data_file"]
-                    rows["file_path"].append(df_["file_path"])
-                    rows["file_format"].append(df_["file_format"])
-                    rows["partition_json"].append(
-                        json.dumps(df_["partition"], sort_keys=True)
-                    )
-                    rows["record_count"].append(df_["record_count"])
-                    rows["file_size_in_bytes"].append(df_["file_size_in_bytes"])
-                    rows["status"].append(e["status"])
-            yield pd.DataFrame(rows)
+    def decode(path):
+        with open(path, "rb") as fh:
+            recs = read_avro_ocf(fh.read())["records"]
+        for e in recs:
+            df_ = e["data_file"]
+            yield (
+                df_["file_path"], df_["file_format"],
+                json.dumps(df_["partition"], sort_keys=True),
+                df_["record_count"], df_["file_size_in_bytes"], e["status"],
+            )
 
     paths = spark.createDataFrame(
         [(m,) for m in manifests], "manifest_path string"
     ).repartition(min(len(manifests), 32))
-    entries = paths.mapInPandas(
+    entries = map_rows(
+        paths,
         decode,
         "file_path string, file_format string, partition_json string, "
         "record_count long, file_size_in_bytes long, status int",
@@ -406,36 +394,24 @@ def _decode_entries_v2(spark: SparkSession, manifests: list[str]) -> DataFrame:
     """Executor-side v2 manifest decode (same split as snapshot_files:
     only the manifest PATH list rides the driver; the O(#files) entry
     payload decodes inside mapInPandas)."""
-    from collections.abc import Iterator
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
-    import pandas as pd
-
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "status", "sequence_number", "content", "file_path",
-            "record_count", "equality_ids_csv",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for path in pdf["manifest_path"]:
-                with open(path, "rb") as fh:
-                    recs = read_avro_ocf(fh.read())["records"]
-                for e in recs:
-                    df_ = e["data_file"]
-                    rows["status"].append(e["status"])
-                    rows["sequence_number"].append(e["sequence_number"])
-                    rows["content"].append(df_["content"])
-                    rows["file_path"].append(df_["file_path"])
-                    rows["record_count"].append(df_["record_count"])
-                    rows["equality_ids_csv"].append(
-                        ",".join(str(i) for i in df_["equality_ids"])
-                    )
-            yield pd.DataFrame(rows)
+    def decode(path):
+        with open(path, "rb") as fh:
+            recs = read_avro_ocf(fh.read())["records"]
+        for e in recs:
+            df_ = e["data_file"]
+            yield (
+                e["status"], e["sequence_number"], df_["content"],
+                df_["file_path"], df_["record_count"],
+                ",".join(str(i) for i in df_["equality_ids"]),
+            )
 
     paths = spark.createDataFrame(
         [(m,) for m in manifests], "manifest_path string"
     ).repartition(min(len(manifests), 32))
-    return paths.mapInPandas(
+    return map_rows(
+        paths,
         decode,
         "status int, sequence_number long, content int, file_path string, "
         "record_count long, equality_ids_csv string",

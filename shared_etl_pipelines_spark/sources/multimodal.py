@@ -2,9 +2,16 @@
 
 Generalizes the reference's STAC asset table (item JSON + per-band COG
 assets, pipelines/sentinel/download-sentinel2-l2a-michigan.yml:15-35,58):
-an asset row is (id, media_type, blob BINARY, meta STRUCT). Decode /
-feature-extract runs as Arrow-batched mapInPandas — the only sane way to
-touch bytes at scale (whole-partition batches, zero-copy into pandas).
+an asset row is (id, media_type, blob BINARY, meta STRUCT).
+
+Every fixture maker and decoder here is a per-row kernel: a plain
+function of one row's column values that yields zero, one or many
+output tuples in its DDL's column order. ``functions.rows.map_rows``
+runs it inside one Arrow-batched mapInPandas (whole-partition batches,
+no shuffle), so a kernel holds no batch loop and no column buffers, and
+its DDL string is the only list of its output columns. A decoder's own
+try/except decides which blobs quarantine as a flagged row and which
+fail the task; the adapter catches nothing.
 
 PNG, GIF, BMP and baseline JPEG decoding are REAL (sources/{png,gif,
 bmp,jpeg}.py — pure-python codecs): decode_images dispatches on the
@@ -17,11 +24,10 @@ stubbed.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from shared_etl_pipelines_spark.functions.rows import map_rows
 
 DECODED_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, checksum bigint, "
@@ -61,21 +67,12 @@ def _fake_decode(blob: bytes) -> tuple[int, int, int, int]:
 def decode_assets(assets: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract over the asset table."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [_fake_decode(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "media_type": pdf["media_type"].values,
-                    "n_bytes": [d[0] for d in decoded],
-                    "checksum": [d[1] for d in decoded],
-                    "fake_width": [d[2] for d in decoded],
-                    "fake_height": [d[3] for d in decoded],
-                }
-            )
+    def decode(doc_id, media_type, blob):
+        yield (doc_id, media_type, *_fake_decode(blob))
 
-    return assets.mapInPandas(batches, schema=DECODED_SCHEMA)
+    return map_rows(
+        assets.select("doc_id", "media_type", "blob"), decode, DECODED_SCHEMA
+    )
 
 
 def synthetic_png_assets(
@@ -91,33 +88,27 @@ def synthetic_png_assets(
     lets a SQL oracle check the full encode->decode round trip without
     any image library."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import png
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = len(str(payload).encode("utf-8"))
-                w = n % 16 + 1
-                h = (n // 16) % 16 + 1
-                i = np.arange(w * h, dtype=np.int64)
-                arr = ((int(doc_id) * 31 + i) % 256).astype(np.uint8).reshape(h, w)
-                ids.append(doc_id)
-                blobs.append(
-                    png.encode_png(
-                        arr,
-                        filter_type=int(doc_id) % 5,
-                        interlace=int(doc_id) % 2 == 1,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/png", "blob": blobs}
-            )
+        n = len(str(payload).encode("utf-8"))
+        w = n % 16 + 1
+        h = (n // 16) % 16 + 1
+        i = np.arange(w * h, dtype=np.int64)
+        arr = ((int(doc_id) * 31 + i) % 256).astype(np.uint8).reshape(h, w)
+        blob = png.encode_png(
+            arr,
+            filter_type=int(doc_id) % 5,
+            interlace=int(doc_id) % 2 == 1,
+        )
+        yield doc_id, "image/png", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -131,29 +122,22 @@ def synthetic_gif_assets(
     INTERLACED (r8 — the progressive layout real crawled GIFs use;
     same pixels, so the oracle is untouched)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import gif
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = len(str(payload).encode("utf-8"))
-                w = n % 16 + 1
-                h = (n // 16) % 16 + 1
-                i = np.arange(w * h, dtype=np.int64)
-                arr = ((int(doc_id) * 31 + i) % 256).astype(np.uint8).reshape(h, w)
-                ids.append(doc_id)
-                blobs.append(
-                    gif.encode_gif(arr, interlaced=int(doc_id) % 2 == 1)
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/gif", "blob": blobs}
-            )
+        n = len(str(payload).encode("utf-8"))
+        w = n % 16 + 1
+        h = (n // 16) % 16 + 1
+        i = np.arange(w * h, dtype=np.int64)
+        arr = ((int(doc_id) * 31 + i) % 256).astype(np.uint8).reshape(h, w)
+        yield doc_id, "image/gif", gif.encode_gif(arr, interlaced=int(doc_id) % 2 == 1)
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -173,36 +157,30 @@ def synthetic_jpeg_assets(
     entropy codings against the same closed-form oracle — the exactness
     contract holds identically for both (sources/jpeg.py)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import jpeg
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                bw = n % 4 + 1
-                bh = (n // 4) % 4 + 1
-                k = np.arange(bw * bh, dtype=np.int64)
-                blocks = ((d * 31 + k) % 256).astype(np.uint8).reshape(bh, bw)
-                arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                ids.append(d)
-                if d % 2:
-                    blobs.append(
-                        jpeg.encode_jpeg_progressive(
-                            arr, restart_interval=d % 3, al=d % 3
-                        )
-                    )
-                else:
-                    blobs.append(jpeg.encode_jpeg(arr, restart_interval=d % 3))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/jpeg", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        bw = n % 4 + 1
+        bh = (n // 4) % 4 + 1
+        k = np.arange(bw * bh, dtype=np.int64)
+        blocks = ((d * 31 + k) % 256).astype(np.uint8).reshape(bh, bw)
+        arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
+        if d % 2:
+            blob = jpeg.encode_jpeg_progressive(
+                arr, restart_interval=d % 3, al=d % 3
             )
+        else:
+            blob = jpeg.encode_jpeg(arr, restart_interval=d % 3)
+        yield d, "image/jpeg", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -223,57 +201,41 @@ def decode_images(assets: DataFrame) -> DataFrame:
     either way: at scale this is a full-scan columnar batch job, no
     shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(doc_id, mt, blob):
         from shared_etl_pipelines_spark.sources import bmp, gif, jpeg, png
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "media_type", "n_bytes", "is_real_decode",
-                    "width", "height", "channels", "px_sum",
-                )
-            }
-            for doc_id, mt, blob in zip(pdf["doc_id"], pdf["media_type"], pdf["blob"]):
-                blob = bytes(blob)
-                rows["doc_id"].append(doc_id)
-                rows["media_type"].append(mt)
-                rows["n_bytes"].append(len(blob))
-                # corrupt blobs must NOT kill the scan task: a bad file in
-                # a 100 TB corpus degrades to the stub row, never an abort
-                arr = info = None
-                try:
-                    if png.is_png(blob):
-                        arr, info = png.decode_png(blob)
-                    elif bmp.is_bmp(blob):
-                        arr, info = bmp.decode_bmp(blob)
-                    elif jpeg.is_jpeg(blob):
-                        arr, info = jpeg.decode_jpeg(blob)
-                    elif gif.is_gif(blob):
-                        arr = gif.decode_gif(blob)
-                        info = {
-                            "width": arr.shape[1],
-                            "height": arr.shape[0],
-                            "channels": 1,
-                        }
-                except Exception:  # struct/zlib/Value errors from bad bytes
-                    arr = info = None
-                if info is not None:
-                    rows["is_real_decode"].append(True)
-                    rows["width"].append(info["width"])
-                    rows["height"].append(info["height"])
-                    rows["channels"].append(info["channels"])
-                    rows["px_sum"].append(int(arr.astype("int64").sum()))
-                else:
-                    n, checksum, fw, fh = _fake_decode(blob)
-                    rows["is_real_decode"].append(False)
-                    rows["width"].append(fw)
-                    rows["height"].append(fh)
-                    rows["channels"].append(1)
-                    rows["px_sum"].append(checksum)
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        # corrupt blobs must NOT kill the scan task: a bad file in
+        # a 100 TB corpus degrades to the stub row, never an abort
+        arr = info = None
+        try:
+            if png.is_png(blob):
+                arr, info = png.decode_png(blob)
+            elif bmp.is_bmp(blob):
+                arr, info = bmp.decode_bmp(blob)
+            elif jpeg.is_jpeg(blob):
+                arr, info = jpeg.decode_jpeg(blob)
+            elif gif.is_gif(blob):
+                arr = gif.decode_gif(blob)
+                info = {
+                    "width": arr.shape[1],
+                    "height": arr.shape[0],
+                    "channels": 1,
+                }
+        except Exception:  # struct/zlib/Value errors from bad bytes
+            arr = info = None
+        if info is not None:
+            yield (
+                doc_id, mt, len(blob), True, info["width"], info["height"],
+                info["channels"], int(arr.astype("int64").sum()),
+            )
+        else:
+            n, checksum, fw, fh = _fake_decode(blob)
+            yield doc_id, mt, len(blob), False, fw, fh, 1, checksum
 
-    return assets.mapInPandas(batches, schema=IMAGE_SCHEMA)
+    return map_rows(
+        assets.select("doc_id", "media_type", "blob"), decode, IMAGE_SCHEMA
+    )
 
 
 AUDIO_SCHEMA = (
@@ -291,25 +253,20 @@ def synthetic_wav_assets(
     ((id*7 + i*13) % 4001) - 2000 — closed-form amplitude stats let a
     SQL oracle pin the encode->decode round trip."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = len(str(payload).encode("utf-8")) % 256 + 16
-                i = np.arange(n, dtype=np.int64)
-                s = ((int(doc_id) * 7 + i * 13) % 4001) - 2000
-                ids.append(doc_id)
-                blobs.append(wav.encode_wav(s.astype("<i2"), 16000))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/wav", "blob": blobs}
-            )
+        n = len(str(payload).encode("utf-8")) % 256 + 16
+        i = np.arange(n, dtype=np.int64)
+        s = ((int(doc_id) * 7 + i * 13) % 4001) - 2000
+        yield doc_id, "audio/wav", wav.encode_wav(s.astype("<i2"), 16000)
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -324,33 +281,26 @@ def synthetic_animated_gif_assets(
     sums are closed-form in (d, j), so a SQL oracle pins the full
     multi-frame decode + composition."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import gif
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                w, h = 8 + d % 9, 8 + d % 7
-                v0 = (d * 31) % 256
-                frames = [(0, 0, np.full((h, w), v0, dtype=np.uint8))]
-                delays = [(d + 0) % 50 + 1]
-                for j in range(1, 2 + d % 3):
-                    vj = (d * 31 + j * 53) % 256
-                    frames.append(
-                        (1, 1, np.full((h // 2, w // 2), vj, dtype=np.uint8))
-                    )
-                    delays.append((d + j) % 50 + 1)
-                ids.append(doc_id)
-                blobs.append(gif.encode_gif_animated(frames, delays_cs=delays))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/gif", "blob": blobs}
+        d = int(doc_id)
+        w, h = 8 + d % 9, 8 + d % 7
+        v0 = (d * 31) % 256
+        frames = [(0, 0, np.full((h, w), v0, dtype=np.uint8))]
+        delays = [(d + 0) % 50 + 1]
+        for j in range(1, 2 + d % 3):
+            vj = (d * 31 + j * 53) % 256
+            frames.append(
+                (1, 1, np.full((h // 2, w // 2), vj, dtype=np.uint8))
             )
+            delays.append((d + j) % 50 + 1)
+        yield doc_id, "image/gif", gif.encode_gif_animated(frames, delays_cs=delays)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -361,41 +311,25 @@ def gif_frame_stats(assets: DataFrame) -> DataFrame:
     large crawled-GIF slice of "video" data. Corrupt blobs quarantine
     as a single is_real_decode=false row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def frame_stats(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import gif
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "frame_idx", "is_real_decode", "delay_cs", "px_sum"
-                )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    frames = gif.decode_gif_frames(blob) if gif.is_gif(blob) else None
-                except Exception:
-                    frames = None
-                if frames is None:
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(-1)
-                    rows["is_real_decode"].append(False)
-                    rows["delay_cs"].append(0)
-                    rows["px_sum"].append(0)
-                    continue
-                for j, (canvas, delay) in enumerate(frames):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(j)
-                    rows["is_real_decode"].append(True)
-                    rows["delay_cs"].append(int(delay))
-                    rows["px_sum"].append(int(canvas.astype(np.int64).sum()))
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        try:
+            frames = gif.decode_gif_frames(blob) if gif.is_gif(blob) else None
+        except Exception:
+            frames = None
+        if frames is None:
+            yield doc_id, -1, False, 0, 0
+            return
+        for j, (canvas, delay) in enumerate(frames):
+            yield doc_id, j, True, int(delay), int(canvas.astype(np.int64).sum())
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        frame_stats,
         "doc_id bigint, frame_idx int, is_real_decode boolean, "
         "delay_cs int, px_sum bigint",
     )
@@ -413,25 +347,18 @@ def synthetic_adpcm_wav_assets(
     embeds as a literal array. The nibble arithmetic for all 16 nibble
     values is pinned against the scalar reference in tests."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                amp = 100 + (d * 37) % 2000
-                s0 = d % 41
-                m = 2 * (8 + d % 32)
-                blob = wav.encode_wav_adpcm_blocks([(amp, s0, [0] * m)], 8000)
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/adpcm", "blob": blobs}
-            )
+        d = int(doc_id)
+        amp = 100 + (d * 37) % 2000
+        s0 = d % 41
+        m = 2 * (8 + d % 32)
+        blob = wav.encode_wav_adpcm_blocks([(amp, s0, [0] * m)], 8000)
+        yield doc_id, "audio/adpcm", blob
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -445,28 +372,21 @@ def synthetic_mulaw_wav_assets(
     compand->expand is the identity and a SQL oracle computes the
     decoded |sample| sum in closed form from doc_id alone."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n = 80 + d % 100
-                amp = ((((d % 16) * 8) + 132) << (d % 8)) - 132
-                if d % 2 == 1:
-                    amp = -amp
-                s = np.full(n, amp, dtype=np.int16)
-                ids.append(doc_id)
-                blobs.append(wav.encode_wav_mulaw(s, 8000))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/basic", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = 80 + d % 100
+        amp = ((((d % 16) * 8) + 132) << (d % 8)) - 132
+        if d % 2 == 1:
+            amp = -amp
+        s = np.full(n, amp, dtype=np.int16)
+        yield doc_id, "audio/basic", wav.encode_wav_mulaw(s, 8000)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -476,46 +396,31 @@ def decode_audio(assets: DataFrame) -> DataFrame:
     is_real_decode=false. amp_sum = exact sum of |sample| — an integer,
     reproducible bit-for-bit."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(doc_id, mt, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "media_type", "n_bytes", "is_real_decode",
-                    "sample_rate", "channels", "n_samples", "amp_sum",
-                )
-            }
-            for doc_id, mt, blob in zip(pdf["doc_id"], pdf["media_type"], pdf["blob"]):
-                blob = bytes(blob)
-                rows["doc_id"].append(doc_id)
-                rows["media_type"].append(mt)
-                rows["n_bytes"].append(len(blob))
-                arr = info = None
-                try:
-                    if wav.is_wav(blob):
-                        arr, info = wav.decode_wav(blob)
-                except Exception:  # corrupt container degrades to stub
-                    arr = info = None
-                if info is not None:
-                    rows["is_real_decode"].append(True)
-                    rows["sample_rate"].append(info["sample_rate"])
-                    rows["channels"].append(info["channels"])
-                    rows["n_samples"].append(info["n_samples"])
-                    rows["amp_sum"].append(int(np.abs(arr.astype("int64")).sum()))
-                else:
-                    n, checksum, _, _ = _fake_decode(blob)
-                    rows["is_real_decode"].append(False)
-                    rows["sample_rate"].append(0)
-                    rows["channels"].append(1)
-                    rows["n_samples"].append(n)
-                    rows["amp_sum"].append(checksum)
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        arr = info = None
+        try:
+            if wav.is_wav(blob):
+                arr, info = wav.decode_wav(blob)
+        except Exception:  # corrupt container degrades to stub
+            arr = info = None
+        if info is not None:
+            yield (
+                doc_id, mt, len(blob), True, info["sample_rate"],
+                info["channels"], info["n_samples"],
+                int(np.abs(arr.astype("int64")).sum()),
+            )
+        else:
+            n, checksum, _, _ = _fake_decode(blob)
+            yield doc_id, mt, len(blob), False, 0, 1, n, checksum
 
-    return assets.mapInPandas(batches, schema=AUDIO_SCHEMA)
+    return map_rows(
+        assets.select("doc_id", "media_type", "blob"), decode, AUDIO_SCHEMA
+    )
 
 
 RESIZED_SCHEMA = (
@@ -535,24 +440,15 @@ def resize_assets(assets: DataFrame, target_bytes: int = 64) -> DataFrame:
     resample kernel is stubbed.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "media_type", "blob", "orig_bytes", "resized_bytes", "stride"
-            )}
-            for doc_id, mt, blob in zip(pdf["doc_id"], pdf["media_type"], pdf["blob"]):
-                n = len(blob)
-                stride = max(1, -(-n // target_bytes))
-                out = bytes(blob[::stride])
-                rows["doc_id"].append(doc_id)
-                rows["media_type"].append(mt)
-                rows["blob"].append(out)
-                rows["orig_bytes"].append(n)
-                rows["resized_bytes"].append(len(out))
-                rows["stride"].append(stride)
-            yield pd.DataFrame(rows)
+    def resize(doc_id, mt, blob):
+        n = len(blob)
+        stride = max(1, -(-n // target_bytes))
+        out = bytes(blob[::stride])
+        yield doc_id, mt, out, n, len(out), stride
 
-    return assets.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return map_rows(
+        assets.select("doc_id", "media_type", "blob"), resize, RESIZED_SCHEMA
+    )
 
 
 FRAME_SCHEMA = "doc_id bigint, frame_idx int, frame_offset bigint, frame_len bigint"
@@ -567,21 +463,14 @@ def sample_frames(
     via the codec; the fan-out shape, schema and batching are identical.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in ("doc_id", "frame_idx", "frame_offset", "frame_len")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                n = len(blob)
-                n_frames = min(max_frames, n // frame_bytes + 1)
-                for i in range(n_frames):
-                    off = i * frame_bytes
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_offset"].append(off)
-                    rows["frame_len"].append(min(frame_bytes, n - off))
-            yield pd.DataFrame(rows)
+    def sample(doc_id, blob):
+        n = len(blob)
+        n_frames = min(max_frames, n // frame_bytes + 1)
+        for i in range(n_frames):
+            off = i * frame_bytes
+            yield doc_id, i, off, min(frame_bytes, n - off)
 
-    return assets.mapInPandas(batches, schema=FRAME_SCHEMA)
+    return map_rows(assets.select("doc_id", "blob"), sample, FRAME_SCHEMA)
 
 
 def extract_features(assets: DataFrame, dim: int = 8) -> DataFrame:
@@ -592,15 +481,10 @@ def extract_features(assets: DataFrame, dim: int = 8) -> DataFrame:
     """
     schema = "doc_id bigint, features array<float>"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [
-                [((len(b) * (j + 1)) % 251) / 251.0 for j in range(dim)]
-                for b in pdf["blob"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "features": feats})
+    def featurize(doc_id, b):
+        yield doc_id, [((len(b) * (j + 1)) % 251) / 251.0 for j in range(dim)]
 
-    return assets.mapInPandas(batches, schema=schema)
+    return map_rows(assets.select("doc_id", "blob"), featurize, schema)
 
 
 def synthetic_bmp_assets(
@@ -611,26 +495,21 @@ def synthetic_bmp_assets(
     (RGB, rows top-down) — closed-form stats for the SQL oracle, padded
     DIB rows and the vertical flip exercised on every asset."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import bmp
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = len(str(payload).encode("utf-8"))
-                w, h = n % 6 + 2, (n // 6) % 5 + 2
-                j = np.arange(w * h * 3, dtype=np.int64)
-                arr = ((int(doc_id) * 13 + j) % 256).astype(np.uint8).reshape(h, w, 3)
-                ids.append(doc_id)
-                blobs.append(bmp.encode_bmp(arr))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/bmp", "blob": blobs}
-            )
+        n = len(str(payload).encode("utf-8"))
+        w, h = n % 6 + 2, (n // 6) % 5 + 2
+        j = np.arange(w * h * 3, dtype=np.int64)
+        arr = ((int(doc_id) * 13 + j) % 256).astype(np.uint8).reshape(h, w, 3)
+        yield doc_id, "image/bmp", bmp.encode_bmp(arr)
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -642,27 +521,22 @@ def synthetic_avi_assets(
     the whole container (RIFF lists, avih/strh/strf, '00db' DIB frames)
     is written by sources/avi.py, so decoding exercises a real parse."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import avi
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                n = len(str(payload).encode("utf-8"))
-                nf, w, h = n % 3 + 2, n % 6 + 2, (n // 6) % 5 + 2
-                f = np.arange(nf, dtype=np.int64)[:, None]
-                j = np.arange(w * h * 3, dtype=np.int64)[None, :]
-                px = ((int(doc_id) * 31 + f * 11 + j) % 256).astype(np.uint8)
-                ids.append(doc_id)
-                blobs.append(avi.encode_avi(px.reshape(nf, h, w, 3), fps=10))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/avi", "blob": blobs}
-            )
+        n = len(str(payload).encode("utf-8"))
+        nf, w, h = n % 3 + 2, n % 6 + 2, (n // 6) % 5 + 2
+        f = np.arange(nf, dtype=np.int64)[:, None]
+        j = np.arange(w * h * 3, dtype=np.int64)[None, :]
+        px = ((int(doc_id) * 31 + f * 11 + j) % 256).astype(np.uint8)
+        yield doc_id, "video/avi", avi.encode_avi(px.reshape(nf, h, w, 3), fps=10)
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -680,36 +554,28 @@ def synthetic_mjpeg_avi_assets(
     additionally strips DHT — the format's notorious default-table
     convention (decoder falls back to the Annex K tables)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import avi
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nf, w, h = n % 4 + 2, n % 6 + 2, (n // 6) % 5 + 2
-                v = np.array(
-                    [(d * 37) % 200 + f * 7 for f in range(nf)],
-                    dtype=np.uint8,
-                )
-                px = np.repeat(v[:, None], w * h * 3, axis=1).reshape(
-                    nf, h, w, 3
-                )
-                ids.append(doc_id)
-                blobs.append(
-                    avi.encode_avi(
-                        px, fps=10, codec="MJPG", omit_dht=(d % 3 == 0)
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/avi", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nf, w, h = n % 4 + 2, n % 6 + 2, (n // 6) % 5 + 2
+        v = np.array(
+            [(d * 37) % 200 + f * 7 for f in range(nf)],
+            dtype=np.uint8,
+        )
+        px = np.repeat(v[:, None], w * h * 3, axis=1).reshape(
+            nf, h, w, 3
+        )
+        blob = avi.encode_avi(px, fps=10, codec="MJPG", omit_dht=(d % 3 == 0))
+        yield doc_id, "video/avi", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -724,38 +590,33 @@ def synthetic_vp8_webm_assets(
     exact uniforms 128/127/129/129 (chroma DC = 128), so a SQL oracle
     replays every pixel sum in closed form."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mkv, vp8
 
         modes = (vp8.DC_PRED, vp8.V_PRED, vp8.H_PRED, vp8.TM_PRED)
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nf = n % 3 + 1
-                w, h = 16 * (d % 3 + 2), 16 * (d % 2 + 2)
-                frames = [
-                    (1, f * 33, True,
-                     vp8.encode_keyframe_skip(w, h, y_mode=modes[(d + f) % 4]))
-                    for f in range(nf)
-                ]
-                blob = mkv.encode_mkv(
-                    tracks=[{
-                        "number": 1, "uid": d + 1, "type": "video",
-                        "codec_id": "V_VP8", "width": w, "height": h,
-                    }],
-                    clusters=[(0, frames)],
-                    doc_type="webm",
-                )
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/webm", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nf = n % 3 + 1
+        w, h = 16 * (d % 3 + 2), 16 * (d % 2 + 2)
+        frames = [
+            (1, f * 33, True,
+             vp8.encode_keyframe_skip(w, h, y_mode=modes[(d + f) % 4]))
+            for f in range(nf)
+        ]
+        blob = mkv.encode_mkv(
+            tracks=[{
+                "number": 1, "uid": d + 1, "type": "video",
+                "codec_id": "V_VP8", "width": w, "height": h,
+            }],
+            clusters=[(0, frames)],
+            doc_type="webm",
+        )
+        yield doc_id, "video/webm", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -769,47 +630,42 @@ def synthetic_vp8_pframe_webm_assets(
     motion (2*((d+f)%5-2), 2*((d+f)%3-1)), all MBs skipped, so every
     pixel and every decoded MV replays in closed form."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mkv, vp8
 
         modes = (vp8.DC_PRED, vp8.V_PRED, vp8.H_PRED, vp8.TM_PRED)
         refs = ("last", "golden", "altref")
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                w, h = 16 * (d % 3 + 2), 16 * (d % 2 + 2)
-                n_mb = (w // 16) * (h // 16)
-                frames = [
-                    (1, 0, True,
-                     vp8.encode_keyframe_skip(w, h, y_mode=modes[d % 4]))
-                ]
-                for f in range(1, n % 3 + 3):
-                    dx = 2 * ((d + f) % 5 - 2)
-                    dy = 2 * ((d + f) % 3 - 1)
-                    frames.append(
-                        (1, f * 33, False,
-                         vp8.encode_interframe(
-                             w, h, [(refs[(d + f) % 3], dx, dy)] * n_mb
-                         ))
-                    )
-                blob = mkv.encode_mkv(
-                    tracks=[{
-                        "number": 1, "uid": d + 1, "type": "video",
-                        "codec_id": "V_VP8", "width": w, "height": h,
-                    }],
-                    clusters=[(0, frames)],
-                    doc_type="webm",
-                )
-                ids.append(doc_id)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/webm", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        w, h = 16 * (d % 3 + 2), 16 * (d % 2 + 2)
+        n_mb = (w // 16) * (h // 16)
+        frames = [
+            (1, 0, True,
+             vp8.encode_keyframe_skip(w, h, y_mode=modes[d % 4]))
+        ]
+        for f in range(1, n % 3 + 3):
+            dx = 2 * ((d + f) % 5 - 2)
+            dy = 2 * ((d + f) % 3 - 1)
+            frames.append(
+                (1, f * 33, False,
+                 vp8.encode_interframe(
+                     w, h, [(refs[(d + f) % 3], dx, dy)] * n_mb
+                 ))
             )
+        blob = mkv.encode_mkv(
+            tracks=[{
+                "number": 1, "uid": d + 1, "type": "video",
+                "codec_id": "V_VP8", "width": w, "height": h,
+            }],
+            clusters=[(0, frames)],
+            doc_type="webm",
+        )
+        yield doc_id, "video/webm", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -832,88 +688,71 @@ def sample_video_frames(assets: DataFrame, stride: int = 2) -> DataFrame:
     shuffle; at 100 TB this is a full-scan columnar batch job whose
     parallelism is the input partitioning."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sample(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import avi, mkv, mp4, vp8
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "frame_idx", "is_real_decode",
-                    "width", "height", "px_sum",
+        blob = bytes(blob)
+        frames = info = None
+        try:
+            if avi.is_avi(blob):
+                frames, info = avi.decode_avi(blob)
+            elif mp4.is_mp4(blob):
+                dec, minfo = mp4.decode_mp4_frames(
+                    blob, keyframes_only=False
                 )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                frames = info = None
-                try:
-                    if avi.is_avi(blob):
-                        frames, info = avi.decode_avi(blob)
-                    elif mp4.is_mp4(blob):
-                        dec, minfo = mp4.decode_mp4_frames(
-                            blob, keyframes_only=False
-                        )
-                        frames = [a for _, a in dec]
-                        vt = [
-                            t for t in minfo["tracks"]
-                            if t["handler"] == "vide"
-                        ][0]
-                        info = {
-                            "width": vt["width"],
-                            "height": vt["height"],
-                            "n_frames": len(frames),
-                        }
-                    elif mkv.is_mkv(blob):
-                        # WebM/Matroska VP8 keyframes: real pixel decode
-                        # via sources/vp8.py (skip-MB streams; anything
-                        # else raises and degrades to the stub below)
-                        parsed = mkv.parse_mkv(blob, collect_frames=True)
-                        vt = [
-                            t for t in parsed["tracks"]
-                            if t.get("codec_id") == "V_VP8"
-                            and t["track_type"] == "video"
-                        ][0]
-                        # full sequence decode (r12): keyframes AND
-                        # motion-compensated inter frames, reference
-                        # buffers maintained per the refresh semantics
-                        decoded = vp8.decode_sequence(
-                            [p for _bi, _key, p in vt["frames"]]
-                        )
-                        frames = [
-                            np.frombuffer(
-                                out["y"] + out["u"] + out["v"],
-                                dtype=np.uint8,
-                            )
-                            for out in decoded
-                        ]
-                        info = {
-                            "width": vt["width"],
-                            "height": vt["height"],
-                            "n_frames": len(frames),
-                        }
-                except Exception:  # corrupt/undecodable degrades to stub
-                    frames = info = None
-                if info is not None:
-                    for idx in range(0, info["n_frames"], stride):
-                        rows["doc_id"].append(doc_id)
-                        rows["frame_idx"].append(idx)
-                        rows["is_real_decode"].append(True)
-                        rows["width"].append(info["width"])
-                        rows["height"].append(info["height"])
-                        rows["px_sum"].append(int(frames[idx].astype("int64").sum()))
-                else:
-                    n, checksum, fw, fh = _fake_decode(blob)
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(0)
-                    rows["is_real_decode"].append(False)
-                    rows["width"].append(fw)
-                    rows["height"].append(fh)
-                    rows["px_sum"].append(checksum)
-            yield pd.DataFrame(rows)
+                frames = [a for _, a in dec]
+                vt = [
+                    t for t in minfo["tracks"]
+                    if t["handler"] == "vide"
+                ][0]
+                info = {
+                    "width": vt["width"],
+                    "height": vt["height"],
+                    "n_frames": len(frames),
+                }
+            elif mkv.is_mkv(blob):
+                # WebM/Matroska VP8 keyframes: real pixel decode
+                # via sources/vp8.py (skip-MB streams; anything
+                # else raises and degrades to the stub below)
+                parsed = mkv.parse_mkv(blob, collect_frames=True)
+                vt = [
+                    t for t in parsed["tracks"]
+                    if t.get("codec_id") == "V_VP8"
+                    and t["track_type"] == "video"
+                ][0]
+                # full sequence decode (r12): keyframes AND
+                # motion-compensated inter frames, reference
+                # buffers maintained per the refresh semantics
+                decoded = vp8.decode_sequence(
+                    [p for _bi, _key, p in vt["frames"]]
+                )
+                frames = [
+                    np.frombuffer(
+                        out["y"] + out["u"] + out["v"],
+                        dtype=np.uint8,
+                    )
+                    for out in decoded
+                ]
+                info = {
+                    "width": vt["width"],
+                    "height": vt["height"],
+                    "n_frames": len(frames),
+                }
+        except Exception:  # corrupt/undecodable degrades to stub
+            frames = info = None
+        if info is not None:
+            for idx in range(0, info["n_frames"], stride):
+                yield (
+                    doc_id, idx, True, info["width"], info["height"],
+                    int(frames[idx].astype("int64").sum()),
+                )
+        else:
+            n, checksum, fw, fh = _fake_decode(blob)
+            yield doc_id, 0, False, fw, fh, checksum
 
-    return assets.mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
+    return map_rows(assets.select("doc_id", "blob"), sample, VIDEO_FRAME_SCHEMA)
 
 
 RESIZED_IMAGE_SCHEMA = (
@@ -931,7 +770,7 @@ def resize_images(assets: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFram
     formats keep the documented byte-stride stub (is_real_resize=false,
     stats from the stub path). One Arrow-batched mapInPandas pass."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize(doc_id, mt, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import bmp, png
@@ -942,48 +781,31 @@ def resize_images(assets: DataFrame, out_w: int = 4, out_h: int = 4) -> DataFram
             xs = (np.arange(out_w) * w) // out_w
             return arr[np.ix_(ys, xs)]
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "media_type", "is_real_resize",
-                    "out_width", "out_height", "px_sum", "blob",
-                )
-            }
-            for doc_id, mt, blob in zip(pdf["doc_id"], pdf["media_type"], pdf["blob"]):
-                blob = bytes(blob)
-                rows["doc_id"].append(doc_id)
-                rows["media_type"].append(mt)
-                small = None
-                try:
-                    if png.is_png(blob):
-                        arr, _ = png.decode_png(blob)
-                        small = nn(arr)
-                        out = png.encode_png(small.astype("uint8"))
-                    elif bmp.is_bmp(blob):
-                        arr, _ = bmp.decode_bmp(blob)
-                        small = nn(arr)
-                        out = bmp.encode_bmp(small.astype("uint8"))
-                except Exception:  # corrupt image degrades to the stub
-                    small = None
-                if small is None:
-                    n = len(blob)
-                    stride = max(1, -(-n // (out_w * out_h)))
-                    out = bytes(blob[::stride])
-                if small is not None:
-                    rows["is_real_resize"].append(True)
-                    rows["out_width"].append(out_w)
-                    rows["out_height"].append(out_h)
-                    rows["px_sum"].append(int(small.astype("int64").sum()))
-                else:
-                    rows["is_real_resize"].append(False)
-                    rows["out_width"].append(0)
-                    rows["out_height"].append(0)
-                    rows["px_sum"].append(len(out))
-                rows["blob"].append(out)
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        small = None
+        try:
+            if png.is_png(blob):
+                arr, _ = png.decode_png(blob)
+                small = nn(arr)
+                out = png.encode_png(small.astype("uint8"))
+            elif bmp.is_bmp(blob):
+                arr, _ = bmp.decode_bmp(blob)
+                small = nn(arr)
+                out = bmp.encode_bmp(small.astype("uint8"))
+        except Exception:  # corrupt image degrades to the stub
+            small = None
+        if small is None:
+            n = len(blob)
+            stride = max(1, -(-n // (out_w * out_h)))
+            out = bytes(blob[::stride])
+        if small is not None:
+            yield doc_id, mt, True, out_w, out_h, int(small.astype("int64").sum()), out
+        else:
+            yield doc_id, mt, False, 0, 0, len(out), out
 
-    return assets.mapInPandas(batches, schema=RESIZED_IMAGE_SCHEMA)
+    return map_rows(
+        assets.select("doc_id", "media_type", "blob"), resize, RESIZED_IMAGE_SCHEMA
+    )
 
 
 def synthetic_patterned_png_assets(
@@ -999,27 +821,20 @@ def synthetic_patterned_png_assets(
     five scanline filters, so the hash pipeline exercises the real
     codec."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import png
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                i = np.arange(256, dtype=np.int64)
-                arr = (
-                    ((i + 1) * (2 * (d // 8) + 17) + (d % 8) * 3) % 251
-                ).astype(np.uint8).reshape(16, 16)
-                ids.append(d)
-                blobs.append(png.encode_png(arr, filter_type=d % 5))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/png", "blob": blobs}
-            )
+        d = int(doc_id)
+        i = np.arange(256, dtype=np.int64)
+        arr = (
+            ((i + 1) * (2 * (d // 8) + 17) + (d % 8) * 3) % 251
+        ).astype(np.uint8).reshape(16, 16)
+        yield d, "image/png", png.encode_png(arr, filter_type=d % 5)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -1038,35 +853,27 @@ def synthetic_patterned_jpeg_assets(
     so near-dup pairs routinely span a baseline and a progressive blob,
     exactly as a re-crawled image pair does in the wild."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import jpeg
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                k = np.arange(64, dtype=np.int64)
-                blocks = (
-                    ((k + 1) * (2 * (d // 8) + 17) + (d % 8) * 3) % 251
-                ).astype(np.uint8).reshape(8, 8)
-                arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                ids.append(d)
-                if d % 2:
-                    blobs.append(
-                        jpeg.encode_jpeg_progressive(
-                            arr, restart_interval=d % 3, al=d % 3
-                        )
-                    )
-                else:
-                    blobs.append(jpeg.encode_jpeg(arr, restart_interval=d % 3))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/jpeg", "blob": blobs}
+        d = int(doc_id)
+        k = np.arange(64, dtype=np.int64)
+        blocks = (
+            ((k + 1) * (2 * (d // 8) + 17) + (d % 8) * 3) % 251
+        ).astype(np.uint8).reshape(8, 8)
+        arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
+        if d % 2:
+            blob = jpeg.encode_jpeg_progressive(
+                arr, restart_interval=d % 3, al=d % 3
             )
+        else:
+            blob = jpeg.encode_jpeg(arr, restart_interval=d % 3)
+        yield d, "image/jpeg", blob
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -1077,47 +884,40 @@ def ahash_images(assets: DataFrame) -> DataFrame:
     stay positive BIGINTs in every engine. Corrupt blobs degrade to the
     all-zero hash with is_real_decode=false, never an aborted task."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def ahash(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import bmp, jpeg, png
 
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "is_real_decode", "h_lo", "h_hi")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                arr = None
-                try:
-                    if png.is_png(blob):
-                        arr, _ = png.decode_png(blob)
-                    elif bmp.is_bmp(blob):
-                        arr, _ = bmp.decode_bmp(blob)
-                    elif jpeg.is_jpeg(blob):
-                        arr, _ = jpeg.decode_jpeg(blob)
-                except Exception:
-                    arr = None
-                rows["doc_id"].append(doc_id)
-                if arr is None:
-                    rows["is_real_decode"].append(False)
-                    rows["h_lo"].append(0)
-                    rows["h_hi"].append(0)
-                    continue
-                if arr.ndim == 3:  # first channel of color images
-                    arr = arr[:, :, 0]
-                h, w = arr.shape
-                ys = (np.arange(8) * h) // 8
-                xs = (np.arange(8) * w) // 8
-                samp = arr[np.ix_(ys, xs)].astype(np.int64).reshape(-1)
-                bits = (samp * 64 >= samp.sum()).astype(np.int64)
-                lo = int((bits[:32] << np.arange(32)).sum())
-                hi = int((bits[32:] << np.arange(32)).sum())
-                rows["is_real_decode"].append(True)
-                rows["h_lo"].append(lo)
-                rows["h_hi"].append(hi)
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        arr = None
+        try:
+            if png.is_png(blob):
+                arr, _ = png.decode_png(blob)
+            elif bmp.is_bmp(blob):
+                arr, _ = bmp.decode_bmp(blob)
+            elif jpeg.is_jpeg(blob):
+                arr, _ = jpeg.decode_jpeg(blob)
+        except Exception:
+            arr = None
+        if arr is None:
+            yield doc_id, False, 0, 0
+            return
+        if arr.ndim == 3:  # first channel of color images
+            arr = arr[:, :, 0]
+        h, w = arr.shape
+        ys = (np.arange(8) * h) // 8
+        xs = (np.arange(8) * w) // 8
+        samp = arr[np.ix_(ys, xs)].astype(np.int64).reshape(-1)
+        bits = (samp * 64 >= samp.sum()).astype(np.int64)
+        lo = int((bits[:32] << np.arange(32)).sum())
+        hi = int((bits[32:] << np.arange(32)).sum())
+        yield doc_id, True, lo, hi
 
-    return assets.mapInPandas(
-        batches, "doc_id bigint, is_real_decode boolean, h_lo long, h_hi long"
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        ahash,
+        "doc_id bigint, is_real_decode boolean, h_lo long, h_hi long",
     )
 
 
@@ -1129,25 +929,18 @@ def synthetic_patterned_wav_assets(
     - 200 — docs in a group of 8 share an energy envelope with a small
     amplitude shift. Encoded as real RIFF/PCM by sources/wav.py."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                i = np.arange(640, dtype=np.int64)
-                s = ((i + 1) * (2 * (d // 8) + 23) + (d % 8) * 5) % 401 - 200
-                ids.append(d)
-                blobs.append(wav.encode_wav(s.astype(np.int16)))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/wav", "blob": blobs}
-            )
+        d = int(doc_id)
+        i = np.arange(640, dtype=np.int64)
+        s = ((i + 1) * (2 * (d // 8) + 23) + (d % 8) * 5) % 401 - 200
+        yield d, "audio/wav", wav.encode_wav(s.astype(np.int16))
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -1158,38 +951,34 @@ def audio_fingerprints(assets: DataFrame, n_frames: int = 64) -> DataFrame:
     threshold), packed as two 32-bit halves. Corrupt blobs degrade to
     the zero hash."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fingerprint(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "is_real_decode", "h_lo", "h_hi")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                arr = None
-                try:
-                    if wav.is_wav(blob):
-                        arr, _ = wav.decode_wav(blob)
-                except Exception:
-                    arr = None
-                rows["doc_id"].append(doc_id)
-                if arr is None or arr.size < n_frames:
-                    rows["is_real_decode"].append(False)
-                    rows["h_lo"].append(0)
-                    rows["h_hi"].append(0)
-                    continue
-                mono = np.abs(arr.astype(np.int64)).reshape(len(arr), -1)[:, 0]
-                fl = len(mono) // n_frames
-                frames = mono[: fl * n_frames].reshape(n_frames, fl).sum(axis=1)
-                bits = (frames * n_frames >= frames.sum()).astype(np.int64)
-                rows["is_real_decode"].append(True)
-                rows["h_lo"].append(int((bits[:32] << np.arange(32)).sum()))
-                rows["h_hi"].append(int((bits[32:] << np.arange(32)).sum()))
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        arr = None
+        try:
+            if wav.is_wav(blob):
+                arr, _ = wav.decode_wav(blob)
+        except Exception:
+            arr = None
+        if arr is None or arr.size < n_frames:
+            yield doc_id, False, 0, 0
+            return
+        mono = np.abs(arr.astype(np.int64)).reshape(len(arr), -1)[:, 0]
+        fl = len(mono) // n_frames
+        frames = mono[: fl * n_frames].reshape(n_frames, fl).sum(axis=1)
+        bits = (frames * n_frames >= frames.sum()).astype(np.int64)
+        yield (
+            doc_id, True, int((bits[:32] << np.arange(32)).sum()),
+            int((bits[32:] << np.arange(32)).sum()),
+        )
 
-    return assets.mapInPandas(
-        batches, "doc_id bigint, is_real_decode boolean, h_lo long, h_hi long"
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        fingerprint,
+        "doc_id bigint, is_real_decode boolean, h_lo long, h_hi long",
     )
 
 
@@ -1214,42 +1003,36 @@ def synthetic_scene_avi_assets(
     the same closed-form delta/mean oracle applies with base_sum =
     np * ((id*31)%120)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import avi
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nf, w, h = n % 3 + 4, n % 6 + 2, (n // 6) % 5 + 2
-                f = np.arange(nf, dtype=np.int64)[:, None]
-                j = np.arange(w * h * 3, dtype=np.int64)[None, :]
-                if d % 2:
-                    px = (
-                        (d * 31) % 120 + 0 * j + f * 11 + (f // 3) * 60
-                    ).astype(np.uint8)
-                else:
-                    px = (
-                        (d * 31 + j) % 120 + f * 11 + (f // 3) * 60
-                    ).astype(np.uint8)
-                ids.append(doc_id)
-                blobs.append(
-                    avi.encode_avi(
-                        px.reshape(nf, h, w, 3),
-                        fps=10,
-                        codec="MJPG" if d % 2 else "DIB",
-                        omit_dht=(d % 4 == 1),
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/avi", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nf, w, h = n % 3 + 4, n % 6 + 2, (n // 6) % 5 + 2
+        f = np.arange(nf, dtype=np.int64)[:, None]
+        j = np.arange(w * h * 3, dtype=np.int64)[None, :]
+        if d % 2:
+            px = (
+                (d * 31) % 120 + 0 * j + f * 11 + (f // 3) * 60
+            ).astype(np.uint8)
+        else:
+            px = (
+                (d * 31 + j) % 120 + f * 11 + (f // 3) * 60
+            ).astype(np.uint8)
+        blob = avi.encode_avi(
+            px.reshape(nf, h, w, 3),
+            fps=10,
+            codec="MJPG" if d % 2 else "DIB",
+            omit_dht=(d % 4 == 1),
+        )
+        yield doc_id, "video/avi", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -1267,31 +1050,22 @@ def frame_deltas(assets: DataFrame) -> DataFrame:
     decoded VALUES, ``mean_delta`` the transition structure. Corrupt
     blobs are quarantined (dropped) like the image decoders."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def deltas(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import avi
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                "doc_id": [], "frame_idx": [], "mean_px": [], "mean_delta": []
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    frames, _ = avi.decode_avi(bytes(blob))
-                except Exception:
-                    continue
-                a = frames.astype(np.int64)
-                d = np.abs(a[1:] - a[:-1]).mean(axis=(1, 2, 3))
-                m = a.mean(axis=(1, 2, 3))
-                for i, dv in enumerate(d, start=1):
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_idx"].append(i)
-                    rows["mean_px"].append(float(m[i]))
-                    rows["mean_delta"].append(float(dv))
-            yield pd.DataFrame(rows)
+        try:
+            frames, _ = avi.decode_avi(bytes(blob))
+        except Exception:
+            return
+        a = frames.astype(np.int64)
+        d = np.abs(a[1:] - a[:-1]).mean(axis=(1, 2, 3))
+        m = a.mean(axis=(1, 2, 3))
+        for i, dv in enumerate(d, start=1):
+            yield int(doc_id), i, float(m[i]), float(dv)
 
-    return assets.select("doc_id", "blob").mapInPandas(batches, DELTA_SCHEMA)
+    return map_rows(assets.select("doc_id", "blob"), deltas, DELTA_SCHEMA)
 
 
 def synthetic_tone_wav_assets(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1306,29 +1080,22 @@ def synthetic_tone_wav_assets(df: DataFrame, id_col: str = "doc_id") -> DataFram
     round(2*|X[k1]|/N) == A1 are all hash-stable integers a SQL oracle
     computes straight from doc_id."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
         i = np.arange(1024, dtype=np.float64)
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                k1, k2 = 3 + d % 13, 20 + d % 9
-                a1 = 4000 + (d % 7) * 500
-                s = a1 * np.sin(2 * np.pi * k1 * i / 256.0) + 1500.0 * np.sin(
-                    2 * np.pi * k2 * i / 256.0
-                )
-                ids.append(d)
-                blobs.append(wav.encode_wav(np.round(s).astype(np.int16), 16000))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/wav", "blob": blobs}
-            )
+        d = int(doc_id)
+        k1, k2 = 3 + d % 13, 20 + d % 9
+        a1 = 4000 + (d % 7) * 500
+        s = a1 * np.sin(2 * np.pi * k1 * i / 256.0) + 1500.0 * np.sin(
+            2 * np.pi * k2 * i / 256.0
+        )
+        yield d, "audio/wav", wav.encode_wav(np.round(s).astype(np.int16), 16000)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -1344,53 +1111,35 @@ def audio_spectral_profile(assets: DataFrame, frame_len: int = 256) -> DataFrame
     failing the batch. Arrow-batched mapInPandas; per-row cost is
     O(samples log frame_len), no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def profile(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "is_real_decode", "n_frames",
-                    "dominant_bin", "second_bin", "amp_est",
-                )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                arr = None
-                try:
-                    if wav.is_wav(blob):
-                        arr, _ = wav.decode_wav(blob)
-                except Exception:
-                    arr = None
-                rows["doc_id"].append(doc_id)
-                if arr is None or len(arr) < frame_len:
-                    rows["is_real_decode"].append(False)
-                    rows["n_frames"].append(0)
-                    rows["dominant_bin"].append(-1)
-                    rows["second_bin"].append(-1)
-                    rows["amp_est"].append(0)
-                    continue
-                mono = arr.astype(np.float64).reshape(len(arr), -1)[:, 0]
-                nf = len(mono) // frame_len
-                frames = mono[: nf * frame_len].reshape(nf, frame_len)
-                mag = np.abs(np.fft.rfft(frames, axis=1)).mean(axis=0)
-                mag[0] = 0.0  # exclude DC from peak picking
-                dom = int(np.argmax(mag))
-                amp = int(round(2.0 * mag[dom] / frame_len))
-                mag[dom] = 0.0
-                second = int(np.argmax(mag))
-                rows["is_real_decode"].append(True)
-                rows["n_frames"].append(nf)
-                rows["dominant_bin"].append(dom)
-                rows["second_bin"].append(second)
-                rows["amp_est"].append(amp)
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        arr = None
+        try:
+            if wav.is_wav(blob):
+                arr, _ = wav.decode_wav(blob)
+        except Exception:
+            arr = None
+        if arr is None or len(arr) < frame_len:
+            yield doc_id, False, 0, -1, -1, 0
+            return
+        mono = arr.astype(np.float64).reshape(len(arr), -1)[:, 0]
+        nf = len(mono) // frame_len
+        frames = mono[: nf * frame_len].reshape(nf, frame_len)
+        mag = np.abs(np.fft.rfft(frames, axis=1)).mean(axis=0)
+        mag[0] = 0.0  # exclude DC from peak picking
+        dom = int(np.argmax(mag))
+        amp = int(round(2.0 * mag[dom] / frame_len))
+        mag[dom] = 0.0
+        second = int(np.argmax(mag))
+        yield doc_id, True, nf, dom, second, amp
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        profile,
         "doc_id bigint, is_real_decode boolean, n_frames int, "
         "dominant_bin int, second_bin int, amp_est int",
     )
@@ -1406,37 +1155,29 @@ def synthetic_commented_jpeg_assets(
     (SOF2, Al = d%3, no DRI) whose scan script for grayscale is exactly
     3 + 2*Al scans — every header field a closed form in doc_id."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import jpeg
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                bw = n % 4 + 1
-                bh = (n // 4) % 4 + 1
-                k = np.arange(bw * bh, dtype=np.int64)
-                blocks = ((d * 31 + k) % 256).astype(np.uint8).reshape(bh, bw)
-                arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                com = f"cam-{d % 5}".encode()
-                ids.append(d)
-                if d % 2:
-                    blobs.append(
-                        jpeg.encode_jpeg_progressive(arr, al=d % 3, comment=com)
-                    )
-                else:
-                    blobs.append(
-                        jpeg.encode_jpeg(arr, restart_interval=d % 3, comment=com)
-                    )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/jpeg", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        bw = n % 4 + 1
+        bh = (n // 4) % 4 + 1
+        k = np.arange(bw * bh, dtype=np.int64)
+        blocks = ((d * 31 + k) % 256).astype(np.uint8).reshape(bh, bw)
+        arr = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
+        com = f"cam-{d % 5}".encode()
+        if d % 2:
+            blob = jpeg.encode_jpeg_progressive(arr, al=d % 3, comment=com)
+        else:
+            blob = jpeg.encode_jpeg(arr, restart_interval=d % 3, comment=com)
+        yield d, "image/jpeg", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -1448,43 +1189,24 @@ def jpeg_metadata_profile(assets: DataFrame) -> DataFrame:
     header bytes each instead of the DCT pipeline. Corrupt headers
     quarantine as is_jpeg=false rows."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def profile(doc_id, blob):
         from shared_etl_pipelines_spark.sources import jpeg
 
-        for pdf in it:
-            rows = {
-                k: []
-                for k in (
-                    "doc_id", "is_jpeg", "sof", "width", "height",
-                    "n_scans", "restart_interval", "comment",
-                )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = jpeg.scan_markers(bytes(blob))
-                except Exception:
-                    m = None
-                if m is None or m["sof"] is None:
-                    rows["is_jpeg"].append(False)
-                    rows["sof"].append("")
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["n_scans"].append(0)
-                    rows["restart_interval"].append(0)
-                    rows["comment"].append("")
-                else:
-                    rows["is_jpeg"].append(True)
-                    rows["sof"].append(m["sof"])
-                    rows["width"].append(m["width"])
-                    rows["height"].append(m["height"])
-                    rows["n_scans"].append(m["n_scans"])
-                    rows["restart_interval"].append(m["restart_interval"])
-                    rows["comment"].append(m["comment"] or "")
-            yield pd.DataFrame(rows)
+        try:
+            m = jpeg.scan_markers(bytes(blob))
+        except Exception:
+            m = None
+        if m is None or m["sof"] is None:
+            yield doc_id, False, "", 0, 0, 0, 0, ""
+        else:
+            yield (
+                doc_id, True, m["sof"], m["width"], m["height"],
+                m["n_scans"], m["restart_interval"], m["comment"] or "",
+            )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        profile,
         "doc_id bigint, is_jpeg boolean, sof string, width int, height int, "
         "n_scans int, restart_interval int, comment string",
     )
@@ -1507,73 +1229,68 @@ def synthetic_mp4_assets(
     sample, chunks of 3 samples (multi-entry stco + two-run stsc on
     4-frame docs)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import mp4
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nf = n % 3 + 2
-                bw, bh = n % 4 + 1, (n // 4) % 4 + 1
-                w, h = 8 * bw, 8 * bh
-                audio = (
-                    [b"a" * (10 + i) for i in range(n % 2 + 1)]
-                    if d % 2
-                    else None
-                )
-                aac = (
-                    (
-                        mp4._AAC_RATES[3 + (d // 2) % 8],
-                        (d // 4) % 2 + 1,
-                    )
-                    if d % 2
-                    else None
-                )
-                if d % 3 == 0:
-                    samples = [
-                        bytes(
-                            (d + i * 7 + j) % 256
-                            for j in range(24 + d % 8 + i)
-                        )
-                        for i in range(nf)
-                    ]
-                    blob = mp4.encode_mp4(
-                        samples, w, h, fps=10, codec=b"avc1",
-                        keyframe_interval=2, samples_per_chunk=3,
-                        audio_samples=audio,
-                        avc_params=(
-                            (66, 77, 100)[(d // 3) % 3],
-                            30 + (d // 3) % 4,
-                        ),
-                        aac_params=aac,
-                    )
-                else:
-                    k = np.arange(bw * bh, dtype=np.int64)
-                    frames = []
-                    for f in range(nf):
-                        blocks = (
-                            ((d * 31 + f * 11 + k) % 256)
-                            .astype(np.uint8)
-                            .reshape(bh, bw)
-                        )
-                        frames.append(np.repeat(np.repeat(blocks, 8, 0), 8, 1))
-                    blob = mp4.encode_mp4_mjpeg(
-                        np.stack(frames), fps=10, keyframe_interval=2,
-                        samples_per_chunk=3, audio_samples=audio,
-                        aac_params=aac,
-                    )
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/mp4", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nf = n % 3 + 2
+        bw, bh = n % 4 + 1, (n // 4) % 4 + 1
+        w, h = 8 * bw, 8 * bh
+        audio = (
+            [b"a" * (10 + i) for i in range(n % 2 + 1)]
+            if d % 2
+            else None
+        )
+        aac = (
+            (
+                mp4._AAC_RATES[3 + (d // 2) % 8],
+                (d // 4) % 2 + 1,
             )
+            if d % 2
+            else None
+        )
+        if d % 3 == 0:
+            samples = [
+                bytes(
+                    (d + i * 7 + j) % 256
+                    for j in range(24 + d % 8 + i)
+                )
+                for i in range(nf)
+            ]
+            blob = mp4.encode_mp4(
+                samples, w, h, fps=10, codec=b"avc1",
+                keyframe_interval=2, samples_per_chunk=3,
+                audio_samples=audio,
+                avc_params=(
+                    (66, 77, 100)[(d // 3) % 3],
+                    30 + (d // 3) % 4,
+                ),
+                aac_params=aac,
+            )
+        else:
+            k = np.arange(bw * bh, dtype=np.int64)
+            frames = []
+            for f in range(nf):
+                blocks = (
+                    ((d * 31 + f * 11 + k) % 256)
+                    .astype(np.uint8)
+                    .reshape(bh, bw)
+                )
+                frames.append(np.repeat(np.repeat(blocks, 8, 0), 8, 1))
+            blob = mp4.encode_mp4_mjpeg(
+                np.stack(frames), fps=10, keyframe_interval=2,
+                samples_per_chunk=3, audio_samples=audio,
+                aac_params=aac,
+            )
+        yield d, "video/mp4", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -1585,48 +1302,28 @@ def mp4_track_scan(assets: DataFrame) -> DataFrame:
     cannot decode (avc1/H.264 tracks scan fine); corrupt containers
     quarantine as a single handler='corrupt' row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mp4
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "track_id", "handler", "codec", "width",
-                    "height", "n_samples", "n_keyframes", "duration_ms",
-                )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = mp4.parse_mp4(blob) if mp4.is_mp4(blob) else None
-                except Exception:
-                    info = None
-                if info is None:
-                    rows["doc_id"].append(doc_id)
-                    rows["track_id"].append(-1)
-                    rows["handler"].append("corrupt")
-                    rows["codec"].append("")
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["n_samples"].append(0)
-                    rows["n_keyframes"].append(0)
-                    rows["duration_ms"].append(0)
-                    continue
-                for t in info["tracks"]:
-                    rows["doc_id"].append(doc_id)
-                    rows["track_id"].append(int(t["track_id"]))
-                    rows["handler"].append(t["handler"])
-                    rows["codec"].append(t["codec"])
-                    rows["width"].append(int(t["width"] or 0))
-                    rows["height"].append(int(t["height"] or 0))
-                    rows["n_samples"].append(int(t["n_samples"]))
-                    rows["n_keyframes"].append(int(t["n_keyframes"]))
-                    rows["duration_ms"].append(int(t["duration_ms"]))
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        try:
+            info = mp4.parse_mp4(blob) if mp4.is_mp4(blob) else None
+        except Exception:
+            info = None
+        if info is None:
+            yield doc_id, -1, "corrupt", "", 0, 0, 0, 0, 0
+            return
+        for t in info["tracks"]:
+            yield (
+                doc_id, int(t["track_id"]), t["handler"], t["codec"],
+                int(t["width"] or 0), int(t["height"] or 0),
+                int(t["n_samples"]), int(t["n_keyframes"]),
+                int(t["duration_ms"]),
+            )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, track_id int, handler string, codec string, "
         "width int, height int, n_samples int, n_keyframes int, "
         "duration_ms bigint",
@@ -1644,62 +1341,46 @@ def mp4_codec_params(assets: DataFrame) -> DataFrame:
     extradata emit has_params=false rows — the scan never guesses. One
     mapInPandas pass, no shuffle; per-file parallelism."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def track_row(doc_id, track_id, handler, codec, params):
+        p = params or {}
+        err = p.get("error")
+        ok = bool(p) and err is None and (
+            "profile_idc" in p or "sample_rate" in p
+        )
+        return (
+            doc_id, track_id, handler, codec, ok,
+            int(p.get("profile_idc", 0)),
+            int(p.get("level_idc", 0)),
+            int(p.get("chroma_format_idc", 0)),
+            int(p.get("bit_depth", 0)),
+            int(p.get("width", 0)),
+            int(p.get("height", 0)),
+            int(p.get("object_type", 0)),
+            int(p.get("sample_rate", 0)),
+            int(p.get("channels", 0)),
+            err if err else ("ok" if ok else "no_extradata"),
+        )
+
+    def params(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mp4
 
-        cols = (
-            "doc_id", "track_id", "handler", "codec", "has_params",
-            "profile_idc", "level_idc", "chroma_format", "bit_depth",
-            "sps_width", "sps_height", "aac_object_type",
-            "aac_sample_rate", "aac_channels", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
+        blob = bytes(blob)
+        try:
+            info = mp4.parse_mp4(blob) if mp4.is_mp4(blob) else None
+        except Exception:
+            info = None
+        if info is None:
+            yield track_row(doc_id, -1, "corrupt", "", {"error": "corrupt"})
+            return
+        for t in info["tracks"]:
+            yield track_row(
+                doc_id, int(t["track_id"]), t["handler"],
+                t["codec"], t.get("codec_params"),
+            )
 
-            def emit(doc_id, track_id, handler, codec, params):
-                rows["doc_id"].append(doc_id)
-                rows["track_id"].append(track_id)
-                rows["handler"].append(handler)
-                rows["codec"].append(codec)
-                p = params or {}
-                err = p.get("error")
-                ok = bool(p) and err is None and (
-                    "profile_idc" in p or "sample_rate" in p
-                )
-                rows["has_params"].append(ok)
-                rows["profile_idc"].append(int(p.get("profile_idc", 0)))
-                rows["level_idc"].append(int(p.get("level_idc", 0)))
-                rows["chroma_format"].append(
-                    int(p.get("chroma_format_idc", 0))
-                )
-                rows["bit_depth"].append(int(p.get("bit_depth", 0)))
-                rows["sps_width"].append(int(p.get("width", 0)))
-                rows["sps_height"].append(int(p.get("height", 0)))
-                rows["aac_object_type"].append(int(p.get("object_type", 0)))
-                rows["aac_sample_rate"].append(int(p.get("sample_rate", 0)))
-                rows["aac_channels"].append(int(p.get("channels", 0)))
-                rows["reason"].append(
-                    err if err else ("ok" if ok else "no_extradata")
-                )
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = mp4.parse_mp4(blob) if mp4.is_mp4(blob) else None
-                except Exception:
-                    info = None
-                if info is None:
-                    emit(doc_id, -1, "corrupt", "", {"error": "corrupt"})
-                    continue
-                for t in info["tracks"]:
-                    emit(
-                        doc_id, int(t["track_id"]), t["handler"],
-                        t["codec"], t.get("codec_params"),
-                    )
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        params,
         "doc_id bigint, track_id int, handler string, codec string, "
         "has_params boolean, profile_idc int, level_idc int, "
         "chroma_format int, bit_depth int, sps_width int, sps_height "
@@ -1716,69 +1397,50 @@ def mp4_keyframe_stats(assets: DataFrame) -> DataFrame:
     carrying the codec fourcc in ``reason`` — never fabricated pixels.
     One mapInPandas pass, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def quarantine(doc_id, reason):
+        return doc_id, -1, False, 0, 0, 0, reason
+
+    def keyframes(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import mp4
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "frame_idx", "is_real_decode", "width",
-                    "height", "px_sum", "reason",
-                )
-            }
+        blob = bytes(blob)
+        if not mp4.is_mp4(blob):
+            yield quarantine(doc_id, "not_mp4")
+            return
+        try:
+            frames, info = mp4.decode_mp4_frames(
+                blob, keyframes_only=True
+            )
+        except ValueError as e:
+            # loud codec quarantine: surface the fourcc, not pixels
+            vids = []
+            try:
+                vids = [
+                    t for t in mp4.parse_mp4(blob)["tracks"]
+                    if t["handler"] == "vide"
+                ]
+            except Exception:
+                pass
+            reason = (
+                f"codec:{vids[0]['codec']}" if vids else "corrupt"
+            )
+            del e
+            yield quarantine(doc_id, reason)
+            return
+        except Exception:
+            yield quarantine(doc_id, "corrupt")
+            return
+        for idx, arr in frames:
+            yield (
+                doc_id, idx, True, int(arr.shape[1]), int(arr.shape[0]),
+                int(arr.astype(np.int64).sum()), "ok",
+            )
 
-            def quarantine(doc_id, reason):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(-1)
-                rows["is_real_decode"].append(False)
-                rows["width"].append(0)
-                rows["height"].append(0)
-                rows["px_sum"].append(0)
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                if not mp4.is_mp4(blob):
-                    quarantine(doc_id, "not_mp4")
-                    continue
-                try:
-                    frames, info = mp4.decode_mp4_frames(
-                        blob, keyframes_only=True
-                    )
-                except ValueError as e:
-                    # loud codec quarantine: surface the fourcc, not pixels
-                    vids = []
-                    try:
-                        vids = [
-                            t for t in mp4.parse_mp4(blob)["tracks"]
-                            if t["handler"] == "vide"
-                        ]
-                    except Exception:
-                        pass
-                    reason = (
-                        f"codec:{vids[0]['codec']}" if vids else "corrupt"
-                    )
-                    del e
-                    quarantine(doc_id, reason)
-                    continue
-                except Exception:
-                    quarantine(doc_id, "corrupt")
-                    continue
-                for idx, arr in frames:
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["is_real_decode"].append(True)
-                    rows["width"].append(int(arr.shape[1]))
-                    rows["height"].append(int(arr.shape[0]))
-                    rows["px_sum"].append(int(arr.astype(np.int64).sum()))
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        keyframes,
         "doc_id bigint, frame_idx int, is_real_decode boolean, "
         "width int, height int, px_sum bigint, reason string",
     )
@@ -1795,34 +1457,27 @@ def synthetic_pdf_assets(
     TRUNCATED (startxref cut off) — the malformed-PDF quarantine
     class."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import pdf
 
-        for pdf_batch in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(
-                pdf_batch[id_col], pdf_batch[payload_col]
-            ):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                pages = [
-                    [
-                        f"doc-{d}-p{p}-l{j}-" + "w" * ((n + j) % 5)
-                        for j in range((n + p) % 3 + 1)
-                    ]
-                    for p in range(n % 3 + 1)
-                ]
-                blob = pdf.encode_pdf(pages)
-                if d % 7 == 0:
-                    blob = blob[:-30]  # cuts startxref: malformed
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "application/pdf", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        pages = [
+            [
+                f"doc-{d}-p{p}-l{j}-" + "w" * ((n + j) % 5)
+                for j in range((n + p) % 3 + 1)
+            ]
+            for p in range(n % 3 + 1)
+        ]
+        blob = pdf.encode_pdf(pages)
+        if d % 7 == 0:
+            blob = blob[:-30]  # cuts startxref: malformed
+        yield d, "application/pdf", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -1834,46 +1489,27 @@ def pdf_text_rows(assets: DataFrame) -> DataFrame:
     the page text feeds the same curation funnel as WARC/HTML/XML
     ingestion."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def pages(doc_id, blob):
         from shared_etl_pipelines_spark.sources import pdf
 
-        for pdf_batch in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "page_idx", "is_extracted", "text",
-                    "n_lines", "n_chars",
-                )
-            }
-            for doc_id, blob in zip(pdf_batch["doc_id"], pdf_batch["blob"]):
-                blob = bytes(blob)
-                try:
-                    texts = (
-                        pdf.parse_pdf_pages(blob)
-                        if pdf.is_pdf(blob)
-                        else None
-                    )
-                except Exception:
-                    texts = None
-                if texts is None:
-                    rows["doc_id"].append(doc_id)
-                    rows["page_idx"].append(-1)
-                    rows["is_extracted"].append(False)
-                    rows["text"].append("")
-                    rows["n_lines"].append(0)
-                    rows["n_chars"].append(0)
-                    continue
-                for p, t in enumerate(texts):
-                    rows["doc_id"].append(doc_id)
-                    rows["page_idx"].append(p)
-                    rows["is_extracted"].append(True)
-                    rows["text"].append(t)
-                    rows["n_lines"].append(t.count("\n") + 1 if t else 0)
-                    rows["n_chars"].append(len(t))
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        try:
+            texts = (
+                pdf.parse_pdf_pages(blob)
+                if pdf.is_pdf(blob)
+                else None
+            )
+        except Exception:
+            texts = None
+        if texts is None:
+            yield doc_id, -1, False, "", 0, 0
+            return
+        for p, t in enumerate(texts):
+            yield doc_id, p, True, t, t.count("\n") + 1 if t else 0, len(t)
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        pages,
         "doc_id bigint, page_idx int, is_extracted boolean, text string, "
         "n_lines int, n_chars bigint",
     )
@@ -1890,40 +1526,35 @@ def synthetic_flac_assets(
     doc_id%9==0 blobs get one bit flipped mid-stream: the CRC-16/MD5
     integrity quarantine class."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import flac
 
         modes = {0: "CONSTANT", 1: "VERBATIM", 2: "FIXED2", 3: "LPC1"}
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                n_s = 200 + (n % 3) * 100
-                a, b = (d * 13) % 1000, d % 7 - 3
-                t = np.arange(n_s, dtype=np.int64)
-                if d % 4 == 0:
-                    s = np.full(n_s, a, dtype=np.int64)
-                else:
-                    s = a + b * t + ((d + t) % 5 - 2)
-                blob = flac.encode_flac(
-                    s, sample_rate=8000, bps=16, block_size=128,
-                    mode=modes[d % 4],
-                )
-                if d % 9 == 0:
-                    ba = bytearray(blob)
-                    ba[len(ba) // 2] ^= 0x40
-                    blob = bytes(ba)
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/flac", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        n_s = 200 + (n % 3) * 100
+        a, b = (d * 13) % 1000, d % 7 - 3
+        t = np.arange(n_s, dtype=np.int64)
+        if d % 4 == 0:
+            s = np.full(n_s, a, dtype=np.int64)
+        else:
+            s = a + b * t + ((d + t) % 5 - 2)
+        blob = flac.encode_flac(
+            s, sample_rate=8000, bps=16, block_size=128,
+            mode=modes[d % 4],
+        )
+        if d % 9 == 0:
+            ba = bytearray(blob)
+            ba[len(ba) // 2] ^= 0x40
+            blob = bytes(ba)
+        yield d, "audio/flac", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -1935,66 +1566,41 @@ def flac_audio_stats(assets: DataFrame) -> DataFrame:
     mismatch), reserved codes, and truncated streams quarantine as
     is_real_decode=false rows — never wrong samples."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def stats_row(doc_id, blob):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import flac
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "is_real_decode", "sample_rate", "channels",
-                    "bps", "n_samples", "n_frames", "subframe_types",
-                    "sum_samples", "min_sample", "max_sample",
+        blob = bytes(blob)
+        try:
+            arr, info = (
+                flac.decode_flac(blob)
+                if flac.is_flac(blob)
+                else (None, None)
+            )
+            # compute the aggregates INSIDE the try so a
+            # degenerate decode quarantines instead of killing
+            # the task mid-row (review r8 #2)
+            if info is not None:
+                stats = (
+                    int(arr.astype(np.int64).sum()),
+                    int(arr.min()),
+                    int(arr.max()),
                 )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    arr, info = (
-                        flac.decode_flac(blob)
-                        if flac.is_flac(blob)
-                        else (None, None)
-                    )
-                    # compute the aggregates INSIDE the try so a
-                    # degenerate decode quarantines instead of killing
-                    # the task mid-row (review r8 #2)
-                    if info is not None:
-                        stats = (
-                            int(arr.astype(np.int64).sum()),
-                            int(arr.min()),
-                            int(arr.max()),
-                        )
-                except Exception:
-                    arr = info = None
-                rows["doc_id"].append(doc_id)
-                if info is None:
-                    rows["is_real_decode"].append(False)
-                    rows["sample_rate"].append(0)
-                    rows["channels"].append(0)
-                    rows["bps"].append(0)
-                    rows["n_samples"].append(0)
-                    rows["n_frames"].append(0)
-                    rows["subframe_types"].append("")
-                    rows["sum_samples"].append(0)
-                    rows["min_sample"].append(0)
-                    rows["max_sample"].append(0)
-                    continue
-                rows["is_real_decode"].append(True)
-                rows["sample_rate"].append(info["sample_rate"])
-                rows["channels"].append(info["channels"])
-                rows["bps"].append(info["bps"])
-                rows["n_samples"].append(info["n_samples"])
-                rows["n_frames"].append(info["n_frames"])
-                rows["subframe_types"].append(info["subframe_types"])
-                rows["sum_samples"].append(stats[0])
-                rows["min_sample"].append(stats[1])
-                rows["max_sample"].append(stats[2])
-            yield pd.DataFrame(rows)
+        except Exception:
+            arr = info = None
+        if info is None:
+            yield doc_id, False, 0, 0, 0, 0, 0, "", 0, 0, 0
+            return
+        yield (
+            doc_id, True, info["sample_rate"], info["channels"], info["bps"],
+            info["n_samples"], info["n_frames"], info["subframe_types"],
+            *stats,
+        )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        stats_row,
         "doc_id bigint, is_real_decode boolean, sample_rate int, "
         "channels int, bps int, n_samples int, n_frames int, "
         "subframe_types string, sum_samples bigint, min_sample bigint, "
@@ -2012,34 +1618,29 @@ def synthetic_mp3_assets(
     reports truncated=true); d%13==0 is non-MPEG garbage (quarantine
     class, wins over the others)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mp3
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                if d % 13 == 0:
-                    blob = f"not-an-mpeg-stream-{d}".encode()
-                else:
-                    blob = mp3.encode_mp3_frames(
-                        n % 4 + 3,
-                        bitrate_index=d % 14 + 1,
-                        sample_rate_index=d % 3,
-                        mono=d % 2 == 1,
-                        id3_size=20 + d % 30 if d % 5 == 0 else 0,
-                    )
-                    if d % 11 == 0:
-                        blob = blob[:-10]
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/mpeg", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        if d % 13 == 0:
+            blob = f"not-an-mpeg-stream-{d}".encode()
+        else:
+            blob = mp3.encode_mp3_frames(
+                n % 4 + 3,
+                bitrate_index=d % 14 + 1,
+                sample_rate_index=d % 3,
+                mono=d % 2 == 1,
+                id3_size=20 + d % 30 if d % 5 == 0 else 0,
             )
+            if d % 11 == 0:
+                blob = blob[:-10]
+        yield d, "audio/mpeg", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2050,52 +1651,27 @@ def mp3_stream_scan(assets: DataFrame) -> DataFrame:
     on without decoding audio. Non-MPEG bytes, free-format streams and
     mid-stream parameter changes quarantine as is_scanned=false rows."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mp3
 
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "is_scanned", "version", "sample_rate",
-                    "channel_mode", "n_frames", "bitrate_kbps_min",
-                    "bitrate_kbps_max", "duration_ms", "id3_bytes",
-                    "truncated",
-                )
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = mp3.scan_mp3(blob) if mp3.is_mp3(blob) else None
-                except Exception:
-                    info = None
-                rows["doc_id"].append(doc_id)
-                if info is None:
-                    rows["is_scanned"].append(False)
-                    rows["version"].append("")
-                    rows["sample_rate"].append(0)
-                    rows["channel_mode"].append("")
-                    rows["n_frames"].append(0)
-                    rows["bitrate_kbps_min"].append(0)
-                    rows["bitrate_kbps_max"].append(0)
-                    rows["duration_ms"].append(0)
-                    rows["id3_bytes"].append(0)
-                    rows["truncated"].append(False)
-                    continue
-                rows["is_scanned"].append(True)
-                rows["version"].append(info["version"])
-                rows["sample_rate"].append(info["sample_rate"])
-                rows["channel_mode"].append(info["channel_mode"])
-                rows["n_frames"].append(info["n_frames"])
-                rows["bitrate_kbps_min"].append(info["bitrate_kbps_min"])
-                rows["bitrate_kbps_max"].append(info["bitrate_kbps_max"])
-                rows["duration_ms"].append(info["duration_ms"])
-                rows["id3_bytes"].append(info["id3_bytes"])
-                rows["truncated"].append(info["truncated"])
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        try:
+            info = mp3.scan_mp3(blob) if mp3.is_mp3(blob) else None
+        except Exception:
+            info = None
+        if info is None:
+            yield doc_id, False, "", 0, "", 0, 0, 0, 0, 0, False
+            return
+        yield (
+            doc_id, True, info["version"], info["sample_rate"],
+            info["channel_mode"], info["n_frames"],
+            info["bitrate_kbps_min"], info["bitrate_kbps_max"],
+            info["duration_ms"], info["id3_bytes"], info["truncated"],
+        )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, is_scanned boolean, version string, "
         "sample_rate int, channel_mode string, n_frames int, "
         "bitrate_kbps_min int, bitrate_kbps_max int, duration_ms bigint, "
@@ -2114,28 +1690,21 @@ def synthetic_alaw_wav_assets(
     compand->expand is the identity and the oracle computes the
     decoded |sample| sum in closed form."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id):
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import wav
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id in pdf[id_col]:
-                d = int(doc_id)
-                n = 80 + d % 100
-                amp = ((d % 16) * 16 + 264) << (d % 7)
-                if d % 2 == 1:
-                    amp = -amp
-                s = np.full(n, amp, dtype=np.int16)
-                ids.append(doc_id)
-                blobs.append(wav.encode_wav_alaw(s, 8000))
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/basic", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = 80 + d % 100
+        amp = ((d % 16) * 16 + 264) << (d % 7)
+        if d % 2 == 1:
+            amp = -amp
+        s = np.full(n, amp, dtype=np.int16)
+        yield doc_id, "audio/basic", wav.encode_wav_alaw(s, 8000)
 
-    return df.select(F.col(id_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col)), fixture, "doc_id bigint, media_type string, blob binary"
     )
 
 
@@ -2154,59 +1723,54 @@ def synthetic_ogg_assets(
     d%1000+1000. d%7==0 blobs get their final payload byte flipped:
     the page CRC must catch it and the row quarantines."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import ogg
 
         rates = (8000, 16000, 22050, 44100)
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                n_audio = n % 5 + 2
-                is_opus = d % 3 == 1
-                split = d % 5 == 0 and not is_opus
-                pkts = []
-                for i in range(n_audio):
-                    if i == 0 and split:
-                        ln = 300 + d % 100
-                    else:
-                        ln = 180 + (d + 13 * i) % 300
-                    pkts.append(bytes((d + i * 7 + j) % 256 for j in range(ln)))
-                comments = [f"k{j}=v{(d + j) % 10}" for j in range(d % 3 + 1)]
-                if is_opus:
-                    pre_skip = 312 + d % 100
-                    blob = ogg.encode_ogg_opus(
-                        channels=d % 2 + 1,
-                        input_sample_rate=rates[(d // 2) % 4],
-                        pre_skip=pre_skip,
-                        vendor="spark-graft-0.9",
-                        comments=comments,
-                        audio_packets=pkts,
-                        total_granule=d % 1000 + 1000 + pre_skip,
-                    )
-                else:
-                    blob = ogg.encode_ogg_vorbis(
-                        channels=d % 2 + 1,
-                        sample_rate=rates[(d // 2) % 4],
-                        vendor="spark-graft-0.9",
-                        comments=comments,
-                        audio_packets=pkts,
-                        total_granule=d % 1000 + 1000,
-                        split_first_audio=split,
-                    )
-                if d % 7 == 0:
-                    ba = bytearray(blob)
-                    ba[-1] ^= 0xFF
-                    blob = bytes(ba)
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/ogg", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        n_audio = n % 5 + 2
+        is_opus = d % 3 == 1
+        split = d % 5 == 0 and not is_opus
+        pkts = []
+        for i in range(n_audio):
+            if i == 0 and split:
+                ln = 300 + d % 100
+            else:
+                ln = 180 + (d + 13 * i) % 300
+            pkts.append(bytes((d + i * 7 + j) % 256 for j in range(ln)))
+        comments = [f"k{j}=v{(d + j) % 10}" for j in range(d % 3 + 1)]
+        if is_opus:
+            pre_skip = 312 + d % 100
+            blob = ogg.encode_ogg_opus(
+                channels=d % 2 + 1,
+                input_sample_rate=rates[(d // 2) % 4],
+                pre_skip=pre_skip,
+                vendor="spark-graft-0.9",
+                comments=comments,
+                audio_packets=pkts,
+                total_granule=d % 1000 + 1000 + pre_skip,
             )
+        else:
+            blob = ogg.encode_ogg_vorbis(
+                channels=d % 2 + 1,
+                sample_rate=rates[(d // 2) % 4],
+                vendor="spark-graft-0.9",
+                comments=comments,
+                audio_packets=pkts,
+                total_granule=d % 1000 + 1000,
+                split_first_audio=split,
+            )
+        if d % 7 == 0:
+            ba = bytearray(blob)
+            ba[-1] ^= 0xFF
+            blob = bytes(ba)
+        yield d, "audio/ogg", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2220,59 +1784,33 @@ def ogg_page_scan(assets: DataFrame) -> DataFrame:
     quarantine as is_valid=false rows with a stable reason class. One
     mapInPandas pass, per-file parallelism, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(doc_id, blob):
         from shared_etl_pipelines_spark.sources import ogg
 
-        cols = (
-            "doc_id", "is_valid", "codec", "n_pages", "n_packets",
-            "channels", "sample_rate", "duration_ms", "pre_skip",
-            "vendor", "n_comments", "audio_bytes", "reason",
+        blob = bytes(blob)
+        try:
+            info = ogg.parse_ogg(blob)
+        except ValueError as e:
+            msg = str(e)
+            if "CRC" in msg:
+                reason = "crc_mismatch"
+            elif "OggS" in msg or "capture" in msg:
+                reason = "not_ogg"
+            else:
+                reason = "malformed"
+            yield doc_id, False, "", 0, 0, 0, 0, 0, 0, "", 0, 0, reason
+            return
+        yield (
+            doc_id, True, info["codec"], int(info["n_pages"]),
+            int(info["n_packets"]), int(info["channels"]),
+            int(info["sample_rate"]), int(info["duration_ms"]),
+            int(info["pre_skip"]), info["vendor"], len(info["comments"]),
+            int(info["audio_bytes"]), "ok",
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = ogg.parse_ogg(blob)
-                except ValueError as e:
-                    msg = str(e)
-                    if "CRC" in msg:
-                        reason = "crc_mismatch"
-                    elif "OggS" in msg or "capture" in msg:
-                        reason = "not_ogg"
-                    else:
-                        reason = "malformed"
-                    rows["doc_id"].append(doc_id)
-                    rows["is_valid"].append(False)
-                    rows["codec"].append("")
-                    rows["n_pages"].append(0)
-                    rows["n_packets"].append(0)
-                    rows["channels"].append(0)
-                    rows["sample_rate"].append(0)
-                    rows["duration_ms"].append(0)
-                    rows["pre_skip"].append(0)
-                    rows["vendor"].append("")
-                    rows["n_comments"].append(0)
-                    rows["audio_bytes"].append(0)
-                    rows["reason"].append(reason)
-                    continue
-                rows["doc_id"].append(doc_id)
-                rows["is_valid"].append(True)
-                rows["codec"].append(info["codec"])
-                rows["n_pages"].append(int(info["n_pages"]))
-                rows["n_packets"].append(int(info["n_packets"]))
-                rows["channels"].append(int(info["channels"]))
-                rows["sample_rate"].append(int(info["sample_rate"]))
-                rows["duration_ms"].append(int(info["duration_ms"]))
-                rows["pre_skip"].append(int(info["pre_skip"]))
-                rows["vendor"].append(info["vendor"])
-                rows["n_comments"].append(len(info["comments"]))
-                rows["audio_bytes"].append(int(info["audio_bytes"]))
-                rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, is_valid boolean, codec string, n_pages int, "
         "n_packets int, channels int, sample_rate int, duration_ms "
         "bigint, pre_skip int, vendor string, n_comments int, "
@@ -2292,48 +1830,43 @@ def synthetic_mp3_tagged_assets(
     overruns the tag (must quarantine); d%7==0 blobs are untagged
     (bare frame stream)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mp3
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                audio = mp3.encode_mp3_frames(
-                    n % 3 + 2,
-                    bitrate_index=d % 14 + 1,
-                    sample_rate_index=d % 3,
-                    mono=d % 2 == 1,
-                )
-                if d % 11 == 0:
-                    tag = bytearray(
-                        mp3.encode_id3v2({"TIT2": f"doc-{d}"}, 4, 3)
-                    )
-                    tag[14] = 0x7F  # frame size now overruns the tag
-                    blob = bytes(tag) + audio
-                elif d % 7 == 0:
-                    blob = audio  # untagged class
-                else:
-                    tag = mp3.encode_id3v2(
-                        {
-                            "TIT2": f"doc-{d}",
-                            "TPE1": f"artist-{d % 50}",
-                            "TALB": f"album-{d % 20}",
-                            "TRCK": str(d % 12 + 1),
-                        },
-                        major=4 if d % 2 == 0 else 3,
-                        encoding=d % 4,
-                    )
-                    blob = tag + audio
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "audio/mpeg", "blob": blobs}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        audio = mp3.encode_mp3_frames(
+            n % 3 + 2,
+            bitrate_index=d % 14 + 1,
+            sample_rate_index=d % 3,
+            mono=d % 2 == 1,
+        )
+        if d % 11 == 0:
+            tag = bytearray(
+                mp3.encode_id3v2({"TIT2": f"doc-{d}"}, 4, 3)
             )
+            tag[14] = 0x7F  # frame size now overruns the tag
+            blob = bytes(tag) + audio
+        elif d % 7 == 0:
+            blob = audio  # untagged class
+        else:
+            tag = mp3.encode_id3v2(
+                {
+                    "TIT2": f"doc-{d}",
+                    "TPE1": f"artist-{d % 50}",
+                    "TALB": f"album-{d % 20}",
+                    "TRCK": str(d % 12 + 1),
+                },
+                major=4 if d % 2 == 0 else 3,
+                encoding=d % 4,
+            )
+            blob = tag + audio
+        yield d, "audio/mpeg", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2345,45 +1878,32 @@ def mp3_id3_tags(assets: DataFrame) -> DataFrame:
     structurally damaged tags quarantine with reason 'tag_malformed'
     (never a guessed string). One mapInPandas pass, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def tag_row(doc_id, tagged, ver, nf, fr, reason):
+        return (
+            doc_id, tagged, ver, nf, fr.get("TIT2", ""), fr.get("TPE1", ""),
+            fr.get("TALB", ""), fr.get("TRCK", ""), reason,
+        )
+
+    def tags(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mp3
 
-        cols = (
-            "doc_id", "is_tagged", "id3_version", "n_frames", "title",
-            "artist", "album", "track", "reason",
+        blob = bytes(blob)
+        try:
+            info = mp3.parse_id3v2(blob)
+        except ValueError as e:
+            if "no ID3v2 tag" in str(e):
+                yield tag_row(doc_id, False, 0, 0, {}, "untagged")
+            else:
+                yield tag_row(doc_id, False, 0, 0, {}, "tag_malformed")
+            return
+        yield tag_row(
+            doc_id, True, int(info["version"]),
+            int(info["n_frames"]), info["frames"], "ok",
         )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
 
-            def emit(doc_id, tagged, ver, nf, fr, reason):
-                rows["doc_id"].append(doc_id)
-                rows["is_tagged"].append(tagged)
-                rows["id3_version"].append(ver)
-                rows["n_frames"].append(nf)
-                rows["title"].append(fr.get("TIT2", ""))
-                rows["artist"].append(fr.get("TPE1", ""))
-                rows["album"].append(fr.get("TALB", ""))
-                rows["track"].append(fr.get("TRCK", ""))
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = mp3.parse_id3v2(blob)
-                except ValueError as e:
-                    if "no ID3v2 tag" in str(e):
-                        emit(doc_id, False, 0, 0, {}, "untagged")
-                    else:
-                        emit(doc_id, False, 0, 0, {}, "tag_malformed")
-                    continue
-                emit(
-                    doc_id, True, int(info["version"]),
-                    int(info["n_frames"]), info["frames"], "ok",
-                )
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        tags,
         "doc_id bigint, is_tagged boolean, id3_version int, n_frames "
         "int, title string, artist string, album string, track string, "
         "reason string",
@@ -2403,58 +1923,52 @@ def synthetic_exif_jpeg_assets(
     overruns the segment (must quarantine). The GPS class is the PII
     surface a curation pass must see to strip."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         import struct as _struct
 
         import numpy as np
 
         from shared_etl_pipelines_spark.sources import exif, jpeg
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                frame = np.full(
-                    (8, 8), (d * 31) % 256, dtype=np.uint8
-                )
-                base = jpeg.encode_jpeg(frame)
-                if d % 5 == 0:
-                    blobs.append(base)
-                    ids.append(d)
-                    continue
-                gps = None
-                if d % 3 != 0:
-                    gps = (
-                        d % 90, d % 60, (d * 37) % 6000,
-                        "N" if d % 4 < 2 else "S",
-                        d % 180, (d // 2) % 60, (d * 53) % 6000,
-                        "E" if d % 8 < 4 else "W",
-                    )
-                app1 = exif.encode_exif_app1(
-                    make=f"maker-{d % 7}",
-                    model=f"model-{d % 13}",
-                    orientation=d % 8 + 1,
-                    datetime=f"2023:01:0{d % 9 + 1} 12:00:00",
-                    gps=gps,
-                    big_endian=d % 2 == 1,
-                )
-                if d % 17 == 0:
-                    ba = bytearray(app1)
-                    # IFD0 entry count lives right after the 8-byte
-                    # TIFF header (offset 6 + 8)
-                    _struct.pack_into(
-                        ">H" if d % 2 == 1 else "<H", ba, 14, 9999
-                    )
-                    app1 = bytes(ba)
-                seg = b"\xff\xe1" + _struct.pack(">H", len(app1) + 2) + app1
-                blobs.append(base[:2] + seg + base[2:])
-                ids.append(d)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "image/jpeg", "blob": blobs}
+        d = int(doc_id)
+        frame = np.full(
+            (8, 8), (d * 31) % 256, dtype=np.uint8
+        )
+        base = jpeg.encode_jpeg(frame)
+        if d % 5 == 0:
+            yield d, "image/jpeg", base
+            return
+        gps = None
+        if d % 3 != 0:
+            gps = (
+                d % 90, d % 60, (d * 37) % 6000,
+                "N" if d % 4 < 2 else "S",
+                d % 180, (d // 2) % 60, (d * 53) % 6000,
+                "E" if d % 8 < 4 else "W",
             )
+        app1 = exif.encode_exif_app1(
+            make=f"maker-{d % 7}",
+            model=f"model-{d % 13}",
+            orientation=d % 8 + 1,
+            datetime=f"2023:01:0{d % 9 + 1} 12:00:00",
+            gps=gps,
+            big_endian=d % 2 == 1,
+        )
+        if d % 17 == 0:
+            ba = bytearray(app1)
+            # IFD0 entry count lives right after the 8-byte
+            # TIFF header (offset 6 + 8)
+            _struct.pack_into(
+                ">H" if d % 2 == 1 else "<H", ba, 14, 9999
+            )
+            app1 = bytes(ba)
+        seg = b"\xff\xe1" + _struct.pack(">H", len(app1) + 2) + app1
+        yield d, "image/jpeg", base[:2] + seg + base[2:]
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2468,71 +1982,56 @@ def jpeg_exif_scan(assets: DataFrame) -> DataFrame:
     damaged EXIF quarantines as exif_malformed. One mapInPandas pass,
     no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def exif_row(doc_id, has_exif, info, reason):
+        return (
+            doc_id, has_exif, int(info.get("orientation", 0)),
+            info.get("make", ""), info.get("model", ""),
+            info.get("datetime", ""), bool(info.get("has_gps", False)),
+            int(info.get("lat_deg", 0)), int(info.get("lat_min", 0)),
+            int(info.get("lat_sec_centi", 0)), info.get("lat_ref", ""),
+            int(info.get("lon_deg", 0)), int(info.get("lon_min", 0)),
+            int(info.get("lon_sec_centi", 0)), info.get("lon_ref", ""),
+            reason,
+        )
+
+    def scan(doc_id, blob):
         import struct as _struct
 
         from shared_etl_pipelines_spark.sources import exif
 
-        cols = (
-            "doc_id", "has_exif", "orientation", "make", "model",
-            "datetime", "has_gps", "lat_deg", "lat_min", "lat_sec_centi",
-            "lat_ref", "lon_deg", "lon_min", "lon_sec_centi", "lon_ref",
-            "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
+        blob = bytes(blob)
+        # marker walk for APP1/Exif (0xFFE1)
+        app1 = None
+        pos = 2 if blob[:2] == b"\xff\xd8" else None
+        while pos is not None and pos + 4 <= len(blob):
+            if blob[pos] != 0xFF:
+                break
+            marker = blob[pos + 1]
+            if marker in (0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
+                pos += 2
+                continue
+            (seglen,) = _struct.unpack_from(">H", blob, pos + 2)
+            if marker == 0xE1 and blob[
+                pos + 4 : pos + 10
+            ] == b"Exif\x00\x00":
+                app1 = blob[pos + 4 : pos + 2 + seglen]
+                break
+            if marker == 0xDA:
+                break  # entropy data: no APP1 before scan start
+            pos += 2 + seglen
+        if app1 is None:
+            yield exif_row(doc_id, False, {}, "no_exif")
+            return
+        try:
+            info = exif.parse_exif_app1(app1)
+        except ValueError:
+            yield exif_row(doc_id, False, {}, "exif_malformed")
+            return
+        yield exif_row(doc_id, True, info, "ok")
 
-            def emit(doc_id, has_exif, info, reason):
-                rows["doc_id"].append(doc_id)
-                rows["has_exif"].append(has_exif)
-                rows["orientation"].append(int(info.get("orientation", 0)))
-                rows["make"].append(info.get("make", ""))
-                rows["model"].append(info.get("model", ""))
-                rows["datetime"].append(info.get("datetime", ""))
-                rows["has_gps"].append(bool(info.get("has_gps", False)))
-                for k in (
-                    "lat_deg", "lat_min", "lat_sec_centi", "lon_deg",
-                    "lon_min", "lon_sec_centi",
-                ):
-                    rows[k].append(int(info.get(k, 0)))
-                rows["lat_ref"].append(info.get("lat_ref", ""))
-                rows["lon_ref"].append(info.get("lon_ref", ""))
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                # marker walk for APP1/Exif (0xFFE1)
-                app1 = None
-                pos = 2 if blob[:2] == b"\xff\xd8" else None
-                while pos is not None and pos + 4 <= len(blob):
-                    if blob[pos] != 0xFF:
-                        break
-                    marker = blob[pos + 1]
-                    if marker in (0xD8, 0xD9) or 0xD0 <= marker <= 0xD7:
-                        pos += 2
-                        continue
-                    (seglen,) = _struct.unpack_from(">H", blob, pos + 2)
-                    if marker == 0xE1 and blob[
-                        pos + 4 : pos + 10
-                    ] == b"Exif\x00\x00":
-                        app1 = blob[pos + 4 : pos + 2 + seglen]
-                        break
-                    if marker == 0xDA:
-                        break  # entropy data: no APP1 before scan start
-                    pos += 2 + seglen
-                if app1 is None:
-                    emit(doc_id, False, {}, "no_exif")
-                    continue
-                try:
-                    info = exif.parse_exif_app1(app1)
-                except ValueError:
-                    emit(doc_id, False, {}, "exif_malformed")
-                    continue
-                emit(doc_id, True, info, "ok")
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, has_exif boolean, orientation int, make string, "
         "model string, datetime string, has_gps boolean, lat_deg int, "
         "lat_min int, lat_sec_centi int, lat_ref string, lon_deg int, "
@@ -2551,44 +2050,38 @@ def synthetic_caption_assets(
     d%9==0 sidecars malform (a '-->'-less timing line; truncated XML
     for TTML) and must quarantine."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import captions
 
-        for pdf in it:
-            ids, fmts, payloads = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                cues = []
-                for i in range(n % 4 + 2):
-                    start = d % 1000 + 2000 * i
-                    end = start + 1200 + (d % 5) * 100
-                    text = f"line-{d}-{i}" + (f"\ncont-{i}" if i % 2 else "")
-                    cues.append((start, end, text))
-                fmt = (
-                    "vtt" if d % 4 == 0
-                    else "ttml" if d % 4 == 2
-                    else "srt"
-                )
-                body = {
-                    "vtt": captions.encode_webvtt,
-                    "srt": captions.encode_srt,
-                    "ttml": captions.encode_ttml,
-                }[fmt](cues)
-                if d % 9 == 0:
-                    body = (
-                        body[:-10] if fmt == "ttml"
-                        else body.replace("-->", "->", 1)
-                    )
-                ids.append(d)
-                fmts.append(fmt)
-                payloads.append(body)
-            yield pd.DataFrame(
-                {"doc_id": ids, "fmt": fmts, "payload": payloads}
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        cues = []
+        for i in range(n % 4 + 2):
+            start = d % 1000 + 2000 * i
+            end = start + 1200 + (d % 5) * 100
+            text = f"line-{d}-{i}" + (f"\ncont-{i}" if i % 2 else "")
+            cues.append((start, end, text))
+        fmt = (
+            "vtt" if d % 4 == 0
+            else "ttml" if d % 4 == 2
+            else "srt"
+        )
+        body = {
+            "vtt": captions.encode_webvtt,
+            "srt": captions.encode_srt,
+            "ttml": captions.encode_ttml,
+        }[fmt](cues)
+        if d % 9 == 0:
+            body = (
+                body[:-10] if fmt == "ttml"
+                else body.replace("-->", "->", 1)
             )
+        yield d, fmt, body
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, fmt string, payload string"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, fmt string, payload string",
     )
 
 
@@ -2600,47 +2093,24 @@ def caption_cue_rows(assets: DataFrame) -> DataFrame:
     quarantine as one cue_idx=-1 row; a sheared alignment is worse
     than a dropped file. One mapInPandas pass, no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def cues(doc_id, fmt, payload):
         from shared_etl_pipelines_spark.sources import captions
 
-        cols = (
-            "doc_id", "fmt", "cue_idx", "start_ms", "end_ms", "text",
-            "n_chars", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, fmt, payload in zip(
-                pdf["doc_id"], pdf["fmt"], pdf["payload"]
-            ):
-                try:
-                    cues = {
-                        "vtt": captions.parse_webvtt,
-                        "srt": captions.parse_srt,
-                        "ttml": captions.parse_ttml,
-                    }[fmt](payload)
-                except ValueError:
-                    rows["doc_id"].append(doc_id)
-                    rows["fmt"].append(fmt)
-                    rows["cue_idx"].append(-1)
-                    rows["start_ms"].append(0)
-                    rows["end_ms"].append(0)
-                    rows["text"].append("")
-                    rows["n_chars"].append(0)
-                    rows["reason"].append("malformed")
-                    continue
-                for idx, start, end, text in cues:
-                    rows["doc_id"].append(doc_id)
-                    rows["fmt"].append(fmt)
-                    rows["cue_idx"].append(idx)
-                    rows["start_ms"].append(start)
-                    rows["end_ms"].append(end)
-                    rows["text"].append(text)
-                    rows["n_chars"].append(len(text))
-                    rows["reason"].append("ok")
-            yield pd.DataFrame(rows)
+        try:
+            parsed = {
+                "vtt": captions.parse_webvtt,
+                "srt": captions.parse_srt,
+                "ttml": captions.parse_ttml,
+            }[fmt](payload)
+        except ValueError:
+            yield doc_id, fmt, -1, 0, 0, "", 0, "malformed"
+            return
+        for idx, start, end, text in parsed:
+            yield doc_id, fmt, idx, start, end, text, len(text), "ok"
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "fmt", "payload"),
+        cues,
         "doc_id bigint, fmt string, cue_idx int, start_ms bigint, "
         "end_ms bigint, text string, n_chars int, reason string",
     )
@@ -2674,108 +2144,103 @@ def synthetic_mkv_assets(
     1 ms timestamp scale; two clusters when nf > 2 (cluster 1 at
     ts 80)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mkv
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                nf = n % 3 + 2
-                w, h = (n % 4 + 1) * 16, ((n // 4) % 4 + 1) * 16
-                vtrack = dict(
-                    number=1, uid=d * 2 + 1, type="video",
-                    codec_id="V_AV1" if d % 3 == 0 else "V_VP8",
-                    width=w, height=h,
-                )
-                if d % 3 == 0:
-                    # V_AV1 CodecPrivate IS an av1C record (Matroska
-                    # codec mapping) — real stream params in WebM too
-                    from shared_etl_pipelines_spark.sources import av1
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        nf = n % 3 + 2
+        w, h = (n % 4 + 1) * 16, ((n // 4) % 4 + 1) * 16
+        vtrack = dict(
+            number=1, uid=d * 2 + 1, type="video",
+            codec_id="V_AV1" if d % 3 == 0 else "V_VP8",
+            width=w, height=h,
+        )
+        if d % 3 == 0:
+            # V_AV1 CodecPrivate IS an av1C record (Matroska
+            # codec mapping) — real stream params in WebM too
+            from shared_etl_pipelines_spark.sources import av1
 
-                    obu = av1.encode_av1_seq_header(
-                        w, h, profile=0,
-                        level=(0, 4, 8, 12)[d % 4],
-                        tier=1 if (0, 4, 8, 12)[d % 4] > 7 and d % 8 >= 4
-                        else 0,
-                        bit_depth=10 if d % 2 else 8,
-                    )
-                    vtrack["codec_private"] = av1.encode_av1c(
-                        obu, av1.parse_av1_seq_header(obu)
-                    )
-                tracks = [vtrack]
-                if d % 2 == 1:
-                    tracks.append(
-                        dict(
-                            number=2, uid=d * 2 + 2, type="audio",
-                            codec_id="A_OPUS" if d % 4 == 1 else "A_VORBIS",
-                            sample_hz=48000 if d % 4 == 1 else 44100,
-                            channels=n % 2 + 1,
-                        )
-                    )
-                nc = n % 2 + 2 if d % 4 == 2 else 0
-                if nc:
-                    tracks.append(
-                        dict(
-                            number=3, uid=d * 2 + 3, type="subtitle",
-                            codec_id="S_TEXT/UTF8",
-                        )
-                    )
-                frames = []
-                for f in range(nf):
-                    if d % 3 == 0:
-                        payload_b = bytes(
-                            (d + f * 7 + j) % 256
-                            for j in range(12 + d % 5 + f)
-                        )
-                        key = f % 2 == 0
-                    elif f % 2 == 0:
-                        payload_b = mkv.encode_vp8_keyframe(
-                            w, h, part_size=10 + f,
-                            filler=bytes(
-                                (d * 17 + f * 5 + j) % 256 for j in range(8)
-                            ),
-                        )
-                        key = True
-                    else:
-                        payload_b = mkv.encode_vp8_interframe(
-                            part_size=5,
-                            filler=bytes((d + f * 3 + j) % 256 for j in range(5)),
-                        )
-                        key = False
-                    frames.append((f, key, payload_b))
-                na = n % 2 + 1 if d % 2 == 1 else 0
-                c0 = [(1, 40 * f, k, p) for f, k, p in frames if f < 2]
-                c1 = [(1, 40 * f - 80, k, p) for f, k, p in frames if f >= 2]
-                if na >= 1:
-                    c0.append((2, 0, True, b"a" * 10))
-                if na >= 2:
-                    (c1 if nf > 2 else c0).append(
-                        (2, 40 - (80 if nf > 2 else 0), True, b"a" * 11)
-                    )
-                for i in range(nc):
-                    cue = f"cue {d}-{i}" + (" ß" if d % 8 == 2 else "")
-                    c0.append(
-                        (3, 500 * i, True, cue.encode("utf-8"), 300 + 10 * i)
-                    )
-                clusters = [(0, c0)] + ([(80, c1)] if c1 else [])
-                blob = mkv.encode_mkv(
-                    tracks, clusters,
-                    doc_type="matroska" if d % 5 == 0 else "webm",
-                    duration_ms=nf * 40,
-                    unknown_size_segment=d % 11 == 5,
-                    unknown_size_clusters=d % 11 == 7,
-                    block_groups=d % 7 == 3,
-                )
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/webm", "blob": blobs}
+            obu = av1.encode_av1_seq_header(
+                w, h, profile=0,
+                level=(0, 4, 8, 12)[d % 4],
+                tier=1 if (0, 4, 8, 12)[d % 4] > 7 and d % 8 >= 4
+                else 0,
+                bit_depth=10 if d % 2 else 8,
             )
+            vtrack["codec_private"] = av1.encode_av1c(
+                obu, av1.parse_av1_seq_header(obu)
+            )
+        tracks = [vtrack]
+        if d % 2 == 1:
+            tracks.append(
+                dict(
+                    number=2, uid=d * 2 + 2, type="audio",
+                    codec_id="A_OPUS" if d % 4 == 1 else "A_VORBIS",
+                    sample_hz=48000 if d % 4 == 1 else 44100,
+                    channels=n % 2 + 1,
+                )
+            )
+        nc = n % 2 + 2 if d % 4 == 2 else 0
+        if nc:
+            tracks.append(
+                dict(
+                    number=3, uid=d * 2 + 3, type="subtitle",
+                    codec_id="S_TEXT/UTF8",
+                )
+            )
+        frames = []
+        for f in range(nf):
+            if d % 3 == 0:
+                payload_b = bytes(
+                    (d + f * 7 + j) % 256
+                    for j in range(12 + d % 5 + f)
+                )
+                key = f % 2 == 0
+            elif f % 2 == 0:
+                payload_b = mkv.encode_vp8_keyframe(
+                    w, h, part_size=10 + f,
+                    filler=bytes(
+                        (d * 17 + f * 5 + j) % 256 for j in range(8)
+                    ),
+                )
+                key = True
+            else:
+                payload_b = mkv.encode_vp8_interframe(
+                    part_size=5,
+                    filler=bytes((d + f * 3 + j) % 256 for j in range(5)),
+                )
+                key = False
+            frames.append((f, key, payload_b))
+        na = n % 2 + 1 if d % 2 == 1 else 0
+        c0 = [(1, 40 * f, k, p) for f, k, p in frames if f < 2]
+        c1 = [(1, 40 * f - 80, k, p) for f, k, p in frames if f >= 2]
+        if na >= 1:
+            c0.append((2, 0, True, b"a" * 10))
+        if na >= 2:
+            (c1 if nf > 2 else c0).append(
+                (2, 40 - (80 if nf > 2 else 0), True, b"a" * 11)
+            )
+        for i in range(nc):
+            cue = f"cue {d}-{i}" + (" ß" if d % 8 == 2 else "")
+            c0.append(
+                (3, 500 * i, True, cue.encode("utf-8"), 300 + 10 * i)
+            )
+        clusters = [(0, c0)] + ([(80, c1)] if c1 else [])
+        blob = mkv.encode_mkv(
+            tracks, clusters,
+            doc_type="matroska" if d % 5 == 0 else "webm",
+            duration_ms=nf * 40,
+            unknown_size_segment=d % 11 == 5,
+            unknown_size_clusters=d % 11 == 7,
+            block_groups=d % 7 == 3,
+        )
+        yield d, "video/webm", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2788,51 +2253,26 @@ def mkv_track_scan(assets: DataFrame) -> DataFrame:
     decode. Corrupt containers quarantine as a track_type='corrupt'
     row. One mapInPandas pass, no shuffle, per-file parallelism."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def scan(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mkv
 
-        cols = (
-            "doc_id", "doc_type", "track_id", "track_type", "codec_id",
-            "width", "height", "sample_hz", "channels", "n_blocks",
-            "n_keyframes", "duration_ms",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                blob = bytes(blob)
-                try:
-                    info = mkv.parse_mkv(blob)
-                except ValueError:
-                    rows["doc_id"].append(doc_id)
-                    rows["doc_type"].append("corrupt")
-                    rows["track_id"].append(-1)
-                    rows["track_type"].append("corrupt")
-                    rows["codec_id"].append("")
-                    rows["width"].append(0)
-                    rows["height"].append(0)
-                    rows["sample_hz"].append(0)
-                    rows["channels"].append(0)
-                    rows["n_blocks"].append(0)
-                    rows["n_keyframes"].append(0)
-                    rows["duration_ms"].append(0)
-                    continue
-                for t in info["tracks"]:
-                    rows["doc_id"].append(doc_id)
-                    rows["doc_type"].append(info["doc_type"])
-                    rows["track_id"].append(int(t["track_id"]))
-                    rows["track_type"].append(t["track_type"])
-                    rows["codec_id"].append(t["codec_id"])
-                    rows["width"].append(int(t["width"]))
-                    rows["height"].append(int(t["height"]))
-                    rows["sample_hz"].append(int(t["sample_hz"]))
-                    rows["channels"].append(int(t["channels"]))
-                    rows["n_blocks"].append(int(t["n_blocks"]))
-                    rows["n_keyframes"].append(int(t["n_keyframes"]))
-                    rows["duration_ms"].append(int(info["duration_ms"]))
-            yield pd.DataFrame(rows)
+        blob = bytes(blob)
+        try:
+            info = mkv.parse_mkv(blob)
+        except ValueError:
+            yield doc_id, "corrupt", -1, "corrupt", "", 0, 0, 0, 0, 0, 0, 0
+            return
+        for t in info["tracks"]:
+            yield (
+                doc_id, info["doc_type"], int(t["track_id"]), t["track_type"],
+                t["codec_id"], int(t["width"]), int(t["height"]),
+                int(t["sample_hz"]), int(t["channels"]), int(t["n_blocks"]),
+                int(t["n_keyframes"]), int(info["duration_ms"]),
+            )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, doc_type string, track_id int, track_type string, "
         "codec_id string, width int, height int, sample_hz int, "
         "channels int, n_blocks int, n_keyframes int, duration_ms bigint",
@@ -2848,57 +2288,37 @@ def webm_vp8_keyframes(assets: DataFrame) -> DataFrame:
     Non-VP8 video tracks surface as one quarantine row with
     reason='codec:<id>' — scan what you cannot decode, loudly."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def keyframes(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mkv
 
-        cols = (
-            "doc_id", "frame_idx", "is_real_parse", "width", "height",
-            "part_size", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def emit(doc_id, idx, ok, w, h, ps, reason):
-                rows["doc_id"].append(doc_id)
-                rows["frame_idx"].append(idx)
-                rows["is_real_parse"].append(ok)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["part_size"].append(ps)
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    info = mkv.parse_mkv(bytes(blob), collect_frames=True)
-                except ValueError:
-                    emit(doc_id, -1, False, 0, 0, 0, "corrupt")
+        try:
+            info = mkv.parse_mkv(bytes(blob), collect_frames=True)
+        except ValueError:
+            yield doc_id, -1, False, 0, 0, 0, "corrupt"
+            return
+        video = [
+            t for t in info["tracks"] if t["track_type"] == "video"
+        ]
+        for t in video:
+            if t["codec_id"] != "V_VP8":
+                yield doc_id, -1, False, 0, 0, 0, f"codec:{t['codec_id']}"
+                continue
+            for idx, key, payload in t["frames"]:
+                if not key:
                     continue
-                video = [
-                    t for t in info["tracks"] if t["track_type"] == "video"
-                ]
-                for t in video:
-                    if t["codec_id"] != "V_VP8":
-                        emit(
-                            doc_id, -1, False, 0, 0, 0,
-                            f"codec:{t['codec_id']}",
-                        )
-                        continue
-                    for idx, key, payload in t["frames"]:
-                        if not key:
-                            continue
-                        try:
-                            hdr = mkv.parse_vp8_frame(payload)
-                        except ValueError:
-                            emit(doc_id, idx, False, 0, 0, 0, "bad-vp8")
-                            continue
-                        emit(
-                            doc_id, idx, True, hdr["width"], hdr["height"],
-                            hdr["part_size"], "ok",
-                        )
-            yield pd.DataFrame(rows)
+                try:
+                    hdr = mkv.parse_vp8_frame(payload)
+                except ValueError:
+                    yield doc_id, idx, False, 0, 0, 0, "bad-vp8"
+                    continue
+                yield (
+                    doc_id, idx, True, hdr["width"], hdr["height"],
+                    hdr["part_size"], "ok",
+                )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        keyframes,
         "doc_id bigint, frame_idx int, is_real_parse boolean, width int, "
         "height int, part_size int, reason string",
     )
@@ -2917,40 +2337,35 @@ def synthetic_hevc_assets(
     blobs truncate and must quarantine. Pseudo-NAL payloads: the scan
     and extradata parse are the subject, frame decode is not."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mp4
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                w = (n % 4 + 1) * 16 + 2 * (d % 3)
-                h = ((n // 4) % 4 + 1) * 16 + 2 * ((d // 3) % 3)
-                nf = n % 3 + 2
-                samples = [
-                    bytes((d + i * 5 + j) % 256 for j in range(20 + i))
-                    for i in range(nf)
-                ]
-                blob = mp4.encode_mp4(
-                    samples, w, h, fps=10, codec=b"hev1",
-                    keyframe_interval=2, samples_per_chunk=3,
-                    hevc_params=(
-                        d % 3 + 1,
-                        (90, 93, 120, 123)[d % 4],
-                        (d // 2) % 2,
-                    ),
-                )
-                if d % 9 == 8:
-                    blob = blob[:40]  # structural break -> quarantine
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/mp4", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        w = (n % 4 + 1) * 16 + 2 * (d % 3)
+        h = ((n // 4) % 4 + 1) * 16 + 2 * ((d // 3) % 3)
+        nf = n % 3 + 2
+        samples = [
+            bytes((d + i * 5 + j) % 256 for j in range(20 + i))
+            for i in range(nf)
+        ]
+        blob = mp4.encode_mp4(
+            samples, w, h, fps=10, codec=b"hev1",
+            keyframe_interval=2, samples_per_chunk=3,
+            hevc_params=(
+                d % 3 + 1,
+                (90, 93, 120, 123)[d % 4],
+                (d // 2) % 2,
+            ),
+        )
+        if d % 9 == 8:
+            blob = blob[:40]  # structural break -> quarantine
+        yield d, "video/mp4", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -2963,58 +2378,37 @@ def mkv_subtitle_cues(assets: DataFrame) -> DataFrame:
     source next to standalone WebVTT/SRT (caption_cue_rows). Corrupt
     containers quarantine as a cue_idx=-1 row."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def cues(doc_id, blob):
         from shared_etl_pipelines_spark.sources import mkv
 
-        cols = (
-            "doc_id", "track_id", "cue_idx", "start_ms", "end_ms",
-            "text", "n_chars", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def emit(d, tid, idx, s, e, txt, reason):
-                rows["doc_id"].append(d)
-                rows["track_id"].append(tid)
-                rows["cue_idx"].append(idx)
-                rows["start_ms"].append(s)
-                rows["end_ms"].append(e)
-                rows["text"].append(txt)
-                rows["n_chars"].append(len(txt))
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
+        try:
+            info = mkv.parse_mkv(bytes(blob), collect_frames=True)
+        except ValueError:
+            yield doc_id, -1, -1, 0, 0, "", 0, "corrupt"
+            return
+        for t in info["tracks"]:
+            if t["track_type"] != "subtitle":
+                continue
+            if t["codec_id"] != "S_TEXT/UTF8":
+                yield (
+                    doc_id, int(t["track_id"]), -1, 0, 0, "", 0,
+                    f"codec:{t['codec_id']}",
+                )
+                continue
+            for idx, (ts, dur, payload) in enumerate(t["cues"]):
                 try:
-                    info = mkv.parse_mkv(bytes(blob), collect_frames=True)
-                except ValueError:
-                    emit(doc_id, -1, -1, 0, 0, "", "corrupt")
+                    txt = payload.decode("utf-8", "strict")
+                except UnicodeDecodeError:
+                    yield doc_id, int(t["track_id"]), idx, 0, 0, "", 0, "bad-utf8"
                     continue
-                for t in info["tracks"]:
-                    if t["track_type"] != "subtitle":
-                        continue
-                    if t["codec_id"] != "S_TEXT/UTF8":
-                        emit(
-                            doc_id, int(t["track_id"]), -1, 0, 0, "",
-                            f"codec:{t['codec_id']}",
-                        )
-                        continue
-                    for idx, (ts, dur, payload) in enumerate(t["cues"]):
-                        try:
-                            txt = payload.decode("utf-8", "strict")
-                        except UnicodeDecodeError:
-                            emit(
-                                doc_id, int(t["track_id"]), idx, 0, 0,
-                                "", "bad-utf8",
-                            )
-                            continue
-                        emit(
-                            doc_id, int(t["track_id"]), idx,
-                            int(ts), int(ts + dur), txt, "ok",
-                        )
-            yield pd.DataFrame(rows)
+                yield (
+                    doc_id, int(t["track_id"]), idx,
+                    int(ts), int(ts + dur), txt, len(txt), "ok",
+                )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        cues,
         "doc_id bigint, track_id int, cue_idx int, start_ms bigint, "
         "end_ms bigint, text string, n_chars int, reason string",
     )
@@ -3035,51 +2429,46 @@ def synthetic_av1_assets(
     d%7==5 (non-reduced). doc_id%9==8 blobs truncate and must
     quarantine."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fixture(doc_id, payload):
         from shared_etl_pipelines_spark.sources import mp4
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                w = (n % 4 + 1) * 100 + d % 7
-                h = ((n // 4) % 4 + 1) * 90 + (d // 7) % 5
-                profile = d % 3
-                level = (0, 4, 8, 12)[d % 4]
-                reduced = d % 11 == 6
-                tier = 1 if level > 7 and d % 8 >= 4 and not reduced else 0
-                bd = (
-                    (12 if d % 2 else 10) if profile == 2
-                    else (10 if d % 2 else 8)
-                )
-                params = dict(
-                    profile=profile, level=level, tier=tier, bit_depth=bd,
-                    mono=profile != 1 and d % 10 == 4,
-                    reduced_still_picture=reduced,
-                )
-                if d % 7 == 5 and not reduced:
-                    params["timing_info"] = (1000 + d % 5, 90000, d % 3)
-                nf = n % 3 + 2
-                samples = [
-                    bytes((d + i * 3 + j) % 256 for j in range(18 + i))
-                    for i in range(nf)
-                ]
-                blob = mp4.encode_mp4(
-                    samples, w, h, fps=10, codec=b"av01",
-                    keyframe_interval=2, samples_per_chunk=3,
-                    av1_params=params,
-                )
-                if d % 9 == 8:
-                    blob = blob[:40]
-                ids.append(d)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media_type": "video/mp4", "blob": blobs}
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        w = (n % 4 + 1) * 100 + d % 7
+        h = ((n // 4) % 4 + 1) * 90 + (d // 7) % 5
+        profile = d % 3
+        level = (0, 4, 8, 12)[d % 4]
+        reduced = d % 11 == 6
+        tier = 1 if level > 7 and d % 8 >= 4 and not reduced else 0
+        bd = (
+            (12 if d % 2 else 10) if profile == 2
+            else (10 if d % 2 else 8)
+        )
+        params = dict(
+            profile=profile, level=level, tier=tier, bit_depth=bd,
+            mono=profile != 1 and d % 10 == 4,
+            reduced_still_picture=reduced,
+        )
+        if d % 7 == 5 and not reduced:
+            params["timing_info"] = (1000 + d % 5, 90000, d % 3)
+        nf = n % 3 + 2
+        samples = [
+            bytes((d + i * 3 + j) % 256 for j in range(18 + i))
+            for i in range(nf)
+        ]
+        blob = mp4.encode_mp4(
+            samples, w, h, fps=10, codec=b"av01",
+            keyframe_interval=2, samples_per_chunk=3,
+            av1_params=params,
+        )
+        if d % 9 == 8:
+            blob = blob[:40]
+        yield d, "video/mp4", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -3091,66 +2480,42 @@ def webm_codec_params(assets: DataFrame) -> DataFrame:
     webm_vp8_keyframes) and surfaces has_params=false; corrupt
     containers quarantine."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def params(doc_id, blob):
         from shared_etl_pipelines_spark.sources import av1, mkv
 
-        cols = (
-            "doc_id", "track_id", "codec_id", "has_params", "profile_idc",
-            "level_idc", "tier_flag", "chroma_format", "bit_depth",
-            "cp_width", "cp_height", "reason",
-        )
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def emit(d, tid, cid, ok, p, lvl, t, cf, bd, w, h, reason):
-                rows["doc_id"].append(d)
-                rows["track_id"].append(tid)
-                rows["codec_id"].append(cid)
-                rows["has_params"].append(ok)
-                rows["profile_idc"].append(p)
-                rows["level_idc"].append(lvl)
-                rows["tier_flag"].append(t)
-                rows["chroma_format"].append(cf)
-                rows["bit_depth"].append(bd)
-                rows["cp_width"].append(w)
-                rows["cp_height"].append(h)
-                rows["reason"].append(reason)
-
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
+        try:
+            info = mkv.parse_mkv(bytes(blob))
+        except ValueError:
+            yield doc_id, -1, "", False, 0, 0, 0, 0, 0, 0, 0, "corrupt"
+            return
+        for t in info["tracks"]:
+            if t["track_type"] != "video":
+                continue
+            if t["codec_id"] == "V_AV1" and t["codec_private"]:
                 try:
-                    info = mkv.parse_mkv(bytes(blob))
-                except ValueError:
-                    emit(doc_id, -1, "", False, 0, 0, 0, 0, 0, 0, 0,
-                         "corrupt")
+                    p = av1.parse_av1c(t["codec_private"])
+                except ValueError as exc:
+                    yield (
+                        doc_id, int(t["track_id"]), t["codec_id"],
+                        False, 0, 0, 0, 0, 0, 0, 0, str(exc),
+                    )
                     continue
-                for t in info["tracks"]:
-                    if t["track_type"] != "video":
-                        continue
-                    if t["codec_id"] == "V_AV1" and t["codec_private"]:
-                        try:
-                            p = av1.parse_av1c(t["codec_private"])
-                        except ValueError as exc:
-                            emit(
-                                doc_id, int(t["track_id"]), t["codec_id"],
-                                False, 0, 0, 0, 0, 0, 0, 0, str(exc),
-                            )
-                            continue
-                        emit(
-                            doc_id, int(t["track_id"]), t["codec_id"], True,
-                            int(p["profile_idc"]), int(p["level_idc"]),
-                            int(p["tier_flag"]), int(p["chroma_format_idc"]),
-                            int(p["bit_depth"]), int(p["width"]),
-                            int(p["height"]), "ok",
-                        )
-                    else:
-                        emit(
-                            doc_id, int(t["track_id"]), t["codec_id"],
-                            False, 0, 0, 0, 0, 0, 0, 0, "no_codec_private",
-                        )
-            yield pd.DataFrame(rows)
+                yield (
+                    doc_id, int(t["track_id"]), t["codec_id"], True,
+                    int(p["profile_idc"]), int(p["level_idc"]),
+                    int(p["tier_flag"]), int(p["chroma_format_idc"]),
+                    int(p["bit_depth"]), int(p["width"]),
+                    int(p["height"]), "ok",
+                )
+            else:
+                yield (
+                    doc_id, int(t["track_id"]), t["codec_id"],
+                    False, 0, 0, 0, 0, 0, 0, 0, "no_codec_private",
+                )
 
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        params,
         "doc_id bigint, track_id int, codec_id string, has_params boolean, "
         "profile_idc int, level_idc int, tier_flag int, chroma_format int, "
         "bit_depth int, cp_width int, cp_height int, reason string",

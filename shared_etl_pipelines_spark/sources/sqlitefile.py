@@ -415,51 +415,42 @@ def synthetic_sqlite_assets(df, id_col: str = "doc_id", payload_col: str = "text
     ((doc_id+r)%13+1)-byte bodies, quarter-step REAL scores, an
     INTEGER PRIMARY KEY alias, and one 600+doc_id%50-byte row that
     forces an overflow chain. Everything replays from doc_id."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    from shared_etl_pipelines_spark.functions.rows import map_rows
+
+    def fixture(doc_id, payload):
         import sqlite3
 
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                d = int(doc_id)
-                n = len(str(payload).encode("utf-8"))
-                con = sqlite3.connect(":memory:")
-                con.execute("PRAGMA page_size=512")
-                con.execute(
-                    "CREATE TABLE docs (id INTEGER PRIMARY KEY, body TEXT,"
-                    " score REAL, flag INTEGER)"
-                )
-                nr = n % 7 + 2
-                con.executemany(
-                    "INSERT INTO docs VALUES (?,?,?,?)",
-                    [
-                        (r, "x" * ((d + r) % 13 + 1), ((d + r) % 8) / 4.0, r % 2)
-                        for r in range(nr)
-                    ],
-                )
-                con.execute(
-                    "INSERT INTO docs VALUES (?,?,?,?)",
-                    (1000, "y" * (600 + d % 50), 0.25, None),
-                )
-                con.commit()
-                ids.append(doc_id)
-                blobs.append(con.serialize())
-                con.close()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "application/vnd.sqlite3",
-                    "blob": blobs,
-                }
-            )
+        d = int(doc_id)
+        n = len(str(payload).encode("utf-8"))
+        con = sqlite3.connect(":memory:")
+        con.execute("PRAGMA page_size=512")
+        con.execute(
+            "CREATE TABLE docs (id INTEGER PRIMARY KEY, body TEXT,"
+            " score REAL, flag INTEGER)"
+        )
+        nr = n % 7 + 2
+        con.executemany(
+            "INSERT INTO docs VALUES (?,?,?,?)",
+            [
+                (r, "x" * ((d + r) % 13 + 1), ((d + r) % 8) / 4.0, r % 2)
+                for r in range(nr)
+            ],
+        )
+        con.execute(
+            "INSERT INTO docs VALUES (?,?,?,?)",
+            (1000, "y" * (600 + d % 50), 0.25, None),
+        )
+        con.commit()
+        blob = con.serialize()
+        con.close()
+        yield doc_id, "application/vnd.sqlite3", blob
 
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        batches, "doc_id bigint, media_type string, blob binary"
+    return map_rows(
+        df.select(F.col(id_col), F.col(payload_col)),
+        fixture,
+        "doc_id bigint, media_type string, blob binary",
     )
 
 
@@ -468,49 +459,29 @@ def scan_sqlite_assets(assets, table: str = "docs"):
     sum, flag census, page/overflow stats. Corrupt or out-of-scope
     files (bad magic, non-UTF8 encoding, WITHOUT ROWID) emit a
     quarantine row with the reason — never kill the scan."""
-    from collections.abc import Iterator
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
-    import pandas as pd
+    def scan(doc_id, blob):
+        try:
+            blob = bytes(blob)
+            hdr = parse_header(blob)
+            data = scan_table(blob, table)
+            body_bytes = sum(
+                len(v[1].encode()) for _, v in data if v[1] is not None
+            )
+            out = (
+                doc_id, True, "", len(data), body_bytes,
+                float(sum(v[2] for _, v in data if v[2] is not None)),
+                sum(1 for _, v in data if v[3] == 1),
+                hdr["n_pages"],
+            )
+        except ValueError as e:
+            out = (doc_id, False, str(e)[:80], 0, 0, 0.0, 0, 0)
+        yield out
 
-    cols = (
-        "doc_id", "ok", "reason", "n_rows", "body_bytes",
-        "score_sum", "n_flag1", "n_pages",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                try:
-                    blob = bytes(blob)
-                    hdr = parse_header(blob)
-                    data = scan_table(blob, table)
-                    body_bytes = sum(
-                        len(v[1].encode()) for _, v in data if v[1] is not None
-                    )
-                    rows["doc_id"].append(doc_id)
-                    rows["ok"].append(True)
-                    rows["reason"].append("")
-                    rows["n_rows"].append(len(data))
-                    rows["body_bytes"].append(body_bytes)
-                    rows["score_sum"].append(
-                        float(sum(v[2] for _, v in data if v[2] is not None))
-                    )
-                    rows["n_flag1"].append(
-                        sum(1 for _, v in data if v[3] == 1)
-                    )
-                    rows["n_pages"].append(hdr["n_pages"])
-                except ValueError as e:
-                    rows["doc_id"].append(doc_id)
-                    rows["ok"].append(False)
-                    rows["reason"].append(str(e)[:80])
-                    for k in ("n_rows", "body_bytes", "n_flag1", "n_pages"):
-                        rows[k].append(0)
-                    rows["score_sum"].append(0.0)
-            yield pd.DataFrame(rows)
-
-    return assets.mapInPandas(
-        batches,
+    return map_rows(
+        assets.select("doc_id", "blob"),
+        scan,
         "doc_id bigint, ok boolean, reason string, n_rows long, "
         "body_bytes long, score_sum double, n_flag1 long, n_pages long",
     )

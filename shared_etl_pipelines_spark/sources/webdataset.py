@@ -222,9 +222,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     per member (shard, shard_idx, key, ext, n_bytes, blob). Corrupt
     shards quarantine as a single ext='_corrupt' row rather than
     failing the scan."""
-    from collections.abc import Iterator
-
-    import pandas as pd
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
     raw = (
         spark.read.format("binaryFile")
@@ -233,50 +231,33 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in ("shard", "shard_idx", "key", "ext", "n_bytes", "blob")
-            }
-            for p, content in zip(pdf["path"], pdf["content"]):
-                shard = os.path.basename(p)
-                try:
-                    idx = int(shard.split("-")[1].split(".")[0])
-                except (IndexError, ValueError):
-                    idx = -1
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content))
-                    ) as t:
-                        members = [
-                            (m, t.extractfile(m).read())
-                            for m in t.getmembers()
-                            if m.isfile()
-                        ]
-                except Exception:
-                    rows["shard"].append(shard)
-                    rows["shard_idx"].append(idx)
-                    rows["key"].append("")
-                    rows["ext"].append("_corrupt")
-                    rows["n_bytes"].append(0)
-                    rows["blob"].append(b"")
-                    continue
-                for m, payload in members:
-                    base = os.path.basename(m.name)
-                    # WebDataset convention: the key is everything up
-                    # to the FIRST dot; '42.gt.json' is sample '42',
-                    # modality 'gt.json' (review r8 #4)
-                    key, _, ext = base.partition(".")
-                    rows["shard"].append(shard)
-                    rows["shard_idx"].append(idx)
-                    rows["key"].append(key)
-                    rows["ext"].append(ext)
-                    rows["n_bytes"].append(len(payload))
-                    rows["blob"].append(payload)
-            yield pd.DataFrame(rows)
+    def explode(p, content):
+        shard = os.path.basename(p)
+        try:
+            idx = int(shard.split("-")[1].split(".")[0])
+        except (IndexError, ValueError):
+            idx = -1
+        try:
+            with tarfile.open(
+                fileobj=io.BytesIO(bytes(content))
+            ) as t:
+                members = [
+                    (m, t.extractfile(m).read())
+                    for m in t.getmembers()
+                    if m.isfile()
+                ]
+        except Exception:
+            yield shard, idx, "", "_corrupt", 0, b""
+            return
+        for m, payload in members:
+            base = os.path.basename(m.name)
+            # WebDataset convention: the key is everything up
+            # to the FIRST dot; '42.gt.json' is sample '42',
+            # modality 'gt.json' (review r8 #4)
+            key, _, ext = base.partition(".")
+            yield shard, idx, key, ext, len(payload), payload
 
-    return raw.mapInPandas(batches, MEMBER_SCHEMA)
+    return map_rows(raw, explode, MEMBER_SCHEMA)
 
 
 def write_zipdataset_shards(
@@ -368,9 +349,8 @@ def read_zipdataset(spark: SparkSession, path: str) -> DataFrame:
     Corrupt archives quarantine as one ext='_corrupt' row."""
     import io
     import zipfile
-    from collections.abc import Iterator
 
-    import pandas as pd
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
     raw = (
         spark.read.format("binaryFile")
@@ -379,43 +359,25 @@ def read_zipdataset(spark: SparkSession, path: str) -> DataFrame:
         .select("path", "content")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {
-                k: []
-                for k in ("shard", "shard_idx", "key", "ext", "n_bytes", "blob")
-            }
-            for p, content in zip(pdf["path"], pdf["content"]):
-                shard = os.path.basename(p)
-                try:
-                    idx = int(shard.split("-")[1].split(".")[0])
-                except (IndexError, ValueError):
-                    idx = -1
-                try:
-                    with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
-                        members = [
-                            (n, z.read(n))
-                            for n in z.namelist()
-                            if not n.endswith("/")
-                        ]
-                except Exception:
-                    rows["shard"].append(shard)
-                    rows["shard_idx"].append(idx)
-                    rows["key"].append("")
-                    rows["ext"].append("_corrupt")
-                    rows["n_bytes"].append(0)
-                    rows["blob"].append(b"")
-                    continue
-                for name, payload in members:
-                    base = os.path.basename(name)
-                    key, _, ext = base.partition(".")  # first dot — see tar reader
+    def explode(p, content):
+        shard = os.path.basename(p)
+        try:
+            idx = int(shard.split("-")[1].split(".")[0])
+        except (IndexError, ValueError):
+            idx = -1
+        try:
+            with zipfile.ZipFile(io.BytesIO(bytes(content))) as z:
+                members = [
+                    (n, z.read(n))
+                    for n in z.namelist()
+                    if not n.endswith("/")
+                ]
+        except Exception:
+            yield shard, idx, "", "_corrupt", 0, b""
+            return
+        for name, payload in members:
+            base = os.path.basename(name)
+            key, _, ext = base.partition(".")  # first dot — see tar reader
+            yield shard, idx, key, ext, len(payload), payload
 
-                    rows["shard"].append(shard)
-                    rows["shard_idx"].append(idx)
-                    rows["key"].append(key)
-                    rows["ext"].append(ext)
-                    rows["n_bytes"].append(len(payload))
-                    rows["blob"].append(payload)
-            yield pd.DataFrame(rows)
-
-    return raw.mapInPandas(batches, MEMBER_SCHEMA)
+    return map_rows(raw, explode, MEMBER_SCHEMA)

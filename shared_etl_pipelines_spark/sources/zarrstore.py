@@ -170,10 +170,9 @@ def scan_zarr(spark, array_dir: str, bbox=None):
     surviving chunks but outside the box still emit; the box prunes
     FILES, the caller's filter prunes cells — exactly parquet's
     row-group-stats contract)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F  # noqa: F401
+
+    from shared_etl_pipelines_spark.functions.rows import map_rows
 
     meta = read_zarray(array_dir)
     if len(meta["shape"]) != 2:
@@ -186,32 +185,26 @@ def scan_zarr(spark, array_dir: str, bbox=None):
     paths = spark.createDataFrame(
         [(k,) for k in keys], "chunk_key string"
     ).repartition(min(max(len(keys), 1), 32))
+    ch_r, ch_c = meta["chunks"]
+    n_r, n_c = meta["shape"]
 
-    def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ch_r, ch_c = meta["chunks"]
-        n_r, n_c = meta["shape"]
-        for pdf in it:
-            rows: dict[str, list] = {"row": [], "col": [], "value": []}
-            for key in pdf["chunk_key"]:
-                ci, cj = (int(x) for x in key.split("."))
-                p = os.path.join(array_dir, key)
-                blob = open(p, "rb").read() if os.path.exists(p) else None
-                vals = decode_chunk(meta, key, blob)
-                for i in range(ch_r):
-                    r = ci * ch_r + i
-                    if r >= n_r:
-                        break
-                    base = i * ch_c
-                    for j in range(ch_c):
-                        c = cj * ch_c + j
-                        if c >= n_c:
-                            break
-                        rows["row"].append(r)
-                        rows["col"].append(c)
-                        rows["value"].append(float(vals[base + j]))
-            yield pd.DataFrame(rows)
+    def decode(key):
+        ci, cj = (int(x) for x in key.split("."))
+        p = os.path.join(array_dir, key)
+        blob = open(p, "rb").read() if os.path.exists(p) else None
+        vals = decode_chunk(meta, key, blob)
+        for i in range(ch_r):
+            r = ci * ch_r + i
+            if r >= n_r:
+                break
+            base = i * ch_c
+            for j in range(ch_c):
+                c = cj * ch_c + j
+                if c >= n_c:
+                    break
+                yield r, c, float(vals[base + j])
 
-    return paths.mapInPandas(decode, "row int, col int, value double")
+    return map_rows(paths, decode, "row int, col int, value double")
 
 
 def ensure_demo_zarr(sf_dir: str) -> str:

@@ -375,27 +375,18 @@ def spend_alarms(df: DataFrame, key: str = "user_id") -> DataFrame:
         chunks = list(pdfs)
         pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
         pdf = pdf.sort_values(["ts", "event_id"])
-        out_eid, out_np, out_c = [], [], []
+        alarms = []
         for eid, c in zip(
             pdf["event_id"].astype("int64"), pdf["cents"].astype("int64")
         ):
             c = int(c)
             if n >= 3 and c * n > 2 * s:
-                out_eid.append(int(eid))
-                out_np.append(n)
-                out_c.append(c)
+                alarms.append((int(key_tuple[0]), int(eid), n, c))
             n += 1
             s += c
         state.update((n, s))
-        if out_eid:
-            yield pd.DataFrame(
-                {
-                    "user_id": int(key_tuple[0]),
-                    "event_id": out_eid,
-                    "n_prior": out_np,
-                    "cents": out_c,
-                }
-            )
+        if alarms:
+            yield pd.DataFrame.from_records(alarms, columns=_ALARM_OUT.names)
 
     return df.groupBy(key).applyInPandasWithState(
         fn,

@@ -100,3 +100,26 @@ def test_spark_audit_and_quarantine(spark, sf_dir):
     )
     q = audit_gguf_assets(garbage).collect()
     assert len(q) == 1 and not q[0]["ok"] and "magic" in q[0]["reason"]
+
+
+def test_bad_context_length_quarantines_next_to_a_good_model(spark):
+    """A string or missing llm.context_length quarantines that one blob,
+    naming the key; the good model in the same batch survives."""
+    from shared_etl_pipelines_spark.sources.gguf import audit_gguf_assets
+
+    tensors = [("t", 0, [2], struct.pack("<2f", 1.0, 2.0))]
+    good = G.encode_gguf({"llm.context_length": 512}, tensors)
+    text = G.encode_gguf({"llm.context_length": "abc"}, tensors)
+    missing = G.encode_gguf({"general.name": "m"}, tensors)
+    assets = spark.createDataFrame(
+        [(1, "application/gguf", bytearray(good)),
+         (2, "application/gguf", bytearray(text)),
+         (3, "application/gguf", bytearray(missing))],
+        "doc_id bigint, media_type string, blob binary",
+    ).coalesce(1)
+    out = {r["doc_id"]: r for r in audit_gguf_assets(assets).collect()}
+    assert sorted(out) == [1, 2, 3]
+    assert out[1]["ok"] and out[1]["context_length"] == 512 and out[1]["total_params"] == 2
+    for d in (2, 3):
+        assert not out[d]["ok"] and "llm.context_length" in out[d]["reason"]
+        assert out[d]["n_tensors"] == 0 and out[d]["context_length"] == 0

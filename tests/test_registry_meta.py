@@ -339,3 +339,28 @@ def test_importing_queries_reads_no_ledger():
     assert any(p.endswith("queries_llm.py") for p in out[1:])  # the hook saw the import
     read = [p for p in out[1:] if "CORRECTNESS_r" in p or p.endswith("query_fingerprints.json")]
     assert not read, read
+
+
+def test_gate_order_walks_the_package_once_per_process(monkeypatch):
+    """The gate asks for queries() and then oracle_sql(); both share one
+    walk over the package source."""
+    import __spark_entry__ as entry
+    from shared_etl_pipelines_spark import fingerprint
+
+    walks = []
+    init = fingerprint.Fingerprinter.__init__
+
+    def counting_init(self):
+        walks.append(self)
+        init(self)
+
+    monkeypatch.setattr(fingerprint.Fingerprinter, "__init__", counting_init)
+    entry._gate_order.cache_clear()
+    try:
+        names = list(entry.queries())
+        oracles = list(entry.oracle_sql())
+    finally:
+        entry._gate_order.cache_clear()
+    assert len(walks) == 1
+    assert sorted(names) == sorted(REGISTRY)
+    assert oracles == [n for n in names if REGISTRY[n].sql is not None]
